@@ -188,19 +188,18 @@ def _q_most_viewed_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_session_window_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window sessionization run in batch mode — same sessions
-    as the gaps-and-islands operator (touching windows merge, so the exact-gap
-    boundary matches the strict-> predicate), with the stable start-epoch id."""
+    as the gaps-and-islands operator (floored-second windows whose touching
+    ranges merge, so the exact-gap boundary matches the strict-> predicate),
+    with the stable start-epoch id."""
     from clickestream_project_bigdata_spark.streaming.sessions import (
         stateful_session_metrics,
     )
 
-    events = events_from_fixture(spark, sf_dir)
-    # batch frames ignore watermarks; reuse the streaming operator verbatim
-    return stateful_session_metrics(events.withWatermark("event_time", "1 hour"))
+    return stateful_session_metrics(events_from_fixture(spark, sf_dir))
 
 
 def _q_windowed_top_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed_top_items (streaming/sessions.py:203) run in batch
+    """Streaming windowed_top_items (streaming/sessions.py:202) run in batch
     mode: tumbling-minute per-item counts (watermark is a no-op on a batch
     frame; the plan is the one the stream runs per state update)."""
     from clickestream_project_bigdata_spark.streaming import windowed_top_items
@@ -209,7 +208,7 @@ def _q_windowed_top_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_windowed_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed_bounce_rate (streaming/sessions.py:221) in batch
+    """Streaming windowed_bounce_rate (streaming/sessions.py:220) in batch
     mode: the chained two-level tumbling-window aggregation shape."""
     from clickestream_project_bigdata_spark.streaming import windowed_bounce_rate
 
@@ -217,11 +216,11 @@ def _q_windowed_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_windowed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed_funnel (streaming/sessions.py:166) in batch mode:
-    session-window flags rolled into tumbling hours. The chained window()
-    buckets on the session window's END minus one microsecond (pinned by
-    the oracle SQL below); session merge is exact-µs ≤ gap, not the batch
-    operator's floored-second arithmetic."""
+    """Streaming windowed_funnel (streaming/sessions.py:174) in batch mode:
+    session-window flags rolled into tumbling hours. Sessions split on the
+    batch operator's floored-second rule, and the chained window() buckets
+    on the session window's END (floored last event + gap) minus one
+    microsecond (pinned by the oracle SQL below)."""
     from clickestream_project_bigdata_spark.streaming import windowed_funnel
 
     return windowed_funnel(
@@ -2709,10 +2708,10 @@ def oracle_sql() -> dict[str, str]:
             "FROM per_user GROUP BY minute"
         ),
         # the streaming windowed_* operators run in batch mode: tumbling
-        # minute windows == date_trunc('minute'); the chained hour window in
-        # windowed_funnel buckets on session_window.end - 1 µs, and
-        # session_window merges on exact-µs gap <= 30 min (NOT the batch
-        # operator's floored-second arithmetic)
+        # minute windows == date_trunc('minute'); windowed_funnel's sessions
+        # are the batch operator's (floored-second gap > 1800 s), and its
+        # chained hour window buckets on session_window.end - 1 µs, where
+        # the end is the floored last event + 30 min
         "windowed_top_items": (
             f"WITH {_EV} "
             "SELECT date_trunc('minute', event_time) AS minute, itemid, "
@@ -2728,16 +2727,13 @@ def oracle_sql() -> dict[str, str]:
             "FROM per_user GROUP BY minute"
         ),
         "windowed_funnel": (
-            f"WITH {_EV}, "
-            "lagged AS (SELECT *, lag(event_time) OVER (PARTITION BY visitorid ORDER BY event_time) AS prev_t FROM ev), "
-            "flagged AS (SELECT *, CASE WHEN prev_t IS NULL OR event_time - prev_t > INTERVAL '30 minutes' THEN 1 ELSE 0 END AS is_new FROM lagged), "
-            "isl AS (SELECT *, SUM(is_new) OVER (PARTITION BY visitorid ORDER BY event_time ROWS UNBOUNDED PRECEDING) AS sess FROM flagged), "
-            "fl AS (SELECT visitorid, sess, MAX(event_time) AS max_t, "
+            f"WITH {_SESSIONIZED}, "
+            "fl AS (SELECT session_id, MAX(event_time) AS max_t, "
             "MAX(CASE WHEN event='view' THEN 1 ELSE 0 END) AS v, "
             "MAX(CASE WHEN event='click' THEN 1 ELSE 0 END) AS c, "
             "MAX(CASE WHEN event='purchase' THEN 1 ELSE 0 END) AS p "
-            "FROM isl GROUP BY visitorid, sess) "
-            "SELECT date_trunc('hour', max_t + INTERVAL '30 minutes' - INTERVAL '1 microsecond') AS window_start, "
+            "FROM sessionized GROUP BY session_id) "
+            "SELECT date_trunc('hour', date_trunc('second', max_t) + INTERVAL '30 minutes' - INTERVAL '1 microsecond') AS window_start, "
             'CAST(SUM(v) AS BIGINT) AS "view", CAST(SUM(c) AS BIGINT) AS click, '
             "CAST(SUM(p) AS BIGINT) AS purchase FROM fl GROUP BY 1"
         ),

@@ -638,7 +638,7 @@ def user_paths(sessionized: DataFrame) -> DataFrame:
 
     * ``event`` is NON-NULL here — ``collect_list`` silently drops null
       elements, while the struct spelling (:func:`top_paths`) and the
-      streaming twin (``streaming.stateful.stateful_user_paths``) would
+      streaming twin (``streaming.sessions.stateful_user_paths``) would
       keep them as null path entries. The invariant comes from the wire
       format (the reference's records always carry an event string —
       `stream_processor.py:41-49` — and ``canonicalize`` passes ``event``

@@ -24,7 +24,7 @@ from .joins import (
     windowed_conversion_rate,
 )
 from .sinks import ConsoleSink, JdbcSink, MemorySink, NoopSink, ParquetSink, Sink
-from .stateful import decayed_item_counts, stateful_funnel, stateful_sessionize
+from .stateful import decayed_item_counts, stateful_funnel
 
 __all__ = [
     "run_all_analyses",
@@ -33,7 +33,6 @@ __all__ = [
     "start_stream",
     "decayed_item_counts",
     "stateful_funnel",
-    "stateful_sessionize",
     "stateful_session_metrics",
     "stateful_session_flags",
     "stateful_user_paths",

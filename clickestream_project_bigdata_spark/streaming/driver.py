@@ -25,6 +25,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import analytics
 from ..operators.sessionize import DEFAULT_GAP_SECONDS, session_metrics, sessionize
+from .sessions import dedup_events_stream, stateful_session_metrics
 from .sinks import Sink
 
 
@@ -148,15 +149,14 @@ def start_stateful_sessions(
     watermark: str = "1 hour",
     available_now: bool = False,
 ) -> StreamingQuery:
-    """Production driver for the FIXED sessionization mode: the
-    applyInPandasWithState session state machine emits each session exactly
+    """Production driver for the FIXED sessionization mode: the native
+    floored-second ``session_window`` aggregation
+    (:func:`~.sessions.stateful_session_metrics`) emits each session exactly
     once when it closes (watermark past last event + gap), and foreachBatch
     hands those closed sessions to the injected sink — contrast with the
     per-batch mode in :func:`run_all_analyses`, which reproduces the
     reference's split-session semantics (T6)."""
-    from .stateful import stateful_sessionize
-
-    closed = stateful_sessionize(events, gap_seconds, watermark)
+    closed = stateful_session_metrics(events, gap_seconds, watermark)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_df, "sessions", batch_id)
@@ -195,8 +195,6 @@ def start_stream(
     recounts redeliveries).
     """
     if dedup_within is not None:
-        from .sessions import dedup_events_stream
-
         events = dedup_events_stream(events, within=dedup_within)
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:

@@ -19,25 +19,56 @@ stateful streaming:
   batch, so a late event creates a second partial row for the same minute;
   here the window is updated in place until the watermark closes it).
 
-Gap semantics note: Spark merges session windows whose ranges touch
-(``[t, t+gap]`` contains ``t+gap``), so an exactly-1800 s gap stays one
-session — the same boundary behavior as the batch operator's strict
-``> 1800`` predicate (`stream_processor.py:99`). Pinned by
-``test_session_window_gap_boundary``.
+Gap semantics: every session operator here goes through
+:func:`_session_groups`, which runs ``session_window`` over ``event_time``
+floored to the second. Spark merges session windows whose ranges touch
+(``[t, t+gap]`` contains ``t+gap``), so on floored times a new session starts
+exactly when the floored-second gap is strictly ``> gap`` — the batch
+operator's predicate (`stream_processor.py:88-99`), including for sub-second
+timestamps (00:00:00.100 → 00:30:00.900 is one session: its floored gap is
+1800 s). Pinned by ``test_session_window_gap_boundary``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
-DEFAULT_GAP = "30 minutes"
+from ..operators.sessionize import DEFAULT_GAP_SECONDS
+
 DEFAULT_WATERMARK = "1 hour"
+
+
+def _session_groups(
+    events: DataFrame, gap_seconds: int, watermark: str
+) -> GroupedData:
+    """Events grouped by (``session_window``, ``visitorid``) under the batch
+    session rule. The window and the watermark sit on the second-floored
+    event time (append mode rejects a watermark on the raw column once the
+    window is over a derived one); aggregates still see the raw
+    ``event_time``, so session bounds keep their µs precision."""
+    floored = events.withColumn(
+        "__t", F.date_trunc("second", "event_time")
+    ).withWatermark("__t", watermark)
+    return floored.groupBy(
+        F.session_window("__t", f"{gap_seconds} seconds").alias("session_window"),
+        "visitorid",
+    )
+
+
+def _step_flags(steps: list[str]) -> list[Column]:
+    """One 0/1 column per funnel step: did the session contain it."""
+    return [F.max(F.when(F.col("event") == s, 1).otherwise(0)).alias(s) for s in steps]
+
+
+def _session_id() -> Column:
+    """Stable id: visitorid + "_" + session-start epoch seconds."""
+    return F.concat_ws("_", F.col("visitorid"), F.unix_timestamp("session_start"))
 
 
 def stateful_session_metrics(
     events: DataFrame,
-    gap: str = DEFAULT_GAP,
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Session metrics (same output schema as batch ``session_metrics``) via
@@ -48,21 +79,17 @@ def stateful_session_metrics(
     ``session_id`` is visitorid + "_" + session-start epoch — unlike the
     per-batch ordinal it is globally stable (no restart per batch).
     """
-    sw = F.session_window("event_time", gap)
-    # session_window.end = last event + gap; aggregate the true event bounds
-    # so session_start/end/length match the batch operator exactly.
+    # session_window.end = floored last event + gap; aggregate the true
+    # event bounds so session_start/end/length match the batch operator.
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(sw.alias("session_window"), "visitorid")
+        _session_groups(events, gap_seconds, watermark)
         .agg(
             F.min("event_time").alias("session_start"),
             F.max("event_time").alias("session_end"),
             F.count("*").alias("events_in_session"),
         )
         .select(
-            F.concat_ws(
-                "_", F.col("visitorid"), F.unix_timestamp("session_start")
-            ).alias("session_id"),
+            _session_id().alias("session_id"),
             "visitorid",
             "session_start",
             "session_end",
@@ -100,7 +127,7 @@ def windowed_counts(
 
 def stateful_user_paths(
     events: DataFrame,
-    gap: str = DEFAULT_GAP,
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Streaming ``user_paths`` (reference `stream_processor.py:146-183`)
@@ -108,10 +135,8 @@ def stateful_user_paths(
     structs per session window, sort, project the event names. One session
     → one appended row when the watermark closes it; the per-batch
     reference splits paths at batch boundaries (T6)."""
-    sw = F.session_window("event_time", gap)
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(sw.alias("session_window"), "visitorid")
+        _session_groups(events, gap_seconds, watermark)
         .agg(
             F.min("event_time").alias("session_start"),
             F.array_sort(
@@ -120,9 +145,7 @@ def stateful_user_paths(
         )
         .select(
             "visitorid",
-            F.concat_ws(
-                "_", F.col("visitorid"), F.unix_timestamp("session_start")
-            ).alias("session_id"),
+            _session_id().alias("session_id"),
             F.transform("__path_structs", lambda s: s["event"]).alias("user_path"),
         )
     )
@@ -131,7 +154,7 @@ def stateful_user_paths(
 def stateful_session_flags(
     events: DataFrame,
     steps: list[str] | None = None,
-    gap: str = DEFAULT_GAP,
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Per-closed-session funnel membership flags (the streaming form of the
@@ -141,25 +164,10 @@ def stateful_session_flags(
     session-start window (:func:`windowed_funnel`) or in the serving store
     (a global running aggregate cannot append)."""
     steps = steps or ["view", "addtocart", "transaction"]
-    sw = F.session_window("event_time", gap)
     return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(sw.alias("session_window"), "visitorid")
-        .agg(
-            F.min("event_time").alias("session_start"),
-            *[
-                F.max(F.when(F.col("event") == s, 1).otherwise(0)).alias(s)
-                for s in steps
-            ],
-        )
-        .select(
-            F.concat_ws(
-                "_", F.col("visitorid"), F.unix_timestamp("session_start")
-            ).alias("session_id"),
-            "visitorid",
-            "session_start",
-            *steps,
-        )
+        _session_groups(events, gap_seconds, watermark)
+        .agg(F.min("event_time").alias("session_start"), *_step_flags(steps))
+        .select(_session_id().alias("session_id"), "visitorid", "session_start", *steps)
     )
 
 
@@ -167,7 +175,7 @@ def windowed_funnel(
     events: DataFrame,
     steps: list[str] | None = None,
     duration: str = "1 hour",
-    gap: str = DEFAULT_GAP,
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
     """Streaming funnel: per-session membership flags (session windows)
@@ -180,19 +188,10 @@ def windowed_funnel(
     session_window STRUCT itself, which is how Spark propagates the
     event-time watermark across the two stateful operators (grouping on a
     derived min(event_time) column severs the lineage and append mode is
-    rejected)."""
+    rejected). The struct spans the floored session times, so a session
+    falls in the tumbling window holding ``floor(last event) + gap - 1 µs``."""
     steps = steps or ["view", "addtocart", "transaction"]
-    sw = F.session_window("event_time", gap)
-    flags = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(sw.alias("session_window"), "visitorid")
-        .agg(
-            *[
-                F.max(F.when(F.col("event") == s, 1).otherwise(0)).alias(s)
-                for s in steps
-            ]
-        )
-    )
+    flags = _session_groups(events, gap_seconds, watermark).agg(*_step_flags(steps))
     return (
         flags.groupBy(F.window(F.col("session_window"), duration).alias("w"))
         .agg(*[F.sum(s).cast("long").alias(s) for s in steps])

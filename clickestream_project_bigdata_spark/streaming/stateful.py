@@ -1,26 +1,20 @@
-"""Custom stateful sessionization via ``applyInPandasWithState``.
+"""Custom stateful operators via ``applyInPandasWithState``.
 
-Why this exists when `streaming/sessions.py` already has ``session_window``:
-the native session window is the right default, but it is a fixed-function
-operator. This module is the engine's **custom stateful operator** extension
-point (SURVEY §7b) — arbitrary per-key state machines over a stream — shown
-on the one stateful problem the reference actually has: cross-batch
-sessionization with the reference's exact gap predicate (strictly ``> gap``
-seconds between floored-epoch timestamps, `stream_processor.py:88-99`).
+This module is the engine's **custom stateful operator** extension point
+(SURVEY §7b): arbitrary per-key state machines over a stream, for the
+problems no native operator expresses. Sessionization is not one of them —
+it runs on the native floored-second ``session_window`` in
+`streaming/sessions.py`.
 
-Semantics:
+* :func:`decayed_item_counts` — exponentially-decayed per-item interaction
+  mass (event-time decay folded exactly between consecutive events);
+* :func:`stateful_funnel` — cross-batch first-touch ordered funnel, with an
+  optional event-time TTL that expires inactive visitors;
+* :func:`stateful_ingest_dedup` — ingest dedup that emits every document
+  with its canonical id and duplicate rank.
 
-* state per ``visitorid``: the open session (start, last event time, count);
-* each micro-batch merges its events in event-time order; a gap > ``gap_s``
-  closes the current session (emitted) and opens a new one;
-* an event-time timeout set to ``last + gap`` emits the still-open session
-  once the watermark passes it — bounded state, late-data-safe;
-* ``session_id`` = ``{visitorid}_{session_start_epoch}`` — globally stable
-  (the per-batch ordinal of the reference restarts and collides, T6).
-
-Scale shape: state is O(1) per active visitor (three numbers), the grouping
-shuffles once on visitorid, and Arrow batches the Python boundary. The
-output is append-mode: each session is emitted exactly once, when it closes.
+Each keeps O(1) or O(|steps|) state per live key, shuffles once on its key,
+and batches the Python boundary through Arrow.
 """
 
 from __future__ import annotations
@@ -33,141 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("session_id", T.StringType()),
-        T.StructField("visitorid", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("events_in_session", T.LongType()),
-        T.StructField("session_length", T.LongType()),
-    ]
-)
-
-#: open-session state: (start_epoch_us, last_epoch_us, n_events)
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
 _US = 1_000_000
 
 
-def _emit_row(visitorid: int, start_us: int, last_us: int, n: int) -> dict[str, Any]:
-    # floored-epoch seconds, matching the batch operator's unix_timestamp math
-    start_s, last_s = start_us // _US, last_us // _US
-    return {
-        "session_id": f"{visitorid}_{start_s}",
-        "visitorid": visitorid,
-        "session_start": pd.Timestamp(start_us, unit="us"),
-        "session_end": pd.Timestamp(last_us, unit="us"),
-        "events_in_session": n,
-        "session_length": last_s - start_s,
-    }
-
-
-def _make_session_fn(gap_s: int):
-    gap_us = gap_s * _US
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (visitorid,) = key
-        closed: list[dict[str, Any]] = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                start_us, last_us, n = state.get
-                closed.append(_emit_row(visitorid, start_us, last_us, n))
-            state.remove()
-            yield pd.DataFrame(closed, columns=[f.name for f in SESSION_SCHEMA.fields])
-            return
-
-        times: list[int] = []
-        for pdf in pdfs:
-            # normalize to epoch µs regardless of the datetime64 unit the
-            # Arrow batch arrived with (ns under legacy conversion, µs native)
-            times.extend(
-                int(t) for t in pdf["event_time"].dt.as_unit("us").astype("int64")
-            )
-        times.sort()
-
-        if state.exists:
-            start_us, last_us, n = state.get
-            pending = times
-        else:
-            start_us, last_us, n = times[0], times[0], 1
-            pending = times[1:]
-
-        # A late-but-within-watermark event can arrive in a later micro-batch
-        # with an event time at or before the open session's last event.
-        # Merge order-insensitively: the open session is an interval
-        # [start, last]; sorted pending times land before / inside / after it.
-        before = [t for t in pending if t < start_us]
-        n += sum(1 for t in pending if start_us <= t <= last_us)
-        after = [t for t in pending if t > last_us]
-
-        if before:
-            # events earlier than the open session: build sessions among
-            # themselves (standard gap rule over the sorted prefix), then
-            # either merge the final one into the open session or close it.
-            b_start, b_last, b_n = before[0], before[0], 1
-            for t_us in before[1:]:
-                if (t_us // _US - b_last // _US) > gap_s:
-                    closed.append(_emit_row(visitorid, b_start, b_last, b_n))
-                    b_start, b_n = t_us, 1
-                else:
-                    b_n += 1
-                b_last = t_us
-            if (start_us // _US - b_last // _US) > gap_s:
-                closed.append(_emit_row(visitorid, b_start, b_last, b_n))
-            else:
-                start_us, n = b_start, n + b_n
-
-        for t_us in after:
-            # reference gap: floored-second difference strictly > gap_s
-            if (t_us // _US - last_us // _US) > gap_s:
-                closed.append(_emit_row(visitorid, start_us, last_us, n))
-                start_us, n = t_us, 1
-            else:
-                n += 1
-            last_us = t_us
-
-        state.update((start_us, last_us, n))
-        # close the open session once the watermark passes last + gap
-        state.setTimeoutTimestamp(last_us // 1000 + gap_s * 1000 + 1)
-        yield pd.DataFrame(closed, columns=[f.name for f in SESSION_SCHEMA.fields])
-
-    return fn
-
-
-def stateful_sessionize(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization as a per-visitor state machine. ``events``
-    must be a streaming canonical-schema frame; output appends one row per
-    CLOSED session (open sessions live in the state store until the
-    watermark passes their ``last event + gap``)."""
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy("visitorid")
-        .applyInPandasWithState(
-            _make_session_fn(gap_seconds),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
-# Decayed heavy hitters — the second custom stateful operator
+# Decayed heavy hitters
 # ---------------------------------------------------------------------------
 
 DECAYED_SCHEMA = T.StructType(
@@ -271,7 +135,7 @@ def decayed_item_counts(
 
 
 # ---------------------------------------------------------------------------
-# Cross-batch funnel progression — the third custom stateful operator
+# Cross-batch funnel progression
 # ---------------------------------------------------------------------------
 
 FUNNEL_STATE_SCHEMA = T.StructType(
@@ -447,7 +311,7 @@ def stateful_funnel(
 
 
 # ---------------------------------------------------------------------------
-# Stateful streaming ingest dedup (the 4th custom stateful operator)
+# Stateful streaming ingest dedup
 # ---------------------------------------------------------------------------
 
 DEDUP_OUT_SCHEMA = T.StructType(

@@ -5,8 +5,8 @@
 * per-batch vs stateful sessionization (T6): a session straddling a
   micro-batch boundary is SPLIT by the reference-compatible mode and MERGED
   by the ``session_window`` mode — both pinned;
-* session-window gap boundary: exactly-gap spacing starts a new session in
-  ``session_window`` mode but not in the batch ``> gap`` mode (SURVEY §7d).
+* session-window gap boundary: the streaming session operators split on the
+  batch operator's rule — floored-second gap strictly ``> gap`` (SURVEY §7d).
 """
 
 from __future__ import annotations
@@ -162,14 +162,13 @@ def test_stateful_sessionization_merges_across_batches(spark, tmp_path):
     assert rows[0]["session_length"] == 120
 
 
-def test_stateful_sessionize_out_of_order_cross_batch(spark, tmp_path):
+def test_stateful_session_metrics_out_of_order_cross_batch(spark, tmp_path):
     """A late-but-within-watermark event arriving in a LATER micro-batch with
     an event time EARLIER than the open session must extend the session
     backwards (start = min), never drag the session's last-event time
     backwards: one closed session spanning all four events, keyed by the
-    earliest event's epoch. (The unfixed merge set last_us backwards,
-    yielding a wrong id/start/length.)"""
-    from clickestream_project_bigdata_spark.streaming import stateful_sessionize
+    earliest event's epoch, emitted once in append mode when the watermark
+    passes its last event + gap."""
 
     path = write_batch_files(
         tmp_path,
@@ -184,7 +183,7 @@ def test_stateful_sessionize_out_of_order_cross_batch(spark, tmp_path):
     )
     stream = canonicalize(read_json_stream(spark, path, max_files=1))
     q = (
-        stateful_sessionize(stream, gap_seconds=1800, watermark="1 hour")
+        stateful_session_metrics(stream, gap_seconds=1800, watermark="1 hour")
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("late_sessions")
@@ -204,8 +203,17 @@ def test_stateful_sessionize_out_of_order_cross_batch(spark, tmp_path):
 def test_session_window_gap_boundary(spark, make_events):
     """Exactly-gap spacing: batch `> gap` keeps one session, and Spark's
     session_window MERGES touching windows ([t, t+gap] ∋ t+gap), so both
-    modes agree at the boundary; one second past the gap splits in both."""
+    modes agree at the boundary; one second past the gap splits in both.
+    The gap is measured between second-floored times, so a raw gap just over
+    1800 s whose floored gap is exactly 1800 s (00:00:00.100 → 00:30:00.900)
+    is ONE session in the batch operator and in every streaming session
+    operator."""
     from pyspark.sql import functions as F
+
+    from clickestream_project_bigdata_spark.streaming import (
+        stateful_session_flags,
+        stateful_user_paths,
+    )
 
     def n_windows(events):
         return (
@@ -214,17 +222,33 @@ def test_session_window_gap_boundary(spark, make_events):
             .count()
         )
 
+    def n_sessions(events):
+        return [
+            session_metrics(sessionize(events, gap_seconds=1800)).count(),
+            stateful_session_metrics(events).count(),
+            stateful_user_paths(events).count(),
+            stateful_session_flags(events).count(),
+        ]
+
     at_gap = make_events(
         [(1, "2024-01-01T00:00:00", "view", 1), (1, "2024-01-01T00:30:00", "view", 2)]
     )
-    assert session_metrics(sessionize(at_gap, gap_seconds=1800)).count() == 1
+    assert n_sessions(at_gap) == [1, 1, 1, 1]
     assert n_windows(at_gap) == 1
 
     past_gap = make_events(
         [(1, "2024-01-01T00:00:00", "view", 1), (1, "2024-01-01T00:30:01", "view", 2)]
     )
-    assert session_metrics(sessionize(past_gap, gap_seconds=1800)).count() == 2
+    assert n_sessions(past_gap) == [2, 2, 2, 2]
     assert n_windows(past_gap) == 2
+
+    sub_second = make_events(
+        [
+            (1, "2024-01-01T00:00:00.100", "view", 1),
+            (1, "2024-01-01T00:30:00.900", "view", 2),
+        ]
+    )
+    assert n_sessions(sub_second) == [1, 1, 1, 1]
 
 
 def test_windowed_counts_batch_semantics(spark, make_events):
@@ -244,25 +268,23 @@ def test_windowed_counts_batch_semantics(spark, make_events):
 
 
 def test_stateful_sessionize_custom_operator(spark, tmp_path):
-    """applyInPandasWithState sessionizer: a session split across two
-    micro-batches is merged, closed by event-time timeout when a later
-    batch advances the watermark past last_event + gap, and session_id is
-    the stable start-epoch form."""
-    from clickestream_project_bigdata_spark.streaming import stateful_sessionize
-
+    """The native stateful session operator, written straight to a memory
+    sink: a session split across two micro-batches is merged, closed when a
+    later batch advances the watermark past last_event + gap, and
+    session_id is the stable start-epoch form."""
     path = write_batch_files(
         tmp_path,
         [
             [wire_record(7, 0, "view", 1), wire_record(7, 60, "view", 2)],
             [wire_record(7, 120, "purchase", 2)],
             # far-future event for another user: advances the watermark past
-            # user 7's (last + gap), firing the timeout that emits it
+            # user 7's (last + gap), which closes and emits its session
             [wire_record(8, 50_000, "view", 3)],
         ],
     )
     stream = canonicalize(read_json_stream(spark, path, max_files=1))
     q = (
-        stateful_sessionize(stream, gap_seconds=1800, watermark="10 seconds")
+        stateful_session_metrics(stream, gap_seconds=1800, watermark="10 seconds")
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("custom_sessions")
@@ -369,8 +391,10 @@ def test_checkpoint_recovery_processes_only_new_files(spark, tmp_path):
 
 
 def test_start_stateful_sessions_sink_driver(spark, tmp_path):
-    """The stateful-session production driver: closed sessions land in the
-    sink exactly once, across micro-batch boundaries."""
+    """The stateful-session production driver: a session split across two
+    micro-batches is merged, closed when a later batch advances the
+    watermark past last_event + gap, lands in the sink exactly once, and
+    its session_id is the stable start-epoch form."""
     from clickestream_project_bigdata_spark.streaming import (
         MemorySink,
         start_stateful_sessions,
@@ -395,8 +419,12 @@ def test_start_stateful_sessions_sink_driver(spark, tmp_path):
     )
     q.awaitTermination(120)
     rows = sink.rows("sessions")
-    assert len(rows) == 1
-    assert rows[0]["visitorid"] == 7 and rows[0]["events_in_session"] == 3
+    assert len(rows) == 1  # user 8's session is still open (no later watermark)
+    r = rows[0]
+    assert r["visitorid"] == 7
+    assert r["events_in_session"] == 3
+    assert r["session_length"] == 120
+    assert r["session_id"] == f"7_{BASE_MS // 1000}"
 
 
 def test_run_all_analyses_empty_batch(spark):
@@ -1406,7 +1434,7 @@ def test_stateful_ingest_dedup_canonical_replay_idempotent(spark, tmp_path):
 
 def test_stream_scale_replay_small_fixture_equals_batch(spark, tmp_path):
     """The tools/stream_scale.py replay harness end-to-end at sf0.001: the
-    whole fixture pushed through stateful_sessionize as a 10-chunk file
+    whole fixture pushed through stateful_session_metrics as a 10-chunk file
     stream (one micro-batch per chunk + sentinel flush) must equal the
     batch sessionize/session_metrics oracle EXACTLY — the same flow the
     10x SCALING.md run records, pinned here at test scale."""
@@ -1430,8 +1458,8 @@ def test_stream_scale_replay_small_fixture_equals_batch(spark, tmp_path):
         events_from_fixture,
         events_stream_from_chunks,
     )
-    from clickestream_project_bigdata_spark.streaming.stateful import (
-        stateful_sessionize,
+    from clickestream_project_bigdata_spark.streaming.sessions import (
+        stateful_session_metrics,
     )
 
     fixture = "/root/testdata/sf0.001"
@@ -1441,7 +1469,7 @@ def test_stream_scale_replay_small_fixture_equals_batch(spark, tmp_path):
 
     sink = str(tmp_path / "out")
     q = (
-        stateful_sessionize(
+        stateful_session_metrics(
             events_stream_from_chunks(spark, chunks, max_files=1),
             gap_seconds=1800,
             watermark="1 hour",

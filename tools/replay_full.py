@@ -9,7 +9,7 @@ The events fixture is derived at exactly the reference's row count
 visitor/event ids (the make_scale10x scheme) and truncating — same
 schema, same skew profile, reference cardinality.
 
-All 10 analyses run through the REAL driver (`streaming/driver.py:31`,
+All 10 analyses run through the REAL driver (`streaming/driver.py:32`,
 `run_all_analyses`) with a real ParquetSink — every sink lands on disk,
 nothing is a noop — in both sink modes:
 

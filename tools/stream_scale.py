@@ -1,5 +1,5 @@
 """Streaming-at-scale replay (VERDICT r8 #4): push an events fixture through
-the stateful sessionization driver as a REAL multi-batch file stream
+the native session-window sessionizer as a REAL multi-batch file stream
 (50+ micro-batches), assert cross-batch session totals equal the batch
 oracle, and record throughput + state-store telemetry for SCALING.md.
 
@@ -26,10 +26,10 @@ Flow:
     files with strictly increasing mtimes (FileStreamSource order == event
     time order; the watermark handles intra-chunk disorder);
  2. one sentinel far-future chunk so the event-time watermark passes every
-    real session's last+gap and the state machine FLUSHES — without it the
+    real session's last+gap and the session windows FLUSH — without it the
     tail sessions would sit in the state store forever (availableNow stops
     at end-of-input, it does not advance time);
- 3. stateful_sessionize over the chunk stream (maxFilesPerTrigger=1,
+ 3. stateful_session_metrics over the chunk stream (maxFilesPerTrigger=1,
     append mode, parquet sink) — one micro-batch per chunk;
  4. equality: streamed closed sessions (minus the sentinel visitor) must
     EXACTLY equal the batch operator's session_metrics(sessionize(...)) on
@@ -234,8 +234,8 @@ def main() -> None:
         events_from_fixture,
         events_stream_from_chunks,
     )
-    from clickestream_project_bigdata_spark.streaming.stateful import (
-        stateful_sessionize,
+    from clickestream_project_bigdata_spark.streaming.sessions import (
+        stateful_session_metrics,
     )
 
     spark = get_spark("stream_scale")
@@ -254,7 +254,7 @@ def main() -> None:
     stream = events_stream_from_chunks(spark, chunks_dir, max_files=files_per_trigger)
     t0 = time.time()
     q = (
-        stateful_sessionize(stream, gap_seconds=1800, watermark="1 hour")
+        stateful_session_metrics(stream, gap_seconds=1800, watermark="1 hour")
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink_dir)
@@ -300,8 +300,8 @@ def main() -> None:
         "state_store_max_rows": state_rows,
         "state_store_max_bytes": state_mem,
         "method": (
-            "stateful_sessionize (applyInPandasWithState, 1800 s gap, 1 h "
-            "watermark) over a time-ordered parquet chunk stream, "
+            "stateful_session_metrics (floored-second session_window, 1800 s "
+            "gap, 1 h watermark) over a time-ordered parquet chunk stream, "
             f"maxFilesPerTrigger={files_per_trigger}, availableNow drain + far-future sentinel "
             "flush; equality = exceptAll==0 both ways vs "
             "session_metrics(sessionize(batch)) on the same fixture"

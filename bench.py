@@ -191,11 +191,7 @@ def main() -> None:
             events = events_from_fixture(spark, sf_dir)
             t0 = time.time()
             run_all_analyses(
-                events,
-                0,
-                NoopSink(),
-                funnel_steps=["view", "click", "purchase"],
-                max_parallel_sinks=6,
+                events, 0, NoopSink(), funnel_steps=["view", "click", "purchase"]
             )
             samples["replay_all_10_analyses"].append(time.time() - t0)
 

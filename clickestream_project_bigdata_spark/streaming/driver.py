@@ -11,21 +11,29 @@ Two deliberate improvements over the reference, both flagged in SURVEY §3.3/§4
   the same driver runs in tests (MemorySink), local files (ParquetSink), or
   production (JdbcSink).
 
-Sink order matches the reference exactly (T1, `stream_processor.py:388-398`):
-events_per_minute, active_users, event_type_distribution, top_items,
+Fan-out contract (T1): each batch writes the reference's ten tables
+(events_per_minute, active_users, event_type_distribution, top_items,
 bounce_rate, sessions, user_paths, funnel_analysis, item_interactions,
-most_viewed_items.
+most_viewed_items), submitted as concurrent Spark jobs over the shared
+persisted frames. The thread pool is sized by the session's
+``defaultParallelism``; every pool task inherits the caller's local
+properties and job tags (the streaming query's job group among them), so
+``query.stop()`` cancels its jobs and per-thread job labels still apply.
+Sinks must accept concurrent ``write`` calls.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.util import inheritable_thread_target
 
 from ..operators import analytics
 from ..operators.sessionize import DEFAULT_GAP_SECONDS, session_metrics, sessionize
-from .sessions import dedup_events_stream, stateful_session_metrics
+from .sessions import stateful_session_metrics
 from .sinks import Sink
 
 
@@ -36,7 +44,6 @@ def run_all_analyses(
     *,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     funnel_steps: list[str] | None = None,
-    max_parallel_sinks: int = 1,
 ) -> None:
     """One micro-batch through all 10 analyses (reference
     `stream_processor.py:385-398`). ``batch_df`` is canonical-schema events.
@@ -45,12 +52,14 @@ def run_all_analyses(
     spanning micro-batches are split and ordinals restart per batch. The
     cross-batch-correct alternative is `streaming/sessions.py`.
 
-    ``max_parallel_sinks > 1`` submits the independent analyses as
-    CONCURRENT Spark jobs (threads sharing the persisted batch) — the ten
-    plans have no inter-dependencies beyond the shared sessionized frame,
-    so overlapping them hides scheduler/sink latency; with Spark's FAIR
-    scheduler pool this is the standard multi-sink fan-out shape. Default 1
-    preserves the reference's strict sequential sink order.
+    The ten writes run as concurrent Spark jobs: the plans share nothing but
+    the two persisted frames, so overlapping them hides scheduler and sink
+    latency. ``batch_df`` is materialized once up front; the sessionized
+    cache fill runs as a pool task overlapped with the seven batch-fed
+    writes, and the three session-fed writes are submitted the moment it
+    completes (measured 2.49 s -> 2.06 s at sf0.1 on 32 cores). The first
+    failure is re-raised after every submitted task has finished, and both
+    caches are released either way.
     """
     batch_df = batch_df.persist()
     try:
@@ -63,51 +72,38 @@ def run_all_analyses(
                 .withColumn("analysis_time", F.current_timestamp())
                 .select("batch_id", "analysis_time", *steps)
             )
-            # reference sink order (`stream_processor.py:388-398`)
-            outputs: list[tuple[DataFrame, str]] = [
+            batch_fed: list[tuple[DataFrame, str]] = [
                 (analytics.events_per_minute(batch_df), "events_per_minute"),
                 (analytics.active_users(batch_df), "active_users"),
                 (analytics.event_type_distribution(batch_df), "event_type_distribution"),
                 (analytics.top_items(batch_df), "top_items"),
                 (analytics.bounce_rate(batch_df), "bounce_rate"),
-                (session_metrics(sessionized), "sessions"),
-                (analytics.user_paths(sessionized), "user_paths"),
-                (funnel, "funnel_analysis"),
                 (analytics.item_interactions(batch_df), "item_interactions"),
                 (analytics.most_viewed_items(batch_df), "most_viewed_items"),
             ]
-            if max_parallel_sinks <= 1:
-                for df, table in outputs:
-                    sink.write(df, table, batch_id)
-            else:
-                # materialize each shared input ONCE before its consumers
-                # fan out (concurrent jobs then hit the cache instead of
-                # racing to fill it) — but don't serialize BOTH cache
-                # fills ahead of everything: only the three
-                # sessionized-lineage sinks need the sessionized cache, so
-                # its fill runs as a pool task OVERLAPPED with the seven
-                # batch-fed analyses and the session sinks are submitted
-                # the moment it completes (r16; guide §2.6 back-fill —
-                # measured 2.49 s -> 2.06 s at sf0.1/32 cores).
-                session_tables = {"sessions", "user_paths", "funnel_analysis"}
-                batch_df.count()
-                from concurrent.futures import ThreadPoolExecutor
+            session_fed: list[tuple[DataFrame, str]] = [
+                (session_metrics(sessionized), "sessions"),
+                (analytics.user_paths(sessionized), "user_paths"),
+                (funnel, "funnel_analysis"),
+            ]
+            batch_df.count()
+            spark = batch_df.sparkSession
+            with ThreadPoolExecutor(
+                max_workers=spark.sparkContext.defaultParallelism
+            ) as pool:
 
-                with ThreadPoolExecutor(max_workers=max_parallel_sinks) as pool:
-                    sess_ready = pool.submit(sessionized.count)
-                    futures = [
-                        pool.submit(sink.write, df, table, batch_id)
-                        for df, table in outputs
-                        if table not in session_tables
-                    ]
-                    sess_ready.result()  # cache filled; propagate failure
-                    futures += [
-                        pool.submit(sink.write, df, table, batch_id)
-                        for df, table in outputs
-                        if table in session_tables
-                    ]
-                    for f in futures:
-                        f.result()  # propagate the first failure
+                def submit(fn, *args):
+                    # each task gets its own copy of the caller's local
+                    # properties and tags: Spark mutates them in place per
+                    # job (the SQL execution id), so tasks must not share one
+                    return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+                sess_ready = submit(sessionized.count)
+                futures = [submit(sink.write, df, t, batch_id) for df, t in batch_fed]
+                sess_ready.result()  # cache filled; propagate failure
+                futures += [submit(sink.write, df, t, batch_id) for df, t in session_fed]
+                for f in futures:
+                    f.result()  # propagate the first failure
         finally:
             sessionized.unpersist()
     finally:
@@ -179,7 +175,6 @@ def start_stream(
     gap_seconds: int = DEFAULT_GAP_SECONDS,
     funnel_steps: list[str] | None = None,
     available_now: bool = False,
-    dedup_within: str | None = None,
 ) -> StreamingQuery:
     """Wire a canonical-schema streaming DataFrame into the 10-analysis
     fan-out (reference `stream_processor.py:400-406`).
@@ -188,14 +183,9 @@ def start_stream(
     the batch-replay / test mode (the reference has no equivalent; it relies
     on a human Ctrl-C).
 
-    ``dedup_within`` (e.g. ``"1 hour"``) inserts the at-least-once ingest
-    guard in front of the fan-out: redelivered events whose identity
-    columns repeat inside that watermark horizon are dropped once, so
-    every downstream analysis sees exactly-once input (the reference
-    recounts redeliveries).
+    For at-least-once sources, compose the ingest guard in front:
+    ``start_stream(dedup_events_stream(events, within="1 hour"), ...)``.
     """
-    if dedup_within is not None:
-        events = dedup_events_stream(events, within=dedup_within)
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         run_all_analyses(

@@ -18,6 +18,9 @@ from pyspark.sql import DataFrame
 
 
 class Sink(Protocol):
+    """``run_all_analyses`` calls ``write`` concurrently for different tables
+    of one batch, so an implementation must be thread-safe."""
+
     def write(self, df: DataFrame, table: str, batch_id: int | None = None) -> None: ...
 
 
@@ -141,14 +144,18 @@ class ParquetSink:
 
 
 class ConsoleSink:
-    """Debug tap (reference `consumer.py:10-19` / S7)."""
+    """Debug tap (reference `consumer.py:10-19` / S7). Thread-safe: the
+    fan-out writes concurrently, so header and table print under one lock
+    and never interleave with another table's."""
 
     def __init__(self, num_rows: int = 20):
         self.num_rows = num_rows
+        self._lock = threading.Lock()
 
     def write(self, df: DataFrame, table: str, batch_id: int | None = None) -> None:
-        print(f"=== {table} (batch {batch_id}) ===")
-        df.show(self.num_rows, truncate=False)
+        with self._lock:
+            print(f"=== {table} (batch {batch_id}) ===")
+            df.show(self.num_rows, truncate=False)
 
 
 class NoopSink:

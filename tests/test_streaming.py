@@ -337,28 +337,134 @@ def test_explode_json_array(spark):
     assert [(r["visitorid"], r["event"]) for r in out] == [("1", "view"), ("2", "click")]
 
 
-def test_parallel_fanout_matches_sequential(spark, one_batch_events):
-    """max_parallel_sinks submits concurrent jobs over the shared persisted
-    batch — every table's contents must be identical to sequential order."""
-    from clickestream_project_bigdata_spark.streaming import MemorySink
-    from clickestream_project_bigdata_spark.streaming.driver import run_all_analyses
+FANOUT_TABLES = {
+    "events_per_minute",
+    "active_users",
+    "event_type_distribution",
+    "top_items",
+    "bounce_rate",
+    "sessions",
+    "user_paths",
+    "funnel_analysis",
+    "item_interactions",
+    "most_viewed_items",
+}
 
+
+def canonical_batch(spark, records):
+    """One micro-batch frame from wire records, as foreachBatch sees it."""
     wire_df = spark.createDataFrame(
-        [tuple(r[k] for k in r) for r in one_batch_events],
+        [tuple(r[k] for k in r) for r in records],
         "timestamp string, visitorid string, event string, itemid string, "
         "transactionid string, event_category string, unix_timestamp string",
     )
-    batch = canonicalize(wire_df)
-    seq, par = MemorySink(), MemorySink()
-    run_all_analyses(batch, 0, seq, funnel_steps=["view", "click", "purchase"])
-    run_all_analyses(
-        batch, 0, par, funnel_steps=["view", "click", "purchase"], max_parallel_sinks=8
-    )
-    assert set(seq.tables) == set(par.tables)
-    for table in seq.tables:
-        if table == "funnel_analysis":  # analysis_time is current_timestamp()
-            continue
-        assert sorted(map(tuple, seq.rows(table))) == sorted(map(tuple, par.rows(table))), table
+    return canonicalize(wire_df)
+
+
+def test_fanout_matches_direct_analyses(spark, one_batch_events):
+    """The concurrent fan-out over the shared persisted frames writes, for
+    every table, what the analysis gives when computed directly on the
+    calling thread and collected one table at a time."""
+    from pyspark.sql import functions as F
+
+    from clickestream_project_bigdata_spark.streaming.driver import run_all_analyses
+
+    steps = ["view", "click", "purchase"]
+    batch = canonical_batch(spark, one_batch_events)
+    sink = MemorySink()
+    run_all_analyses(batch, 0, sink, funnel_steps=steps)
+
+    sessionized = sessionize(batch)
+    direct = {
+        "events_per_minute": analytics.events_per_minute(batch),
+        "active_users": analytics.active_users(batch),
+        "event_type_distribution": analytics.event_type_distribution(batch),
+        "top_items": analytics.top_items(batch),
+        "bounce_rate": analytics.bounce_rate(batch),
+        "sessions": session_metrics(sessionized),
+        "user_paths": analytics.user_paths(sessionized),
+        # analysis_time is current_timestamp(), the one column left out
+        "funnel_analysis": analytics.funnel_analysis(sessionized, steps).select(
+            F.lit(0).alias("batch_id"), *steps
+        ),
+        "item_interactions": analytics.item_interactions(batch),
+        "most_viewed_items": analytics.most_viewed_items(batch),
+    }
+    assert set(sink.tables) == set(direct) == FANOUT_TABLES
+    for table, df in direct.items():
+        got = [tuple(r[c] for c in df.columns) for r in sink.rows(table)]
+        want = [tuple(r) for r in df.collect()]
+        assert sorted(got, key=repr) == sorted(want, key=repr), table
+
+
+def test_fanout_writes_inherit_caller_local_properties(spark, one_batch_events):
+    """Every concurrent write runs with the caller's local properties (the
+    streaming query's job group travels this way, so query.stop() can
+    cancel the batch's jobs) and the caller's job tags."""
+    import threading
+
+    from clickestream_project_bigdata_spark.streaming.driver import run_all_analyses
+
+    key, tag = "clickstream.test.caller", "clickstream-test-caller"
+
+    class RecordingSink:
+        def __init__(self):
+            self.seen: dict[str, tuple] = {}
+
+        def write(self, df, table, batch_id=None):
+            self.seen[table] = (
+                spark.sparkContext.getLocalProperty(key),
+                tag in spark.getTags(),
+                threading.current_thread() is threading.main_thread(),
+            )
+
+    sink = RecordingSink()
+    spark.sparkContext.setLocalProperty(key, "batch-7")
+    spark.addTag(tag)
+    try:
+        run_all_analyses(canonical_batch(spark, one_batch_events), 7, sink)
+    finally:
+        spark.sparkContext.setLocalProperty(key, None)
+        spark.removeTag(tag)
+    assert set(sink.seen) == FANOUT_TABLES
+    assert set(sink.seen.values()) == {("batch-7", True, False)}
+
+
+def test_fanout_failure_reraises_and_releases_caches(spark, one_batch_events):
+    """A sink failure on one table is re-raised once every other write has
+    finished, and neither persisted frame outlives the call."""
+    from clickestream_project_bigdata_spark.streaming.driver import run_all_analyses
+
+    class FailingSink(MemorySink):
+        def write(self, df, table, batch_id=None):
+            if table == "top_items":
+                raise RuntimeError(f"sink down for {table}")
+            super().write(df, table, batch_id)
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    sink = FailingSink()
+    with pytest.raises(RuntimeError, match="sink down for top_items"):
+        run_all_analyses(canonical_batch(spark, one_batch_events), 0, sink)
+    assert set(sink.tables) == FANOUT_TABLES - {"top_items"}
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_console_sink_tables_do_not_interleave(spark, one_batch_events, capsys):
+    """ConsoleSink under the concurrent fan-out: each table's header is
+    followed directly by its own rendered table."""
+    from clickestream_project_bigdata_spark.streaming import ConsoleSink
+    from clickestream_project_bigdata_spark.streaming.driver import run_all_analyses
+
+    run_all_analyses(canonical_batch(spark, one_batch_events), 3, ConsoleSink())
+    lines = capsys.readouterr().out.splitlines()
+    headers = [i for i, line in enumerate(lines) if line.startswith("=== ")]
+    assert {lines[i] for i in headers} == {
+        f"=== {table} (batch 3) ===" for table in FANOUT_TABLES
+    }
+    assert len(headers) == len(FANOUT_TABLES)
+    for i in headers:
+        assert lines[i + 1].startswith("+-"), lines[i : i + 2]
 
 
 def test_checkpoint_recovery_processes_only_new_files(spark, tmp_path):
@@ -722,19 +828,21 @@ def test_attribution_join_outer_emits_unconverted_views(spark, tmp_path):
 
 
 def test_start_stream_dedup_within_guards_fanout(spark, tmp_path):
-    """With dedup_within set, a cross-batch redelivery reaches the analysis
-    fan-out once: per-item counts match the deduplicated batch input."""
+    """With the ingest guard composed in front of start_stream, a
+    cross-batch redelivery reaches the analysis fan-out once: per-item
+    counts match the deduplicated batch input."""
+    from clickestream_project_bigdata_spark.streaming import dedup_events_stream
+
     dup = wire_record(1, 0, "view", 10)
     batches = [[dup, wire_record(2, 5, "view", 11)], [dup]]
     path = write_batch_files(tmp_path, batches)
     stream = canonicalize(read_json_stream(spark, path, max_files=1))
     sink = MemorySink()
     q = start_stream(
-        stream,
+        dedup_events_stream(stream, within="1 hour"),
         sink,
         checkpoint_location=str(tmp_path / "ddg_ck"),
         available_now=True,
-        dedup_within="1 hour",
     )
     q.awaitTermination(120)
     total = {}

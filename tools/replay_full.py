@@ -9,13 +9,10 @@ The events fixture is derived at exactly the reference's row count
 visitor/event ids (the make_scale10x scheme) and truncating — same
 schema, same skew profile, reference cardinality.
 
-All 10 analyses run through the REAL driver (`streaming/driver.py:32`,
-`run_all_analyses`) with a real ParquetSink — every sink lands on disk,
-nothing is a noop — in both sink modes:
-
-* sequential (reference sink order, `max_parallel_sinks=1`);
-* concurrent fan-out (`max_parallel_sinks=4`) — the FAIR-pool multi-sink
-  shape a production driver would use.
+All 10 analyses run through the REAL driver (`streaming/driver.py`,
+`run_all_analyses`, the concurrent per-batch fan-out) with a real
+ParquetSink — every sink lands on disk, nothing is a noop — in one timed
+call.
 
 Usage: python tools/replay_full.py [out_json] [rows]
        defaults: REPLAY_FULL.json 2756101
@@ -85,28 +82,21 @@ def main() -> None:
     n = events.count()  # also warms the parquet reader, untimed below
     assert n == rows, (n, rows)
 
-    timings = {}
-    for label, par in (("sequential", 1), ("concurrent_4", 4)):
-        sink_dir = os.path.join(work, f"sinks_{label}")
-        sink = ParquetSink(sink_dir)
-        t0 = time.time()
-        run_all_analyses(events, 0, sink, max_parallel_sinks=par)
-        timings[label] = round(time.time() - t0, 2)
-        tables = sorted(os.listdir(sink_dir))
-        assert len(tables) == 10, tables
-        print(f"{label}: {timings[label]}s, sinks={tables}", flush=True)
-        spark.catalog.clearCache()
+    sink_dir = os.path.join(work, "sinks")
+    t0 = time.time()
+    run_all_analyses(events, 0, ParquetSink(sink_dir))
+    wall = round(time.time() - t0, 2)
+    tables = sorted(os.listdir(sink_dir))
+    assert len(tables) == 10, tables
+    print(f"{wall}s, sinks={tables}", flush=True)
 
     ref_hours = rows * 0.1 / 3600
     artifact = {
         "events": rows,
-        "wall_sec_sequential": timings["sequential"],
-        "wall_sec_concurrent_4": timings["concurrent_4"],
-        "wall_min_best": round(min(timings.values()) / 60, 2),
+        "wall_sec": wall,
+        "wall_min": round(wall / 60, 2),
         "reference_implied_hours": round(ref_hours, 1),
-        "speedup_vs_reference_floor": round(
-            ref_hours * 3600 / min(timings.values()), 0
-        ),
+        "speedup_vs_reference_floor": round(ref_hours * 3600 / wall, 0),
         "method": (
             "run_all_analyses (streaming/driver.py) over the full "
             f"{rows:,}-event fixture as one unthrottled batch; all 10 "

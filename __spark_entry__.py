@@ -199,24 +199,22 @@ def _q_session_window_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_windowed_top_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed_top_items (streaming/sessions.py:202) run in batch
-    mode: tumbling-minute per-item counts (watermark is a no-op on a batch
-    frame; the plan is the one the stream runs per state update)."""
-    from clickestream_project_bigdata_spark.streaming import windowed_top_items
-
-    return windowed_top_items(events_from_fixture(_utc(spark), sf_dir))
+    """``top_items`` as the streaming query runs it: the minute-grain
+    analysis carries its watermark on the floored minute, and the same
+    function serves batch, per-batch and streaming (the watermark is a
+    no-op on a batch frame)."""
+    return analytics.top_items(events_from_fixture(_utc(spark), sf_dir))
 
 
 def _q_windowed_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed_bounce_rate (streaming/sessions.py:220) in batch
-    mode: the chained two-level tumbling-window aggregation shape."""
-    from clickestream_project_bigdata_spark.streaming import windowed_bounce_rate
-
-    return windowed_bounce_rate(events_from_fixture(_utc(spark), sf_dir))
+    """``bounce_rate`` as the streaming query runs it: two chained
+    aggregations keyed on the watermarked minute, which append mode
+    accepts on a stream."""
+    return analytics.bounce_rate(events_from_fixture(_utc(spark), sf_dir))
 
 
 def _q_windowed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming windowed_funnel (streaming/sessions.py:174) in batch mode:
+    """Streaming windowed_funnel (streaming/sessions.py:152) in batch mode:
     session-window flags rolled into tumbling hours. Sessions split on the
     batch operator's floored-second rule, and the chained window() buckets
     on the session window's END (floored last event + gap) minus one
@@ -2707,8 +2705,9 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CASE WHEN events=1 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS bounce_rate "
             "FROM per_user GROUP BY minute"
         ),
-        # the streaming windowed_* operators run in batch mode: tumbling
-        # minute windows == date_trunc('minute'); windowed_funnel's sessions
+        # windowed_top_items / windowed_bounce_rate are top_items /
+        # bounce_rate (one function for batch and stream: date_trunc to the
+        # minute, watermark a no-op in batch); windowed_funnel's sessions
         # are the batch operator's (floored-second gap > 1800 s), and its
         # chained hour window buckets on session_window.end - 1 µs, where
         # the end is the floored last event + 30 min

@@ -1,1 +1,1 @@
-from .columns import cosine_similarity, dot_product, l2_norm, minute_of  # noqa: F401
+from .columns import cosine_similarity, dot_product, l2_norm  # noqa: F401

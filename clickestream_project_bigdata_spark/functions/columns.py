@@ -7,11 +7,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def minute_of(ts: Column) -> Column:
-    """The reference's per-minute grain (`stream_processor.py:236` et al.)."""
-    return F.date_trunc("minute", ts)
-
-
 def dot_product(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product over two array<numeric> columns in
     DOUBLE — deterministic accumulation order (matches a scalar loop)."""

@@ -6,16 +6,28 @@ sinks are the caller's concern (`streaming/driver.py` reproduces the
 10-sink fan-out). All operators are built-in Catalyst expressions: one
 shuffle each (on their group keys), map-side partial aggregation for free,
 whole-stage codegen end to end, no Python in the data path.
+
+One definition per analysis: each runs unchanged on a static frame (batch,
+or one micro-batch inside ``foreachBatch``) or on a streaming frame (a
+cross-batch query). :func:`with_minute` declares the event-time watermark
+on the floored ``minute`` it creates (:data:`MINUTE_WATERMARK`), so the five
+minute-grain analyses run in append mode on a stream (``active_users`` with
+``exact=False``). A minute is emitted once, after a micro-batch brings a
+minute at least ``MINUTE_WATERMARK`` later; events that arrive for it after
+that are dropped. ``item_interactions`` and ``most_viewed_items`` are
+running counts per item; on a stream they run in update or complete mode.
+In batch the watermark is a no-op: Spark drops it from the plan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sessionize import session_metrics, sessionize
 
 DEFAULT_FUNNEL_STEPS = ["view", "addtocart", "transaction"]
+MINUTE_WATERMARK = "10 minutes"
 
 
 def profile_events(events: DataFrame) -> DataFrame:
@@ -36,8 +48,16 @@ def profile_events(events: DataFrame) -> DataFrame:
 
 
 def with_minute(df: DataFrame, ts_col: str = "event_time") -> DataFrame:
-    """Minute grain used by 5 of the 10 analyses (`stream_processor.py:236,256,273,290,319`)."""
-    return df.withColumn("minute", F.date_trunc("minute", F.col(ts_col)))
+    """Minute grain used by 5 of the 10 analyses (`stream_processor.py:236,256,273,290,319`),
+    with the event-time watermark on the floored ``minute`` so the same
+    aggregates run in append mode on a stream (a no-op in batch).
+
+    ``date_trunc`` rather than ``F.window``: window grouping adds
+    ``isnotnull(event_time)``, which would drop the NULL-minute row a
+    malformed timestamp yields in batch."""
+    return df.withColumn(
+        "minute", F.date_trunc("minute", F.col(ts_col))
+    ).withWatermark("minute", MINUTE_WATERMARK)
 
 
 def events_per_minute(events: DataFrame) -> DataFrame:
@@ -54,7 +74,8 @@ def active_users(events: DataFrame, *, exact: bool = True, rsd: float = 0.02) ->
     minute. ``exact=False`` switches to HyperLogLog++ (`approx_count_distinct`)
     — at 100 TB an exact per-minute distinct is a full shuffle of every
     (minute, visitorid) pair; the sketch is one pass, mergeable, and ~0.8 kB
-    of state per minute."""
+    of state per minute. It is also the form that runs on a stream: Spark
+    has no streaming exact distinct."""
     agg = (
         F.count_distinct("visitorid")
         if exact
@@ -520,7 +541,9 @@ def bounce_rate(events: DataFrame) -> DataFrame:
     """Analysis 7 (`stream_processor.py:289-312`): two-level aggregate —
     events per (minute, visitor), then per-minute share of single-event
     visitors. Both aggregates shuffle on ``minute``-prefixed keys; the second
-    is a near-free partial over the first."""
+    is a near-free partial over the first. On a stream both are stateful
+    aggregates keyed on the watermarked minute, which append mode accepts
+    as a chain (Spark ≥ 3.5)."""
     per_user = (
         with_minute(events)
         .groupBy("minute", "visitorid")
@@ -598,13 +621,18 @@ def events_per_minute_ma(events: DataFrame, window_minutes: int = 5) -> DataFram
 
 
 def item_interactions(events: DataFrame) -> DataFrame:
-    """Analysis 9 (`stream_processor.py:337-354`)."""
+    """Analysis 9 (`stream_processor.py:337-354`). On a stream it is a
+    running count over the whole stream: write it in update mode (each
+    micro-batch emits the items it touched) or complete mode. No watermark:
+    state is one long per item, bounded by item cardinality, not time."""
     return events.groupBy("itemid").agg(F.count("*").alias("interaction_count"))
 
 
 def most_viewed_items(events: DataFrame, view_event: str = "view") -> DataFrame:
     """Analysis 10 (`stream_processor.py:360-379`): the filter precedes the
-    aggregate so it pushes into the scan when reading from parquet."""
+    aggregate so it pushes into the scan when reading from parquet (and, on
+    a stream, non-view events never touch the state store). Streams like
+    :func:`item_interactions`."""
     return (
         events.filter(F.col("event") == view_event)
         .groupBy("itemid")
@@ -664,6 +692,11 @@ def user_paths(sessionized: DataFrame) -> DataFrame:
     )
 
 
+def step_flags(steps: list[str]) -> list[Column]:
+    """One 0/1 aggregate per funnel step: did the group contain it."""
+    return [F.max(F.when(F.col("event") == s, 1).otherwise(0)).alias(s) for s in steps]
+
+
 def funnel_analysis(
     sessionized: DataFrame, funnel_steps: list[str] | None = None
 ) -> DataFrame:
@@ -679,11 +712,9 @@ def funnel_analysis(
     the shuffle carries K ints per session instead of the whole event list.
     """
     steps = DEFAULT_FUNNEL_STEPS if funnel_steps is None else funnel_steps
-    flags = [
-        F.max(F.when(F.col("event") == step, 1).otherwise(0)).alias(step)
-        for step in steps
-    ]
-    session_flags = sessionized.groupBy("session_id", "visitorid").agg(*flags)
+    session_flags = sessionized.groupBy("session_id", "visitorid").agg(
+        *step_flags(steps)
+    )
     return session_flags.agg(
         *[F.sum(F.col(step)).alias(step) for step in steps]
     )

@@ -70,13 +70,3 @@ def session_metrics(sessionized: DataFrame) -> DataFrame:
         )
     )
 
-
-def sessionize_and_metrics(
-    events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS
-) -> tuple[DataFrame, DataFrame]:
-    """Convenience: (sessionized events, session metrics). Callers running
-    multiple consumers of the sessionized frame should ``persist()`` it —
-    the reference recomputes the lineage ×3 (`stream_processor.py:394-396`),
-    which we explicitly avoid in `streaming/driver.py`."""
-    s = sessionize(events, gap_seconds)
-    return s, session_metrics(s)

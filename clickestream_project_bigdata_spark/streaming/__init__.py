@@ -6,16 +6,10 @@ from .driver import (
 )
 from .sessions import (
     dedup_events_stream,
-    running_item_interactions,
-    running_most_viewed,
     stateful_session_flags,
     stateful_session_metrics,
     stateful_user_paths,
-    windowed_active_users,
-    windowed_bounce_rate,
-    windowed_counts,
     windowed_funnel,
-    windowed_top_items,
 )
 from .joins import (
     attribution_join,
@@ -36,18 +30,12 @@ __all__ = [
     "stateful_session_metrics",
     "stateful_session_flags",
     "stateful_user_paths",
-    "windowed_counts",
-    "windowed_bounce_rate",
-    "windowed_top_items",
     "windowed_funnel",
-    "windowed_active_users",
     "attribution_join",
     "attribution_join_outer",
     "conversion_rate_by_item",
     "windowed_conversion_rate",
     "dedup_events_stream",
-    "running_item_interactions",
-    "running_most_viewed",
     "Sink",
     "JdbcSink",
     "NoopSink",

@@ -14,10 +14,16 @@ stateful streaming:
   so a session that straddles a batch boundary is ONE session. State per key
   is O(1) (start/end/count), evicted once the watermark passes — bounded
   memory at any scale.
-* :func:`windowed_counts` — tumbling-window per-minute metrics with proper
-  late-data semantics (the reference recounts whatever happens to be in the
-  batch, so a late event creates a second partial row for the same minute;
-  here the window is updated in place until the watermark closes it).
+* :func:`stateful_user_paths`, :func:`stateful_session_flags` and
+  :func:`windowed_funnel` — the session-fed analyses over the same
+  cross-batch sessions.
+
+The other reference analyses have no streaming twin: the functions in
+``operators/analytics.py`` run unchanged on a static frame or a stream. The
+minute-grain ones carry their watermark on the floored minute, so a
+minute's counts accumulate in state until the watermark passes it and are
+then appended once (the reference recounts whatever happens to be in the
+batch, so a late event creates a second partial row for the same minute).
 
 Gap semantics: every session operator here goes through
 :func:`_session_groups`, which runs ``session_window`` over ``event_time``
@@ -34,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
+from ..operators.analytics import DEFAULT_FUNNEL_STEPS, step_flags
 from ..operators.sessionize import DEFAULT_GAP_SECONDS
 
 DEFAULT_WATERMARK = "1 hour"
@@ -54,11 +61,6 @@ def _session_groups(
         F.session_window("__t", f"{gap_seconds} seconds").alias("session_window"),
         "visitorid",
     )
-
-
-def _step_flags(steps: list[str]) -> list[Column]:
-    """One 0/1 column per funnel step: did the session contain it."""
-    return [F.max(F.when(F.col("event") == s, 1).otherwise(0)).alias(s) for s in steps]
 
 
 def _session_id() -> Column:
@@ -101,30 +103,6 @@ def stateful_session_metrics(
     )
 
 
-def windowed_counts(
-    events: DataFrame,
-    duration: str = "1 minute",
-    watermark: str = "10 minutes",
-    extra_keys: list[str] | None = None,
-) -> DataFrame:
-    """Tumbling-window event counts — the watermarked streaming form of
-    ``events_per_minute`` / ``event_type_distribution`` / ``top_items``
-    (pass ``extra_keys=["event"]`` / ``["itemid"]``)."""
-    keys = [F.window("event_time", duration).alias("window")] + [
-        F.col(k) for k in (extra_keys or [])
-    ]
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(*keys)
-        .agg(F.count("*").alias("events_count"))
-        .select(
-            F.col("window.start").alias("minute"),
-            *[F.col(k) for k in (extra_keys or [])],
-            "events_count",
-        )
-    )
-
-
 def stateful_user_paths(
     events: DataFrame,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
@@ -163,10 +141,10 @@ def stateful_session_flags(
     funnel is the column-sum of this table — in streaming, sum it per
     session-start window (:func:`windowed_funnel`) or in the serving store
     (a global running aggregate cannot append)."""
-    steps = steps or ["view", "addtocart", "transaction"]
+    steps = steps or DEFAULT_FUNNEL_STEPS
     return (
         _session_groups(events, gap_seconds, watermark)
-        .agg(F.min("event_time").alias("session_start"), *_step_flags(steps))
+        .agg(F.min("event_time").alias("session_start"), *step_flags(steps))
         .select(_session_id().alias("session_id"), "visitorid", "session_start", *steps)
     )
 
@@ -190,91 +168,12 @@ def windowed_funnel(
     derived min(event_time) column severs the lineage and append mode is
     rejected). The struct spans the floored session times, so a session
     falls in the tumbling window holding ``floor(last event) + gap - 1 µs``."""
-    steps = steps or ["view", "addtocart", "transaction"]
-    flags = _session_groups(events, gap_seconds, watermark).agg(*_step_flags(steps))
+    steps = steps or DEFAULT_FUNNEL_STEPS
+    flags = _session_groups(events, gap_seconds, watermark).agg(*step_flags(steps))
     return (
         flags.groupBy(F.window(F.col("session_window"), duration).alias("w"))
         .agg(*[F.sum(s).cast("long").alias(s) for s in steps])
         .select(F.col("w.start").alias("window_start"), *steps)
-    )
-
-
-def windowed_top_items(
-    events: DataFrame,
-    duration: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked streaming form of ``top_items`` (reference
-    `stream_processor.py:317-330`): per-(window, item) interaction counts —
-    unranked, like the reference (a true streaming top-k would need
-    update-mode ranking downstream; the per-minute counts table is what the
-    reference publishes and ranks in SQL)."""
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", duration).alias("window"), "itemid")
-        .agg(F.count("*").alias("interactions"))
-        .select(F.col("window.start").alias("minute"), "itemid", "interactions")
-    )
-
-
-def windowed_bounce_rate(
-    events: DataFrame,
-    duration: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked streaming ``bounce_rate`` (reference
-    `stream_processor.py:289-312`): per-(window, visitor) event counts, then
-    per-window share of single-event visitors.
-
-    Two chained stateful aggregations on the SAME tumbling window — the
-    append-mode multi-stateful-operator pattern (Spark ≥ 3.5): the inner
-    aggregate emits a (window, visitorid, events) row once the watermark
-    closes the window, and the outer aggregate — keyed on the same window —
-    closes immediately after. State is bounded by the watermark on both
-    levels. Output matches the batch operator's columns exactly."""
-    per_user = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", duration).alias("window"), "visitorid")
-        .agg(F.count("*").alias("events"))
-    )
-    return (
-        per_user.groupBy("window")
-        .agg(
-            F.sum(F.when(F.col("events") == 1, 1).otherwise(0)).alias("bounces"),
-            F.count("*").alias("total_users"),
-        )
-        .select(
-            F.col("window.start").alias("minute"),
-            "bounces",
-            "total_users",
-            (F.col("bounces") / F.col("total_users")).alias("bounce_rate"),
-        )
-    )
-
-
-def running_item_interactions(events: DataFrame) -> DataFrame:
-    """Update-output-mode streaming form of the global per-item interaction
-    count (reference `stream_processor.py:337-354`, analysis 9): a running
-    ``groupBy(itemid).count()`` over the WHOLE stream, not a window of it —
-    the form a global count actually wants in streaming. Write it with
-    ``outputMode("update")`` (each micro-batch emits only the keys it
-    touched; the serving store upserts on itemid) or ``"complete"``. No
-    watermark: state is one long per item — bounded by item cardinality,
-    not time, which is the correct trade for a dimension-keyed running
-    total. Same output schema as the batch ``item_interactions``."""
-    return events.groupBy("itemid").agg(F.count("*").alias("interaction_count"))
-
-
-def running_most_viewed(events: DataFrame, view_event: str = "view") -> DataFrame:
-    """Update-output-mode streaming form of ``most_viewed_items``
-    (reference `stream_processor.py:360-379`, analysis 10): running view
-    counts per item. The filter precedes the stateful aggregate, so
-    non-view events never touch the state store. Same schema as the batch
-    operator; write with ``outputMode("update")``."""
-    return (
-        events.filter(F.col("event") == view_event)
-        .groupBy("itemid")
-        .agg(F.count("*").alias("view_count"))
     )
 
 
@@ -288,31 +187,16 @@ def dedup_events_stream(
     overlap). ``dropDuplicatesWithinWatermark`` keys the state store on
     ``id_cols`` and evicts each key once the watermark passes — bounded
     state, unlike a plain ``dropDuplicates`` whose state grows forever.
-    Place it FIRST in the pipeline so every downstream aggregate sees
-    exactly-once events. In batch mode this degrades to ``dropDuplicates``
-    semantics on the same key."""
+    In batch mode this degrades to ``dropDuplicates`` semantics on the same
+    key.
+
+    It composes with :func:`~.driver.start_stream`, whose ``foreachBatch``
+    hands each analysis a static frame. It does NOT compose with a
+    watermarked streaming aggregate downstream (the minute-grain analyses,
+    the session operators here, :func:`windowed_funnel`): Spark rejects the
+    second ``withWatermark`` with "Redefining watermark is disallowed"."""
     return events.withWatermark("event_time", within).dropDuplicatesWithinWatermark(
         list(id_cols)
-    )
-
-
-def windowed_active_users(
-    events: DataFrame,
-    duration: str = "1 minute",
-    watermark: str = "10 minutes",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Streaming ``active_users``: HyperLogLog++ distinct visitors per window.
-
-    Exact streaming count-distinct would keep every visitorid in state until
-    the watermark; the sketch is mergeable and ~kB per window — the only sane
-    choice at 100 TB (batch mode keeps the exact variant as oracle).
-    """
-    return (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", duration).alias("window"))
-        .agg(F.approx_count_distinct("visitorid", rsd).alias("active_users"))
-        .select(F.col("window.start").alias("minute"), "active_users")
     )
 
 

@@ -41,6 +41,53 @@ def test_bounce_rate_single_event_visitor(make_events):
     r = analytics.bounce_rate(df).collect()[0]
     assert (r.bounces, r.total_users, r.bounce_rate) == (1, 2, 0.5)
 
+    # two minutes, mixed event types: each minute is its own rollup
+    df = make_events(
+        [
+            (1, "2024-01-01T00:00:00", "view", 10),
+            (1, "2024-01-01T00:00:30", "click", 10),
+            (2, "2024-01-01T00:00:40", "view", 11),
+            (3, "2024-01-01T00:01:10", "view", 11),
+        ]
+    )
+    got = {
+        r.minute.isoformat(): (r.bounces, r.total_users, r.bounce_rate)
+        for r in analytics.bounce_rate(df).collect()
+    }
+    assert got == {
+        "2024-01-01T00:00:00": (1, 2, 0.5),
+        "2024-01-01T00:01:00": (1, 1, 1.0),
+    }
+
+
+def test_minute_grain_keeps_null_minute_in_batch(spark):
+    """One definition per analysis: ``with_minute`` floors with
+    ``date_trunc`` and puts the watermark on the floored minute. In batch
+    the watermark leaves the plan, and a NULL event time (a malformed
+    timestamp after ``canonicalize``) still yields the reference's
+    NULL-minute row. ``F.window`` would filter it out."""
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [
+            (1, "view", dt.datetime(2024, 1, 1, 0, 0, 10), 1),
+            (2, "view", None, 2),
+        ],
+        "visitorid long, event string, event_time timestamp, itemid long",
+    )
+    for op in (
+        analytics.events_per_minute,
+        analytics.active_users,
+        analytics.event_type_distribution,
+        analytics.top_items,
+        analytics.bounce_rate,
+    ):
+        out = op(df)
+        minutes = [r.minute for r in out.collect()]
+        assert sorted(minutes, key=str) == [dt.datetime(2024, 1, 1), None], op.__name__
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "EventTimeWatermark" not in plan, op.__name__
+
 
 def test_event_type_distribution(make_events):
     df = make_events(

@@ -3,8 +3,12 @@ and streaming late-data semantics (T7)."""
 
 from __future__ import annotations
 
+import functools
+
+import pytest
 from pyspark.sql import functions as F
 
+from clickestream_project_bigdata_spark.operators import analytics
 from clickestream_project_bigdata_spark.plans import (
     register_views,
     salted_join,
@@ -78,9 +82,11 @@ def test_windowed_counts_drop_late_events(spark, tmp_path):
     import json
     import os
 
+    from clickestream_project_bigdata_spark.operators.analytics import (
+        events_per_minute,
+    )
     from clickestream_project_bigdata_spark.operators.cleanse import canonicalize
     from clickestream_project_bigdata_spark.sources.readers import read_json_stream
-    from clickestream_project_bigdata_spark.streaming import windowed_counts
 
     BASE_MS = 1700000000000
 
@@ -102,7 +108,7 @@ def test_windowed_counts_drop_late_events(spark, tmp_path):
         [rec(1, 0)],
         [rec(1, 3600)],
         [rec(1, 7200)],
-        [rec(2, 30)],  # 30s-old: behind the (3600-60)s filter watermark → dropped
+        [rec(2, 30)],  # 30s-old: behind the (3600-600)s filter watermark → dropped
     ]
     for i, b in enumerate(batches):
         p = src / f"b{i}.json"
@@ -111,7 +117,7 @@ def test_windowed_counts_drop_late_events(spark, tmp_path):
 
     stream = canonicalize(read_json_stream(spark, str(src), max_files=1))
     q = (
-        windowed_counts(stream, duration="1 minute", watermark="1 minute")
+        events_per_minute(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("late_counts")
@@ -121,7 +127,7 @@ def test_windowed_counts_drop_late_events(spark, tmp_path):
     )
     q.awaitTermination(120)
     rows = spark.sql("select * from late_counts").collect()
-    # the first minute's window closed with ONLY visitor 1's event; visitor
+    # the first minute closed with ONLY visitor 1's event; visitor
     # 2's late event neither resurrected it nor produced a second row
     import datetime as dt
 
@@ -132,8 +138,8 @@ def test_windowed_counts_drop_late_events(spark, tmp_path):
     assert first_minute[0]["events_count"] == 1
 
 
-def _drain_windowed(spark, tmp_path, op, name, **kwargs):
-    """Run a windowed operator over the standard 4-batch late-data feed."""
+def _drain_windowed(spark, tmp_path, op, name):
+    """Run a minute-grain analysis over the standard 4-batch late-data feed."""
     import json
     import os
 
@@ -164,7 +170,7 @@ def _drain_windowed(spark, tmp_path, op, name, **kwargs):
 
     stream = canonicalize(read_json_stream(spark, str(src), max_files=1))
     q = (
-        op(stream, duration="1 minute", watermark="1 minute", **kwargs)
+        op(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
@@ -183,9 +189,9 @@ def test_windowed_bounce_rate_streaming_and_late_data(spark, tmp_path):
     match the batch operator on the in-time events."""
     import datetime as dt
 
-    from clickestream_project_bigdata_spark.streaming import windowed_bounce_rate
+    from clickestream_project_bigdata_spark.operators.analytics import bounce_rate
 
-    rows = _drain_windowed(spark, tmp_path, windowed_bounce_rate, "wbr")
+    rows = _drain_windowed(spark, tmp_path, bounce_rate, "wbr")
     first = [r for r in rows if r["minute"] == dt.datetime(2023, 11, 14, 22, 13)]
     assert len(first) == 1
     r = first[0]
@@ -195,9 +201,9 @@ def test_windowed_bounce_rate_streaming_and_late_data(spark, tmp_path):
 def test_windowed_top_items_streaming_and_late_data(spark, tmp_path):
     import datetime as dt
 
-    from clickestream_project_bigdata_spark.streaming import windowed_top_items
+    from clickestream_project_bigdata_spark.operators.analytics import top_items
 
-    rows = _drain_windowed(spark, tmp_path, windowed_top_items, "wti")
+    rows = _drain_windowed(spark, tmp_path, top_items, "wti")
     first = {
         r["itemid"]: r["interactions"]
         for r in rows
@@ -206,29 +212,25 @@ def test_windowed_top_items_streaming_and_late_data(spark, tmp_path):
     assert first == {7: 2, 8: 1}  # the late item-7 event is not counted
 
 
-def test_windowed_bounce_rate_batch_equivalence(spark, make_events):
-    """In batch mode the windowed operator must agree with the reference
-    batch bounce_rate on every minute."""
-    from clickestream_project_bigdata_spark.operators.analytics import bounce_rate
-    from clickestream_project_bigdata_spark.streaming import windowed_bounce_rate
+@pytest.mark.parametrize(
+    "op, value_col, want",
+    [
+        (analytics.events_per_minute, "events_count", 3),
+        (analytics.event_type_distribution, "event_count", 3),  # all views
+        (functools.partial(analytics.active_users, exact=False), "active_users", 2),
+    ],
+    ids=["events_per_minute", "event_type_distribution", "active_users"],
+)
+def test_minute_analyses_streaming_and_late_data(spark, tmp_path, op, value_col, want):
+    """The other minute-grain analyses run on the same stream unchanged:
+    the first minute is appended once, with the in-time events only (the
+    late v3 event is dropped). ``active_users`` streams as its sketch."""
+    import datetime as dt
 
-    events = make_events(
-        [
-            (1, "2024-01-01T00:00:00", "view", 10),
-            (1, "2024-01-01T00:00:30", "click", 10),
-            (2, "2024-01-01T00:00:40", "view", 11),
-            (3, "2024-01-01T00:01:10", "view", 11),
-        ]
-    )
-    got = {
-        r["minute"]: (r["bounces"], r["total_users"], r["bounce_rate"])
-        for r in windowed_bounce_rate(events).collect()
-    }
-    want = {
-        r["minute"]: (r["bounces"], r["total_users"], r["bounce_rate"])
-        for r in bounce_rate(events).collect()
-    }
-    assert got == want
+    rows = _drain_windowed(spark, tmp_path, op, f"wma_{value_col}")
+    first = [r for r in rows if r["minute"] == dt.datetime(2023, 11, 14, 22, 13)]
+    assert len(first) == 1
+    assert first[0][value_col] == want
 
 
 def test_write_clustered_disjoint_file_ranges(spark, tmp_path):

@@ -27,7 +27,6 @@ from clickestream_project_bigdata_spark.streaming import (
     MemorySink,
     start_stream,
     stateful_session_metrics,
-    windowed_counts,
 )
 
 BASE_MS = 1700000000000  # 2023-11-14 22:13:20 UTC
@@ -249,22 +248,6 @@ def test_session_window_gap_boundary(spark, make_events):
         ]
     )
     assert n_sessions(sub_second) == [1, 1, 1, 1]
-
-
-def test_windowed_counts_batch_semantics(spark, make_events):
-    events = make_events(
-        [
-            (1, "2024-01-01T00:00:10", "view", 1),
-            (2, "2024-01-01T00:00:50", "view", 1),
-            (1, "2024-01-01T00:01:10", "click", 2),
-        ]
-    )
-    # windowed_counts is usable in batch too (window() is a plain grouping)
-    rows = {
-        (r["minute"].isoformat(), r["events_count"])
-        for r in windowed_counts(events).collect()
-    }
-    assert rows == {("2024-01-01T00:00:00", 2), ("2024-01-01T00:01:00", 1)}
 
 
 def test_stateful_sessionize_custom_operator(spark, tmp_path):
@@ -671,12 +654,8 @@ def test_running_counts_update_mode_matches_batch(spark, tmp_path):
     """Update-mode running per-item counts (analyses 9/10 in their global
     form): each micro-batch emits updated rows only for the keys it touched,
     and the LAST update per key — counts are monotone, so max == last —
-    must equal the batch operator over the full input."""
-    from clickestream_project_bigdata_spark.streaming import (
-        running_item_interactions,
-        running_most_viewed,
-    )
-
+    must equal the batch operator over the full input. The same functions
+    serve both."""
     batches = [
         [wire_record(1, 0, "view", 10), wire_record(2, 5, "click", 11)],
         [wire_record(1, 60, "view", 10), wire_record(3, 70, "view", 12)],
@@ -684,8 +663,8 @@ def test_running_counts_update_mode_matches_batch(spark, tmp_path):
     path = write_batch_files(tmp_path, batches)
     stream = canonicalize(read_json_stream(spark, path, max_files=1))
     for name, op in [
-        ("run_inter", running_item_interactions),
-        ("run_views", running_most_viewed),
+        ("run_inter", analytics.item_interactions),
+        ("run_views", analytics.most_viewed_items),
     ]:
         q = (
             op(stream)

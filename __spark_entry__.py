@@ -32,7 +32,6 @@ from clickestream_project_bigdata_spark.operators import (  # noqa: E402
     curation,
     dedup,
     multimodal,
-    relational,
     similarity,
     text,
 )
@@ -162,10 +161,6 @@ def _q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.ngram_counts(_docs(spark, sf_dir), n=2, k=100)
 
 
-def _q_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.pricing_rollup(read_parquet_table(spark, sf_dir, "lineitem"))
-
-
 def _q_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.bounce_rate(events_from_fixture(spark, sf_dir))
 
@@ -249,143 +244,6 @@ def _q_cleanse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.pricing_summary(read_parquet_table(spark, sf_dir, "lineitem"))
-
-
-def _q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "orders", "customer", "nation", "region")}
-    return relational.revenue_by_nation(t["lineitem"], t["orders"], t["customer"], t["nation"], t["region"])
-
-
-def _q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "orders", "customer")}
-    return relational.top_orders_by_revenue(t["lineitem"], t["orders"], t["customer"])
-
-
-def _q_supplier_part_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "supplier", "part")}
-    return relational.supplier_part_volume(t["lineitem"], t["supplier"], t["part"])
-
-
-def _q_customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("orders", "customer")}
-    return relational.customer_order_ranks(t["orders"], t["customer"])
-
-
-def _q_orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("orders", "lineitem")}
-    return relational.orders_without_lineitems(t["orders"], t["lineitem"])
-
-
-def _q_late_shipment_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4-shaped EXISTS semi-join (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("orders", "lineitem")}
-    return relational.late_shipment_priority_counts(t["orders"], t["lineitem"])
-
-
-def _q_returnflag_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12-shaped conditional agg over the fact-fact join."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("orders", "lineitem")}
-    return relational.returnflag_priority_classes(t["orders"], t["lineitem"])
-
-
-def _q_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14-shaped promo revenue share (broadcast dim, DECIMAL sums)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part")}
-    return relational.promo_revenue_ratio(t["lineitem"], t["part"])
-
-
-def _q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-shaped filtered-scan aggregate (operators/relational.py) —
-    the canonical predicate-pushdown probe."""
-    return relational.forecast_revenue(read_parquet_table(spark, sf_dir, "lineitem"))
-
-
-def _q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7-shaped bilateral volume: nation dim joined twice under
-    different roles (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n)
-         for n in ("lineitem", "orders", "customer", "supplier", "nation")}
-    return relational.volume_shipping(
-        t["lineitem"], t["orders"], t["customer"], t["supplier"], t["nation"]
-    )
-
-
-def _q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8-shaped market share: conditional-sum ratio in one
-    aggregation (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n)
-         for n in ("lineitem", "orders", "customer", "supplier", "nation", "region", "part")}
-    return relational.market_share(
-        t["lineitem"], t["orders"], t["customer"], t["supplier"],
-        t["nation"], t["region"], t["part"],
-    )
-
-
-def _q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9-shaped profit by (supplier nation, order year) for parts
-    matching a name substring (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n)
-         for n in ("lineitem", "orders", "supplier", "nation", "part")}
-    return relational.product_profit_by_nation(
-        t["lineitem"], t["orders"], t["supplier"], t["nation"], t["part"]
-    )
-
-
-def _q_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10-shaped top-20 customers by returned revenue
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n)
-         for n in ("lineitem", "orders", "customer", "nation")}
-    return relational.returned_item_revenue(
-        t["lineitem"], t["orders"], t["customer"], t["nation"]
-    )
-
-
-def _q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13-shaped order-count histogram including zero-order
-    customers via LEFT OUTER (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("orders", "customer")}
-    return relational.customer_order_distribution(t["orders"], t["customer"])
-
-
-def _q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15-shaped argmax supplier: scalar max as a 1-row broadcast
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "supplier")}
-    return relational.top_supplier(t["lineitem"], t["supplier"])
-
-
-def _q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17-shaped below-average-quantity revenue: per-part average
-    self-agg joined back, brand-filtered on both sides
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part")}
-    return relational.small_qty_order_revenue(t["lineitem"], t["part"])
-
-
-def _q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18-shaped HAVING-on-fact-aggregate with customer attribution
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "orders", "customer")}
-    return relational.large_volume_customers(t["lineitem"], t["orders"], t["customer"])
-
-
-def _q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19-shaped disjunctive-predicate join revenue
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part")}
-    return relational.disjunctive_part_revenue(t["lineitem"], t["part"])
-
-
-def _q_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22-shaped above-average-balance never-ordered customers per
-    nation: scalar-average broadcast + LEFT ANTI (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("orders", "customer", "nation")}
-    return relational.global_sales_opportunity(t["orders"], t["customer"], t["nation"])
-
-
 def _q_item_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association-rule lift over session item pairs
     (operators/analytics.py)."""
@@ -428,13 +286,6 @@ def _q_hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week x hour traffic heatmap with exact shares
     (operators/analytics.py)."""
     return analytics.hourly_seasonality(events_from_fixture(spark, sf_dir))
-
-
-def _q_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-DECIMAL-moment discount/quantity correlation per part type
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part")}
-    return relational.discount_elasticity(t["lineitem"], t["part"])
 
 
 def _q_timed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,47 +337,6 @@ def _q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the per-label mean vectors (operators/similarity.py)."""
     emb = read_parquet_table(spark, sf_dir, "embeddings")
     return similarity.nearest_centroid_classify(emb)
-
-
-def _q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21-shaped solo-late-supplier count: fact-fact late tagging,
-    then LEFT SEMI (another supplier exists on the order) + LEFT ANTI (no
-    other supplier was late) on the same late set (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "orders", "supplier", "nation")}
-    return relational.waiting_suppliers(t["lineitem"], t["orders"], t["supplier"], t["nation"])
-
-
-def _q_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20-shaped ramping-supplier identification: prefix-filtered
-    part semi-join, conditional-sum year/all-time threshold per
-    (supplier, part), nested semi-joins up to nation-filtered suppliers
-    (operators/relational.py:potential_part_promotion)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part", "supplier", "nation")}
-    return relational.potential_part_promotion(
-        t["lineitem"], t["part"], t["supplier"], t["nation"]
-    )
-
-
-def _q_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2-shaped per-part argmin supplier over lineitem-derived unit
-    costs (the fixture has no partsupp), broadcast scalar-min join-back
-    (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part", "supplier", "nation")}
-    return relational.cheapest_supplier_per_part(t["lineitem"], t["part"], t["supplier"], t["nation"])
-
-
-def _q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11-shaped value-share gate: exact-decimal per-part sums vs a
-    broadcast grand-total threshold (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "supplier", "nation")}
-    return relational.important_part_values(t["lineitem"], t["supplier"], t["nation"])
-
-
-def _q_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16-shaped distinct-supplier counts per part class with an
-    anti-joined supplier exclusion list (operators/relational.py)."""
-    t = {n: read_parquet_table(spark, sf_dir, n) for n in ("lineitem", "part", "supplier")}
-    return relational.part_supplier_counts(t["lineitem"], t["part"], t["supplier"])
 
 
 def _q_next_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,12 +400,6 @@ def _q_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = sessionize(events_from_fixture(_utc(spark), sf_dir))
     return analytics.item_cooccurrence(ev, k=100)
-
-
-def _q_order_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer order inter-arrival profile
-    (operators/relational.py:order_gap_stats)."""
-    return relational.order_gap_stats(read_parquet_table(spark, sf_dir, "orders"))
 
 
 def _q_item_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,82 +788,10 @@ def _q_conversion_rate_by_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Fixed campaign windows inside the fixture's January range — shared by the
-#: Spark query and the DuckDB oracle for the interval-overlap join.
-_CAMPAIGNS = [
-    ("c1", "2024-01-03 06:00:00", "2024-01-03 18:00:00"),
-    ("c2", "2024-01-10 00:00:00", "2024-01-10 12:00:00"),
-    ("c3", "2024-01-21 12:00:00", "2024-01-22 00:00:00"),
-]
-
-
-def _q_sessions_in_campaigns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval×interval overlap join (operators/relational.py:
-    interval_overlap_join, first-common-bucket decomposition): sessions
-    overlapping fixed campaign windows."""
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    iv = session_metrics(sessionize(ev)).select(
-        "session_id", "session_start", "session_end"
-    )
-    campaigns = spark.createDataFrame(
-        [(c, s, e) for c, s, e in _CAMPAIGNS],
-        "campaign string, c_start string, c_end string",
-    ).select(
-        "campaign",
-        F.col("c_start").cast("timestamp").alias("c_start"),
-        F.col("c_end").cast("timestamp").alias("c_end"),
-    )
-    return relational.interval_overlap_join(
-        iv, campaigns, "session_start", "session_end", "c_start", "c_end",
-        bucket_seconds=6 * 3600,
-    ).select("session_id", "campaign")
-
-
-def _q_events_with_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval containment join (operators/relational.py:range_join):
-    every event matched back to its session's [start, end] window per
-    visitor via bucket decomposition — reproducing sessionize's own
-    assignment, which the oracle checks with a plain BETWEEN theta join."""
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    iv = session_metrics(sessionize(ev)).select(
-        "session_id", "visitorid", "session_start", "session_end"
-    )
-    out = relational.range_join(
-        ev.select("visitorid", "event_time", "itemid"),
-        iv,
-        ts_col="event_time",
-        start_col="session_start",
-        end_col="session_end",
-        by="visitorid",
-        bucket_seconds=3600,
-    )
-    return out.select("visitorid", "event_time", "itemid", "session_id")
-
-
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window token chunking (operators/text.py:chunk_documents):
     64-token chunks, 16-token overlap — zero-shuffle posexplode+slice."""
     return text.chunk_documents(_docs(spark, sf_dir), max_tokens=64, overlap=16)
-
-
-def _q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time join (operators/relational.py:asof_join): each view
-    event picks up the visitor's latest purchase value at-or-before the
-    view — the feature-store as-of semantics, oracled by DuckDB's native
-    ASOF LEFT JOIN."""
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    left = ev.filter(F.col("event") == "view").select(
-        "visitorid", "event_time", "itemid"
-    )
-    right = (
-        ev.filter(F.col("event") == "purchase")
-        .groupBy("visitorid", "event_time")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    return relational.asof_join(
-        left, right, ts_col="event_time", by="visitorid",
-        value_cols=("purchase_value",),
-    )
 
 
 def _q_split_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1416,15 +1148,6 @@ def _q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.embedding_outliers(emb, top_k=5)
 
 
-def _q_scd2_event_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 SCD validity ranges of each visitor's event type — the
-    versioned dimension-history build (operators/relational.py); ties on
-    event_time break by event_id for a total order."""
-    return relational.scd2_history(
-        events_from_fixture(spark, sf_dir), order_cols=("event_id",)
-    )
-
-
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-visitor first-touch ordered funnel view->click->purchase — the
     oracle-checked batch twin of streaming.stateful_funnel
@@ -1665,7 +1388,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "transition_entropy": _q_transition_entropy,
         "norm_profile": _q_norm_profile,
         "cluster_inertia": _q_cluster_inertia,
-        "tpch_q20_potential_promotion": _q_potential_promotion,
         "mask_duplicate_spans": _q_mask_duplicate_spans,
         "collocations": _q_collocations,
         "type_token_ratio": _q_type_token_ratio,
@@ -1677,7 +1399,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "nearest_centroid": _q_nearest_centroid,
         "incremental_dedup": _q_incremental_dedup,
         "item_trend": _q_item_trend,
-        "discount_elasticity": _q_discount_elasticity,
         "trending_items": _q_trending_items,
         "conversion_latency": _q_conversion_latency,
         "events_per_minute_dense": _q_events_per_minute_dense,
@@ -1690,21 +1411,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "bot_flags": _q_bot_flags,
         "vocab_coverage": _q_vocab_coverage,
         "minute_anomalies": _q_minute_anomalies,
-        "tpch_q21_waiting_suppliers": _q_waiting_suppliers,
-        "tpch_q2_cheapest_supplier": _q_cheapest_supplier,
-        "tpch_q11_important_parts": _q_important_parts,
-        "tpch_q16_part_supplier_counts": _q_part_supplier_counts,
-        "tpch_q6_forecast_revenue": _q_forecast_revenue,
-        "tpch_q7_volume_shipping": _q_volume_shipping,
-        "tpch_q8_market_share": _q_market_share,
-        "tpch_q9_product_profit": _q_product_profit,
-        "tpch_q10_returned_items": _q_returned_item_revenue,
-        "tpch_q13_order_distribution": _q_customer_order_distribution,
-        "tpch_q15_top_supplier": _q_top_supplier,
-        "tpch_q17_small_qty_revenue": _q_small_qty_revenue,
-        "tpch_q18_large_volume_customers": _q_large_volume_customers,
-        "tpch_q19_disjunctive_revenue": _q_disjunctive_revenue,
-        "tpch_q22_sales_opportunity": _q_global_sales_opportunity,
         "token_frequencies": _q_token_frequencies,
         "dup_rate_by_source": _q_dup_rate_by_source,
         "event_type_pivot": _q_event_type_pivot,
@@ -1716,7 +1422,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "similar_visitors": _q_similar_visitors,
         "sequential_funnel": _q_sequential_funnel,
         "item_cooccurrence": _q_item_cooccurrence,
-        "order_gap_stats": _q_order_gap_stats,
         "retention_cohorts": _q_retention_cohorts,
         "item_dwell_time": _q_item_dwell_time,
         "rfm_segments": _q_rfm_segments,
@@ -1724,9 +1429,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "session_entry_exit": _q_session_entry_exit,
         "top_paths": _q_top_paths,
         # --- never driver-sampled before round 6
-        "tpch_q4_late_shipments": _q_late_shipment_priorities,
-        "tpch_q12_priority_classes": _q_returnflag_priority_classes,
-        "tpch_q14_promo_revenue": _q_promo_revenue_ratio,
         "tfidf_top_terms": _q_tfidf_top_terms,
         "similar_docs_topk": _q_similar_docs,
         "label_centroids": _q_label_centroids,
@@ -1736,8 +1438,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # changed this round (grouping_id added) - re-verify
         "events_cube": _q_events_cube,
         # last driver-sampled in rounds 1-4
-        "customer_order_ranks": _q_customer_order_ranks,
-        "orders_without_lineitems": _q_orders_without_lineitems,
         "text_stats": _q_text_stats,
         "token_count_bpe": _q_token_count_bpe,
         "lang_id": _q_lang_id,
@@ -1790,10 +1490,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "decontaminate": _q_decontaminate,
         "decontaminate_apply": _q_decontaminate_apply,
         "corpus_profile": _q_corpus_profile,
-        "asof_last_purchase": _q_asof_last_purchase,
         "chunk_documents": _q_chunk_documents,
-        "events_with_session": _q_events_with_session,
-        "sessions_in_campaigns": _q_sessions_in_campaigns,
         "view_purchase_attribution": _q_view_purchase_attribution,
         "view_purchase_attribution_outer": _q_view_purchase_attribution_outer,
         "conversion_rate_by_item": _q_conversion_rate_by_item,
@@ -1807,11 +1504,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "quantize_embeddings": _q_quantize_embeddings,
         "active_users_approx": _q_active_users_approx,
         "cleanse_events": _q_cleanse,
-        "tpch_q1_pricing_summary": _q_pricing_summary,
-        "pricing_rollup": _q_pricing_rollup,
-        "tpch_q5_revenue_by_nation": _q_revenue_by_nation,
-        "tpch_q3_top_orders": _q_top_orders,
-        "supplier_part_volume": _q_supplier_part_volume,
         # --- round-7 additions (never sampled yet; prioritized below)
         "token_length_distribution": _q_token_length_distribution,
         "char_entropy": _q_char_entropy,
@@ -1825,7 +1517,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "tokenizer_fertility": _q_tokenizer_fertility,
         "domain_balance_weights": _q_domain_balance_weights,
         "embedding_outliers": _q_embedding_outliers,
-        "scd2_event_history": _q_scd2_event_history,
         "first_touch_funnel": _q_first_touch_funnel,
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
@@ -1915,7 +1606,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "multimodal_audio",
     "neardup_histogram",
     "next_item_recs",
-    "order_gap_stats",
     "packed_corpus",
     "quality_dup_calibration",
     "readability_scores",
@@ -1927,11 +1617,8 @@ _SAMPLING_PRIORITY: list[str] = [
     "tfidf_top_terms",
     "timed_funnel",
     "token_length_distribution",
-    "tpch_q12_priority_classes",
-    "tpch_q14_promo_revenue",
     "transition_entropy",
 ]
-
 
 
 def _apply_sampling_priority(
@@ -1952,10 +1639,6 @@ _QUERIES = _apply_sampling_priority(_QUERIES)
 # oracle SQL (DuckDB dialect)
 # ---------------------------------------------------------------------------
 
-_DEC_REV = (
-    "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-    "(1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE)"
-)
 
 _STOPWORDS_SQL = "[" + ", ".join(f"'{w}'" for w in text.STOPWORDS) + "]"
 _NORM_TEXT_SQL = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
@@ -2691,11 +2374,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT ngram, COUNT(*) AS occurrences FROM g GROUP BY ngram "
             "ORDER BY occurrences DESC, ngram ASC LIMIT 100"
         ),
-        "pricing_rollup": (
-            "SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt, "
-            "CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty "
-            "FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)"
-        ),
         "bounce_rate": (
             f"WITH {_EV}, per_user AS ("
             "SELECT date_trunc('minute', event_time) AS minute, visitorid, COUNT(*) AS events "
@@ -2771,190 +2449,6 @@ def oracle_sql() -> dict[str, str]:
             "epoch_ms(ts) AS unix_ts_ms, "
             "CASE WHEN event_type='view' THEN 'Low Value' ELSE 'High Value' END AS event_category "
             "FROM events"
-        ),
-        "tpch_q1_pricing_summary": (
-            "SELECT l_returnflag, l_linestatus, "
-            "CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty, "
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price, "
-            f"{_DEC_REV} AS sum_disc_price, "
-            "COUNT(*) AS count_order, "
-            "CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty, "
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price "
-            "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' "
-            "GROUP BY l_returnflag, l_linestatus"
-        ),
-        "tpch_q5_revenue_by_nation": (
-            "SELECT n_name, "
-            f"{_DEC_REV} AS revenue "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN nation ON c_nationkey = n_nationkey "
-            "JOIN region ON n_regionkey = r_regionkey "
-            "WHERE r_name = 'ASIA' GROUP BY n_name"
-        ),
-        "tpch_q3_top_orders": (
-            "SELECT o_orderkey, o_orderdate, o_orderpriority, "
-            f"{_DEC_REV} AS revenue "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "WHERE c_mktsegment = 'BUILDING' "
-            "GROUP BY o_orderkey, o_orderdate, o_orderpriority "
-            "ORDER BY revenue DESC, o_orderkey ASC LIMIT 10"
-        ),
-        "supplier_part_volume": (
-            "SELECT s_name, p_brand, SUM(l_quantity) AS total_qty, COUNT(*) AS line_count "
-            "FROM lineitem JOIN supplier ON l_suppkey = s_suppkey "
-            "JOIN part ON l_partkey = p_partkey GROUP BY s_name, p_brand"
-        ),
-        "customer_order_ranks": (
-            "WITH ranked AS (SELECT o_custkey, o_orderkey, o_totalprice, "
-            "row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS order_rank "
-            "FROM orders) "
-            "SELECT c_custkey, c_name, o_orderkey, o_totalprice, CAST(order_rank AS INT) AS order_rank "
-            "FROM ranked JOIN customer ON o_custkey = c_custkey WHERE order_rank <= 3"
-        ),
-        "orders_without_lineitems": (
-            "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
-            "WHERE o_orderkey NOT IN (SELECT l_orderkey FROM lineitem)"
-        ),
-        "tpch_q4_late_shipments": (
-            "SELECT o_orderpriority, COUNT(*) AS order_count FROM orders o "
-            "WHERE EXISTS (SELECT 1 FROM lineitem l "
-            "WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate) "
-            "GROUP BY o_orderpriority"
-        ),
-        "tpch_q12_priority_classes": (
-            "SELECT l_returnflag, "
-            "CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') "
-            "THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, "
-            "CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') "
-            "THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "GROUP BY l_returnflag"
-        ),
-        "tpch_q14_promo_revenue": (
-            "SELECT round(100.0 * "
-            "CAST(SUM(CASE WHEN p_type = 'PROMO' THEN "
-            "CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4))) "
-            "ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) / "
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-            "(1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE), 6) "
-            "AS promo_revenue_pct "
-            "FROM lineitem JOIN part ON l_partkey = p_partkey"
-        ),
-        "tpch_q6_forecast_revenue": (
-            "SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-            "CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue "
-            "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01' "
-            "AND l_shipdate < TIMESTAMP '1997-01-01' "
-            "AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"
-        ),
-        "tpch_q7_volume_shipping": (
-            "SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation, "
-            "CAST(year(l_shipdate) AS INT) AS l_year, "
-            f"{_DEC_REV} AS revenue "
-            "FROM lineitem "
-            "JOIN supplier ON l_suppkey = s_suppkey "
-            "JOIN nation sn ON s_nationkey = sn.n_nationkey "
-            "JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN nation cn ON c_nationkey = cn.n_nationkey "
-            "WHERE l_shipdate >= TIMESTAMP '1996-01-01' "
-            "AND l_shipdate < TIMESTAMP '1998-01-01' "
-            "AND sn.n_name IN ('NATION_1', 'NATION_2') "
-            "AND cn.n_name IN ('NATION_1', 'NATION_2') "
-            "AND sn.n_name <> cn.n_name "
-            "GROUP BY 1, 2, 3"
-        ),
-        "tpch_q8_market_share": (
-            "SELECT CAST(year(o_orderdate) AS INT) AS o_year, "
-            "round(CAST(SUM(CASE WHEN sn.n_name = 'NATION_3' THEN "
-            "CAST(l_extendedprice AS DECIMAL(18,4)) * (1 - CAST(l_discount AS DECIMAL(18,4))) "
-            "ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE) / "
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-            "(1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE), 6) AS mkt_share "
-            "FROM lineitem "
-            "JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO' "
-            "JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN supplier ON l_suppkey = s_suppkey "
-            "JOIN nation sn ON s_nationkey = sn.n_nationkey "
-            "WHERE o_orderdate >= TIMESTAMP '1995-01-01' "
-            "AND o_orderdate < TIMESTAMP '1997-01-01' "
-            "AND EXISTS (SELECT 1 FROM customer "
-            "JOIN nation cn ON c_nationkey = cn.n_nationkey "
-            "JOIN region ON cn.n_regionkey = r_regionkey "
-            "WHERE c_custkey = o_custkey AND r_name = 'ASIA') "
-            "GROUP BY 1"
-        ),
-        "tpch_q9_product_profit": (
-            "SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year, "
-            f"{_DEC_REV} AS sum_profit "
-            "FROM lineitem "
-            "JOIN supplier ON l_suppkey = s_suppkey "
-            "JOIN nation ON s_nationkey = n_nationkey "
-            "JOIN orders ON l_orderkey = o_orderkey "
-            "WHERE EXISTS (SELECT 1 FROM part WHERE p_partkey = l_partkey "
-            "AND p_name LIKE '%red%') "
-            "GROUP BY 1, 2"
-        ),
-        "tpch_q10_returned_items": (
-            "SELECT c_custkey, c_name, c_acctbal, n_name, "
-            f"{_DEC_REV} AS revenue "
-            "FROM lineitem "
-            "JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN nation ON c_nationkey = n_nationkey "
-            "WHERE l_returnflag = 'R' "
-            "AND o_orderdate >= TIMESTAMP '1996-01-01' "
-            "AND o_orderdate < TIMESTAMP '1996-04-01' "
-            "GROUP BY 1, 2, 3, 4 "
-            "ORDER BY revenue DESC, c_custkey ASC LIMIT 20"
-        ),
-        "tpch_q13_order_distribution": (
-            "WITH per_cust AS (SELECT c_custkey, "
-            "CAST(COUNT(o_orderkey) AS BIGINT) AS c_count "
-            "FROM customer LEFT JOIN orders ON c_custkey = o_custkey "
-            "AND o_orderpriority <> '1-URGENT' "
-            "GROUP BY c_custkey) "
-            "SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist "
-            "FROM per_cust GROUP BY c_count"
-        ),
-        "tpch_q15_top_supplier": (
-            "WITH per_supp AS (SELECT l_suppkey, "
-            "SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-            "(1 - CAST(l_discount AS DECIMAL(18,4)))) AS rev "
-            "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01' "
-            "AND l_shipdate < TIMESTAMP '1996-04-01' GROUP BY l_suppkey) "
-            "SELECT s_suppkey, s_name, CAST(rev AS DOUBLE) AS total_revenue "
-            "FROM per_supp JOIN supplier ON l_suppkey = s_suppkey "
-            "WHERE rev = (SELECT MAX(rev) FROM per_supp)"
-        ),
-        "tpch_q17_small_qty_revenue": (
-            "WITH bl AS (SELECT l_partkey, l_quantity, l_extendedprice FROM lineitem "
-            "WHERE EXISTS (SELECT 1 FROM part WHERE p_partkey = l_partkey "
-            "AND p_brand = 'Brand#12')), "
-            "pa AS (SELECT l_partkey AS pk, AVG(l_quantity) AS avg_qty FROM bl GROUP BY 1) "
-            "SELECT round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 6) "
-            "AS avg_weekly FROM bl JOIN pa ON l_partkey = pk "
-            "WHERE l_quantity < 0.5 * avg_qty"
-        ),
-        "tpch_q18_large_volume_customers": (
-            "WITH big AS (SELECT l_orderkey AS bok, SUM(l_quantity) AS total_qty "
-            "FROM lineitem GROUP BY 1 HAVING SUM(l_quantity) > 250) "
-            "SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty "
-            "FROM big JOIN orders ON bok = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 100"
-        ),
-        "tpch_q19_disjunctive_revenue": (
-            f"SELECT {_DEC_REV} AS revenue "
-            "FROM lineitem JOIN part ON l_partkey = p_partkey "
-            "WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 10 "
-            "AND l_quantity BETWEEN 1 AND 15) "
-            "OR (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 20 "
-            "AND l_quantity BETWEEN 10 AND 25) "
-            "OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 30 "
-            "AND l_quantity BETWEEN 20 AND 35)"
         ),
         "item_lift": (
             f"WITH {_SESSIONIZED}, "
@@ -3051,26 +2545,6 @@ def oracle_sql() -> dict[str, str]:
             "round(CAST(events_count AS DOUBLE) / "
             "(SELECT CAST(SUM(events_count) AS DOUBLE) FROM cells), 6) AS share "
             "FROM cells"
-        ),
-        "discount_elasticity": (
-            "WITH st AS (SELECT p_type, COUNT(*) AS n_lines, "
-            "SUM(CAST(l_discount AS DECIMAL(18,4))) AS sx, "
-            "SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sy, "
-            "SUM(CAST(l_discount AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4))) AS sxy, "
-            "SUM(CAST(l_discount AS DECIMAL(18,4)) * CAST(l_discount AS DECIMAL(18,4))) AS sxx, "
-            "SUM(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4))) AS syy "
-            "FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY 1) "
-            "SELECT p_type, CAST(n_lines AS BIGINT) AS n_lines, "
-            "round(CAST(sx AS DOUBLE) / CAST(n_lines AS DOUBLE), 6) AS avg_discount, "
-            "round(CAST(sy AS DOUBLE) / CAST(n_lines AS DOUBLE), 6) AS avg_quantity, "
-            "CASE WHEN CAST(n_lines AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 "
-            "AND CAST(n_lines AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0 "
-            "THEN round((CAST(n_lines AS DOUBLE) * CAST(sxy AS DOUBLE) - "
-            "CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / "
-            "sqrt((CAST(n_lines AS DOUBLE) * CAST(sxx AS DOUBLE) - "
-            "CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * "
-            "(CAST(n_lines AS DOUBLE) * CAST(syy AS DOUBLE) - "
-            "CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) END AS corr_disc_qty FROM st"
         ),
         "timed_funnel": (
             f"WITH {_EV}, "
@@ -3183,87 +2657,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT vec_id, label, CAST(clabel AS INTEGER) AS pred_label, score FROM sc "
             "QUALIFY row_number() OVER (PARTITION BY vec_id "
             "ORDER BY score DESC, clabel ASC) = 1"
-        ),
-        "tpch_q20_potential_promotion": (
-            # textbook correlated-IN spelling to pin the semi-join rewrite
-            "WITH red_parts AS (SELECT p_partkey FROM part WHERE p_name LIKE 'red%'), "
-            "ps AS (SELECT l_suppkey, l_partkey, "
-            "SUM(CASE WHEN l_shipdate >= TIMESTAMP '2000-01-01' "
-            "AND l_shipdate < TIMESTAMP '2001-01-01' "
-            "THEN CAST(l_quantity AS DECIMAL(18,4)) ELSE CAST(0 AS DECIMAL(18,4)) END) AS qty_yr, "
-            "SUM(CAST(l_quantity AS DECIMAL(18,4))) AS qty_all "
-            "FROM lineitem WHERE l_partkey IN (SELECT p_partkey FROM red_parts) "
-            "GROUP BY 1, 2) "
-            "SELECT s_name, s_acctbal FROM supplier "
-            "WHERE s_suppkey IN (SELECT l_suppkey FROM ps WHERE qty_yr * 5 > qty_all) "
-            "AND s_nationkey IN (SELECT n_nationkey FROM nation "
-            "WHERE n_name IN ('NATION_7', 'NATION_8', 'NATION_9')) "
-            "ORDER BY s_name"
-        ),
-        "tpch_q21_waiting_suppliers": (
-            "WITH late AS (SELECT DISTINCT l_orderkey, l_suppkey "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "WHERE o_orderstatus = 'F' "
-            "AND l_shipdate > o_orderdate + INTERVAL 60 DAY) "
-            "SELECT s_name, COUNT(*) AS numwait FROM late l1 "
-            "JOIN supplier ON l1.l_suppkey = s_suppkey "
-            "JOIN nation ON s_nationkey = n_nationkey "
-            "AND n_name IN ('NATION_3','NATION_7') "
-            "WHERE EXISTS (SELECT 1 FROM lineitem l2 "
-            "WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey) "
-            "AND NOT EXISTS (SELECT 1 FROM late l3 "
-            "WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey) "
-            "GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100"
-        ),
-        "tpch_q2_cheapest_supplier": (
-            "WITH wanted AS (SELECT p_partkey FROM part "
-            "WHERE p_type = 'PROMO' AND p_size <= 10), "
-            "cost AS (SELECT l_partkey, l_suppkey, "
-            "MIN(l_extendedprice / l_quantity) AS unit_cost "
-            "FROM lineitem WHERE EXISTS (SELECT 1 FROM wanted "
-            "WHERE p_partkey = l_partkey) GROUP BY 1, 2), "
-            "mn AS (SELECT l_partkey AS pk, MIN(unit_cost) AS min_cost "
-            "FROM cost GROUP BY 1) "
-            "SELECT s_acctbal, s_name, n_name, l_partkey AS p_partkey, unit_cost "
-            "FROM cost JOIN mn ON l_partkey = pk AND unit_cost = min_cost "
-            "JOIN supplier ON l_suppkey = s_suppkey "
-            "JOIN nation ON s_nationkey = n_nationkey "
-            "ORDER BY s_acctbal DESC, s_name ASC, p_partkey ASC LIMIT 100"
-        ),
-        "tpch_q11_important_parts": (
-            "WITH nat_supp AS (SELECT s_suppkey FROM supplier "
-            "JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_3'), "
-            "per_part AS (SELECT l_partkey, "
-            "SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * "
-            "(1 - CAST(l_discount AS DECIMAL(18,4)))) AS vald "
-            "FROM lineitem WHERE EXISTS (SELECT 1 FROM nat_supp "
-            "WHERE s_suppkey = l_suppkey) GROUP BY 1) "
-            "SELECT l_partkey, CAST(vald AS DOUBLE) AS part_value FROM per_part, "
-            "(SELECT CAST(SUM(vald) AS DOUBLE) * 0.001 AS cut FROM per_part) "
-            "WHERE CAST(vald AS DOUBLE) > cut"
-        ),
-        "tpch_q16_part_supplier_counts": (
-            "SELECT p_brand, p_type, p_size, "
-            "COUNT(DISTINCT l_suppkey) AS supplier_cnt "
-            "FROM lineitem JOIN part ON l_partkey = p_partkey "
-            "WHERE p_brand <> 'Brand#12' AND p_type <> 'PROMO' "
-            "AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34) "
-            "AND NOT EXISTS (SELECT 1 FROM supplier "
-            "WHERE s_acctbal < 0 AND s_suppkey = l_suppkey) "
-            "GROUP BY 1, 2, 3"
-        ),
-        "tpch_q22_sales_opportunity": (
-            "WITH inn AS (SELECT c_custkey, c_acctbal, n_name "
-            "FROM customer JOIN nation ON c_nationkey = n_nationkey "
-            "WHERE n_name IN ('NATION_5','NATION_7','NATION_9','NATION_11','NATION_13')), "
-            "ab AS (SELECT CAST(AVG(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS avg_bal "
-            "FROM inn WHERE c_acctbal > 0) "
-            "SELECT n_name, CAST(COUNT(*) AS BIGINT) AS numcust, "
-            "round(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2) AS totacctbal "
-            "FROM inn, ab WHERE c_acctbal > avg_bal "
-            "AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey "
-            "AND o_orderpriority = '1-URGENT') "
-            "GROUP BY n_name"
         ),
         "next_item_recs": (
             "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
@@ -3386,17 +2779,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT item_a, item_b, CAST(COUNT(*) AS BIGINT) AS n_sessions "
             "FROM pairs GROUP BY 1, 2 "
             "ORDER BY n_sessions DESC, item_a ASC, item_b ASC LIMIT 100"
-        ),
-        "order_gap_stats": (
-            "WITH l AS (SELECT o_custkey, o_orderdate, lag(o_orderdate) OVER "
-            "(PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev "
-            "FROM orders) "
-            "SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_gaps, "
-            "round(CAST(AVG(CAST(date_diff('day', prev, o_orderdate) AS DECIMAL(18,6))) "
-            "AS DOUBLE), 6) AS avg_gap_days, "
-            "CAST(MIN(date_diff('day', prev, o_orderdate)) AS INT) AS min_gap_days, "
-            "CAST(MAX(date_diff('day', prev, o_orderdate)) AS INT) AS max_gap_days "
-            "FROM l WHERE prev IS NOT NULL GROUP BY 1"
         ),
         "item_transitions": (
             "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
@@ -3838,26 +3220,6 @@ def oracle_sql() -> dict[str, str]:
             "round(CAST(SUM(CAST(converted AS BIGINT)) AS DOUBLE) / COUNT(*), 6) "
             "AS conversion_rate FROM pv GROUP BY view_item"
         ),
-        "sessions_in_campaigns": (
-            f"WITH {_SESSIONIZED}, "
-            "iv AS (SELECT session_id, MIN(event_time) AS s, MAX(event_time) AS e "
-            "FROM sessionized GROUP BY 1), "
-            "camp(campaign, cs, ce) AS (VALUES "
-            + ", ".join(
-                f"('{c}', TIMESTAMP '{s}', TIMESTAMP '{e}')" for c, s, e in _CAMPAIGNS
-            )
-            + ") "
-            "SELECT iv.session_id, camp.campaign FROM iv JOIN camp "
-            "ON iv.s <= camp.ce AND camp.cs <= iv.e"
-        ),
-        "events_with_session": (
-            f"WITH {_SESSIONIZED}, "
-            "iv AS (SELECT session_id AS sid, visitorid AS v, MIN(event_time) AS s, "
-            "MAX(event_time) AS e FROM sessionized GROUP BY 1, 2) "
-            "SELECT ev.visitorid, ev.event_time, ev.itemid, iv.sid AS session_id "
-            "FROM ev JOIN iv ON iv.v = ev.visitorid "
-            "AND ev.event_time BETWEEN iv.s AND iv.e"
-        ),
         "chunk_documents": (
             f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
             "n AS (SELECT doc_id, toks, len(toks) AS ntok FROM toks WHERE ntok >= 1), "
@@ -3869,16 +3231,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, "
             "CAST(len(chunk) AS BIGINT) AS n_tokens, "
             "array_to_string(chunk, ' ') AS chunk_text FROM s"
-        ),
-        "asof_last_purchase": (
-            "WITH v AS (SELECT user_id AS visitorid, ts AS event_time, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid "
-            "FROM events WHERE event_type = 'view'), "
-            "p AS (SELECT user_id AS visitorid, ts AS event_time, MAX(value) AS purchase_value "
-            "FROM events WHERE event_type = 'purchase' GROUP BY 1, 2) "
-            "SELECT v.visitorid, v.event_time, v.itemid, p.purchase_value, "
-            "p.event_time AS event_time_asof "
-            "FROM v ASOF LEFT JOIN p ON v.visitorid = p.visitorid AND v.event_time >= p.event_time"
         ),
         "decontaminate_apply": (
             f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
@@ -4100,24 +3452,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM d) "
             "SELECT vec_id, label, sq_dist, dist_rank FROM r WHERE dist_rank <= 5 "
             "ORDER BY label ASC, dist_rank ASC"
-        ),
-        "scd2_event_history": (
-            "WITH e AS (SELECT user_id AS visitorid, event_type AS event, "
-            "ts AS event_time, event_id FROM events), "
-            "m AS (SELECT visitorid, event, event_time, event_id, "
-            "CASE WHEN row_number() OVER w = 1 "
-            "OR NOT (event IS NOT DISTINCT FROM lag(event) OVER w) "
-            "THEN 1 ELSE 0 END AS isn FROM e "
-            "WINDOW w AS (PARTITION BY visitorid ORDER BY event_time ASC, event_id ASC)), "
-            "v AS (SELECT visitorid, event, event_time, "
-            "CAST(SUM(isn) OVER (PARTITION BY visitorid "
-            "ORDER BY event_time ASC, event_id ASC) AS INT) AS version FROM m), "
-            "r AS (SELECT visitorid, version, MIN(event) AS event, "
-            "MIN(event_time) AS valid_from, CAST(COUNT(*) AS BIGINT) AS n_events "
-            "FROM v GROUP BY visitorid, version) "
-            "SELECT visitorid, version, event, valid_from, "
-            "lead(valid_from) OVER (PARTITION BY visitorid ORDER BY version ASC) AS valid_to, "
-            "n_events FROM r ORDER BY visitorid ASC, version ASC"
         ),
         "first_touch_funnel": (
             "WITH g AS (SELECT user_id AS visitorid, "

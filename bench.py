@@ -49,15 +49,9 @@ HEADLINE = [
     "top_items",
     "item_interactions",
     "most_viewed_items",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_top_orders",
-    "tpch_q5_revenue_by_nation",
 ]
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["orders", "events", "documents", "embeddings"]
 
 
 def _recode_fixture(sf_dir: str, target_splits: int = 32) -> str:

@@ -6,11 +6,11 @@ Layout:
 * ``session``   — tuned SparkSession factory (AQE, UTC, Arrow).
 * ``schema``    — canonical typed event schema (casts once at ingest).
 * ``sources``   — parquet/CSV/JSON batch readers, Kafka + file streaming.
-* ``operators`` — cleanse, sessionize, the 10 reference analyses, relational
-  (join) coverage, dedup, similarity search, text analysis, multimodal.
+* ``operators`` — cleanse, sessionize, the 10 reference analyses, dedup,
+  similarity search, text analysis, multimodal.
 * ``streaming`` — foreachBatch driver (reference-compatible) and the
   watermarked/session_window-based improved mode; pluggable sinks.
-* ``plans``     — plan-audit helpers (pushdown/pruning/broadcast assertions)
+* ``plans``     — plan-audit helpers (exchange/join-count assertions)
   and scale utilities (salted joins, bucketed tables, SQL views).
 """
 

@@ -3,7 +3,6 @@ from . import (  # noqa: F401
     cleanse,
     dedup,
     multimodal,
-    relational,
     sessionize,
     similarity,
     text,

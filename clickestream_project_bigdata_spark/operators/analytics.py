@@ -1373,8 +1373,6 @@ def concurrent_sessions(events: DataFrame, gap_s: int = 1800) -> DataFrame:
     idles out after ``gap_s``), so a year-long log cannot produce
     unbounded rows per session; the output collapses to ≤ minutes-in-
     corpus rows. Output: (minute, active_sessions)."""
-    from .sessionize import session_metrics, sessionize
-
     sess = session_metrics(sessionize(events, gap_seconds=gap_s))
     minutes = sess.select(
         F.explode(
@@ -1808,26 +1806,6 @@ def session_length_quantiles(
         *_quantile_aggs("session_length", quantiles, exact, accuracy),
         F.round(F.avg("events_in_session"), 6).alias("avg_events"),
     )
-
-
-def sessionization_outputs(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    funnel_steps: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """The session-family outputs sharing one sessionized lineage.
-
-    The reference recomputes sessionization for each of its three consumers
-    (`stream_processor.py:394-396`, no cache); callers here should persist
-    the returned ``_sessionized`` frame when materializing more than one.
-    """
-    s = sessionize(events, gap_seconds)
-    return {
-        "_sessionized": s,
-        "sessions": session_metrics(s),
-        "user_paths": user_paths(s),
-        "funnel_analysis": funnel_analysis(s, funnel_steps),
-    }
 
 
 def key_skew_profile(df: DataFrame, key: str, k: int = 10) -> DataFrame:

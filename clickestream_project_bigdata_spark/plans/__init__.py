@@ -3,9 +3,6 @@ from .audit import (  # noqa: F401
     count_exchanges,
     count_sort_merge_joins,
     executed_plan,
-    explain_formatted,
-    pushed_filters,
-    read_schema_widths,
 )
 from .scale import (  # noqa: F401
     materialize_once,

@@ -2,9 +2,9 @@
 
 Scale regressions rarely announce themselves — a lost broadcast hint or a
 collapsed projection just makes the job slower. These helpers turn plan
-properties (exchange count, pushed filters, scan schema) into assertable
-values so tests can pin them (e.g. `test_bucketed_write_joins_without_
-exchange`), and `explain()` is one call away during development.
+properties (exchange and join counts) into assertable values so tests can
+pin them (e.g. `test_bucketed_write_joins_without_exchange`), and
+`explain()` is one call away during development.
 """
 
 from __future__ import annotations
@@ -19,12 +19,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def explain_formatted(df: DataFrame) -> str:
-    spark = df.sparkSession
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Shuffle exchanges in the plan (each one is a full data reshuffle)."""
     return len(re.findall(r"\bExchange\b", executed_plan(df)))
@@ -36,25 +30,3 @@ def count_sort_merge_joins(df: DataFrame) -> int:
 
 def count_broadcast_joins(df: DataFrame) -> int:
     return executed_plan(df).count("BroadcastHashJoin")
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """Filter predicates that reached the parquet scan (formatted-mode
-    `PushedFilters` lines) — empty means the scan reads everything."""
-    out: list[str] = []
-    for line in explain_formatted(df).splitlines():
-        m = re.search(r"PushedFilters: \[(.*)\]", line)
-        if m and m.group(1).strip():
-            out.append(m.group(1).strip())
-    return out
-
-
-def read_schema_widths(df: DataFrame) -> list[int]:
-    """Column count of each parquet ReadSchema — a 2-column projection that
-    reads 16 columns means pruning failed."""
-    widths = []
-    for line in explain_formatted(df).splitlines():
-        m = re.search(r"ReadSchema: struct<(.*)>", line)
-        if m:
-            widths.append(len([c for c in m.group(1).split(",") if ":" in c]))
-    return widths

@@ -1,7 +1,6 @@
 from .readers import (  # noqa: F401
     events_from_fixture,
     explode_json_array,
-    load_tables,
     parse_kafka_wire,
     read_json_stream,
     read_kafka_stream,

@@ -17,28 +17,10 @@ from pyspark.sql import types as T
 
 from ..schema import RAW_EVENT_SCHEMA, WIRE_EVENT_SCHEMA
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Column pruning + filter pushdown reach the
     parquet reader because this is a plain declarative scan."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_parquet_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
 
 
 def read_raw_events_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -9,9 +9,7 @@ it runs on the native floored-second ``session_window`` in
 * :func:`decayed_item_counts` — exponentially-decayed per-item interaction
   mass (event-time decay folded exactly between consecutive events);
 * :func:`stateful_funnel` — cross-batch first-touch ordered funnel, with an
-  optional event-time TTL that expires inactive visitors;
-* :func:`stateful_ingest_dedup` — ingest dedup that emits every document
-  with its canonical id and duplicate rank.
+  optional event-time TTL that expires inactive visitors.
 
 Each keeps O(1) or O(|steps|) state per live key, shuffles once on its key,
 and batches the Python boundary through Arrow.
@@ -203,7 +201,7 @@ def _make_funnel_fn(steps: list[str], ttl_s: int | None = None):
             # expiry: emit the visitor's FINAL row exactly once (same
             # values the last live emission carried, expired=True), then
             # drop the state — a later event re-enters the visitor as new
-            # (the sliding-horizon contract, mirroring ingest dedup)
+            # (the sliding-horizon contract)
             mins, n, _last = state.get
             state.remove()
             yield _funnel_row(visitorid, list(mins), n, True)
@@ -281,9 +279,9 @@ def stateful_funnel(
     event-time timeout) is expired: their final row is emitted EXACTLY
     once more with ``expired=True`` (the output gains that boolean
     column; live emissions carry ``expired=False``), the state is
-    dropped, and a later event re-enters them as a fresh visitor — the
-    same sliding-horizon contract :func:`stateful_ingest_dedup`
-    documents. Pre-expiry semantics are unchanged: every live emission
+    dropped, and a later event re-enters them as a fresh visitor — a
+    sliding horizon, the same tradeoff ``dropDuplicatesWithinWatermark``
+    makes. Pre-expiry semantics are unchanged: every live emission
     equals the untimed operator's row for the same prefix of events
     (test-pinned)."""
     if ttl_s is None:
@@ -306,133 +304,5 @@ def stateful_funnel(
             stateStructType=state_schema,
             outputMode="update",
             timeoutConf=timeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Stateful streaming ingest dedup
-# ---------------------------------------------------------------------------
-
-DEDUP_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("fingerprint", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("ingest_time", T.TimestampType()),
-        T.StructField("is_duplicate", T.BooleanType()),
-        T.StructField("canonical_doc_id", T.LongType()),
-        T.StructField("dup_rank", T.LongType()),
-    ]
-)
-
-#: per-fingerprint state: (first-arrived doc id, its epoch-us, docs seen)
-DEDUP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("first_id", T.LongType()),
-        T.StructField("first_us", T.LongType()),
-        T.StructField("n_seen", T.LongType()),
-    ]
-)
-
-
-def _make_ingest_dedup_fn(ttl_s: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (fp,) = key
-        if state.hasTimedOut:
-            # the dedup window for this fingerprint has passed: drop the
-            # state; a future duplicate re-enters as "new" (the documented
-            # sliding-window contract that keeps state bounded)
-            state.remove()
-            return
-        if state.exists:
-            first_id, first_us, n = state.get
-        else:
-            first_id, first_us, n = None, None, 0
-        rows = []
-        last_us = first_us or 0
-        for pdf in pdfs:
-            us = pd.to_datetime(pdf["ingest_time"]).astype("int64") // 1000
-            order = sorted(
-                range(len(pdf)),
-                key=lambda i: (int(us.iloc[i]), int(pdf["doc_id"].iloc[i])),
-            )
-            for i in order:
-                did = int(pdf["doc_id"].iloc[i])
-                t_us = int(us.iloc[i])
-                last_us = max(last_us, t_us)
-                n += 1
-                if first_id is None:
-                    first_id, first_us = did, t_us
-                rows.append(
-                    {
-                        "fingerprint": fp,
-                        "doc_id": did,
-                        "ingest_time": pd.Timestamp(t_us * 1000),
-                        # a replay of the canonical id itself is NOT a
-                        # duplicate — idempotent under at-least-once delivery
-                        "is_duplicate": did != first_id,
-                        "canonical_doc_id": first_id,
-                        "dup_rank": n - 1,
-                    }
-                )
-        state.update((first_id, first_us, n))
-        # timeout strictly after the current watermark (Spark requirement)
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(last_us // 1000, wm_ms) + ttl_s * 1000)
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return fn
-
-
-def stateful_ingest_dedup(
-    docs: DataFrame,
-    ttl_s: int = 3600,
-    watermark: str = "10 minutes",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    time_col: str = "ingest_time",
-) -> DataFrame:
-    """Cross-batch streaming ingest dedup with canonical-id attribution —
-    what ``dropDuplicatesWithinWatermark`` cannot give you: every arriving
-    document is EMITTED (update mode) with ``is_duplicate``, the
-    fingerprint's first-arrived ``canonical_doc_id``, and its
-    ``dup_rank``, so the sink can both filter survivors AND account for
-    what was dropped (dup-rate dashboards, lineage audits).
-
-    Keyed by ``md5(normalized text)`` computed JVM-side before the one
-    fingerprint-keyed shuffle (text bodies never enter Python); state is
-    three numbers per live fingerprint, expired by an event-time timeout
-    ``ttl_s`` after the fingerprint's last arrival — bounded state, and
-    the documented contract is a SLIDING dedup window: a duplicate
-    arriving after its fingerprint's state expired re-enters as new
-    (exactly the ``dropDuplicatesWithinWatermark`` tradeoff).
-
-    First-arrival is decided by (ingest_time, doc_id) order — with equal
-    timestamps this is min-id, making the one-batch survivor set EQUAL to
-    the batch :func:`~..operators.dedup.dedup_keep_first` (pinned in
-    tests, along with batch-split invariance under order-preserving
-    splits)."""
-    from pyspark.sql import functions as F
-
-    fp = F.md5(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    )
-    keyed = docs.select(
-        fp.alias("fingerprint"),
-        F.col(id_col).alias("doc_id"),
-        F.col(time_col).alias("ingest_time"),
-    )
-    return (
-        keyed.withWatermark("ingest_time", watermark)
-        .groupBy("fingerprint")
-        .applyInPandasWithState(
-            _make_ingest_dedup_fn(int(ttl_s)),
-            outputStructType=DEDUP_OUT_SCHEMA,
-            stateStructType=DEDUP_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )

@@ -470,26 +470,6 @@ def test_item_cooccurrence_pairs_and_cap(spark, make_events):
     assert capped == {(1, 2), (1, 3), (2, 3)}
 
 
-def test_order_gap_stats_day_gaps(spark):
-    import datetime as dt
-
-    from clickestream_project_bigdata_spark.operators.relational import (
-        order_gap_stats,
-    )
-
-    d = lambda day: dt.datetime(2024, 1, day)
-    orders = spark.createDataFrame(
-        [
-            (1, 101, d(1)), (1, 102, d(4)), (1, 103, d(4)),  # gaps 3, 0
-            (2, 201, d(10)),                                   # single order: no row
-        ],
-        "o_custkey long, o_orderkey long, o_orderdate timestamp",
-    )
-    got = {r.o_custkey: (r.n_gaps, r.avg_gap_days, r.min_gap_days, r.max_gap_days)
-           for r in order_gap_stats(orders).collect()}
-    assert got == {1: (2, 1.5, 0, 3)}
-
-
 def test_retention_cohorts_weekly(spark, make_events):
     from clickestream_project_bigdata_spark.operators.analytics import (
         retention_cohorts,
@@ -1085,37 +1065,6 @@ def test_binned_quantiles_hand_computed(spark):
     assert got.q50_lo == 4.0
     assert got.q90_lo == 8.0
     assert got.q99_lo == 9.0
-
-
-def test_scd2_history_versions_and_ranges(spark, make_events):
-    """u1: view,view,click,view -> three versions with half-open validity
-    ranges; the current version has NULL valid_to; NULL-safe run detection
-    (consecutive equal attrs never split)."""
-    from clickestream_project_bigdata_spark.operators.relational import (
-        scd2_history,
-    )
-
-    ev = make_events(
-        [
-            (1, "2024-01-01T00:00:00", "view", 1),
-            (1, "2024-01-01T00:01:00", "view", 2),
-            (1, "2024-01-01T00:02:00", "click", 3),
-            (1, "2024-01-01T00:03:00", "view", 4),
-            (2, "2024-01-01T00:00:00", "click", 1),
-        ]
-    )
-    rows = scd2_history(ev).collect()
-    u1 = [r for r in rows if r.visitorid == 1]
-    assert [(r.version, r.event, r.n_events) for r in u1] == [
-        (1, "view", 2),
-        (2, "click", 1),
-        (3, "view", 1),
-    ]
-    assert u1[0].valid_to == u1[1].valid_from
-    assert u1[1].valid_to == u1[2].valid_from
-    assert u1[2].valid_to is None
-    u2 = [r for r in rows if r.visitorid == 2]
-    assert len(u2) == 1 and u2[0].valid_to is None and u2[0].version == 1
 
 
 def test_decay_attribution_dyadic_weights(spark):

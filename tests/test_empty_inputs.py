@@ -162,31 +162,6 @@ def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
     }
 
 
-def test_round6_latest_relational_on_empty(spark):
-    from clickestream_project_bigdata_spark.operators.relational import (
-        potential_part_promotion,
-    )
-
-    lineitem = spark.createDataFrame(
-        [],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, "
-        "l_shipdate timestamp",
-    )
-    part = spark.createDataFrame(
-        [], "p_partkey long, p_name string, p_brand string, p_type string, "
-        "p_size int, p_retailprice double"
-    )
-    supplier = spark.createDataFrame(
-        [], "s_suppkey long, s_name string, s_nationkey long, s_acctbal double"
-    )
-    nation = spark.createDataFrame(
-        [], "n_nationkey long, n_name string, n_regionkey long"
-    )
-    assert potential_part_promotion(lineitem, part, supplier, nation).count() == 0
-
-
 def test_round6_final_operators_on_empty_inputs(
     spark, empty_events, empty_docs, empty_embeddings
 ):
@@ -223,7 +198,6 @@ def test_round7_operators_on_empty_inputs(
     from clickestream_project_bigdata_spark.operators import (
         analytics,
         curation,
-        relational,
         similarity,
         text,
     )
@@ -238,6 +212,5 @@ def test_round7_operators_on_empty_inputs(
     assert curation.domain_balance_weights(empty_docs).count() == 0
     assert similarity.embedding_outliers(empty_embeddings).count() == 0
     assert similarity.embedding_dim_stats(empty_embeddings).count() == 0
-    assert relational.scd2_history(empty_events).count() == 0
     assert analytics.first_touch_funnel(empty_events).count() == 0
     assert analytics.decay_attribution(empty_events).count() == 0

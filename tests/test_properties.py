@@ -133,126 +133,6 @@ def test_kmv_estimator_bounds(spark, n_users):
         assert abs(est - n_users) / n_users < 3 / (32**0.5), (n_users, est)
 
 
-_join_rows = st.lists(
-    st.tuples(
-        st.integers(min_value=1, max_value=3),      # key
-        st.integers(min_value=0, max_value=7200),   # offset seconds
-    ),
-    min_size=0,
-    max_size=12,
-)
-
-
-@settings(max_examples=10, deadline=None)
-@given(lrows=_join_rows, rrows=_join_rows)
-def test_asof_join_matches_brute_force_property(spark, lrows, rrows):
-    """asof_join == argmax_{r.ts <= l.ts} over every random fixture."""
-    from clickestream_project_bigdata_spark.operators.relational import asof_join
-
-    base = dt.datetime(2024, 1, 1)
-    left = spark.createDataFrame(
-        [(k, base + dt.timedelta(seconds=s), i) for i, (k, s) in enumerate(lrows)],
-        "k long, ts timestamp, lid long",
-    )
-    # right must be unique per (key, ts): dedupe offsets per key
-    seen, rr = set(), []
-    for k, s in rrows:
-        if (k, s) not in seen:
-            seen.add((k, s))
-            rr.append((k, s))
-    right = spark.createDataFrame(
-        [(k, base + dt.timedelta(seconds=s), float(s)) for k, s in rr],
-        "k long, ts timestamp, val double",
-    )
-    got = {
-        r.lid: (r.val, r.ts_asof)
-        for r in asof_join(left, right, ts_col="ts", by="k", value_cols=("val",)).collect()
-    }
-    for i, (k, s) in enumerate(lrows):
-        prior = [(rs, float(rs)) for rk, rs in rr if rk == k and rs <= s]
-        if prior:
-            best = max(prior)
-            assert got[i] == (best[1], base + dt.timedelta(seconds=best[0]))
-        else:
-            assert got[i] == (None, None)
-
-
-@settings(max_examples=10, deadline=None)
-@given(lrows=_join_rows, rrows=_join_rows)
-def test_range_join_matches_brute_force_property(spark, lrows, rrows):
-    """Bucket decomposition is invisible: equals the theta join for every
-    random fixture, across bucket widths."""
-    from clickestream_project_bigdata_spark.operators.relational import range_join
-
-    base = dt.datetime(2024, 1, 1)
-    left = spark.createDataFrame(
-        [(k, base + dt.timedelta(seconds=s), i) for i, (k, s) in enumerate(lrows)],
-        "k long, ts timestamp, lid long",
-    )
-    right = spark.createDataFrame(
-        [
-            (k, base + dt.timedelta(seconds=s), base + dt.timedelta(seconds=s + 900), j)
-            for j, (k, s) in enumerate(rrows)
-        ],
-        "k long, s timestamp, e timestamp, rid long",
-    )
-    expected = sorted(
-        (i, j)
-        for i, (lk, ls) in enumerate(lrows)
-        for j, (rk, rs) in enumerate(rrows)
-        if lk == rk and rs <= ls <= rs + 900
-    )
-    for width in (60, 3600):
-        got = sorted(
-            (r.lid, r.rid)
-            for r in range_join(
-                left, right, ts_col="ts", start_col="s", end_col="e",
-                by="k", bucket_seconds=width,
-            ).collect()
-        )
-        assert got == expected, width
-
-
-@settings(max_examples=10, deadline=None)
-@given(lrows=_join_rows, rrows=_join_rows)
-def test_interval_overlap_join_matches_brute_force_property(spark, lrows, rrows):
-    """First-common-bucket decomposition == the overlap theta join, each
-    pair exactly once, across bucket widths."""
-    from clickestream_project_bigdata_spark.operators.relational import (
-        interval_overlap_join,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    left = spark.createDataFrame(
-        [
-            (k, base + dt.timedelta(seconds=s), base + dt.timedelta(seconds=s + 600), i)
-            for i, (k, s) in enumerate(lrows)
-        ],
-        "k long, ls timestamp, le timestamp, lid long",
-    )
-    right = spark.createDataFrame(
-        [
-            (k, base + dt.timedelta(seconds=s), base + dt.timedelta(seconds=s + 900), j)
-            for j, (k, s) in enumerate(rrows)
-        ],
-        "k long, rs timestamp, re timestamp, rid long",
-    )
-    expected = sorted(
-        (i, j)
-        for i, (lk, ls) in enumerate(lrows)
-        for j, (rk, rs) in enumerate(rrows)
-        if lk == rk and ls <= rs + 900 and rs <= ls + 600
-    )
-    for width in (60, 3600):
-        got = sorted(
-            (r.lid, r.rid)
-            for r in interval_overlap_join(
-                left, right, "ls", "le", "rs", "re", by="k", bucket_seconds=width
-            ).collect()
-        )
-        assert got == expected, width
-
-
 token_counts_strategy = st.lists(st.integers(min_value=0, max_value=7), min_size=1, max_size=20)
 
 
@@ -782,43 +662,6 @@ def test_gini_concentration_matches_brute_force(spark, counts):
     expect = round(2.0 * t / (n * s) - (n + 1.0) / n, 6) + 0.0
     assert got.n_items == n and got.total_events == s
     assert abs(got.gini - expect) <= 1e-6
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    seq=st.lists(
-        st.tuples(st.sampled_from(["a", "b", "c"]), st.integers(0, 500)),
-        min_size=1,
-        max_size=15,
-        unique_by=lambda t: t[1],
-    )
-)
-def test_scd2_history_reconstructs_stream(spark, seq):
-    """SCD2 invariants over a random single-key attr stream: versions are
-    contiguous from 1; Σ n_events == stream length; ranges chain exactly
-    (valid_to == next valid_from, last open); run count == #attr changes
-    in time order + 1."""
-    from clickestream_project_bigdata_spark.operators.relational import scd2_history
-
-    rows = [
-        (1, attr, BASE + dt.timedelta(seconds=off), None, off)
-        for attr, off in seq
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "visitorid long, event string, event_time timestamp, itemid long, event_id long",
-    )
-    out = sorted(scd2_history(df).collect(), key=lambda r: r.version)
-    ordered = [a for a, _ in sorted(seq, key=lambda t: t[1])]
-    changes = sum(1 for x, y in zip(ordered, ordered[1:]) if x != y)
-    assert [r.version for r in out] == list(range(1, changes + 2))
-    assert sum(r.n_events for r in out) == len(seq)
-    for cur, nxt in zip(out, out[1:]):
-        assert cur.valid_to == nxt.valid_from
-    assert out[-1].valid_to is None
-    assert [r.event for r in out] == [
-        a for i, a in enumerate(ordered) if i == 0 or a != ordered[i - 1]
-    ]
 
 
 @settings(max_examples=10, deadline=None)

@@ -1384,141 +1384,6 @@ def test_stateful_funnel_ttl_pre_expiry_matches_untimed(spark, tmp_path):
     assert outs[0] == outs[1]
 
 
-# ---------------------------------------------------------------------------
-# stateful streaming ingest dedup (4th custom stateful operator)
-# ---------------------------------------------------------------------------
-
-def _write_doc_batches(tmp_path, batches, sub="docs_src"):
-    src = tmp_path / sub
-    src.mkdir()
-    for i, batch in enumerate(batches):
-        p = src / f"docs_{i}.json"
-        p.write_text("\n".join(json.dumps(r) for r in batch))
-        os.utime(p, (1_000_000 + i, 1_000_000 + i))
-    return str(src)
-
-
-def _doc(doc_id, offset_s, text):
-    ts = 1700000000 + offset_s
-    return {
-        "doc_id": doc_id,
-        "ingest_time": pd_ts(ts),
-        "text": text,
-    }
-
-
-def pd_ts(epoch_s):
-    import datetime as dt
-
-    return dt.datetime.fromtimestamp(epoch_s, dt.timezone.utc).strftime(
-        "%Y-%m-%dT%H:%M:%S.000Z"
-    )
-
-
-def _read_doc_stream(spark, path):
-    schema = "doc_id long, ingest_time timestamp, text string"
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-
-
-def _run_dedup(spark, tmp_path, path, name):
-    from clickestream_project_bigdata_spark.streaming.stateful import (
-        stateful_ingest_dedup,
-    )
-
-    q = (
-        stateful_ingest_dedup(_read_doc_stream(spark, path))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"select * from {name}").collect()
-
-
-def test_stateful_ingest_dedup_cross_batch(spark, tmp_path):
-    """A normalized duplicate arriving in a LATER micro-batch is flagged
-    with the first batch's canonical id; novel docs pass unflagged."""
-    path = _write_doc_batches(
-        tmp_path,
-        [
-            [_doc(1, 0, "hello world"), _doc(2, 1, "something unique")],
-            [_doc(3, 60, "  Hello   WORLD "), _doc(4, 61, "another new one")],
-        ],
-    )
-    rows = {r.doc_id: r for r in _run_dedup(spark, tmp_path, path, "sid1")}
-    assert len(rows) == 4
-    assert rows[1].is_duplicate is False and rows[1].canonical_doc_id == 1
-    assert rows[2].is_duplicate is False
-    assert rows[3].is_duplicate is True and rows[3].canonical_doc_id == 1
-    assert rows[3].dup_rank == 1
-    assert rows[4].is_duplicate is False
-
-
-def test_stateful_ingest_dedup_matches_batch_keep_first(spark, tmp_path):
-    """Equal timestamps: the streaming survivor set == dedup_keep_first's
-    id set on the same docs, and the result is invariant to how the docs
-    split into micro-batches (order-preserving splits)."""
-    from clickestream_project_bigdata_spark.operators.dedup import dedup_keep_first
-
-    docs = [
-        (1, "alpha beta"),
-        (2, "gamma"),
-        (3, "ALPHA   beta"),
-        (4, "delta"),
-        (5, "gamma"),
-        (6, "epsilon zeta"),
-    ]
-    batch_df = spark.createDataFrame(docs, "doc_id long, text string")
-    expect = {r.doc_id for r in dedup_keep_first(batch_df).collect()}
-
-    one = _write_doc_batches(
-        tmp_path, [[_doc(i, 0, t) for i, t in docs]], sub="one"
-    )
-    two = _write_doc_batches(
-        tmp_path,
-        [[_doc(i, 0, t) for i, t in docs[:3]], [_doc(i, 0, t) for i, t in docs[3:]]],
-        sub="two",
-    )
-    got_one = _run_dedup(spark, tmp_path, one, "sid2")
-    got_two = _run_dedup(spark, tmp_path, two, "sid3")
-    assert {r.doc_id for r in got_one if not r.is_duplicate} == expect
-    assert {r.doc_id for r in got_two if not r.is_duplicate} == expect
-    # per-arrival emission: every doc appears exactly once in both runs
-    assert sorted(r.doc_id for r in got_one) == [1, 2, 3, 4, 5, 6]
-    assert sorted(r.doc_id for r in got_two) == [1, 2, 3, 4, 5, 6]
-    flags_one = {r.doc_id: (r.is_duplicate, r.canonical_doc_id) for r in got_one}
-    flags_two = {r.doc_id: (r.is_duplicate, r.canonical_doc_id) for r in got_two}
-    assert flags_one == flags_two
-
-
-def test_stateful_ingest_dedup_canonical_replay_idempotent(spark, tmp_path):
-    """At-least-once delivery: a replay of the CANONICAL doc itself is not
-    flagged as a duplicate (idempotent), while a genuine dup still is."""
-    path = _write_doc_batches(
-        tmp_path,
-        [
-            [_doc(1, 0, "same text")],
-            [_doc(1, 0, "same text"), _doc(9, 5, "same text")],
-        ],
-        sub="replay",
-    )
-    rows = _run_dedup(spark, tmp_path, path, "sid4")
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r.doc_id, []).append(r)
-    assert all(not r.is_duplicate for r in by_id[1])
-    assert len(by_id[1]) == 2  # both arrivals emitted
-    [nine] = by_id[9]
-    assert nine.is_duplicate is True and nine.canonical_doc_id == 1
-
-
 def test_stream_scale_replay_small_fixture_equals_batch(spark, tmp_path):
     """The tools/stream_scale.py replay harness end-to-end at sf0.001: the
     whole fixture pushed through stateful_session_metrics as a 10-chunk file

@@ -17,6 +17,7 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import sys
@@ -29,7 +30,6 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from clickestream_project_bigdata_spark.session import get_spark  # noqa: E402
-from clickestream_project_bigdata_spark.sources.readers import TESTDATA_TABLES  # noqa: E402
 
 
 def _canon(v):
@@ -130,10 +130,9 @@ def main() -> int:
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        t = os.path.basename(p).removesuffix(".parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

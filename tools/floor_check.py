@@ -35,10 +35,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["orders", "events", "documents", "embeddings"]
 
 FLOOR_DIR = "/tmp/floor_1k"
 FLOOR_ROWS = 1000

@@ -19,45 +19,28 @@ from clickestream_project_bigdata_spark.session import get_spark  # noqa: E402
 
 #: (query, what the plan must show)
 AUDITED = {
-    "tpch_q1_pricing_summary": "filter pushed to parquet, 6/16 columns read, partial+final agg",
-    "tpch_q5_revenue_by_nation": "all four dimension joins broadcast (zero sort-merge)",
-    "tpch_q3_top_orders": "TakeOrderedAndProject top-k (no global sort)",
     "sessions": "ONE exchange on visitorid shared by both windows + the rollup",
     "events_per_minute": "single exchange, map-side partial aggregation",
     "dedup_minhash_lsh": "slim banding join; shingle arrays only for candidates (semi-join); census-gated band salting (r10): buckets > max_bucket_rows get hash(id)%S left salt + S-replica right, candidate set pinned identical",
     "similarity_knn_join": "banded equi-join candidates — no cartesian/BNL; guarded two-path (bucket-local top-k matmul / slim-join fallback)",
     "corpus_sample": "zero exchanges (scan-local hash filter)",
     "decontaminate": "benchmark gram set broadcast; exploded corpus probed map-side, never shuffled",
-    "asof_last_purchase": "one hash exchange on the key + running-frame carry (no range join / BNL)",
     "chunk_documents": "zero exchanges (posexplode + slice, pure codegen)",
-    "tpch_q4_late_shipments": "LEFT SEMI hash join (one output row per order; no join+distinct)",
-    "tpch_q14_promo_revenue": "part dimension broadcast; single DECIMAL aggregation",
     "tfidf_top_terms": "doc-term agg with map-side combine; text never shuffled",
     "repetition_score": "zero exchanges (staged token/gram projections, pure codegen)",
     "packed_corpus": "prefix-sum never carries text; one shuffle on pack_id",
     "latest_event_state": "partial max(struct) map-side, ONE exchange — no full-row window shuffle",
-    "tpch_q6_forecast_revenue": "every predicate pushed to parquet; ≤4-column read; partial+final agg only",
-    "tpch_q7_volume_shipping": "nation dim broadcast under BOTH roles; fact joins orders once; no BNL",
-    "tpch_q19_disjunctive_revenue": "OR'd clauses stay ONE broadcast join + residual filter (no 3-scan union)",
-    "tpch_q18_large_volume_customers": "fact collapsed to order grain (HAVING) before joining outward; TakeOrdered",
-    "tpch_q22_sales_opportunity": "scalar-avg 1-row broadcast; LEFT ANTI on filtered orders",
     "duplicate_spans": "linear window explode; one span-keyed agg with map-side partials; TakeOrdered",
     "event_type_pivot": "explicit pivot values → single pivot_first aggregation, one exchange",
-    "tpch_q21_waiting_suppliers": "EXISTS/NOT-EXISTS rewritten as order-grain aggregates; both sides collapse before the order-order join; supplier/nation broadcast; TakeOrdered",
-    "tpch_q2_cheapest_supplier": "per-part argmin via broadcast scalar-min join-back; all dims broadcast; zero sort-merge; TakeOrdered",
-    "tpch_q11_important_parts": "nation-supplier key set broadcast semi; per-part agg computed once; 1-row threshold broadcast",
-    "tpch_q16_part_supplier_counts": "broadcast LEFT ANTI supplier exclusion (not NOT IN); distinct quad collapses before the count",
     "nearest_centroid": "centroid build shuffles only (label,idx) partials; |labels|-row broadcast; corpus scan shuffle-free",
     "vocab_coverage": "top-k vocab via TakeOrdered collapses to 50 rows then broadcasts into the membership probe",
     "minute_anomalies": "fact collapses to minute grain first; exact-integer day stats broadcast back",
     "timed_funnel": "three stacked visitorid-keyed conditional-min aggregates; no arrays, user-grain stage frames",
     "linear_attribution": "(visitorid, horizon-bucket)-keyed range join (r14: conversions explode to the 2 covering buckets; exact time predicate inside the join); fan-out as count(*)-over-conversion window on ONE exchange (r13: replaced checkpoint+groupBy+self-join); DECIMAL credit sum",
     "item_trend": "(item,day) collapse then item rollup; five integers per item cross the second shuffle",
-    "discount_elasticity": "part dim broadcast; ONE six-number DECIMAL-moment aggregate",
     "incremental_dedup": "both sides collapse to 16-byte digests; anti + min-id joins digest-keyed; text only in the final semi",
     "bot_flags": "minute then user aggregation on the same visitorid key — one fact shuffle",
     "sequential_funnel": "ONE session-keyed exchange; sorted-array fold fills all step times; 1-row final sum",
-    "tpch_q20_potential_promotion": "part prefix set broadcast semi; conditional-sum year/all-time in one (supp,part) agg; qualifying keys broadcast semi into supplier×nation",
     "mask_duplicate_spans": "no span strings anywhere: one slim (doc,pos,h1,h2) explode, ONE window exchange (rn>1 = non-first dup), in-row coverage expansion, affected docs joined back LEFT",
     "collocations": "bigrams zipped in place (no posexplode); pair agg map-side; vocab joins shuffle slim counts (NOT broadcast — web-scale vocab); 1-row total broadcast; TakeOrdered",
     "select_token_budget": "distributed prefix sum: range exchange on (quality desc, id), per-partition running sums, <=#partitions offset collect; no global single-task sort",
@@ -96,7 +79,6 @@ AUDITED = {
     "tokenizer_fertility": "two counts per row in one codegen pass; ONE source-keyed agg of exact integer sums",
     "domain_balance_weights": "stratum token counts map-side combine; 1-row total broadcast back; no corpus re-scan",
     "embedding_outliers": "centroid grid broadcast back (cluster_inertia convention); DECIMAL per-vector reduce; per-label window bounded to top_k",
-    "scd2_event_history": "gaps-and-islands on ONE key exchange (sessionization shape); run rollup + valid_to lead ride the collapsed run grain",
     "first_touch_funnel": "K conditional mins in ONE visitor-keyed agg (map-side combined); ordering check is per-row on the visitor grain",
     "decay_attribution": "same bucketed (visitorid, horizon-bucket) range join as linear_attribution (r14 explode); recency rank + kept-count both windows on the SAME conversion exchange (r13: no checkpoint/self-join); exact dyadic weights, DECIMAL sum",
     "snapshot_diff": "both snapshots collapse to (id, digest, stratum) at the scan; ONE id-keyed full-outer join; stratum rollup map-side",

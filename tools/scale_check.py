@@ -70,7 +70,6 @@ DEFAULT_QUERIES = [
     # workers OOM-killed). See _q_knn_join_fine's docstring.
     "similarity_knn_join_fine",
     "position_attribution",
-    "scd2_event_history",
     "customer_value_deciles",
     "rfm_segments",
     # VERDICT r10 #3: the dup-span family's sf0.1 ratios (9.9x/8.1x/3.2x)
@@ -85,10 +84,7 @@ DEFAULT_QUERIES = [
     "similar_visitors",
 ]
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["orders", "events", "documents", "embeddings"]
 
 
 #: a query whose WARM rep already exceeds this gets one post-warm rep, not

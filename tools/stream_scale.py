@@ -11,8 +11,7 @@ dataset).
 
 Usage: python tools/stream_scale.py [fixture_dir] [out_json] [n_chunks] [files_per_trigger] [op]
        defaults: /tmp/scale10x STREAM_SCALE.json 60 1 sessionize
-       op: sessionize | decayed | funnel | funnel_ttl | funnel_replay |
-       ingest_dedup —
+       op: sessionize | decayed | funnel | funnel_ttl | funnel_replay —
        VERDICT r10 #5 (funnel_ttl: the r11 #4 state-bound run)
        extends the 10M-event equality run to every custom stateful
        operator; each op replays the fixture as a real multi-batch file
@@ -311,57 +310,18 @@ def main() -> None:
     assert equal, "stream/batch session mismatch"
 
 
-def write_doc_chunks(spark, fixture_dir: str, chunks_dir: str, n_chunks: int) -> int:
-    """documents.parquet -> n_chunks parquet files ordered by a
-    SYNTHESIZED deterministic ingest_time (the fixture has none): a
-    multiplicative-hash permutation of doc_id spread over one second per
-    doc, so duplicate groups arrive interleaved across the whole stream —
-    the cross-batch case the ingest-dedup state machine exists for.
-    Returns row count."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pdf = (
-        spark.read.parquet(os.path.join(fixture_dir, "documents.parquet"))
-        .select("doc_id", "text")
-        .toPandas()
-    )
-    n = len(pdf)
-    # deterministic pseudo-shuffle of arrival order (Knuth multiplicative)
-    offs = (pdf["doc_id"].astype("int64") * 2654435761) % (2**32) % max(n, 1)
-    pdf["ingest_time"] = pd.Timestamp("2024-01-01", tz="UTC") + pd.to_timedelta(
-        offs, unit="s"
-    )
-    pdf["ingest_time"] = pdf["ingest_time"].astype("datetime64[us, UTC]")
-    pdf = pdf.sort_values(["ingest_time", "doc_id"]).reset_index(drop=True)
-    shutil.rmtree(chunks_dir, ignore_errors=True)
-    os.makedirs(chunks_dir)
-    per = (n + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        chunk = pdf.iloc[i * per : (i + 1) * per]
-        if len(chunk) == 0:
-            break
-        pq.write_table(
-            pa.Table.from_pandas(chunk, preserve_index=False),
-            os.path.join(chunks_dir, f"doc_chunk_{i:05d}.parquet"),
-        )
-        time.sleep(0.002)  # strictly increasing mtimes
-    return n
-
-
 def run_stateful_op(
     op: str, fixture: str, out_path: str, n_chunks: int, files_per_trigger: int
 ) -> None:
     """VERDICT r10 #5: the 10M-scale stream-equals-batch protocol for the
-    three stateful operators beyond sessionize. Each op: replay the
+    two stateful operators beyond sessionize. Each op: replay the
     fixture as a multi-batch file stream (update mode -> foreachBatch
     parquet append stamped with batch_id; "final" row per key = the
     max-batch_id emission), then compare against the batch closed form on
     the same data. decayed compares at 1e-6 relative (a float fold vs the
     closed-form sum — mathematically identical, rounding order differs);
-    funnel and ingest_dedup compare EXACTLY (their state semantics are
-    pure functions of min()s / first-arrival order)."""
+    funnel compares EXACTLY (its state semantics are a pure function of
+    min()s)."""
     import math
 
     from pyspark.sql import Window
@@ -375,14 +335,12 @@ def run_stateful_op(
     from clickestream_project_bigdata_spark.streaming.stateful import (
         decayed_item_counts,
         stateful_funnel,
-        stateful_ingest_dedup,
     )
 
     spark = get_spark(f"stream_scale_{op}")
     spark.sparkContext.setLogLevel("ERROR")
     work = "/tmp/stream_scale"
     chunks_dir = os.path.join(work, "chunks")
-    doc_chunks_dir = os.path.join(work, "doc_chunks")
     sink_dir = os.path.join(work, f"{op}_out")
     ckpt_dir = os.path.join(work, f"ckpt_{op}")
     for d in (sink_dir, ckpt_dir):
@@ -793,47 +751,6 @@ def run_stateful_op(
             "segments_compared": s.count(),
             "rows_only_in_stream": extra,
             "rows_only_in_batch": missing,
-        }
-    elif op == "ingest_dedup":
-        n_rows = write_doc_chunks(spark, fixture, doc_chunks_dir, n_chunks)
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, ingest_time timestamp"
-            )
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(doc_chunks_dir)
-        )
-        wall, q = drain(
-            stateful_ingest_dedup(stream, ttl_s=10**8, watermark="10 minutes")
-        )
-        streamed = spark.read.parquet(sink_dir).drop("batch_id")
-        docs = spark.read.parquet(doc_chunks_dir)
-        fp = F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-        )
-        w = Window.partitionBy("fingerprint").orderBy("ingest_time", "doc_id")
-        oracle = (
-            docs.select(
-                fp.alias("fingerprint"), "doc_id", "ingest_time"
-            )
-            .withColumn("dup_rank", (F.row_number().over(w) - 1).cast("long"))
-            .withColumn("canonical_doc_id", F.first("doc_id").over(w))
-            .withColumn(
-                "is_duplicate", F.col("doc_id") != F.col("canonical_doc_id")
-            )
-        )
-        cols = [
-            "fingerprint", "doc_id", "ingest_time",
-            "is_duplicate", "canonical_doc_id", "dup_rank",
-        ]
-        s, b = streamed.select(cols), oracle.select(cols)
-        extra, missing = s.exceptAll(b).count(), b.exceptAll(s).count()
-        equal = extra == 0 and missing == 0
-        detail = {
-            "rows_only_in_stream": extra,
-            "rows_only_in_batch": missing,
-            "docs_emitted": s.count(),
-            "duplicates": s.filter("is_duplicate").count(),
         }
     else:
         raise SystemExit(f"unknown op {op!r}")

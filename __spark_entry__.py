@@ -272,7 +272,7 @@ def _q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_trending_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch closed form of the decayed heavy hitters
-    (operators/analytics.py; streaming twin in streaming/stateful.py)."""
+    (operators/analytics.py)."""
     return analytics.trending_items(events_from_fixture(spark, sf_dir))
 
 
@@ -733,61 +733,6 @@ def _q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_view_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream attribution join (streaming/joins.py) run in batch
-    mode: views matched to same-visitor purchases within 30 minutes after
-    the view (inclusive); oracled by a DuckDB BETWEEN join."""
-    from clickestream_project_bigdata_spark.streaming import attribution_join
-
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    return attribution_join(
-        ev.filter(F.col("event") == "view"),
-        ev.filter(F.col("event") == "purchase"),
-        horizon="30 minutes",
-    )
-
-
-def _q_view_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER stream-stream attribution join in batch mode: every view,
-    NULL purchase columns when unconverted — oracled by a DuckDB LEFT
-    BETWEEN join."""
-    from clickestream_project_bigdata_spark.streaming import attribution_join_outer
-
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    return attribution_join_outer(
-        ev.filter(F.col("event") == "view"),
-        ev.filter(F.col("event") == "purchase"),
-        horizon="30 minutes",
-    )
-
-
-def _q_windowed_conversion_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-appendable windowed conversion rate in batch mode
-    (streaming/joins.py:windowed_conversion_rate)."""
-    from clickestream_project_bigdata_spark.streaming import windowed_conversion_rate
-
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    return windowed_conversion_rate(
-        ev.filter(F.col("event") == "view"),
-        ev.filter(F.col("event") == "purchase"),
-        horizon="30 minutes",
-        window="1 hour",
-    )
-
-
-def _q_conversion_rate_by_item(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-item conversion rate on the outer attribution join
-    (streaming/joins.py:conversion_rate_by_item)."""
-    from clickestream_project_bigdata_spark.streaming import conversion_rate_by_item
-
-    ev = events_from_fixture(_utc(spark), sf_dir)
-    return conversion_rate_by_item(
-        ev.filter(F.col("event") == "view"),
-        ev.filter(F.col("event") == "purchase"),
-        horizon="30 minutes",
-    )
-
-
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window token chunking (operators/text.py:chunk_documents):
     64-token chunks, 16-token overlap — zero-shuffle posexplode+slice."""
@@ -1149,8 +1094,7 @@ def _q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-visitor first-touch ordered funnel view->click->purchase — the
-    oracle-checked batch twin of streaming.stateful_funnel
+    """Per-visitor first-touch ordered funnel view->click->purchase
     (operators/analytics.py)."""
     return analytics.first_touch_funnel(
         events_from_fixture(spark, sf_dir), ["view", "click", "purchase"]
@@ -1491,10 +1435,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "decontaminate_apply": _q_decontaminate_apply,
         "corpus_profile": _q_corpus_profile,
         "chunk_documents": _q_chunk_documents,
-        "view_purchase_attribution": _q_view_purchase_attribution,
-        "view_purchase_attribution_outer": _q_view_purchase_attribution_outer,
-        "conversion_rate_by_item": _q_conversion_rate_by_item,
-        "windowed_conversion_rate": _q_windowed_conversion_rate,
         "normalize_embeddings": _q_normalize_embeddings,
         "temperature_sample": _q_temperature_sample,
         "stratified_fixed_k": _q_stratified_fixed_k,
@@ -1566,11 +1506,8 @@ _SAMPLING_PRIORITY: list[str] = [
     #    construction-identical (same edges, same census) but the action
     #    sequence is new — it leads the sample.
     "graph_triangles",
-    # 1) r11-vintage remainder (alphabetical) — all 5
+    # 1) r11-vintage remainder (alphabetical) — both
     "value_quantiles_by_event",
-    "view_purchase_attribution",
-    "view_purchase_attribution_outer",
-    "windowed_conversion_rate",
     "zipf_slope",
     # 2) r12-vintage (alphabetical; graph_triangles already leads) — the
     #    next-oldest cohort fills the ~50-row sample; the tail rolls to
@@ -3164,61 +3101,6 @@ def oracle_sql() -> dict[str, str]:
             "s AS (SELECT vec_id, v, round(CASE WHEN mx = 0 THEN 1.0 ELSE 127.0 / mx END, 6) AS scale FROM m) "
             "SELECT vec_id, scale, array_to_string(list_transform(v, "
             "x -> CAST(round(x * scale) AS INT)), ',') AS qvec_csv FROM s"
-        ),
-        "view_purchase_attribution": (
-            f"WITH {_EV} "
-            "SELECT v.visitorid, v.event_time AS view_time, v.itemid AS view_item, "
-            "p.event_time AS purchase_time, p.itemid AS purchase_item "
-            "FROM (SELECT * FROM ev WHERE event = 'view') v "
-            "JOIN (SELECT * FROM ev WHERE event = 'purchase') p "
-            "ON p.visitorid = v.visitorid "
-            "AND p.event_time >= v.event_time "
-            "AND p.event_time <= v.event_time + INTERVAL '30 minutes'"
-        ),
-        "view_purchase_attribution_outer": (
-            f"WITH {_EV} "
-            "SELECT v.visitorid, v.event_time AS view_time, v.itemid AS view_item, "
-            "p.event_time AS purchase_time, p.itemid AS purchase_item "
-            "FROM (SELECT * FROM ev WHERE event = 'view') v "
-            "LEFT JOIN (SELECT * FROM ev WHERE event = 'purchase') p "
-            "ON p.visitorid = v.visitorid "
-            "AND p.event_time >= v.event_time "
-            "AND p.event_time <= v.event_time + INTERVAL '30 minutes'"
-        ),
-        "windowed_conversion_rate": (
-            f"WITH {_EV}, "
-            "j AS (SELECT v.visitorid, v.event_time AS view_time, v.itemid AS view_item, "
-            "p.event_time AS purchase_time "
-            "FROM (SELECT * FROM ev WHERE event = 'view') v "
-            "LEFT JOIN (SELECT * FROM ev WHERE event = 'purchase') p "
-            "ON p.visitorid = v.visitorid "
-            "AND p.event_time >= v.event_time "
-            "AND p.event_time <= v.event_time + INTERVAL '30 minutes'), "
-            "pv AS (SELECT visitorid, view_time, view_item, "
-            "MAX(purchase_time IS NOT NULL) AS converted "
-            "FROM j GROUP BY visitorid, view_time, view_item) "
-            "SELECT date_trunc('hour', view_time) AS window_start, view_item, "
-            "COUNT(*) AS n_views, "
-            "CAST(SUM(CAST(converted AS BIGINT)) AS BIGINT) AS n_converted, "
-            "round(CAST(SUM(CAST(converted AS BIGINT)) AS DOUBLE) / COUNT(*), 6) "
-            "AS conversion_rate FROM pv GROUP BY 1, 2"
-        ),
-        "conversion_rate_by_item": (
-            f"WITH {_EV}, "
-            "j AS (SELECT v.visitorid, v.event_time AS view_time, v.itemid AS view_item, "
-            "p.event_time AS purchase_time "
-            "FROM (SELECT * FROM ev WHERE event = 'view') v "
-            "LEFT JOIN (SELECT * FROM ev WHERE event = 'purchase') p "
-            "ON p.visitorid = v.visitorid "
-            "AND p.event_time >= v.event_time "
-            "AND p.event_time <= v.event_time + INTERVAL '30 minutes'), "
-            "pv AS (SELECT visitorid, view_time, view_item, "
-            "MAX(purchase_time IS NOT NULL) AS converted "
-            "FROM j GROUP BY visitorid, view_time, view_item) "
-            "SELECT view_item, COUNT(*) AS n_views, "
-            "CAST(SUM(CAST(converted AS BIGINT)) AS BIGINT) AS n_converted, "
-            "round(CAST(SUM(CAST(converted AS BIGINT)) AS DOUBLE) / COUNT(*), 6) "
-            "AS conversion_rate FROM pv GROUP BY view_item"
         ),
         "chunk_documents": (
             f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "

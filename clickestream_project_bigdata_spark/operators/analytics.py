@@ -329,10 +329,7 @@ def _ntile_union_stamped(
     """The un-checkpointed data path of :func:`_distributed_ntile_multi`:
     one branch per spec (range-repartition on the spec's order + local
     sort + ``__metric`` tag), unioned, with ONE nondeterministic
-    ``__mid`` stamp above the union. Shared with tools/floor_check.py's
-    rfm Spark-native bound so the bound measures the OPERATOR'S exact
-    exchanges by construction — a future change to this builder changes
-    both the operator and its floor evidence together."""
+    ``__mid`` stamp above the union."""
     from functools import reduce
 
     branches = []
@@ -1022,9 +1019,8 @@ def item_dwell_time(events: DataFrame) -> DataFrame:
     )
 
 
-#: RFM's three (out_name, total-order) ntile specs — shared by
-#: :func:`rfm_segments` and tools/floor_check.py's Spark-native bound so
-#: the bound ranks on exactly the operator's orders.
+#: RFM's three (out_name, total-order) ntile specs used by
+#: :func:`rfm_segments`.
 RFM_NTILE_SPECS: list = [
     ("r_score", [("recency_days", True), ("custkey", True)]),
     ("f_score", [("frequency", False), ("custkey", True)]),
@@ -1034,9 +1030,8 @@ RFM_NTILE_SPECS: list = [
 
 def _rfm_per_cust(orders: DataFrame) -> DataFrame:
     """RFM's per-customer rollup — (custkey, recency_days, frequency,
-    monetary, __spend_dec) — shared by :func:`rfm_segments` and
-    tools/floor_check.py's Spark-native bound. LONG ten-thousandths, not
-    a decimal(28,4) sum — see :func:`customer_value_deciles` for the
+    monetary, __spend_dec) — used by :func:`rfm_segments`. LONG
+    ten-thousandths, not a decimal(28,4) sum — see :func:`customer_value_deciles` for the
     exactness + codegen argument."""
     ref = orders.agg(F.max("o_orderdate").alias("__ref"))
     return (
@@ -1574,17 +1569,14 @@ DECAY_LAMBDA_PER_S = 0.00019254052769448875  # ln(2) / 3600
 
 
 def trending_items(events: DataFrame, lam_per_s: float = DECAY_LAMBDA_PER_S) -> DataFrame:
-    """Batch closed form of the streaming decayed heavy hitters
-    (``streaming.stateful.decayed_item_counts``): each event contributes
+    """Decayed heavy hitters in closed form: each event contributes
     ``exp(-λ·(t_last − t_i))`` of mass as of the item's LAST event, so
 
         decayed_count(item) = Σᵢ exp(-λ·(t_last − tᵢ))
 
-    — mathematically what the streaming fold converges to (the fold
-    ``d·e^{-λΔ} + 1`` telescopes to exactly this sum; float rounding of
-    the two evaluation orders differs only at ~1e-15 relative, far below
-    the 6-decimal output rounding). Pinned against the stateful operator
-    by ``test_trending_items_matches_streaming_decay``.
+    — the value an incremental fold ``d·e^{-λΔ} + 1`` converges to.
+    Pinned against that sum computed in plain Python by
+    ``test_trending_items_matches_python_decay_sum``.
 
     One itemid exchange shared by the last-event window and the
     aggregation; time deltas computed on exact integer microseconds.
@@ -2224,12 +2216,8 @@ def first_touch_funnel(
 ) -> DataFrame:
     """FIRST-TOUCH ordered funnel per visitor: step k counts iff each
     step's FIRST-EVER occurrence is at/after the previous step's first
-    occurrence — the batch twin of ``streaming.stateful_funnel``, with
-    identical semantics by construction (both are pure functions of the
-    per-step minimum times), so stream and batch answers are comparable
-    row-for-row (equality test-pinned). ``sequential_funnel`` is the
-    strict chained-min variant; first-touch is the one that stays exact
-    under bounded streaming state.
+    occurrence, a pure function of the per-step minimum times.
+    ``sequential_funnel`` is the strict chained-min variant.
 
     ONE visitor-keyed exchange: K conditional mins in a single
     aggregation (map-side combined), then the chained ordering check and

@@ -535,8 +535,8 @@ def _triangles_local(spark: SparkSession, edges_pdf) -> DataFrame:
 
 
 def _cobrowse_edges(events: DataFrame, min_transitions: int) -> DataFrame:
-    """FUSED canonical edge construction shared by :func:`graph_triangles`
-    (and tools/floor_check.py's Spark-native bound) — same semantics as
+    """FUSED canonical edge construction used by :func:`graph_triangles` —
+    same semantics as
     ``item_transitions(events).filter(n >= min).filter(src != dst)
     .select(least, greatest).distinct()`` but the per-direction threshold
     and the canonical dedup happen in ONE (a, b)-keyed aggregation

@@ -4,14 +4,10 @@ The scale story's enforcement arm: a plan can look right and still funnel
 one hot key through one task. These helpers read the driver's
 AppStatusStore (via py4j — the same store the UI/REST API serve, populated
 with ``spark.ui.enabled`` either way) for every stage of a job group and
-compare each stage's slowest task against its median. Used two ways:
-
-* ``tests/test_skew.py`` ASSERTS no straggler on deliberately hostile
-  fixtures (one visitor owning 20% of events, one token in 90% of docs,
-  half of all embeddings in one LSH bucket);
-* ``tools/scale_check.py`` RECORDS the worst ratio per query at the 10×/
-  100× checkpoints so the artifact shows straggler-freedom at scale, not
-  just on the adversarial unit fixtures.
+compare each stage's slowest task against its median.
+``tests/test_skew.py`` uses them to ASSERT no straggler on deliberately
+hostile fixtures (one visitor owning 20% of events, one token in 90% of
+docs, half of all embeddings in one LSH bucket).
 """
 
 from __future__ import annotations

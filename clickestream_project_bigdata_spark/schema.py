@@ -50,5 +50,3 @@ CANONICAL_EVENT_SCHEMA = T.StructType(
         T.StructField("unix_timestamp", T.LongType(), True),  # original epoch ms
     ]
 )
-
-CANONICAL_COLUMNS = [f.name for f in CANONICAL_EVENT_SCHEMA.fields]

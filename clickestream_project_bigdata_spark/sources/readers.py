@@ -147,7 +147,7 @@ def events_stream_from_chunks(
     directory of already-canonical, time-ordered parquet chunk files (one
     chunk per micro-batch with ``maxFilesPerTrigger=1``) — the replay
     harness ``tools/stream_scale.py`` uses to push a whole fixture through
-    the stateful operators as a 50+-batch stream. The chunk writer stamps
+    the session-window operators as a 50+-batch stream. The chunk writer stamps
     strictly increasing mtimes so the FileStreamSource's (mtime, path)
     order IS event-time order; the operators' watermark still absorbs
     intra-chunk disorder."""

@@ -20,10 +20,9 @@ def to_kafka_wire(df: DataFrame, key_col: str = "visitorid") -> DataFrame:
     """Record → (key, value) Kafka wire shape: JSON-serialized row keyed by
     ``key_col`` (reference `producer.py:21,41-45`). ``to_json(struct(*))`` is
     a single codegen'd projection — no Python serializer in the path."""
-    payload = [c for c in df.columns if c != "__ignore__"]
     return df.select(
         F.col(key_col).cast("string").alias("key"),
-        F.to_json(F.struct(*payload)).alias("value"),
+        F.to_json(F.struct(*df.columns)).alias("value"),
     )
 
 

@@ -199,87 +199,3 @@ def dedup_events_stream(
         list(id_cols)
     )
 
-
-def novel_items_stream(events: DataFrame) -> DataFrame:
-    """First-occurrence item feed — the streaming face of
-    ``analytics.novelty_rate``: each itemid is emitted exactly once, when
-    it first appears, across ALL micro-batches (plain ``dropDuplicates``
-    state, no watermark).
-
-    The unbounded state is deliberate and correctly bounded: one entry
-    per DISTINCT CATALOG ITEM (catalog-sized, not traffic-sized), and
-    catalog novelty cannot tolerate eviction — an item seen last month is
-    still not novel today. For traffic-scale identities use
-    :func:`dedup_events_stream` (watermark-evicted) instead; that
-    distinction is the whole design decision here."""
-    return (
-        events.filter(F.col("itemid").isNotNull())
-        .select("itemid", "event_time")
-        .dropDuplicates(["itemid"])
-    )
-
-
-def windowed_binned_quantiles(
-    events: DataFrame,
-    value_col: str = "value",
-    bin_width: float = 0.5,
-    quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-    duration: str = "1 minute",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming per-window quantile estimation — the watermarked form of
-    ``analytics.binned_quantiles``, and the reason that operator is
-    histogram-based at all: per-(window, bin) counts are a pure additive
-    aggregate, so Spark maintains them incrementally with O(bins) state
-    per window and NO sort/percentile state (exact streaming percentiles
-    would buffer every value until the watermark). The quantile pick then
-    runs per window over the collected (bin, count) list — bounded by the
-    bin count, in one pass over the sorted array.
-
-    Output per closed window: (minute, n_values, q50_lo, q90_lo, q99_lo)
-    — same estimates the batch operator produces on that window's slice,
-    pinned by the batch-equivalence test."""
-    keep = F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col))
-    binned = (
-        events.filter(keep)
-        .withWatermark("event_time", watermark)
-        .groupBy(
-            F.window("event_time", duration).alias("window"),
-            F.floor(F.col(value_col) / F.lit(bin_width)).cast("long").alias("__b"),
-        )
-        .agg(F.count("*").alias("__c"))
-    )
-    per_window = binned.groupBy("window").agg(
-        F.sum("__c").cast("long").alias("n_values"),
-        F.array_sort(F.collect_list(F.struct("__b", "__c"))).alias("__h"),
-    )
-    # running-sum pick inside the row: aggregate() folds the sorted
-    # histogram once, capturing each quantile's first qualifying bin
-    hist = F.col("__h")
-    n = F.col("n_values")
-
-    def pick(q: float) -> F.Column:
-        thresh = F.ceil(F.lit(q) * n.cast("double"))
-        folded = F.aggregate(
-            hist,
-            F.struct(
-                F.lit(0).cast("long").alias("cum"),
-                F.lit(None).cast("long").alias("hit"),
-            ),
-            lambda acc, s: F.struct(
-                (acc["cum"] + s["__c"]).alias("cum"),
-                F.when(
-                    acc["hit"].isNull() & (acc["cum"] + s["__c"] >= thresh),
-                    s["__b"],
-                )
-                .otherwise(acc["hit"])
-                .alias("hit"),
-            ),
-        )
-        return F.round(folded["hit"] * F.lit(bin_width), 6)
-
-    return per_window.select(
-        F.col("window.start").alias("minute"),
-        "n_values",
-        *[pick(q).alias(f"q{int(q * 100)}_lo") for q in quantiles],
-    )

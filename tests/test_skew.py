@@ -19,9 +19,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-# the detection machinery lives in the package (plans.diagnostics) so the
-# 10x/100x checkpoint runner (tools/scale_check.py) records the same metric
-# these tests assert; this module keeps the adversarial fixtures + asserts
+# the detection machinery lives in the package (plans.diagnostics); this
+# module keeps the adversarial fixtures + asserts
 from clickestream_project_bigdata_spark.plans.diagnostics import (  # noqa: E402
     assert_no_straggler as _assert_no_straggler,
 )

@@ -286,26 +286,30 @@ def test_stateful_sessionize_custom_operator(spark, tmp_path):
 
 
 def test_kafka_wire_roundtrip(spark, make_events):
-    """S2 wire shape: JSON value keyed by visitorid; parse_kafka_wire-style
-    read recovers the record (no broker needed for the transform)."""
+    """S2 wire shape: to_kafka_wire keys a JSON value by visitorid; cast to
+    the Kafka source's BINARY key/value, parse_kafka_wire recovers the key
+    as session_key and every wire column (no broker needed)."""
     from pyspark.sql import functions as F
 
     from clickestream_project_bigdata_spark.schema import WIRE_EVENT_SCHEMA
-    from clickestream_project_bigdata_spark.sources import to_kafka_wire
-
-    wire_df = spark.createDataFrame(
-        [("2023-11-14 22:13:20", "7", "view", "1", None, "Low Value", str(BASE_MS))],
-        WIRE_EVENT_SCHEMA,
+    from clickestream_project_bigdata_spark.sources import (
+        parse_kafka_wire,
+        to_kafka_wire,
     )
+
+    record = ("2023-11-14 22:13:20", "7", "view", "1", None, "Low Value", str(BASE_MS))
+    wire_df = spark.createDataFrame([record], WIRE_EVENT_SCHEMA)
     kafka_shaped = to_kafka_wire(wire_df)
     assert kafka_shaped.columns == ["key", "value"]
-    back = kafka_shaped.select(
-        F.col("key"),
-        F.from_json(F.col("value"), WIRE_EVENT_SCHEMA).alias("r"),
-    ).select("key", "r.*")
+    kafka_source = kafka_shaped.select(
+        F.col("key").cast("binary").alias("key"),
+        F.col("value").cast("binary").alias("value"),
+    )
+    back = parse_kafka_wire(kafka_source)
+    assert back.columns == ["session_key", *WIRE_EVENT_SCHEMA.fieldNames()]
     row = back.collect()[0]
-    assert row["key"] == "7" and row["event"] == "view"
-    assert row["unix_timestamp"] == str(BASE_MS)
+    assert row["session_key"] == "7"
+    assert tuple(row[c] for c in WIRE_EVENT_SCHEMA.fieldNames()) == record
 
 
 def test_explode_json_array(spark):
@@ -732,80 +736,6 @@ def test_dedup_events_stream_drops_cross_batch_redeliveries(spark, tmp_path):
     assert len(set(keys)) == 3
 
 
-def test_attribution_join_stream_stream(spark, tmp_path):
-    """Watermarked stream-stream join: a purchase in a LATER micro-batch
-    still attributes to a view within the horizon; outside-horizon and
-    other-visitor purchases don't."""
-    from clickestream_project_bigdata_spark.streaming import attribution_join
-
-    batches = [
-        [wire_record(1, 0, "view", 10), wire_record(2, 0, "view", 20)],
-        [
-            wire_record(1, 600, "purchase", 10),    # within 30 min of view
-            wire_record(2, 5000, "purchase", 20),   # outside horizon
-        ],
-    ]
-    path = write_batch_files(tmp_path, batches)
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    views = stream.filter(stream.event == "view")
-    purchases = stream.filter(stream.event == "purchase")
-    q = (
-        attribution_join(views, purchases, horizon="30 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("attrib")
-        .option("checkpointLocation", str(tmp_path / "aj_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from attrib").collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.visitorid, r.view_item, r.purchase_item) == (1, 10, 10)
-    assert (r.purchase_time - r.view_time).total_seconds() == 600
-
-
-def test_attribution_join_outer_emits_unconverted_views(spark, tmp_path):
-    """LEFT OUTER stream-stream join: a view with no in-horizon purchase is
-    emitted NULL-extended once the watermark proves no match can arrive;
-    a view whose horizon the watermark hasn't passed stays in state (not
-    emitted)."""
-    from clickestream_project_bigdata_spark.streaming import attribution_join_outer
-
-    batches = [
-        [wire_record(1, 0, "view", 10), wire_record(2, 0, "view", 20)],
-        [
-            wire_record(1, 600, "purchase", 10),   # converts view 1
-            wire_record(2, 5000, "purchase", 20),  # outside 30-min horizon
-        ],
-        # watermark pusher: advances event time far past view_time+horizon
-        # for the t=0 views, but not past its own horizon
-        [wire_record(3, 10000, "view", 30)],
-    ]
-    path = write_batch_files(tmp_path, batches)
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    views = stream.filter(stream.event == "view")
-    purchases = stream.filter(stream.event == "purchase")
-    q = (
-        attribution_join_outer(
-            views, purchases, horizon="30 minutes", watermark="10 seconds"
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("attrib_outer")
-        .option("checkpointLocation", str(tmp_path / "ajo_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {r.visitorid: r for r in spark.sql("select * from attrib_outer").collect()}
-    assert rows[1].purchase_item == 10          # converted, inner-style row
-    assert rows[2].purchase_item is None        # unconverted, NULL-extended
-    assert rows[2].purchase_time is None
-    assert 3 not in rows                        # horizon still open -> held in state
-
-
 def test_start_stream_dedup_within_guards_fanout(spark, tmp_path):
     """With the ingest guard composed in front of start_stream, a
     cross-batch redelivery reaches the analysis fan-out once: per-item
@@ -828,69 +758,6 @@ def test_start_stream_dedup_within_guards_fanout(spark, tmp_path):
     for r in sink.rows("item_interactions"):
         total[r["itemid"]] = total.get(r["itemid"], 0) + r["interaction_count"]
     assert total == {10: 1, 11: 1}  # the redelivered view counted once
-
-
-def test_conversion_rate_counts_each_view_once(spark):
-    """A view with MULTIPLE in-horizon purchases converts once; unconverted
-    views land in the denominator."""
-    import datetime as dt
-
-    from clickestream_project_bigdata_spark.streaming import conversion_rate_by_item
-
-    t = lambda s: dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)
-    views = spark.createDataFrame(
-        [(1, t(0), 10), (2, t(0), 10), (3, t(0), 20)],
-        "visitorid long, event_time timestamp, itemid long",
-    )
-    purchases = spark.createDataFrame(
-        [(1, t(60), 10), (1, t(120), 11)],  # two purchases for visitor 1's view
-        "visitorid long, event_time timestamp, itemid long",
-    )
-    got = {r.view_item: (r.n_views, r.n_converted, r.conversion_rate)
-           for r in conversion_rate_by_item(views, purchases).collect()}
-    assert got[10] == (2, 1, 0.5)   # visitor 1 converted (once), visitor 2 not
-    assert got[20] == (1, 0, 0.0)
-
-
-def test_windowed_conversion_rate_streaming_chain(spark, tmp_path):
-    """The three-stage stateful chain (outer join -> per-view flag ->
-    windowed rollup) emits a window once the GLOBAL watermark closes it.
-    NB the global watermark is the min across BOTH inputs' watermark
-    nodes, so the pushers must advance views AND purchases — a view-only
-    pusher leaves the purchase side's watermark (and thus everything
-    downstream) stuck."""
-    from clickestream_project_bigdata_spark.streaming import windowed_conversion_rate
-
-    batches = [
-        [wire_record(1, 0, "view", 10), wire_record(2, 0, "view", 10)],
-        [wire_record(1, 600, "purchase", 10)],
-        # pushers on BOTH sides, spread over batches so no-data batches
-        # cascade the watermark through all three stateful operators
-        [wire_record(9, 50_000, "view", 99), wire_record(9, 50_000, "purchase", 99)],
-        [wire_record(9, 90_000, "view", 98), wire_record(9, 90_000, "purchase", 98)],
-        [wire_record(9, 130_000, "view", 97), wire_record(9, 130_000, "purchase", 97)],
-    ]
-    path = write_batch_files(tmp_path, batches)
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        windowed_conversion_rate(
-            stream.filter(stream.event == "view"),
-            stream.filter(stream.event == "purchase"),
-            horizon="30 minutes",
-            watermark="10 seconds",
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wconv_stream")
-        .option("checkpointLocation", str(tmp_path / "wconv_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    rows = {r.view_item: r for r in spark.sql("select * from wconv_stream").collect()}
-    assert rows[10].n_views == 2 and rows[10].n_converted == 1
-    assert rows[10].conversion_rate == 0.5
-    assert 97 not in rows  # its window is still open at the final watermark
 
 
 def test_round6_analytics_foreachbatch_parity(spark, tmp_path, one_batch_events):
@@ -956,432 +823,46 @@ def test_round6_analytics_foreachbatch_parity(spark, tmp_path, one_batch_events)
     ]
 
 
-def test_decayed_item_counts_cross_batch_decay(spark, tmp_path):
-    """Decayed heavy hitters: counts decay by exp between events ACROSS
-    micro-batches; raw counts keep the lifetime total. Hand-computed decay
-    with half-life 3600s over events at t=0, 3600, 7200 for item 10:
-    after t=0: 1.0; t=3600: 1*0.5+1 = 1.5; t=7200: 1.5*0.5+1 = 1.75."""
-    import math
-
-    from clickestream_project_bigdata_spark.streaming import decayed_item_counts
-
-    path = write_batch_files(
-        tmp_path,
-        [
-            [wire_record(1, 0, "view", 10)],
-            [wire_record(2, 3600, "view", 10), wire_record(2, 3600, "view", 20)],
-            [wire_record(3, 7200, "view", 10)],
-        ],
-    )
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        decayed_item_counts(stream, half_life_s=3600.0, watermark="10 hours")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("decayed")
-        .option("checkpointLocation", str(tmp_path / "ckpt_decay"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    rows = spark.sql(
-        "select * from decayed"
-    ).collect()
-    # memory sink in update mode appends each emission; take the LAST per item
-    last = {}
-    for r in sorted(rows, key=lambda r: r["raw_events"]):
-        last[r["itemid"]] = r
-    assert last[10]["raw_events"] == 3
-    assert abs(last[10]["decayed_count"] - 1.75) < 1e-9
-    assert last[20]["raw_events"] == 1
-    assert abs(last[20]["decayed_count"] - 1.0) < 1e-12
-    # same-timestamp events add without decay: exp(0) = 1 exactly
-    assert math.isclose(last[10]["decayed_count"], 1.75)
-
-
-def test_trending_items_matches_streaming_decay(spark, tmp_path):
-    """The batch closed form (Σ exp(-λ(t_last − tᵢ))) equals the streaming
-    stateful fold (d·e^{-λΔ}+1) to float accuracy, across micro-batches."""
+def test_trending_items_matches_python_decay_sum(spark):
+    """trending_items equals the closed form Σ exp(-λ(t_last − tᵢ)) per
+    item, computed here in plain Python over three batches' worth of
+    events, with the item's event count and last event time."""
     import math
 
     from clickestream_project_bigdata_spark.operators.analytics import trending_items
-    from clickestream_project_bigdata_spark.streaming import decayed_item_counts
 
     batches = [
         [wire_record(1, 0, "view", 10), wire_record(1, 500, "view", 10)],
         [wire_record(2, 2000, "view", 10), wire_record(2, 2500, "view", 20)],
         [wire_record(3, 9000, "view", 10), wire_record(3, 9001, "view", 20)],
     ]
-    path = write_batch_files(tmp_path, batches)
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
+    records = [r for b in batches for r in b]
     lam = math.log(2.0) / 3600.0
-    q = (
-        decayed_item_counts(stream, half_life_s=3600.0, watermark="10 hours")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("decay_parity")
-        .option("checkpointLocation", str(tmp_path / "ckpt_parity"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    stream_rows = spark.sql("select * from decay_parity").collect()
-    last = {}
-    for r in sorted(stream_rows, key=lambda r: r["raw_events"]):
-        last[r["itemid"]] = r
+
+    offsets: dict[int, list[int]] = {}
+    for r in records:
+        offsets.setdefault(int(r["itemid"]), []).append(
+            (int(r["unix_timestamp"]) - BASE_MS) // 1000
+        )
+    expected = {
+        item: (len(ts), max(ts), sum(math.exp(-lam * (max(ts) - t)) for t in ts))
+        for item, ts in offsets.items()
+    }
 
     batch = canonicalize(
         spark.createDataFrame(
-            [tuple(r[k] for k in r) for b in batches for r in b],
+            [tuple(r[k] for k in r) for r in records],
             "timestamp string, visitorid string, event string, itemid string, "
             "transactionid string, event_category string, unix_timestamp string",
         )
     )
-    for r in trending_items(batch, lam_per_s=lam).collect():
-        s = last[r.itemid]
-        assert s.raw_events == r.raw_events
-        assert abs(s.decayed_count - r.decayed_count) < 1e-6, (r.itemid, s, r)
-
-
-def test_decayed_item_counts_late_event_never_regresses_anchor(spark, tmp_path):
-    """A late (within-watermark) event arriving in a LATER batch joins as
-    already-decayed mass at the CURRENT anchor: decayed_count stays <=
-    raw_events, last_event_time never regresses, and the value equals the
-    batch closed form."""
-    import math
-
-    from clickestream_project_bigdata_spark.streaming import decayed_item_counts
-
-    path = write_batch_files(
-        tmp_path,
-        [
-            [wire_record(1, 3600, "view", 10)],
-            [wire_record(2, 1800, "view", 10)],  # 30 min LATE vs the anchor
-        ],
-    )
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        decayed_item_counts(stream, half_life_s=3600.0, watermark="10 hours")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("late_decay")
-        .option("checkpointLocation", str(tmp_path / "ckpt_late_decay"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    rows = spark.sql("select * from late_decay").collect()
-    final = max(rows, key=lambda r: r["raw_events"])
-    lam = math.log(2.0) / 3600.0
-    expect = 1.0 + math.exp(-lam * 1800)  # closed form as of t=3600
-    assert abs(final["decayed_count"] - expect) < 1e-9
-    assert final["decayed_count"] <= final["raw_events"]
-    # anchor stayed at the max event time
-    assert final["last_event_time"].timestamp() * 1000 == BASE_MS + 3600 * 1000
-
-
-def test_novel_items_stream_emits_each_item_once(spark, tmp_path):
-    """Cross-batch novelty: batch 1 introduces {10, 11}; batch 2 repeats
-    10 and introduces 12 → only 12 is emitted in batch 2; nothing is ever
-    emitted twice."""
-    from clickestream_project_bigdata_spark.streaming.sessions import (
-        novel_items_stream,
-    )
-
-    path = write_batch_files(
-        tmp_path,
-        [
-            [wire_record(1, 0, "view", 10), wire_record(1, 60, "view", 11)],
-            [wire_record(2, 120, "view", 10), wire_record(2, 180, "view", 12)],
-        ],
-    )
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        novel_items_stream(stream)
-        .writeStream.format("memory")
-        .queryName("novel_items")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_novel"))
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("novel_items").collect()
-    assert sorted(r.itemid for r in rows) == [10, 11, 12]
-    # batch semantics on the same data: same item set (first-occurrence
-    # row choice is arbitrary in batch mode; identity set is the contract)
-    batch = canonicalize(spark.read.json(path))
-    assert sorted(r.itemid for r in novel_items_stream(batch).collect()) == [10, 11, 12]
-
-
-def test_windowed_binned_quantiles_matches_batch(spark, tmp_path):
-    """Streaming per-window histogram quantiles equal the batch operator
-    applied to each window's slice — the mergeable-histogram contract;
-    the second micro-batch only affects its own window."""
-    import datetime as dt
-
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        binned_quantiles,
-    )
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.streaming.sessions import (
-        windowed_binned_quantiles,
-    )
-
-    rows = [
-        # minute 0: values 0..5
-        *[(1, dt.datetime(2024, 1, 1, 0, 0, i), i, "view", float(i)) for i in range(6)],
-        # minute 1: values 10, 20, 30
-        *[(1, dt.datetime(2024, 1, 1, 0, 1, i), 10 + i, "view", float(10 * (i + 1))) for i in range(3)],
-    ]
-    ev = spark.createDataFrame(
-        rows,
-        "visitorid long, event_time timestamp, event_id long, event string, value double",
-    )
-    got = {
-        str(r.minute): r
-        for r in windowed_binned_quantiles(ev, duration="1 minute").collect()
-    }
-    assert len(got) == 2
-    for minute, r in got.items():
-        lo = dt.datetime.fromisoformat(minute)
-        window_slice = ev.filter(
-            (F.col("event_time") >= F.lit(lo))
-            & (F.col("event_time") < F.lit(lo + dt.timedelta(minutes=1)))
-        )
-        b = binned_quantiles(window_slice).collect()[0]
-        assert (r.n_values, r.q50_lo, r.q90_lo, r.q99_lo) == (
-            b.n_values,
-            b.q50_lo,
-            b.q90_lo,
-            b.q99_lo,
-        )
-
-
-def test_stateful_funnel_cross_batch_progression(spark, tmp_path):
-    """Funnel progresses ACROSS batches: u1 views in batch 1, clicks in
-    batch 2, purchases in batch 3 -> steps_reached climbs 1, 2, 3. u2
-    purchases before ever viewing -> the purchase's first touch precedes
-    the view's, so it never counts (first-touch ordering)."""
-    from clickestream_project_bigdata_spark.streaming import stateful_funnel
-
-    path = write_batch_files(
-        tmp_path,
-        [
-            [wire_record(1, 100, "view", 1), wire_record(2, 50, "purchase", 1)],
-            [wire_record(1, 200, "click", 1), wire_record(2, 300, "view", 1)],
-            [wire_record(1, 400, "purchase", 1)],
-        ],
-    )
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        stateful_funnel(stream, ["view", "click", "purchase"], watermark="10 hours")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sfunnel")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sfunnel"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    rows = spark.sql("select * from sfunnel").collect()
-    last = {}
-    for r in sorted(rows, key=lambda r: r["n_events"]):
-        last[r["visitorid"]] = r
-    assert last[1]["steps_reached"] == 3 and last[1]["n_events"] == 3
-    t = last[1]["step_times"]
-    assert [(b - a).total_seconds() for a, b in zip(t, t[1:])] == [100.0, 200.0]
-    # u2: purchase@50 < view@300 -> only the view counts
-    assert last[2]["steps_reached"] == 1
-
-
-def test_stateful_funnel_batch_split_invariant(spark, tmp_path):
-    """The same events under DIFFERENT batch splits (including a later-step
-    event arriving in an earlier batch) land on the identical final state —
-    the min-fold order-independence contract."""
-    from clickestream_project_bigdata_spark.streaming import stateful_funnel
-
-    events = [
-        wire_record(1, 500, "purchase", 1),
-        wire_record(1, 100, "view", 1),
-        wire_record(1, 300, "click", 1),
-        wire_record(1, 700, "view", 1),
-    ]
-    finals = []
-    for split_name, batches in [
-        ("one", [events]),
-        ("rev", [[events[0]], [events[3], events[2]], [events[1]]]),
-    ]:
-        (tmp_path / split_name).mkdir(exist_ok=True)
-        path = write_batch_files(tmp_path / split_name, batches)
-        stream = canonicalize(read_json_stream(spark, path, max_files=1))
-        q = (
-            stateful_funnel(stream, ["view", "click", "purchase"], watermark="10 hours")
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(f"sf_{split_name}")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{split_name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        rows = spark.sql(f"select * from sf_{split_name}").collect()
-        final = max(rows, key=lambda r: r["n_events"])
-        finals.append(
-            (final["steps_reached"], list(final["step_times"]), final["n_events"])
-        )
-    assert finals[0] == finals[1]
-    assert finals[0][0] == 3  # view@100 <= click@300 <= purchase@500
-
-
-def test_stateful_funnel_matches_batch_first_touch(spark, tmp_path):
-    """The streaming stateful funnel's final per-visitor state equals the
-    batch first_touch_funnel over the union of all batches — the
-    stream/batch equivalence contract for the funnel family."""
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        first_touch_funnel,
-    )
-    from clickestream_project_bigdata_spark.streaming import stateful_funnel
-
-    batches = [
-        [wire_record(1, 100, "view", 1), wire_record(2, 50, "purchase", 1)],
-        [wire_record(1, 300, "click", 1), wire_record(2, 200, "view", 1),
-         wire_record(3, 10, "view", 1)],
-        [wire_record(1, 900, "purchase", 1), wire_record(2, 400, "click", 1)],
-    ]
-    steps = ["view", "click", "purchase"]
-    path = write_batch_files(tmp_path, batches)
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        stateful_funnel(stream, steps, watermark="10 hours")
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sf_eq")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sf_eq"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    latest = {}
-    for r in spark.sql("select * from sf_eq").collect():
-        if r["visitorid"] not in latest or r["n_events"] > latest[r["visitorid"]]["n_events"]:
-            latest[r["visitorid"]] = r
-    allrec = [r for b in batches for r in b]
-    wire_df = spark.createDataFrame(
-        [tuple(r[k] for k in r) for r in allrec],
-        "timestamp string, visitorid string, event string, itemid string, "
-        "transactionid string, event_category string, unix_timestamp string",
-    )
-    batch_df = canonicalize(wire_df)
-    expect = {r["visitorid"]: r for r in first_touch_funnel(batch_df, steps).collect()}
-    assert set(latest) == set(expect)
-    for v, e in expect.items():
-        s = latest[v]
-        assert s["steps_reached"] == e["steps_reached"], v
-        times = [e[f"{st}_time"] for st in steps][: e["steps_reached"]]
-        assert list(s["step_times"]) == times, v
-
-
-def test_stateful_funnel_ttl_expiry_exactly_once_then_fresh(spark, tmp_path):
-    """TTL mode (VERDICT r11 #4): a visitor inactive past ttl_s of event
-    time expires — their final row is emitted EXACTLY once with
-    expired=True, carrying the same values as their last live emission;
-    a later event re-enters them as a FRESH visitor (n_events restarts)."""
-    from clickestream_project_bigdata_spark.streaming import stateful_funnel
-
-    batches = [
-        # u1 lives: view@100, click@200 -> steps_reached 2
-        [wire_record(1, 100, "view", 1), wire_record(1, 200, "click", 1)],
-        # u2 far ahead advances the watermark (applied from the NEXT batch)
-        [wire_record(2, 100_000, "view", 1)],
-        # this batch runs with watermark ~99990 s >> u1's timeout (1200 s)
-        # -> u1 expires here
-        [wire_record(2, 200_000, "view", 1)],
-        # u1 returns AFTER expiry -> fresh state, not a continuation
-        [wire_record(1, 300_000, "view", 1)],
-    ]
-    path = write_batch_files(tmp_path, batches)
-    stream = canonicalize(read_json_stream(spark, path, max_files=1))
-    q = (
-        stateful_funnel(
-            stream, ["view", "click", "purchase"],
-            watermark="10 seconds", ttl_s=1000,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sf_ttl")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sf_ttl"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    rows = spark.sql("select * from sf_ttl").collect()
-    u1 = [r for r in rows if r["visitorid"] == 1]
-    expired = [r for r in u1 if r["expired"]]
-    live = [r for r in u1 if not r["expired"]]
-    # exactly ONE expiry emission, equal to the last live row's values
-    assert len(expired) == 1
-    assert expired[0]["steps_reached"] == 2 and expired[0]["n_events"] == 2
-    pre = [r for r in live if r["n_events"] == 2]
-    assert len(pre) == 1
-    assert list(expired[0]["step_times"]) == list(pre[0]["step_times"])
-    # the return is FRESH: one live row with n_events=1, steps_reached=1
-    fresh = [r for r in live if r["n_events"] == 1]
-    assert len(fresh) == 1 and fresh[0]["steps_reached"] == 1
-    # u2's last activity is 200,000 s; u1's return pushes the final
-    # watermark to ~299,990 s — past u2's 201,000 s timeout — so u2 also
-    # expires, exactly once, in the trailing no-data batch
-    u2_expired = [r for r in rows if r["visitorid"] == 2 and r["expired"]]
-    assert len(u2_expired) == 1 and u2_expired[0]["n_events"] == 2
-    # the freshly-returned u1 state (timeout 301,000 s) stays live: its
-    # only expired row is the one asserted above
-    assert len(expired) == 1
-
-
-def test_stateful_funnel_ttl_pre_expiry_matches_untimed(spark, tmp_path):
-    """With no expiry in range, TTL-mode emissions equal the untimed
-    operator's row-for-row (modulo the expired=False column) — the
-    pre-expiry-semantics-unchanged contract."""
-    from clickestream_project_bigdata_spark.streaming import stateful_funnel
-
-    batches = [
-        [wire_record(1, 100, "view", 1), wire_record(2, 50, "purchase", 1)],
-        [wire_record(1, 300, "click", 1), wire_record(2, 200, "view", 1)],
-        [wire_record(1, 900, "purchase", 1)],
-    ]
-    outs = []
-    for mode, ttl in (("untimed", None), ("ttl", 10**9)):
-        sub = tmp_path / mode
-        sub.mkdir()
-        path = write_batch_files(sub, batches)
-        stream = canonicalize(read_json_stream(spark, path, max_files=1))
-        q = (
-            stateful_funnel(
-                stream, ["view", "click", "purchase"],
-                watermark="10 hours", ttl_s=ttl,
-            )
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(f"sf_pre_{mode}")
-            .option("checkpointLocation", str(sub / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        rows = spark.sql(f"select * from sf_pre_{mode}").collect()
-        if mode == "ttl":
-            assert all(r["expired"] is False for r in rows)
-        outs.append(
-            sorted(
-                (
-                    r["visitorid"], r["steps_reached"],
-                    tuple(r["step_times"]), r["n_events"],
-                )
-                for r in rows
-            )
-        )
-    assert outs[0] == outs[1]
+    got = {r.itemid: r for r in trending_items(batch, lam_per_s=lam).collect()}
+    assert set(got) == set(expected)
+    for item, (n, t_last, decayed) in expected.items():
+        r = got[item]
+        assert r.raw_events == n
+        assert r.last_event_time.timestamp() * 1000 == BASE_MS + t_last * 1000
+        assert abs(r.decayed_count - decayed) < 1e-6, (item, r, decayed)
 
 
 def test_stream_scale_replay_small_fixture_equals_batch(spark, tmp_path):

@@ -31,7 +31,6 @@ from clickestream_project_bigdata_spark.operators import (  # noqa: E402
     analytics,
     curation,
     dedup,
-    multimodal,
     similarity,
     text,
 )
@@ -470,7 +469,7 @@ def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
     return wrapped
 
 
-# --- scale extensions: dedup / similarity / text / multimodal --------------
+# --- scale extensions: dedup / similarity / text -------------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, "documents")
@@ -866,34 +865,6 @@ def _q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.decode_images(multimodal.attach_binary(_docs(spark, sf_dir)))
-
-
-def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-histogram feature extraction (mapInPandas, normalize=False):
-    the raw per-bucket byte counts are exact integers, so the oracle can
-    recompute the histogram character-by-character and hash-match it (the
-    fixture corpus is pure ASCII → byte == codepoint; the L2-normalized
-    variant stays the default for embedding into the similarity operators)."""
-    feats = multimodal.extract_features(
-        multimodal.attach_binary(_docs(spark, sf_dir)), normalize=False
-    )
-    return feats.select(
-        "doc_id", F.posexplode("feature").alias("bucket", "cnt")
-    ).select(
-        "doc_id",
-        F.col("bucket").cast("long").alias("bucket"),
-        F.col("cnt").cast("long").alias("byte_count"),
-    )
-
-
-def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return multimodal.sample_frames(multimodal.attach_binary(_docs(spark, sf_dir))).select(
-        "doc_id", F.col("frame_idx").cast("long").alias("frame_idx")
-    )
-
-
 def _q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise distinct-visitor intersection + Jaccard between event
     types (operators/analytics.py): one visitor-keyed collect_set pass,
@@ -1213,25 +1184,6 @@ def _q_neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.neardup_cluster_sizes(dedup.duplicate_clusters(pairs))
 
 
-def _q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio metadata plumbing (pure Catalyst fake path whose arithmetic
-    the oracle mirrors; the real WAV PCM decoder is test-pinned in
-    tests/test_multimodal.py) (operators/multimodal.py)."""
-    return multimodal.decode_audio(
-        multimodal.attach_audio_binary(_docs(spark, sf_dir))
-    )
-
-
-def _q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video metadata plumbing (pure Catalyst fake path whose arithmetic
-    the oracle mirrors; the real ISO-BMFF/MP4 box walker —
-    ftyp/mvhd/tkhd/stsd — is test-pinned on hand-built containers in
-    tests/test_multimodal.py) (operators/multimodal.py)."""
-    return multimodal.decode_video(
-        multimodal.attach_video_binary(_docs(spark, sf_dir))
-    )
-
-
 def _q_path_conversion_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion rate by session opening path (operators/analytics.py);
     user_paths' sorted-struct core with the convert flag in-aggregation."""
@@ -1403,9 +1355,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "redact_pii": _q_redact_pii,
         "pack_sequences": _q_pack_sequences,
         "curate_corpus": _q_curate_corpus,
-        "multimodal_decode": _q_multimodal_decode,
-        "multimodal_frames": _q_multimodal_frames,
-        "multimodal_features": _q_multimodal_features,
         # driver-verified green in round 5
         "sessions": _q_sessions,
         "session_length_quantiles": _q_session_length_quantiles,
@@ -1474,8 +1423,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "pii_rate_by_source": _q_pii_rate_by_source,
         "dedup_token_savings": _q_dedup_token_savings,
         "quantization_error_stats": _q_quantization_error_stats,
-        "multimodal_audio": _q_multimodal_audio,
-        "multimodal_video": _q_multimodal_video,
         "heavy_hitter_items": _q_heavy_hitter_items,
         "heavy_hitter_tokens": _q_heavy_hitter_tokens,
         "neardup_cluster_sizes": _q_neardup_cluster_sizes,
@@ -1540,7 +1487,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "item_transitions",
     "label_centroids",
     "langid_confusion",
-    "multimodal_audio",
     "neardup_histogram",
     "next_item_recs",
     "packed_corpus",
@@ -3010,24 +2956,6 @@ def oracle_sql() -> dict[str, str]:
             "sqrt(list_dot_product(qv, qv))), 6) AS score "
             "FROM embeddings, q ORDER BY score DESC, vec_id ASC LIMIT 10"
         ),
-        "multimodal_decode": (
-            "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
-            "CAST(64 + octet_length(encode(text)) % 577 AS BIGINT) AS width, "
-            "CAST(64 + (octet_length(encode(text)) * 31) % 417 AS BIGINT) AS height, "
-            "CAST(3 AS BIGINT) AS channels FROM documents"
-        ),
-        "multimodal_frames": (
-            "SELECT doc_id, CAST(unnest(generate_series(0, octet_length(encode(text)) % 100, 10)) AS BIGINT) "
-            "AS frame_idx FROM documents"
-        ),
-        "multimodal_features": (
-            "WITH pos AS (SELECT doc_id, text, unnest(generate_series(1, length(text))) AS i FROM documents), "
-            "cnts AS (SELECT doc_id, ord(substr(text, i, 1)) % 16 AS bucket, COUNT(*) AS c "
-            "FROM pos GROUP BY 1, 2), "
-            "grid AS (SELECT doc_id, b AS bucket FROM documents CROSS JOIN range(16) AS t(b)) "
-            "SELECT g.doc_id, g.bucket, COALESCE(c.c, 0) AS byte_count "
-            "FROM grid g LEFT JOIN cnts c ON c.doc_id = g.doc_id AND c.bucket = g.bucket"
-        ),
         "corpus_stats": (
             f"WITH t AS (SELECT doc_id, lang, source, text, {_TOKS_SQL} AS toks FROM documents), "
             "s AS (SELECT doc_id, lang, source, CAST(len(toks) AS BIGINT) AS token_count, "
@@ -3605,23 +3533,6 @@ def oracle_sql() -> dict[str, str]:
             "AS n_saturated, "
             "round(MAX(abs(x - round(x * scale) / scale)), 9) AS max_abs_err "
             "FROM c GROUP BY label"
-        ),
-        "multimodal_video": (
-            "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
-            "CAST(octet_length(encode(text)) AS BIGINT) AS n_frames, "
-            "CAST(octet_length(encode(text)) * 40 AS BIGINT) AS duration_ms, "
-            "CAST(160 * (1 + octet_length(encode(text)) % 4) AS BIGINT) AS width, "
-            "CAST(120 * (1 + octet_length(encode(text)) % 4) AS BIGINT) AS height "
-            "FROM documents"
-        ),
-        "multimodal_audio": (
-            "SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
-            "CAST(8000 * (1 + octet_length(encode(text)) % 3) AS BIGINT) AS sample_rate, "
-            "CAST(1 + octet_length(encode(text)) % 2 AS BIGINT) AS n_channels, "
-            "CAST(octet_length(encode(text)) * 50 AS BIGINT) AS n_samples, "
-            "CAST((octet_length(encode(text)) * CAST(50000 AS BIGINT)) // "
-            "(8000 * (1 + octet_length(encode(text)) % 3)) AS BIGINT) AS duration_ms "
-            "FROM documents"
         ),
         "path_conversion_rates": (
             "WITH ev AS (SELECT user_id AS visitorid, event_type AS event, "

@@ -2,7 +2,6 @@ from . import (  # noqa: F401
     analytics,
     cleanse,
     dedup,
-    multimodal,
     sessionize,
     similarity,
     text,

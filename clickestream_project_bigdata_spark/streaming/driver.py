@@ -33,7 +33,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..operators import analytics
 from ..operators.sessionize import DEFAULT_GAP_SECONDS, session_metrics, sessionize
-from .sessions import stateful_session_metrics
+from .sessions import DEFAULT_WATERMARK, stateful_session_metrics
 from .sinks import Sink
 
 
@@ -142,7 +142,7 @@ def start_stateful_sessions(
     checkpoint_location: str,
     *,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
-    watermark: str = "1 hour",
+    watermark: str = DEFAULT_WATERMARK,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Production driver for the FIXED sessionization mode: the native

@@ -55,16 +55,12 @@ class JdbcSink:
         self,
         url: str,
         properties: dict[str, str],
-        mode: str = "append",
         idempotent: bool = False,
-        batch_id_col: str = "batch_id",
         array_mode: str = "native",
     ):
         self.url = url
         self.properties = properties
-        self.mode = mode
         self.idempotent = idempotent
-        self.batch_id_col = batch_id_col
         #: "native" maps array columns through the JDBC dialect (Postgres —
         #: the reference's target — supports them); "json" serializes them
         #: to JSON strings for backends without array types (MySQL, Derby).
@@ -79,13 +75,13 @@ class JdbcSink:
                 if isinstance(field.dataType, ArrayType):
                     df = df.withColumn(field.name, F.to_json(F.col(field.name)))
         if not self.idempotent or batch_id is None:
-            df.write.jdbc(url=self.url, table=table, mode=self.mode, properties=self.properties)
+            df.write.jdbc(url=self.url, table=table, mode="append", properties=self.properties)
             return
 
         from pyspark.sql import functions as F
 
-        if self.batch_id_col not in df.columns:
-            df = df.withColumn(self.batch_id_col, F.lit(int(batch_id)))
+        if "batch_id" not in df.columns:
+            df = df.withColumn("batch_id", F.lit(int(batch_id)))
         staging = f"{table}__staging"
         df.write.jdbc(url=self.url, table=staging, mode="overwrite", properties=self.properties)
         # ensure the target exists with the same Spark-generated schema
@@ -112,9 +108,7 @@ class JdbcSink:
             # identifiers; quote to match (ANSI — Derby/Postgres; MySQL needs
             # ANSI_QUOTES). Table names are passed through unquoted, same as
             # Spark does.
-            st.executeUpdate(
-                f'DELETE FROM {table} WHERE "{self.batch_id_col}" = {batch_id}'
-            )
+            st.executeUpdate(f'DELETE FROM {table} WHERE "batch_id" = {batch_id}')
             st.executeUpdate(f"INSERT INTO {table} SELECT * FROM {staging}")
             conn.commit()
         except Exception:
@@ -125,9 +119,9 @@ class JdbcSink:
 
 
 class ParquetSink:
-    """Idempotent file sink: one partition directory per (table, batch_id);
-    a retried batch overwrites its own partition, nothing else (dynamic
-    partition overwrite)."""
+    """Idempotent file sink: one directory per (table, batch_id),
+    ``<table>/batch_id=N``; a retried batch replaces that directory and
+    leaves every other batch's untouched."""
 
     def __init__(self, base_path: str):
         self.base_path = base_path
@@ -136,11 +130,7 @@ class ParquetSink:
         if batch_id is None:
             df.write.mode("append").parquet(f"{self.base_path}/{table}")
             return
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(f"{self.base_path}/{table}/batch_id={batch_id}")
-        )
+        df.write.mode("overwrite").parquet(f"{self.base_path}/{table}/batch_id={batch_id}")
 
 
 class ConsoleSink:
@@ -148,14 +138,13 @@ class ConsoleSink:
     fan-out writes concurrently, so header and table print under one lock
     and never interleave with another table's."""
 
-    def __init__(self, num_rows: int = 20):
-        self.num_rows = num_rows
+    def __init__(self) -> None:
         self._lock = threading.Lock()
 
     def write(self, df: DataFrame, table: str, batch_id: int | None = None) -> None:
         with self._lock:
             print(f"=== {table} (batch {batch_id}) ===")
-            df.show(self.num_rows, truncate=False)
+            df.show(20, truncate=False)
 
 
 class NoopSink:
@@ -168,8 +157,8 @@ class NoopSink:
 
 
 class MemorySink:
-    """Test sink: collects every batch's rows per table (thread-safe — Spark
-    may run foreachBatch callbacks from different threads across restarts)."""
+    """Test sink: collects every batch's rows per table (thread-safe — the
+    fan-out writes the tables of one batch concurrently)."""
 
     def __init__(self) -> None:
         self.tables: dict[str, list] = {}

@@ -301,19 +301,6 @@ def test_first_touch_attribution_no_window_no_global_sort(spark):
     assert "rangepartitioning" not in plan.lower().replace(" ", "")
 
 
-def test_decode_video_fake_path_zero_exchange(spark):
-    """The Catalyst fake video path is a pure narrow projection — metadata
-    arithmetic on meta.n_bytes must not shuffle or leave codegen."""
-    from clickestream_project_bigdata_spark.operators.multimodal import (
-        attach_video_binary,
-        decode_video,
-    )
-
-    docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    df = decode_video(attach_video_binary(docs))
-    assert count_exchanges(df) == 0
-
-
 def test_heavy_hitters_broadcast_verify_no_smj(spark):
     """Pass 2's verify join must be a BROADCAST of the bounded candidate
     set (never sort-merge: the input side is the 100 TB fact), and the

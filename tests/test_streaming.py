@@ -582,6 +582,26 @@ def test_parquet_sink_idempotent(spark, tmp_path, make_events):
     assert out.count() == 1
 
 
+def test_parquet_sink_retry_replaces_only_its_batch(spark, tmp_path, make_events):
+    """A retried batch that carries different rows replaces its own
+    ``batch_id=N`` directory and leaves the earlier batch as written."""
+    from clickestream_project_bigdata_spark.streaming import ParquetSink
+
+    sink = ParquetSink(str(tmp_path / "out"))
+
+    def epm(*minutes):
+        return analytics.events_per_minute(
+            make_events([(1, f"2024-01-01T00:{m:02d}:10", "view", 1) for m in minutes])
+        )
+
+    sink.write(epm(1), "events_per_minute", batch_id=2)
+    sink.write(epm(2, 3), "events_per_minute", batch_id=3)
+    sink.write(epm(4), "events_per_minute", batch_id=3)  # retry, new rows
+    out = spark.read.parquet(str(tmp_path / "out/events_per_minute"))
+    got = sorted((r["batch_id"], r["minute"].minute) for r in out.collect())
+    assert got == [(2, 1), (3, 4)]
+
+
 def test_stateful_user_paths_and_flags_merge_across_batches(spark, tmp_path):
     """Streaming user_paths / funnel flags over session windows: a session
     delivered across two micro-batches yields ONE ordered path row and ONE

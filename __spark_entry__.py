@@ -31,7 +31,6 @@ from clickestream_project_bigdata_spark.operators import (  # noqa: E402
     analytics,
     curation,
     dedup,
-    similarity,
     text,
 )
 from clickestream_project_bigdata_spark.operators.sessionize import (  # noqa: E402
@@ -331,13 +330,6 @@ def _q_minute_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.minute_anomalies(events_from_fixture(spark, sf_dir))
 
 
-def _q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-centroid (fasttext-style) classification of every embedding
-    against the per-label mean vectors (operators/similarity.py)."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.nearest_centroid_classify(emb)
-
-
 def _q_next_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov next-item top-3 per item (operators/graph.py)."""
     from clickestream_project_bigdata_spark.operators.graph import (
@@ -469,7 +461,7 @@ def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
     return wrapped
 
 
-# --- scale extensions: dedup / similarity / text -------------------------
+# --- scale extensions: dedup / text / curation / graph -------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, "documents")
@@ -590,12 +582,6 @@ def _q_mask_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mask_duplicate_spans(_docs(spark, sf_dir), span_tokens=16)
 
 
-def _q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label mean embedding (operators/similarity.py), DECIMAL-summed,
-    CSV-serialized for the driver hasher."""
-    return similarity.label_centroids(read_parquet_table(spark, sf_dir, "embeddings"))
-
-
 def _q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-3 TF-IDF keywords (operators/text.py)."""
     return text.tfidf_top_terms(_docs(spark, sf_dir), k=3)
@@ -659,77 +645,8 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicate_clusters(pairs)
 
 
-def _q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: banded hyperplane LSH (2 bands
-    × 4 planes) + exact per-pair rescoring. Plane components are md5-derived
-    literals, so the oracle recomputes identical buckets and scores.
-    Threshold 0.25: the fixture embeddings are random (near-orthogonal,
-    cos σ≈1/√64), so a real-corpus 0.9 threshold would select nothing at
-    any SF."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.all_pairs_above(emb, threshold=0.25, num_planes=8, bands=2, method="pandas")
-
-
-def _q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(emb, query_id=0, k=10)
-
-
-def _q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, query_id=0, k=10, num_planes=4)
-
-
-def _q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k with the SEEDED quantizer (centroids = lowest
-    ids, deterministic) — the oracle replays assignment, probing, and
-    rescoring in SQL. The k-means quantizer stays the library default for
-    cell balance; its recall vs brute force is pinned in
-    tests/test_similarity.py."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(
-        emb, query_id=0, k=10, num_centroids=8, nprobe=2, quantizer="seeded"
-    )
-
-
 def _q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.corpus_stats(_docs(spark, sf_dir))
-
-
-def _q_normalize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 normalization precompute (operators/similarity.py) — no shuffle.
-
-    The driver's value hasher canonicalizes via pandas sort, which cannot
-    order list cells — so the array column is serialized to a deterministic
-    CSV of round(x*1e6) integers (same trick as user_paths' path_str)."""
-    out = similarity.normalize_embeddings(
-        read_parquet_table(spark, sf_dir, "embeddings")
-    )
-    return out.select(
-        "vec_id",
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.col("normalized"),
-                lambda x: F.round(x * 1000000).cast("bigint").cast("string"),
-            ),
-        ).alias("normalized_q6"),
-    )
-
-
-def _q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization (operators/similarity.py) — no shuffle.
-    qvec (array<int>) serialized to CSV for the driver's list-blind hasher."""
-    out = similarity.quantize_embeddings(
-        read_parquet_table(spark, sf_dir, "embeddings")
-    )
-    return out.select(
-        "vec_id",
-        "scale",
-        F.concat_ws(
-            ",", F.transform(F.col("qvec"), lambda x: x.cast("string"))
-        ).alias("qvec_csv"),
-    )
 
 
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -827,30 +744,6 @@ def _q_packed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.pack_corpus_text(_docs(spark, sf_dir), budget=512)
 
 
-def _q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded-LSH k-NN join: top-3 cosine neighbors for every vector."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.knn_join(emb, k=3, num_planes=8, bands=2)
-
-
-def _q_knn_join_fine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN join at SCALE resolution: 16 planes → 256 buckets/band.
-
-    LSH bucket count is a data-scale knob, not a constant: with P planes
-    per band the expected bucket is corpus/2^(P/bands), so the 8-plane
-    default (16 buckets/band) that suits the sf-series corpora turns
-    quadratic-by-construction once the corpus outgrows
-    buckets × max_bucket_rows (measured: the 100× checkpoint's 200k-vector
-    fixture pushes EVERY bucket over the 4096-row guard and the whole
-    corpus down the quadratic pair-join fallback). This entry pins the
-    resolution a 100×+ corpus needs; the oracle is the same parameterized
-    SQL at the same plane count, so recall/rank parity is hash-checked,
-    not asserted.
-    """
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.knn_join(emb, k=3, num_planes=16, bands=2)
-
-
 def _q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship composition: the END-TO-END curation pipeline (quality
     filter → exact dedup → MinHash near-dup clustering → PII redaction →
@@ -889,19 +782,6 @@ def _q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return transition_entropy(events_from_fixture(spark, sf_dir))
-
-
-def _q_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding L2-norm QA profile (operators/similarity.py),
-    DECIMAL-accumulated mean."""
-    return similarity.norm_profile(read_parquet_table(spark, sf_dir, "embeddings"))
-
-
-def _q_cluster_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label within-cluster sum of squares vs the published q6
-    centroids (operators/similarity.py) — clustering-quality companion of
-    label_centroids, same centroid convention by construction."""
-    return similarity.cluster_inertia(read_parquet_table(spark, sf_dir, "embeddings"))
 
 
 def _q_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -994,30 +874,6 @@ def _q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.readability_scores(_docs(spark, sf_dir))
 
 
-def _q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the hyperplane-LSH index vs exact brute force for the
-    standard query vector (operators/similarity.py)."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.ann_recall_eval(emb, query_id=0, k=10, method="lsh", num_planes=4)
-
-
-def _q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the seeded-quantizer IVF index vs exact brute force
-    (operators/similarity.py)."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.ann_recall_eval(
-        emb, query_id=0, k=10, method="ivf",
-        num_centroids=8, nprobe=2, quantizer="seeded",
-    )
-
-
-def _q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension mean/var/min/max embedding health profile, DECIMAL
-    accumulation (operators/similarity.py)."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.embedding_dim_stats(emb)
-
-
 def _q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One BPE training iteration: corpus-weighted adjacent-char-pair
     counts over the VOCAB grain, top-100 (operators/text.py)."""
@@ -1055,13 +911,6 @@ def _q_domain_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened per-source resampling weights over token
     counts, alpha=0.5 (operators/curation.py)."""
     return curation.domain_balance_weights(_docs(spark, sf_dir), alpha=0.5)
-
-
-def _q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label top-5 centroid-distance outliers — the row-level
-    drill-down behind cluster_inertia (operators/similarity.py)."""
-    emb = read_parquet_table(spark, sf_dir, "embeddings")
-    return similarity.embedding_outliers(emb, top_k=5)
 
 
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1165,14 +1014,6 @@ def _q_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token volume before/after global keep-first exact dedup
     (operators/dedup.py)."""
     return dedup.dedup_token_savings(_docs(spark, sf_dir))
-
-
-def _q_quantization_error_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label int8 reconstruction audit — order-independent stats only
-    (operators/similarity.py)."""
-    return similarity.quantization_error_stats(
-        read_parquet_table(spark, sf_dir, "embeddings")
-    )
 
 
 def _q_neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1282,8 +1123,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "audience_overlap": _q_audience_overlap,
         "zipf_slope": _q_zipf_slope,
         "transition_entropy": _q_transition_entropy,
-        "norm_profile": _q_norm_profile,
-        "cluster_inertia": _q_cluster_inertia,
         "mask_duplicate_spans": _q_mask_duplicate_spans,
         "collocations": _q_collocations,
         "type_token_ratio": _q_type_token_ratio,
@@ -1292,7 +1131,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "rare_bigram_rate": _q_rare_bigram_rate,
         "pack_efficiency": _q_pack_efficiency,
         "dedup_agreement": _q_dedup_agreement,
-        "nearest_centroid": _q_nearest_centroid,
         "incremental_dedup": _q_incremental_dedup,
         "item_trend": _q_item_trend,
         "trending_items": _q_trending_items,
@@ -1327,7 +1165,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # --- never driver-sampled before round 6
         "tfidf_top_terms": _q_tfidf_top_terms,
         "similar_docs_topk": _q_similar_docs,
-        "label_centroids": _q_label_centroids,
         "repetition_score": _q_repetition_score,
         "dedup_apply": _q_dedup_apply,
         "packed_corpus": _q_packed_corpus,
@@ -1343,13 +1180,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
         "dedup_minhash_lsh": _q_dedup_minhash,
         "dedup_simhash": _q_dedup_simhash,
-        "dedup_embedding_cosine": _q_dedup_embedding_cosine,
         "dedup_clusters": _q_dedup_clusters,
-        "similarity_topk": _q_sim_topk,
-        "similarity_lsh_topk": _q_sim_lsh_topk,
-        "similarity_ivf_topk": _q_sim_ivf_topk,
-        "similarity_knn_join": _q_knn_join,
-        "similarity_knn_join_fine": _q_knn_join_fine,
         "corpus_stats": _q_corpus_stats,
         "corpus_sample": _q_corpus_sample,
         "redact_pii": _q_redact_pii,
@@ -1384,28 +1215,22 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "decontaminate_apply": _q_decontaminate_apply,
         "corpus_profile": _q_corpus_profile,
         "chunk_documents": _q_chunk_documents,
-        "normalize_embeddings": _q_normalize_embeddings,
         "temperature_sample": _q_temperature_sample,
         "stratified_fixed_k": _q_stratified_fixed_k,
         "dup_histogram": _q_dup_histogram,
         "split_corpus": _q_split_corpus,
         "item_skew_profile": _q_item_skew_profile,
-        "quantize_embeddings": _q_quantize_embeddings,
         "active_users_approx": _q_active_users_approx,
         "cleanse_events": _q_cleanse,
         # --- round-7 additions (never sampled yet; prioritized below)
         "token_length_distribution": _q_token_length_distribution,
         "char_entropy": _q_char_entropy,
         "readability_scores": _q_readability_scores,
-        "ann_recall_lsh": _q_ann_recall_lsh,
-        "ann_recall_ivf": _q_ann_recall_ivf,
-        "embedding_dim_stats": _q_embedding_dim_stats,
         "bpe_merge_step": _q_bpe_merge_step,
         "gopher_quality_flags": _q_gopher_quality_flags,
         "vocab_growth": _q_vocab_growth,
         "tokenizer_fertility": _q_tokenizer_fertility,
         "domain_balance_weights": _q_domain_balance_weights,
-        "embedding_outliers": _q_embedding_outliers,
         "first_touch_funnel": _q_first_touch_funnel,
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
@@ -1422,7 +1247,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "token_coverage_topk": _q_token_coverage_topk,
         "pii_rate_by_source": _q_pii_rate_by_source,
         "dedup_token_savings": _q_dedup_token_savings,
-        "quantization_error_stats": _q_quantization_error_stats,
         "heavy_hitter_items": _q_heavy_hitter_items,
         "heavy_hitter_tokens": _q_heavy_hitter_tokens,
         "neardup_cluster_sizes": _q_neardup_cluster_sizes,
@@ -1472,8 +1296,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "domain_balance_weights",
     "dup_rate_by_source",
     "duplicate_spans",
-    "embedding_dim_stats",
-    "embedding_outliers",
     "event_type_pivot",
     "events_column_profile",
     "first_touch_funnel",
@@ -1485,7 +1307,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "item_dwell_time",
     "item_pagerank",
     "item_transitions",
-    "label_centroids",
     "langid_confusion",
     "neardup_histogram",
     "next_item_recs",
@@ -1712,130 +1533,6 @@ def _simhash_sql(max_hamming: int = 8, bits: int = 60) -> str:
         "bit_count(xor(a.simhash, b.simhash)) AS hamming "
         "FROM chunk a JOIN chunk b ON a.c = b.c AND a.ck = b.ck AND a.doc_id < b.doc_id) "
         f"SELECT * FROM pr WHERE hamming <= {max_hamming}"
-    )
-
-
-def _vec_lit(row: tuple[float, ...]) -> str:
-    return "CAST([" + ", ".join(repr(c) for c in row) + "] AS DOUBLE[])"
-
-
-def _cos_sql(x: str, y: str) -> str:
-    return (
-        f"list_dot_product({x}, {y}) / "
-        f"(sqrt(list_dot_product({x}, {x})) * sqrt(list_dot_product({y}, {y})))"
-    )
-
-
-def _band_key_sql(comps, band: int, ppb: int) -> str:
-    terms = [
-        f"(CASE WHEN list_dot_product(v, {_vec_lit(comps[band * ppb + j])}) >= 0 "
-        f"THEN {1 << j} ELSE 0 END)"
-        for j in range(ppb)
-    ]
-    return " + ".join(terms)
-
-
-def _embedding_pairs_sql(
-    threshold: float, num_planes: int = 8, bands: int = 2, dim: int = 64
-) -> str:
-    comps = portable.hyperplane_components(num_planes, dim)
-    ppb = num_planes // bands
-    key_selects = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band_idx, {_band_key_sql(comps, b, ppb)} AS band_key FROM e"
-        for b in range(bands)
-    )
-    return (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
-        f"banded AS ({key_selects}), "
-        "cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM banded a "
-        "JOIN banded b ON a.band_idx = b.band_idx AND a.band_key = b.band_key "
-        "AND a.vec_id < b.vec_id), "
-        "n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e), "
-        "scored AS (SELECT c.id_a, c.id_b, "
-        "round(list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm), 6) AS score "
-        "FROM cand c JOIN n na ON na.vec_id = c.id_a JOIN n nb ON nb.vec_id = c.id_b) "
-        f"SELECT * FROM scored WHERE score >= {threshold}"
-    )
-
-
-def _knn_join_sql(
-    k: int = 3, num_planes: int = 8, bands: int = 2, dim: int = 64
-) -> str:
-    comps = portable.hyperplane_components(num_planes, dim)
-    ppb = num_planes // bands
-    key_selects = " UNION ALL ".join(
-        f"SELECT vec_id, {b} AS band_idx, {_band_key_sql(comps, b, ppb)} AS band_key FROM e"
-        for b in range(bands)
-    )
-    return (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
-        f"banded AS ({key_selects}), "
-        "cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM banded a "
-        "JOIN banded b ON a.band_idx = b.band_idx AND a.band_key = b.band_key "
-        "AND a.vec_id <> b.vec_id), "
-        "n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e), "
-        "scored AS (SELECT c.id_a, c.id_b, "
-        "round(list_dot_product(na.v, nb.v) / (na.nrm * nb.nrm), 6) AS score "
-        "FROM cand c JOIN n na ON na.vec_id = c.id_a JOIN n nb ON nb.vec_id = c.id_b), "
-        "ranked AS (SELECT *, row_number() OVER (PARTITION BY id_a ORDER BY score DESC, id_b ASC) AS rnk FROM scored) "
-        f"SELECT id_a AS vec_id, id_b AS neighbor_id, score, CAST(rnk AS INT) AS rank "
-        f"FROM ranked WHERE rnk <= {k}"
-    )
-
-
-def _lsh_topk_sql(k: int = 10, num_planes: int = 4, dim: int = 64) -> str:
-    comps = portable.hyperplane_components(num_planes, dim)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, {_vec_lit(comps[p])}) >= 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(num_planes)
-    )
-    return (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
-        f"keyed AS (SELECT vec_id, v, {bucket} AS bucket FROM e), "
-        "q AS (SELECT v AS qv, bucket AS qb FROM keyed WHERE vec_id = 0) "
-        f"SELECT vec_id, round({_cos_sql('v', 'qv')}, 6) AS score "
-        "FROM keyed CROSS JOIN q WHERE bucket = qb "
-        f"ORDER BY score DESC, vec_id ASC LIMIT {k}"
-    )
-
-
-def _ivf_topk_sql(k: int = 10, num_centroids: int = 8, nprobe: int = 2) -> str:
-    return (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
-        "cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS cv "
-        f"FROM e ORDER BY vec_id LIMIT {num_centroids}), "
-        "q AS (SELECT v AS qv FROM e WHERE vec_id = 0), "
-        f"scored AS (SELECT e.vec_id, e.v, c.cell, {_cos_sql('e.v', 'c.cv')} AS sim "
-        "FROM e CROSS JOIN cent c), "
-        "asg AS (SELECT vec_id, v, cell FROM (SELECT *, row_number() OVER "
-        "(PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn FROM scored) WHERE rn = 1), "
-        f"probe AS (SELECT cell FROM cent CROSS JOIN q ORDER BY {_cos_sql('cv', 'qv')} DESC, cell ASC LIMIT {nprobe}) "
-        f"SELECT vec_id, round({_cos_sql('v', 'qv')}, 6) AS score "
-        "FROM asg JOIN probe USING (cell) CROSS JOIN q "
-        f"ORDER BY score DESC, vec_id ASC LIMIT {k}"
-    )
-
-
-def _ann_recall_sql(approx_sql: str, k: int = 10) -> str:
-    """Recall@k of an approximate top-k statement vs exact brute force:
-    both run as CTE subqueries (DuckDB allows a WITH inside a derived
-    table), intersect on vec_id, one summary row. Mirrors
-    similarity.ann_recall_eval including the empty-exact zero-row case."""
-    brute = (
-        "WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0) "
-        f"SELECT vec_id FROM (SELECT vec_id, {_cos_sql('CAST(embedding AS DOUBLE[])', 'qv')} AS score "
-        f"FROM embeddings, q ORDER BY score DESC, vec_id ASC LIMIT {k})"
-    )
-    return (
-        f"WITH exact AS (SELECT vec_id FROM ({brute})), "
-        f"approx AS (SELECT vec_id FROM ({approx_sql})), "
-        "he AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM exact), "
-        "ha AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_approx FROM approx), "
-        "hh AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits "
-        "FROM exact JOIN approx USING (vec_id)) "
-        f"SELECT CAST({k} AS BIGINT) AS k, n_exact, n_approx, n_hits, "
-        "round(CAST(n_hits AS DOUBLE) / CAST(n_exact AS DOUBLE), 6) AS recall_at_k "
-        "FROM he CROSS JOIN ha CROSS JOIN hh WHERE n_exact > 0"
     )
 
 
@@ -2120,27 +1817,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT src, n_out, n_dst, "
             "round(ln(CAST(n_out AS DOUBLE)) - snlogn / CAST(n_out AS DOUBLE), 6) + 0.0 AS entropy "
             "FROM g ORDER BY n_out DESC, src ASC LIMIT 100"
-        ),
-        "norm_profile": (
-            "WITH n AS (SELECT label, sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), "
-            "CAST(embedding AS DOUBLE[]))) AS nrm FROM embeddings) "
-            "SELECT label, CAST(COUNT(nrm) AS BIGINT) AS n_vectors, "
-            "round(MIN(nrm), 6) AS min_norm, round(MAX(nrm), 6) AS max_norm, "
-            "round(CAST(AVG(CAST(nrm AS DECIMAL(28,10))) AS DOUBLE), 6) AS avg_norm "
-            "FROM n GROUP BY label"
-        ),
-        "cluster_inertia": (
-            "WITH e AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS x, "
-            "unnest(generate_series(0, len(embedding) - 1)) AS idx FROM embeddings), "
-            "a AS (SELECT label, idx, COUNT(*) AS n, "
-            "CAST(SUM(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s FROM e GROUP BY label, idx), "
-            "c AS (SELECT label, idx, CAST(CAST(round(round(s / n, 6) * 1000000) AS BIGINT) "
-            "AS DOUBLE) / 1000000.0 AS cc FROM a), "
-            "nv AS (SELECT label, CAST(MAX(n) AS BIGINT) AS n_vectors FROM a GROUP BY label), "
-            "d AS (SELECT e.label, round(CAST(SUM(CAST((x - cc) * (x - cc) AS DECIMAL(38,12))) "
-            "AS DOUBLE), 6) AS inertia FROM e JOIN c ON e.label = c.label AND e.idx = c.idx "
-            "GROUP BY e.label) "
-            "SELECT d.label, nv.n_vectors, inertia FROM d JOIN nv ON d.label = nv.label"
         ),
         "sessions": (
             f"WITH {_SESSIONIZED} "
@@ -2524,23 +2200,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM pmd JOIN ds ON day = dday) "
             "SELECT minute, events_count, zscore, abs(zscore) > 2.0 AS is_anomaly FROM j"
         ),
-        "nearest_centroid": (
-            "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v "
-            "FROM embeddings), "
-            "ex AS (SELECT label, unnest(v) AS x, "
-            "unnest(generate_series(0, len(v) - 1)) AS idx FROM e), "
-            "a AS (SELECT label AS clabel, idx, COUNT(*) AS n, "
-            "CAST(SUM(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s FROM ex GROUP BY 1, 2), "
-            "c AS (SELECT clabel, list(CAST(round(round(s / n, 6) * 1000000) AS BIGINT) "
-            "/ 1000000.0 ORDER BY idx) AS cv FROM a GROUP BY 1), "
-            "sc AS (SELECT vec_id, label, clabel, "
-            "round(list_dot_product(v, cv) / "
-            "(sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) AS score "
-            "FROM e CROSS JOIN c) "
-            "SELECT vec_id, label, CAST(clabel AS INTEGER) AS pred_label, score FROM sc "
-            "QUALIFY row_number() OVER (PARTITION BY vec_id "
-            "ORDER BY score DESC, clabel ASC) = 1"
-        ),
         "next_item_recs": (
             "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
             "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
@@ -2895,16 +2554,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM d CROSS JOIN q WHERE d.doc_id <> 0) "
             "SELECT doc_id, jaccard FROM s ORDER BY jaccard DESC, doc_id ASC LIMIT 10"
         ),
-        "label_centroids": (
-            "WITH e AS (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS x, "
-            "unnest(generate_series(0, len(embedding) - 1)) AS idx FROM embeddings), "
-            "a AS (SELECT label, idx, COUNT(*) AS n, "
-            "CAST(SUM(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s FROM e GROUP BY label, idx), "
-            "m AS (SELECT label, idx, n, CAST(round(round(s / n, 6) * 1000000) AS BIGINT) AS q FROM a) "
-            "SELECT label, CAST(MAX(n) AS BIGINT) AS n_vectors, "
-            "string_agg(CAST(q AS VARCHAR), ',' ORDER BY idx) AS centroid_q6 "
-            "FROM m GROUP BY label"
-        ),
         "tfidf_top_terms": (
             f"WITH tk AS (SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents), "
             "tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf "
@@ -2948,13 +2597,6 @@ def oracle_sql() -> dict[str, str]:
             "len(list_distinct(list_concat(a.toks, b.toks))), 6) AS jaccard "
             "FROM d a JOIN d b ON a.block = b.block AND a.doc_id < b.doc_id) "
             "SELECT * FROM p WHERE jaccard >= 0.9"
-        ),
-        "similarity_topk": (
-            "WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0) "
-            "SELECT vec_id, round(list_dot_product(CAST(embedding AS DOUBLE[]), qv) / "
-            "(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) * "
-            "sqrt(list_dot_product(qv, qv))), 6) AS score "
-            "FROM embeddings, q ORDER BY score DESC, vec_id ASC LIMIT 10"
         ),
         "corpus_stats": (
             f"WITH t AS (SELECT doc_id, lang, source, text, {_TOKS_SQL} AS toks FROM documents), "
@@ -3015,20 +2657,6 @@ def oracle_sql() -> dict[str, str]:
             "JOIN r ON r.lang IS NOT DISTINCT FROM d.lang "
             f"WHERE {portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
             "% 1000000 < rate * 1000000"
-        ),
-        "normalize_embeddings": (
-            "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
-            "n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e) "
-            "SELECT vec_id, array_to_string(list_transform(v, "
-            "x -> CAST(round(round(x / (CASE WHEN nrm = 0 THEN 1.0 ELSE nrm END), 6) * 1000000) AS BIGINT)), ',') "
-            "AS normalized_q6 FROM n"
-        ),
-        "quantize_embeddings": (
-            "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), "
-            "m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx FROM e), "
-            "s AS (SELECT vec_id, v, round(CASE WHEN mx = 0 THEN 1.0 ELSE 127.0 / mx END, 6) AS scale FROM m) "
-            "SELECT vec_id, scale, array_to_string(list_transform(v, "
-            "x -> CAST(round(x * scale) AS INT)), ',') AS qvec_csv FROM s"
         ),
         "chunk_documents": (
             f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
@@ -3099,8 +2727,6 @@ def oracle_sql() -> dict[str, str]:
             "string_agg(d.text, ' ' ORDER BY p.doc_id) AS pack_text "
             "FROM p JOIN documents d ON d.doc_id = p.doc_id GROUP BY p.pack_id"
         ),
-        "similarity_knn_join": _knn_join_sql(k=3, num_planes=8, bands=2),
-        "similarity_knn_join_fine": _knn_join_sql(k=3, num_planes=16, bands=2),
         "curate_corpus": _curate_corpus_sql(min_quality=0.3, threshold=0.9, budget=512),
         "dedup_minhash_lsh": _minhash_sql(threshold=0.7),
         "dedup_apply": (
@@ -3119,9 +2745,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "dedup_simhash": _simhash_sql(max_hamming=8, bits=60),
         "dedup_clusters": _clusters_sql(threshold=0.9),
-        "dedup_embedding_cosine": _embedding_pairs_sql(threshold=0.25, num_planes=8, bands=2),
-        "similarity_lsh_topk": _lsh_topk_sql(k=10, num_planes=4),
-        "similarity_ivf_topk": _ivf_topk_sql(k=10, num_centroids=8, nprobe=2),
         "token_length_distribution": (
             f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS t FROM documents) "
             "SELECT CAST(length(t) AS BIGINT) AS token_len, "
@@ -3155,23 +2778,6 @@ def oracle_sql() -> dict[str, str]:
             "round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) "
             "- 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)), 6) AS flesch "
             "FROM g"
-        ),
-        "ann_recall_lsh": _ann_recall_sql(_lsh_topk_sql(k=10, num_planes=4), k=10),
-        "ann_recall_ivf": _ann_recall_sql(
-            _ivf_topk_sql(k=10, num_centroids=8, nprobe=2), k=10
-        ),
-        "embedding_dim_stats": (
-            "WITH ex AS (SELECT g.i - 1 AS idx, CAST(embedding[g.i] AS DOUBLE) AS x "
-            "FROM embeddings, LATERAL UNNEST(generate_series(1, len(embedding))) AS g(i)), "
-            "a AS (SELECT CAST(idx AS BIGINT) AS idx, CAST(COUNT(*) AS BIGINT) AS n_values, "
-            "SUM(CAST(x AS DECIMAL(38,12))) AS sx, "
-            "SUM(CAST(x * x AS DECIMAL(38,12))) AS sxx, "
-            "round(MIN(x), 6) AS dim_min, round(MAX(x), 6) AS dim_max FROM ex GROUP BY 1) "
-            "SELECT idx, n_values, "
-            "round(CAST(sx AS DOUBLE) / CAST(n_values AS DOUBLE), 6) AS dim_mean, "
-            "round((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) "
-            "/ CAST(n_values AS DOUBLE)) / CAST(n_values AS DOUBLE), 6) AS dim_var, "
-            "dim_min, dim_max FROM a ORDER BY idx ASC"
         ),
         "bpe_merge_step": (
             f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS w FROM documents), "
@@ -3245,23 +2851,6 @@ def oracle_sql() -> dict[str, str]:
             "round((power(CAST(n_tokens AS DOUBLE), 0.5) / dd) "
             "/ (CAST(n_tokens AS DOUBLE) / tt), 6) AS weight "
             "FROM c CROSS JOIN t ORDER BY source ASC"
-        ),
-        "embedding_outliers": (
-            "WITH e AS (SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS x, "
-            "unnest(generate_series(0, len(embedding) - 1)) AS idx FROM embeddings), "
-            "a AS (SELECT label, idx, COUNT(*) AS n, "
-            "CAST(SUM(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s FROM e GROUP BY label, idx), "
-            "c AS (SELECT label, idx, CAST(CAST(round(round(s / n, 6) * 1000000) AS BIGINT) "
-            "AS DOUBLE) / 1000000.0 AS cc FROM a), "
-            "d AS (SELECT e.vec_id, e.label, round(CAST(SUM(CAST((x - cc) * (x - cc) "
-            "AS DECIMAL(38,12))) AS DOUBLE), 6) AS sq_dist "
-            "FROM e JOIN c ON e.label = c.label AND e.idx = c.idx "
-            "GROUP BY e.vec_id, e.label), "
-            "r AS (SELECT vec_id, label, sq_dist, CAST(row_number() OVER "
-            "(PARTITION BY label ORDER BY sq_dist DESC, vec_id ASC) AS INT) AS dist_rank "
-            "FROM d) "
-            "SELECT vec_id, label, sq_dist, dist_rank FROM r WHERE dist_rank <= 5 "
-            "ORDER BY label ASC, dist_rank ASC"
         ),
         "first_touch_funnel": (
             "WITH g AS (SELECT user_id AS visitorid, "
@@ -3517,22 +3106,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(tok * keep) AS BIGINT) AS kept_tokens, "
             "round((SUM(tok) - SUM(tok * keep)) / CAST(SUM(tok) AS DOUBLE), 6) "
             "AS token_savings_rate FROM fl GROUP BY source"
-        ),
-        "quantization_error_stats": (
-            "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v "
-            "FROM embeddings), "
-            "m AS (SELECT label, v, list_max(list_transform(v, x -> abs(x))) AS mx FROM e), "
-            "s AS (SELECT label, v, round(CASE WHEN mx = 0 THEN 1.0 "
-            "ELSE 127.0 / mx END, 6) AS scale FROM m), "
-            "c AS (SELECT label, scale, i, v[i] AS x FROM s, "
-            "LATERAL UNNEST(generate_series(1, len(v))) AS g(i)) "
-            "SELECT label, "
-            "CAST(SUM(CASE WHEN i = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_vectors, "
-            "CAST(COUNT(*) AS BIGINT) AS n_components, "
-            "CAST(SUM(CASE WHEN abs(round(x * scale)) = 127 THEN 1 ELSE 0 END) AS BIGINT) "
-            "AS n_saturated, "
-            "round(MAX(abs(x - round(x * scale) / scale)), 9) AS max_abs_err "
-            "FROM c GROUP BY label"
         ),
         "path_conversion_rates": (
             "WITH ev AS (SELECT user_id AS visitorid, event_type AS event, "

@@ -51,7 +51,7 @@ HEADLINE = [
     "most_viewed_items",
 ]
 
-TABLES = ["orders", "events", "documents", "embeddings"]
+TABLES = ["orders", "events", "documents"]
 
 
 def _recode_fixture(sf_dir: str, target_splits: int = 32) -> str:

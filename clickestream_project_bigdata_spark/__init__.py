@@ -7,11 +7,11 @@ Layout:
 * ``schema``    — canonical typed event schema (casts once at ingest).
 * ``sources``   — parquet/CSV/JSON batch readers, Kafka + file streaming.
 * ``operators`` — cleanse, sessionize, the 10 reference analyses, dedup,
-  similarity search, text analysis, corpus curation, item graphs.
+  text analysis, corpus curation, item graphs.
 * ``streaming`` — foreachBatch driver (reference-compatible) and the
   watermarked/session_window-based improved mode; pluggable sinks.
-* ``plans``     — plan-audit helpers (exchange/join-count assertions)
-  and scale utilities (salted joins, bucketed tables, SQL views).
+* ``plans``     — plan-audit helpers (exchange/join-count assertions),
+  skew diagnostics and ``materialize_once``.
 """
 
 from .session import get_spark

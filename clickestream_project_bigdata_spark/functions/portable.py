@@ -1,10 +1,10 @@
 """Cross-engine ("portable") hash primitives.
 
-The sketch operators (MinHash, SimHash, hyperplane LSH, KMV) default to
-``xxhash64`` — the fastest JVM-side hash — but xxhash64 exists only in
-Spark, so sketches built on it cannot be replayed by an independent SQL
-engine. Every primitive here is md5-derived and reproducible bit-for-bit in
-Spark, DuckDB, and plain Python (verified by tests):
+The sketch operators (MinHash, SimHash, KMV) default to ``xxhash64`` — the
+fastest JVM-side hash — but xxhash64 exists only in Spark, so sketches built
+on it cannot be replayed by an independent SQL engine. Every primitive here
+is md5-derived and reproducible bit-for-bit in Spark, DuckDB, and plain
+Python (verified by tests):
 
 * ``phash60(x)``  = first 15 hex digits of ``md5(x)`` as a non-negative
   60-bit integer. Spark: ``conv(substr(md5(x),1,15),16,10)``; DuckDB:
@@ -13,9 +13,6 @@ Spark, DuckDB, and plain Python (verified by tests):
 * MinHash permutations: ``g_j(h) = (a_j·(h mod p) + b_j) mod p`` with
   ``p = 2³¹−1`` — products stay < 2⁶², so ANSI-mode Spark, DuckDB and
   int64 numpy all evaluate them exactly (no wrap-around needed).
-* Hyperplane components: deterministic uniforms in [−1, 1) derived from
-  md5 in PYTHON (they are per-(plane, dim) constants, not per-row values),
-  inlined as literals into both the Spark plan and the oracle SQL.
 
 Everything is seeded and versioned by the string prefixes below; changing a
 prefix is a format break.
@@ -60,16 +57,3 @@ def minhash_seeds(num_hashes: int, seed: int = 7) -> tuple[tuple[int, ...], tupl
     a = tuple(phash60_py(f"mh-a:{seed}:{j}") % (P31 - 1) + 1 for j in range(num_hashes))
     b = tuple(phash60_py(f"mh-b:{seed}:{j}") % P31 for j in range(num_hashes))
     return a, b
-
-
-@lru_cache(maxsize=None)
-def hyperplane_components(num_planes: int, dim: int, seed: int = 7) -> tuple[tuple[float, ...], ...]:
-    """Per-(plane, dim) uniform components in [−1, 1): constants, computed
-    once in Python and inlined as double literals on both engines."""
-    return tuple(
-        tuple(
-            phash60_py(f"hp:{seed}:{p}:{d}") / float(1 << 59) - 1.0
-            for d in range(dim)
-        )
-        for p in range(num_planes)
-    )

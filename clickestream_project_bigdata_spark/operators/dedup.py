@@ -448,12 +448,11 @@ def minhash_lsh_pairs(
     small key, linear at scale. ``verify=True`` re-checks candidates with
     exact shingle Jaccard (estimated similarity is also returned).
 
-    Skew guard (same discipline as ``similarity.knn_join``'s
-    ``max_bucket_rows``): a band bucket holding n rows emits n(n-1)/2
-    pairs in the ONE task that owns its join key, so a template-duplicate
-    corpus (many docs sharing every band) turns one bucket into a
-    straggler — measured 6.57× worst-task/median on the adversarial
-    all-dups fixture at the 100× checkpoint. Buckets over
+    Skew guard (``max_bucket_rows``): a band bucket holding n rows emits
+    n(n-1)/2 pairs in the ONE task that owns its join key, so a
+    template-duplicate corpus (many docs sharing every band) turns one
+    bucket into a straggler — measured 6.57× worst-task/median on the
+    adversarial all-dups fixture at the 100× checkpoint. Buckets over
     ``max_bucket_rows`` are SALTED: the left side gets a deterministic
     ``hash(id) % salt_buckets`` salt, the right side is replicated across
     all ``salt_buckets`` salt values, and the join key grows the salt —

@@ -314,9 +314,9 @@ def similar_docs_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact token-Jaccard top-``k`` against the document ``query_id`` —
-    the text twin of ``similarity.brute_force_topk``: find-similar-docs by
-    lexical overlap (dup triage, related-content lookup).
+    """Exact token-Jaccard top-``k`` against the document ``query_id``:
+    find-similar-docs by lexical overlap (dup triage, related-content
+    lookup).
 
     Output: (id_col, jaccard), score DESC / id ASC — a total order, so the
     top-k set is deterministic. Scale shape: the query's token set is a

@@ -3,8 +3,8 @@
 Scale regressions rarely announce themselves — a lost broadcast hint or a
 collapsed projection just makes the job slower. These helpers turn plan
 properties (exchange and join counts) into assertable values so tests can
-pin them (e.g. `test_bucketed_write_joins_without_exchange`), and
-`explain()` is one call away during development.
+pin them (`tests/test_plans.py`), and `explain()` is one call away during
+development.
 """
 
 from __future__ import annotations

@@ -1,27 +1,13 @@
-"""Scale utilities: skew-salted joins, bucketed co-located storage, and the
-SQL view surface.
+"""Lineage cutting for frames that several consumers read.
 
-The reference relies on Kafka keying by visitorid for locality
-(`/root/reference/producer.py:38-45`) and otherwise inherits Spark defaults.
-At 100 TB three more levers matter, packaged here so operators stay
-declarative:
-
-* **AQE first** — the session factory enables adaptive skew-join splitting
-  and partition coalescing; :func:`salted_join` is for the residual case
-  AQE can't fix (a single hot key inside one partition of a shuffle join
-  whose splits still exceed executor memory).
-* **Bucketed tables** — repeated joins/aggregations on the same key (e.g.
-  events by visitorid feeding sessionization every batch) should pay the
-  shuffle ONCE at write time; bucketed scans then join shuffle-free.
-* **SQL views** — every analysis is reachable from ``spark.sql`` so the
-  downstream-SQL workflows the reference served from Postgres run directly
-  on the engine.
+:func:`materialize_once` computes a frame once and hands every consumer the
+stored result, so a multi-consumer operator does not re-run its input's
+lineage per consumer.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def materialize_once(df: DataFrame) -> DataFrame:
@@ -59,201 +45,3 @@ def materialize_once(df: DataFrame) -> DataFrame:
             df.unpersist()
         return out
     return df.localCheckpoint(eager=False)
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with key salting for skew: the (large, skewed) ``left`` gets
-    a random salt in [0, salt_buckets); the (smaller) ``right`` is exploded
-    ``salt_buckets``× so every salted key finds its match. Correct for 1:N
-    joins on ``key``; the hot key's rows spread over ``salt_buckets`` tasks.
-
-    Prefer AQE's skew-join handling; reach for this only when one key
-    dominates a partition so badly that even split shuffle blocks spill.
-    """
-    salted_left = left.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    salted_right = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    return (
-        salted_left.join(salted_right, on=[key, "__salt"], how=how).drop("__salt")
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_key: str,
-    num_buckets: int = 64,
-    sort_key: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a frame bucketed (and optionally sorted) by key. Subsequent
-    joins/groupBys on ``bucket_key`` between tables bucketed the same way
-    plan ZERO exchanges — the 100 TB answer to 'events join users every
-    single batch'. (Bucketing requires saveAsTable — the bucket metadata
-    lives in the catalog, not the parquet files.)"""
-    writer = df.write.mode(mode).bucketBy(num_buckets, bucket_key)
-    if sort_key:
-        writer = writer.sortBy(sort_key)
-    writer.saveAsTable(table)
-
-
-def register_views(
-    spark: SparkSession, events: DataFrame, prefix: str = ""
-) -> list[str]:
-    """Expose the event stream and every analysis as temp views for
-    ``spark.sql`` workflows (the reference's users queried the Postgres
-    output tables; here the same names are queryable in-engine, computed
-    on demand with full pushdown)."""
-    from ..operators import analytics
-    from ..operators.sessionize import session_metrics, sessionize
-
-    events.createOrReplaceTempView(f"{prefix}events_canonical")
-    s = sessionize(events)
-    views = {
-        "sessions": session_metrics(s),
-        "user_paths": analytics.user_paths(s),
-        "events_per_minute": analytics.events_per_minute(events),
-        "active_users": analytics.active_users(events),
-        "event_type_distribution": analytics.event_type_distribution(events),
-        "bounce_rate": analytics.bounce_rate(events),
-        "top_items": analytics.top_items(events),
-        "item_interactions": analytics.item_interactions(events),
-        "most_viewed_items": analytics.most_viewed_items(events),
-        "events_per_minute_ma": analytics.events_per_minute_ma(events),
-        "top_k_items_per_minute": analytics.top_k_items_per_minute(events),
-        "item_skew_profile": analytics.key_skew_profile(events, "itemid"),
-    }
-    if "value" in events.columns:  # fixture streams carry it; wire shape doesn't
-        views["value_per_minute"] = analytics.value_per_minute(events)
-    for name, df in views.items():
-        df.createOrReplaceTempView(f"{prefix}{name}")
-    return [f"{prefix}events_canonical", *[f"{prefix}{n}" for n in views]]
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-    compact: bool = True,
-) -> None:
-    """Hive-style directory-partitioned parquet (`path/col=value/...`) —
-    the layout that makes PARTITION PRUNING work: a filter on a partition
-    column eliminates whole directories at planning time (the scan's
-    `PartitionFilters`), before any file footer is opened. The right
-    layout for low-cardinality query-sliced columns (day, region, split);
-    use :func:`write_clustered` for high-cardinality range predicates
-    inside each partition.
-
-    ``compact=True`` shuffles rows to their partition key first so each
-    directory receives one task's output instead of one file per upstream
-    task per partition — the small-files guard (a 100 TB table written
-    from 10k tasks × 365 days would otherwise produce 3.65M files)."""
-    out = df.repartition(*[F.col(c) for c in partition_cols]) if compact else df
-    out.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered parquet layout for data skipping: range-partition on
-    ``cluster_cols`` into ``num_files`` files and sort within each, so each
-    file's min/max footer stats for those columns are DISJOINT — a range or
-    equality predicate on them prunes to ~one file at planning time instead
-    of scanning everything. The single-dimension-first cousin of Z-ordering,
-    and the difference between touching 1/num_files and 100 % of a 100 TB
-    table for time- or key-ranged queries. One range exchange (sampling
-    pass + shuffle), paid once at write time."""
-    cols = [F.col(c) for c in cluster_cols]
-    (
-        df.repartitionByRange(num_files, *cols)
-        .sortWithinPartitions(*cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def zorder_value(cols: list, bits: int = 16, mins: dict | None = None, maxs: dict | None = None):
-    """Z-order (Morton) curve value over numeric columns as a pure Catalyst
-    expression: each column min-max-scales to a ``bits``-bit integer and
-    the bits interleave (bit j of column c lands at position j·n_cols + c),
-    so rows close in EVERY dimension are close on the 1-D curve.
-
-    ``mins``/``maxs`` map column name → bound Columns/literals; the caller
-    supplies them (one 1-row aggregate — see :func:`write_zordered`).
-    Min-max scaling is the simple variant; for heavily skewed columns,
-    pre-map each to its approx-quantile bucket id and pass those columns
-    here instead (rank-based Z-order)."""
-    n = len(cols)
-    parts = []
-    for ci, c in enumerate(cols):
-        col = F.col(c).cast("double")
-        lo = mins[c].cast("double")
-        hi = maxs[c].cast("double")
-        span = F.when(hi > lo, hi - lo).otherwise(F.lit(1.0))
-        scaled = F.least(
-            F.lit((1 << bits) - 1),
-            F.floor(((col - lo) / span) * ((1 << bits) - 1)).cast("long"),
-        )
-        parts.append(scaled)
-    z = F.lit(0).cast("long")
-    for j in range(bits):
-        for ci, scaled in enumerate(parts):
-            bit = F.shiftright(scaled, j).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, j * n + ci))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    num_files: int = 64,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet for MULTI-column data skipping — the
-    layout where predicates on ANY of ``zorder_cols`` prune files via
-    min/max footer stats, not just the first sort key.
-    :func:`write_clustered` gives disjoint ranges on its leading column
-    but each file spans the FULL range of every other column; the Morton
-    curve trades a little pruning power on the first column for bounded
-    per-file ranges on all of them — on a 100 TB table queried by both
-    user and time, the difference between touching ~√(1/num_files) and
-    100 % of the files for the second column.
-
-    Cost at write time: one 1-row min/max aggregate (broadcast into the
-    scaling expression) + one range exchange on the z-value + per-file
-    sorts — the same shape as write_clustered, plus the cheap bit math."""
-    bounds = df.agg(
-        *[F.min(c).alias(f"__lo_{c}") for c in zorder_cols],
-        *[F.max(c).alias(f"__hi_{c}") for c in zorder_cols],
-    )
-    with_bounds = df.crossJoin(F.broadcast(bounds))
-    z = zorder_value(
-        zorder_cols,
-        bits=bits,
-        mins={c: F.col(f"__lo_{c}") for c in zorder_cols},
-        maxs={c: F.col(f"__hi_{c}") for c in zorder_cols},
-    )
-    (
-        with_bounds.withColumn("__z", z)
-        .repartitionByRange(num_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z", *[f"__lo_{c}" for c in zorder_cols], *[f"__hi_{c}" for c in zorder_cols])
-        .write.mode(mode)
-        .parquet(path)
-    )

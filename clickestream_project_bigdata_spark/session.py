@@ -60,16 +60,17 @@ def get_spark(
         # 100 TB scans: bound per-task input so partitions fit executor memory.
         "spark.sql.files.maxPartitionBytes": "256m",
         # ... and the inverse guard for SMALL-bytes / heavy-compute scans
-        # (explode-amplified text/embedding work): aim for >= one split per
-        # core even when the input is a few MB, instead of the default
-        # 4 MB open-cost floor that funnels a small file into ONE task
-        # while every core idles. Splits land on parquet row-group
+        # (explode-amplified text work such as shingling): aim for >= one
+        # split per core even when the input is a few MB, instead of the
+        # default 4 MB open-cost floor that funnels a small file into ONE
+        # task while every core idles. Splits land on parquet row-group
         # boundaries, so this composes with multi-row-group files (real
         # lakes) — a single-row-group file remains unsplittable by format.
         "spark.sql.files.minPartitionNum": str(cpus),
         "spark.sql.files.openCostInBytes": "65536",
-        # Broadcast threshold: dims (region/nation/part at our SFs) stay
-        # broadcastable; AQE upgrades to broadcast at runtime as well.
+        # Broadcast threshold: small build sides (per-key aggregates, lookup
+        # sets, one-row query sides) stay broadcastable; AQE upgrades to
+        # broadcast at runtime as well.
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.sql.parquet.aggregatePushdown": "true",
         # reliable checkpoints (plans.scale.materialize_once) are deleted

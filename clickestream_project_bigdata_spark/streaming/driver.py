@@ -24,6 +24,7 @@ Sinks must accept concurrent ``write`` calls.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
@@ -157,14 +158,7 @@ def start_stateful_sessions(
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_df, "sessions", batch_id)
 
-    writer = (
-        closed.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(closed, _write, checkpoint_location, available_now)
 
 
 def start_stream(
@@ -192,8 +186,19 @@ def start_stream(
             batch_df, batch_id, sink, gap_seconds=gap_seconds, funnel_steps=funnel_steps
         )
 
+    return _start_foreach_batch(events, _batch_fn, checkpoint_location, available_now)
+
+
+def _start_foreach_batch(
+    stream: DataFrame,
+    batch_fn: Callable[[DataFrame, int], None],
+    checkpoint_location: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``stream`` as an append-mode ``foreachBatch`` query calling
+    ``batch_fn``; ``available_now`` drains the available input and stops."""
     writer = (
-        events.writeStream.foreachBatch(_batch_fn)
+        stream.writeStream.foreachBatch(batch_fn)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_location)
     )

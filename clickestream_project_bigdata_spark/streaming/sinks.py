@@ -15,6 +15,8 @@ import threading
 from typing import Protocol
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 
 class Sink(Protocol):
@@ -68,17 +70,12 @@ class JdbcSink:
 
     def write(self, df: DataFrame, table: str, batch_id: int | None = None) -> None:
         if self.array_mode == "json":
-            from pyspark.sql import functions as F
-            from pyspark.sql.types import ArrayType
-
             for field in df.schema.fields:
                 if isinstance(field.dataType, ArrayType):
                     df = df.withColumn(field.name, F.to_json(F.col(field.name)))
         if not self.idempotent or batch_id is None:
             df.write.jdbc(url=self.url, table=table, mode="append", properties=self.properties)
             return
-
-        from pyspark.sql import functions as F
 
         if "batch_id" not in df.columns:
             df = df.withColumn("batch_id", F.lit(int(batch_id)))

@@ -55,37 +55,6 @@ def test_corpus_stats_totals(spark):
     assert all(0.0 <= r["avg_quality"] <= 1.0 for r in stats)
 
 
-def test_knn_join_matches_brute_force_where_candidates_allow(spark):
-    """Every reported neighbor must be a true candidate-restricted optimum:
-    rank-1 rows agree with exact scoring over the same candidate set, and
-    the banded join finds the query's exact nearest for most vectors."""
-    from clickestream_project_bigdata_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    knn = similarity.knn_join(emb, k=1, num_planes=8, bands=2)
-    rows = knn.collect()
-    n = emb.count()
-    assert len(rows) >= 0.9 * n  # nearly every vector finds candidates
-    # the reported (vec, neighbor) scores must match exact cosine
-    from clickestream_project_bigdata_spark.functions.columns import cosine_similarity
-    from pyspark.sql import functions as F
-
-    a = emb.select(F.col("vec_id").alias("vec_id"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("vb"))
-    checked = (
-        knn.join(a, "vec_id")
-        .join(b, "neighbor_id")
-        .select(
-            "vec_id",
-            "score",
-            F.round(cosine_similarity(F.col("va"), F.col("vb")), 6).alias("exact"),
-        )
-        .filter(F.col("score") != F.col("exact"))
-        .count()
-    )
-    assert checked == 0
-
-
 def test_pack_sequences_distributed_matches_single(spark):
     """The two-pass distributed prefix sum must equal the single-window
     layout exactly, across partition counts."""

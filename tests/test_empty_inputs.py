@@ -25,13 +25,6 @@ def empty_events(spark):
     )
 
 
-@pytest.fixture()
-def empty_embeddings(spark):
-    return spark.createDataFrame(
-        [], "vec_id long, embedding array<float>, label int"
-    )
-
-
 def test_analytics_on_empty_events(spark, empty_events):
     from clickestream_project_bigdata_spark.operators import analytics
     from clickestream_project_bigdata_spark.operators.sessionize import (
@@ -74,18 +67,13 @@ def test_text_and_curation_on_empty_docs(spark, empty_docs):
     assert curation.corpus_stats(empty_docs).count() == 0
 
 
-def test_dedup_similarity_on_empty(spark, empty_docs, empty_embeddings):
-    from clickestream_project_bigdata_spark.operators import dedup, similarity
+def test_dedup_similarity_on_empty(spark, empty_docs):
+    from clickestream_project_bigdata_spark.operators import dedup
 
     assert dedup.exact_dedup(empty_docs).count() == 0
     assert dedup.dedup_keep_first(empty_docs).count() == 0
     assert dedup.minhash_lsh_pairs(empty_docs).count() == 0
     assert dedup.simhash_pairs(empty_docs).count() == 0
-    assert similarity.normalize_embeddings(empty_embeddings).count() == 0
-    assert similarity.quantize_embeddings(empty_embeddings).count() == 0
-    assert similarity.label_centroids(empty_embeddings).count() == 0
-    assert similarity.brute_force_topk(empty_embeddings, query_id=0).count() == 0
-    assert similarity.knn_join(empty_embeddings).count() == 0
 
 
 def test_null_text_documents_flow_through(spark):
@@ -117,8 +105,8 @@ def test_driver_contract_keys_aligned():
     assert q == o, (sorted(q - o), sorted(o - q))
 
 
-def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs, empty_embeddings):
-    from clickestream_project_bigdata_spark.operators import analytics, dedup, similarity, text
+def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs):
+    from clickestream_project_bigdata_spark.operators import analytics, dedup, text
 
     assert analytics.minute_anomalies(empty_events).count() == 0
     assert analytics.item_trend(empty_events).count() == 0
@@ -129,7 +117,6 @@ def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs, empty
     assert (row.users_step1, row.users_step2, row.users_step3) == (0, 0, 0)
     assert text.vocab_coverage(empty_docs).count() == 0
     assert dedup.incremental_dedup(empty_docs, empty_docs).count() == 0
-    assert similarity.nearest_centroid_classify(empty_embeddings).count() == 0
 
 
 def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
@@ -162,17 +149,11 @@ def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
     }
 
 
-def test_round6_final_operators_on_empty_inputs(
-    spark, empty_events, empty_docs, empty_embeddings
-):
-    """The round-6-final nine: empty in → empty (or single all-NULL
+def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs):
+    """The round-6-final operators: empty in → empty (or single all-NULL
     aggregate row where the operator is a global aggregate) — never an
     error."""
-    from clickestream_project_bigdata_spark.operators import (
-        analytics,
-        similarity,
-        text,
-    )
+    from clickestream_project_bigdata_spark.operators import analytics, text
     from clickestream_project_bigdata_spark.operators.graph import (
         transition_entropy,
     )
@@ -181,8 +162,6 @@ def test_round6_final_operators_on_empty_inputs(
     assert analytics.burstiness(empty_events).count() == 0
     assert analytics.novelty_rate(empty_events).count() == 0
     assert transition_entropy(empty_events).count() == 0
-    assert similarity.norm_profile(empty_embeddings).count() == 0
-    assert similarity.cluster_inertia(empty_embeddings).count() == 0
     assert text.source_vocab_overlap(empty_docs).count() == 0
 
     # global aggregates return their one row with NULL metrics
@@ -192,15 +171,8 @@ def test_round6_final_operators_on_empty_inputs(
     assert len(g) == 1 and g[0].gini is None
 
 
-def test_round7_operators_on_empty_inputs(
-    spark, empty_events, empty_docs, empty_embeddings
-):
-    from clickestream_project_bigdata_spark.operators import (
-        analytics,
-        curation,
-        similarity,
-        text,
-    )
+def test_round7_operators_on_empty_inputs(spark, empty_events, empty_docs):
+    from clickestream_project_bigdata_spark.operators import analytics, curation, text
 
     assert text.bpe_merge_step(empty_docs).count() == 0
     assert text.vocab_growth(empty_docs).count() == 0
@@ -210,7 +182,5 @@ def test_round7_operators_on_empty_inputs(
     assert text.char_entropy(empty_docs).count() == 0
     assert text.readability_scores(empty_docs).count() == 0
     assert curation.domain_balance_weights(empty_docs).count() == 0
-    assert similarity.embedding_outliers(empty_embeddings).count() == 0
-    assert similarity.embedding_dim_stats(empty_embeddings).count() == 0
     assert analytics.first_touch_funnel(empty_events).count() == 0
     assert analytics.decay_attribution(empty_events).count() == 0

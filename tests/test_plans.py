@@ -125,16 +125,6 @@ def test_redact_and_text_ops_no_shuffle(spark):
         assert count_exchanges(df) == 0
 
 
-def test_knn_join_no_cartesian(spark):
-    """The k-NN join must never degrade to a cartesian/BNL join: candidates
-    come from the banded equi-join only."""
-    from clickestream_project_bigdata_spark.operators.similarity import knn_join
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = knn_join(emb, k=3)._jdf.queryExecution().executedPlan().toString()
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-
-
 def test_corpus_stats_single_exchange(spark):
     """Stats ride the scan; the only shuffle is the stratum-key aggregate."""
     from clickestream_project_bigdata_spark.operators.curation import corpus_stats

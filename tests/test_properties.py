@@ -604,37 +604,6 @@ def test_transition_entropy_bounds(spark, path):
         assert 0.0 <= r.entropy <= round(math.log(r.n_dst), 6) + 1e-9
 
 
-@settings(max_examples=8, deadline=None)
-@given(
-    vecs=st.lists(
-        st.tuples(
-            st.integers(0, 1),
-            st.lists(st.floats(-4, 4, allow_nan=False, width=32), min_size=3, max_size=3),
-        ),
-        min_size=1,
-        max_size=12,
-    )
-)
-def test_cluster_inertia_nonnegative_and_zero_for_singletons(spark, vecs):
-    """Inertia ≥ 0 always; exactly 0 for singleton clusters (up to the
-    1e-6 centroid quantization grid)."""
-    from clickestream_project_bigdata_spark.operators import similarity
-
-    rows = [(i, v, lab) for i, (lab, v) in enumerate(vecs)]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    sizes: dict[int, int] = {}
-    for lab, _ in vecs:
-        sizes[lab] = sizes.get(lab, 0) + 1
-    for r in similarity.cluster_inertia(emb).collect():
-        assert r.n_vectors == sizes[r.label]
-        assert r.inertia >= 0.0
-        if sizes[r.label] == 1:
-            # centroid = the vector itself up to round-to-1e-6 per component
-            assert r.inertia <= 3 * (5e-7 ** 2) + 1e-9
-
-
 @settings(max_examples=10, deadline=None)
 @given(counts=st.lists(st.integers(1, 30), min_size=1, max_size=15))
 def test_gini_concentration_matches_brute_force(spark, counts):

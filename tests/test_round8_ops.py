@@ -197,27 +197,3 @@ def test_pii_rate_by_source_chain(spark):
     assert (a.n_docs, a.n_pii_docs) == (3, 2)
     assert abs(a.pii_doc_rate - round(2 / 3, 6)) < 1e-12
     assert out["b"].n_pii_docs == 0 and out["b"].pii_doc_rate == 0.0
-
-
-def test_quantization_error_stats_order_independence(spark):
-    """Zero vector -> scale 1, zero error; saturation counted at |q|=127;
-    repartitioning (order change) leaves every stat identical."""
-    from clickestream_project_bigdata_spark.operators.similarity import (
-        quantization_error_stats,
-    )
-
-    rows = [
-        (1, [0.0, 0.0], 0),
-        (2, [1.0, -1.0], 0),   # scale 127 -> q=(127,-127): both saturated
-        (3, [0.5, 0.25], 1),   # scale 254 -> q=(127, 64): one saturated
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = {r.label: r for r in quantization_error_stats(df).collect()}
-    assert (out[0].n_vectors, out[0].n_components) == (2, 4)
-    assert out[0].n_saturated == 2
-    assert out[0].max_abs_err == 0.0  # exact scales: reconstruction exact
-    assert out[1].n_saturated == 1
-    shuffled = {
-        r.label: r for r in quantization_error_stats(df.repartition(7)).collect()
-    }
-    assert out == shuffled

@@ -1,79 +1,13 @@
-"""Scale utilities: salted join correctness, bucketed write/scan, SQL views,
-and streaming late-data semantics (T7)."""
+"""Streaming late-data semantics of the minute analyses (T7) and
+``materialize_once``'s single computation."""
 
 from __future__ import annotations
 
 import functools
 
 import pytest
-from pyspark.sql import functions as F
 
 from clickestream_project_bigdata_spark.operators import analytics
-from clickestream_project_bigdata_spark.plans import (
-    register_views,
-    salted_join,
-    write_bucketed,
-)
-
-
-def test_salted_join_matches_plain_join(spark):
-    left = spark.createDataFrame(
-        [(k, i) for k in ("hot", "cold") for i in range(50 if k == "hot" else 2)],
-        "k string, v long",
-    )
-    right = spark.createDataFrame([("hot", 1.0), ("cold", 2.0)], "k string, w double")
-    plain = left.join(right, "k").select("k", "v", "w")
-    salted = salted_join(left, right, "k", salt_buckets=4).select("k", "v", "w")
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_join_spreads_hot_key(spark):
-    left = spark.createDataFrame([("hot", i) for i in range(200)], "k string, v long")
-    right = spark.createDataFrame([("hot", 1.0)], "k string, w double")
-    salts = (
-        left.withColumn("__salt", (F.rand(seed=42) * 4).cast("int"))
-        .select("__salt")
-        .distinct()
-        .count()
-    )
-    assert salts > 1  # the hot key really lands in multiple buckets
-    assert salted_join(left, right, "k", salt_buckets=4).count() == 200
-
-
-def test_bucketed_write_joins_without_exchange(spark, tmp_path):
-    # warehouse dir is a static conf — the session factory points it at /tmp
-    a = spark.range(0, 1000).withColumn("k", F.col("id") % 100)
-    b = spark.range(0, 100).withColumnRenamed("id", "k").withColumn("w", F.lit(1.0))
-    write_bucketed(a, "t_a", "k", num_buckets=8)
-    write_bucketed(b, "t_b", "k", num_buckets=8)
-    joined = spark.table("t_a").join(spark.table("t_b"), "k")
-    # disable broadcast so the bucketed co-location is what avoids the shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
-        spark.sql("drop table if exists t_a")
-        spark.sql("drop table if exists t_b")
-
-
-def test_register_views_sql_surface(spark, make_events):
-    events = make_events(
-        [
-            (1, "2024-01-01T00:00:00", "view", 10),
-            (1, "2024-01-01T00:00:30", "click", 10),
-            (2, "2024-01-01T00:01:00", "view", 11),
-        ]
-    )
-    names = register_views(spark, events)
-    assert "sessions" in names and "bounce_rate" in names
-    assert spark.sql("select count(*) c from sessions").first()["c"] == 2
-    top = spark.sql(
-        "select itemid, interaction_count from item_interactions order by itemid"
-    ).collect()
-    assert [(r["itemid"], r["interaction_count"]) for r in top] == [(10, 2), (11, 1)]
 
 
 def test_windowed_counts_drop_late_events(spark, tmp_path):
@@ -231,109 +165,6 @@ def test_minute_analyses_streaming_and_late_data(spark, tmp_path, op, value_col,
     first = [r for r in rows if r["minute"] == dt.datetime(2023, 11, 14, 22, 13)]
     assert len(first) == 1
     assert first[0][value_col] == want
-
-
-def test_write_clustered_disjoint_file_ranges(spark, tmp_path):
-    """Each clustered output file must own a disjoint key range (footer
-    min/max stats disjoint => predicate pruning touches ~one file)."""
-    import glob
-
-    from clickestream_project_bigdata_spark.plans.scale import write_clustered
-    from clickestream_project_bigdata_spark.sources.readers import events_from_fixture
-
-    ev = events_from_fixture(spark, "/root/testdata/sf0.001")
-    path = str(tmp_path / "clustered")
-    write_clustered(ev, path, ["event_time"], num_files=8)
-    ranges = []
-    for f in glob.glob(f"{path}/part-*.parquet"):
-        part = spark.read.parquet(f)
-        row = part.selectExpr("min(event_time) AS lo", "max(event_time) AS hi").collect()[0]
-        if row.lo is not None:
-            ranges.append((row.lo, row.hi))
-    ranges.sort()
-    assert len(ranges) >= 4  # range partitioner actually spread the data
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint (boundary equality allowed)
-    # row preservation
-    assert spark.read.parquet(path).count() == ev.count()
-
-
-def test_write_zordered_bounds_all_dimensions(spark, tmp_path):
-    """Z-order layout: EVERY z-column's per-file min/max range must be a
-    bounded fraction of its global range (range-clustering on one key
-    leaves the other column spanning ~100% per file); rows preserved."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.plans.scale import (
-        write_clustered,
-        write_zordered,
-    )
-
-    # two independent uniform dimensions — the worst case for single-key
-    # clustering, the motivating case for the Morton curve
-    n = 4096
-    df = spark.range(n).select(
-        (F.xxhash64("id") % 1000).alias("a"),
-        (F.xxhash64("id", F.lit(1)) % 1000).alias("b"),
-    ).select(F.abs("a").alias("a"), F.abs("b").alias("b"))
-    zpath = str(tmp_path / "zordered")
-    write_zordered(df, zpath, ["a", "b"], num_files=16)
-
-    def per_file_spans(path, col):
-        spans = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            r = spark.read.parquet(f).selectExpr(
-                f"min({col}) lo", f"max({col}) hi", "count(*) c"
-            ).collect()[0]
-            if r.c:
-                spans.append((r.hi - r.lo) / 1000.0)
-        return spans
-
-    za, zb = per_file_spans(zpath, "a"), per_file_spans(zpath, "b")
-    assert len(za) >= 8
-    # 16 files over a 2-D curve -> each file covers ~1/4 of each dimension;
-    # allow generous slack (curve boundaries are jagged)
-    assert sum(za) / len(za) < 0.6 and sum(zb) / len(zb) < 0.6
-    assert spark.read.parquet(zpath).count() == n
-    assert set(spark.read.parquet(zpath).columns) == {"a", "b"}
-
-    # control: single-key range clustering leaves dimension b unbounded
-    cpath = str(tmp_path / "clustered_a")
-    write_clustered(df, cpath, ["a"], num_files=16)
-    cb = per_file_spans(cpath, "b")
-    assert sum(cb) / len(cb) > 0.9  # ~full span of b in every file
-
-
-def test_write_partitioned_prunes_directories(spark, tmp_path):
-    """A filter on the partition column must prune at planning time
-    (PartitionFilters on the scan) and read only the matching directory's
-    rows; directory layout is day=... Hive-style."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.plans.scale import write_partitioned
-    from clickestream_project_bigdata_spark.sources.readers import events_from_fixture
-
-    ev = events_from_fixture(spark, "/root/testdata/sf0.001").withColumn(
-        "day", F.to_date("event_time")
-    )
-    path = str(tmp_path / "parted")
-    write_partitioned(ev, path, ["day"])
-    assert glob.glob(f"{path}/day=*"), "hive-style partition dirs expected"
-
-    back = spark.read.parquet(path)
-    one_day = back.filter(F.col("day") == "2024-01-03")
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "day" in plan, plan
-    # pruned read returns exactly that day's rows
-    want = ev.filter(F.col("day") == "2024-01-03").count()
-    assert want > 0 and one_day.count() == want
-    # compact=True: one file per partition directory (small-files guard)
-    for d in glob.glob(f"{path}/day=*"):
-        assert len(glob.glob(f"{d}/part-*.parquet")) == 1
 
 
 def test_materialize_once_reliable_checkpoint_computes_once(spark, tmp_path):

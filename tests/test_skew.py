@@ -2,12 +2,12 @@
 keys evenly, so every skew guard (window partitioning, `max_bucket_rows`,
 blocked candidate generation) had only been exercised on friendly data.
 This module builds deliberately hostile inputs — ONE visitor owning 20% of
-all events, ONE token in 90% of all documents, HALF of all embeddings
-sharing one LSH bucket — and asserts the guarded operators finish without
-a straggler: no task in any stage of the operator's job group may run
-longer than 10× the stage median (AppStatusStore task durations via py4j;
-stages whose slowest task is under the scheduling-noise floor are skipped
-— a 40 ms vs 4 ms "straggler" is noise, not skew).
+all events, ONE token in 90% of all documents — and asserts the guarded
+operators finish without a straggler: no task in any stage of the
+operator's job group may run longer than 10× the stage median
+(AppStatusStore task durations via py4j; stages whose slowest task is under
+the scheduling-noise floor are skipped — a 40 ms vs 4 ms "straggler" is
+noise, not skew).
 """
 
 from __future__ import annotations
@@ -87,21 +87,6 @@ def skewed_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
 
 
-@pytest.fixture(scope="module")
-def skewed_embeddings(spark):
-    """6k vectors, 16-dim; HALF are the IDENTICAL vector, so one LSH bucket
-    holds 3k rows — the max_bucket_rows guard's worst case."""
-    rng = random.Random(9)
-    hot = [round(rng.uniform(-1, 1), 3) for _ in range(16)]
-    rows = []
-    for i in range(6_000):
-        vec = hot if i % 2 == 0 else [round(rng.uniform(-1, 1), 3) for _ in range(16)]
-        rows.append((i, vec, i % 10))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).repartition(8)
-
-
 def test_sessionize_hub_visitor_no_straggler(spark, skewed_events):
     """The 20%-of-events visitor is ONE window partition; the assertion
     documents that the per-visitor exchange tolerates a 600x-average key
@@ -135,23 +120,6 @@ def test_collocations_hot_token_no_straggler(spark, skewed_docs):
     n = _run_grouped(spark, "skew-colloc", out)
     assert n == 50
     _assert_no_straggler(spark, "skew-colloc")
-
-
-def test_knn_join_hot_bucket_guard_no_straggler(spark, skewed_embeddings):
-    """3k identical vectors land in one band bucket; the max_bucket_rows
-    guard must cap the in-bucket candidate work instead of letting one
-    task do a 3k x 3k pair blowup."""
-    from clickestream_project_bigdata_spark.operators.similarity import knn_join
-
-    out = knn_join(
-        skewed_embeddings,
-        k=3,
-        dim=16,
-        max_bucket_rows=256,
-    )
-    n = _run_grouped(spark, "skew-knn", out)
-    assert n > 1_000  # every vector should still find neighbors
-    _assert_no_straggler(spark, "skew-knn")
 
 
 def test_straggler_harness_sees_tasks(spark, skewed_events):

@@ -330,18 +330,6 @@ def _q_minute_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.minute_anomalies(events_from_fixture(spark, sf_dir))
 
 
-def _q_next_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markov next-item top-3 per item (operators/graph.py)."""
-    from clickestream_project_bigdata_spark.operators.graph import (
-        item_transitions,
-        next_item_recommendations,
-    )
-
-    return next_item_recommendations(
-        item_transitions(events_from_fixture(spark, sf_dir)), k=3
-    )
-
-
 def _q_session_entry_exit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session landing/abandonment item distribution
     (operators/analytics.py:session_entry_exit)."""
@@ -393,27 +381,6 @@ def _q_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.item_cooccurrence(ev, k=100)
 
 
-def _q_item_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item→item browsing-transition counts (operators/graph.py): lead()
-    over the visitorid exchange, then one (src, dst) count."""
-    from clickestream_project_bigdata_spark.operators.graph import item_transitions
-
-    return item_transitions(events_from_fixture(spark, sf_dir))
-
-
-def _q_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank over the transition graph, 10 fixed iterations
-    (operators/graph.py) — the iterative-algorithm family, hash-checkable
-    because ranks round to 10 decimals per iteration on both engines and
-    the oracle unrolls the same 10 iterations as chained CTEs."""
-    from clickestream_project_bigdata_spark.operators.graph import (
-        item_transitions,
-        pagerank,
-    )
-
-    return pagerank(item_transitions(events_from_fixture(spark, sf_dir)))
-
-
 def _q_similar_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate visitors by item-set MinHash (portable hash family
     — the oracle replays shingling/banding/verification bit-for-bit at
@@ -425,20 +392,6 @@ def _q_similar_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.similar_visitors_minhash(
         events_from_fixture(spark, sf_dir), threshold=0.4, hash="portable"
     )
-
-
-def _q_item_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log2-binned degree histogram of the item transition graph
-    (operators/graph.py:item_degree_profile) — the heavy-tail diagnostic
-    behind broadcast/salting decisions in the graph family. Both the
-    Spark plan and the oracle bucket via floor(ln(deg)/ln(2) + 1e-9);
-    the epsilon's cross-engine guarantee holds for deg < 2^30 (see the
-    operator docstring) — degrees here are bounded by the item domain."""
-    from clickestream_project_bigdata_spark.operators.graph import (
-        item_degree_profile,
-    )
-
-    return item_degree_profile(events_from_fixture(spark, sf_dir))
 
 
 def _q_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,7 +414,7 @@ def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
     return wrapped
 
 
-# --- scale extensions: dedup / text / curation / graph -------------------
+# --- scale extensions: dedup / text / curation ---------------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, "documents")
@@ -774,38 +727,11 @@ def _q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.zipf_slope(events_from_fixture(spark, sf_dir))
 
 
-def _q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-item next-item entropy over the transition graph
-    (operators/graph.py), single-pass H = ln N − Σc·ln c / N."""
-    from clickestream_project_bigdata_spark.operators.graph import (
-        transition_entropy,
-    )
-
-    return transition_entropy(events_from_fixture(spark, sf_dir))
-
-
 def _q_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable fixed-bin quantile estimation over event values
     (operators/analytics.py) — the single-pass scale path beside the
     exact percentiles; exact integer bin arithmetic on both engines."""
     return analytics.binned_quantiles(events_from_fixture(spark, sf_dir))
-
-
-def _q_rec_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coverage of the top-3 Markov recommendation table over observed
-    transition volume (operators/graph.py) — the eval-join family."""
-    from clickestream_project_bigdata_spark.operators.graph import rec_coverage
-
-    return rec_coverage(events_from_fixture(spark, sf_dir), k=3)
-
-
-def _q_item_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of the >=2-transition item graph
-    (operators/graph.py), min-label propagation; oracle = recursive-CTE
-    transitive closure."""
-    from clickestream_project_bigdata_spark.operators.graph import item_communities
-
-    return item_communities(events_from_fixture(spark, sf_dir))
 
 
 def _q_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -952,14 +878,6 @@ def _q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source distinctive vocabulary by ppm-scaled smoothed odds
     ratio, top-5 per source (operators/text.py)."""
     return text.distinctive_terms(_docs(spark, sf_dir), k=5, min_count=3)
-
-
-def _q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-ordered triangle census + global transitivity of the item
-    co-browsing graph (operators/graph.py)."""
-    from clickestream_project_bigdata_spark.operators.graph import graph_triangles
-
-    return graph_triangles(events_from_fixture(spark, sf_dir))
 
 
 def _q_neardup_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1111,8 +1029,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # sampling order is imposed by _SAMPLING_PRIORITY below (rule:
         # ever-FAILED > never-sampled > changed-this-round > rest).
         "binned_quantiles": _q_binned_quantiles,
-        "rec_coverage": _q_rec_coverage,
-        "item_communities": _q_item_communities,
         "split_balance": _q_split_balance,
         "cross_source_duplication": _q_cross_source_duplication,
         "quality_dup_calibration": _q_quality_dup_calibration,
@@ -1122,7 +1038,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "source_vocab_overlap": _q_source_vocab_overlap,
         "audience_overlap": _q_audience_overlap,
         "zipf_slope": _q_zipf_slope,
-        "transition_entropy": _q_transition_entropy,
         "mask_duplicate_spans": _q_mask_duplicate_spans,
         "collocations": _q_collocations,
         "type_token_ratio": _q_type_token_ratio,
@@ -1150,16 +1065,12 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "event_type_pivot": _q_event_type_pivot,
         "customer_value_deciles": _q_customer_value_deciles,
         "duplicate_spans": _q_duplicate_spans,
-        "item_transitions": _q_item_transitions,
-        "item_pagerank": _q_item_pagerank,
-        "item_degree_profile": _q_item_degree_profile,
         "similar_visitors": _q_similar_visitors,
         "sequential_funnel": _q_sequential_funnel,
         "item_cooccurrence": _q_item_cooccurrence,
         "retention_cohorts": _q_retention_cohorts,
         "item_dwell_time": _q_item_dwell_time,
         "rfm_segments": _q_rfm_segments,
-        "next_item_recs": _q_next_item_recs,
         "session_entry_exit": _q_session_entry_exit,
         "top_paths": _q_top_paths,
         # --- never driver-sampled before round 6
@@ -1236,7 +1147,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "first_touch_attribution": _q_first_touch_attribution,
         "snapshot_diff": _q_snapshot_diff,
         "distinctive_terms": _q_distinctive_terms,
-        "graph_triangles": _q_graph_triangles,
         "neardup_histogram": _q_neardup_histogram,
         "langid_confusion": _q_langid_confusion,
         # round 8
@@ -1271,16 +1181,10 @@ _SAMPLING_PRIORITY: list[str] = [
     # Post-r15 staleness histogram (last driver-sampled round): r11=5,
     # r12=47, r13=47, r14=50, r15=50 — VERDICT r15 #5: this round drains
     # the r11 remainder so the post-r16 oldest vintage is r12.
-    # 0) plan changed in round 16: graph_triangles probes its bounded
-    #    local-path cap from the MATERIALIZED edge frame (one edge-pipeline
-    #    pass instead of probe + checkpoint recompute). Results are
-    #    construction-identical (same edges, same census) but the action
-    #    sequence is new — it leads the sample.
-    "graph_triangles",
     # 1) r11-vintage remainder (alphabetical) — both
     "value_quantiles_by_event",
     "zipf_slope",
-    # 2) r12-vintage (alphabetical; graph_triangles already leads) — the
+    # 2) r12-vintage (alphabetical) — the
     #    next-oldest cohort fills the ~50-row sample; the tail rolls to
     #    the next round
     "bpe_merge_step",
@@ -1301,19 +1205,13 @@ _SAMPLING_PRIORITY: list[str] = [
     "first_touch_funnel",
     "gini_concentration",
     "gopher_quality_flags",
-    "item_communities",
     "item_cooccurrence",
-    "item_degree_profile",
     "item_dwell_time",
-    "item_pagerank",
-    "item_transitions",
     "langid_confusion",
     "neardup_histogram",
-    "next_item_recs",
     "packed_corpus",
     "quality_dup_calibration",
     "readability_scores",
-    "rec_coverage",
     "repetition_score",
     "session_entry_exit",
     "similar_docs_topk",
@@ -1321,7 +1219,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "tfidf_top_terms",
     "timed_funnel",
     "token_length_distribution",
-    "transition_entropy",
 ]
 
 
@@ -1593,47 +1490,6 @@ def _lang_id_sql() -> str:
     )
 
 
-def _pagerank_oracle_sql(iterations: int = 10, d: float = 0.85) -> str:
-    """The PageRank oracle: the SAME 10 iterations the Spark operator runs,
-    unrolled as chained CTEs (recursive CTEs can't re-aggregate per step
-    portably). Per-iteration round(_, 10) on both engines is what makes an
-    iterative float algorithm value-hash-checkable.
-
-    Every multiply-referenced CTE is AS MATERIALIZED: DuckDB inlines CTEs
-    by default, and each rank step references its predecessor three times
-    (dangling + contribution + carry), so inlining re-evaluates r0 3^10
-    times — the un-materialized form effectively hangs."""
-    sql = (
-        "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-        "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-        "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-        "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-        "FROM ev WHERE itemid IS NOT NULL), "
-        "e AS MATERIALIZED (SELECT src AS s, dst AS dd, CAST(COUNT(*) AS DOUBLE) AS w "
-        "FROM p WHERE dst IS NOT NULL GROUP BY 1, 2), "
-        "outd AS (SELECT s, SUM(w) AS o FROM e GROUP BY 1), "
-        "norm AS MATERIALIZED (SELECT e.s, e.dd, e.w / outd.o AS pr FROM e JOIN outd ON e.s = outd.s), "
-        "nodes AS MATERIALIZED (SELECT DISTINCT node FROM (SELECT s AS node FROM e "
-        "UNION SELECT dd FROM e) u), "
-        "cnt AS MATERIALIZED (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes), "
-        "srcs AS MATERIALIZED (SELECT DISTINCT s AS node FROM norm), "
-        "r0 AS MATERIALIZED (SELECT node, 1.0 / (SELECT n FROM cnt) AS rank FROM nodes)"
-    )
-    for t in range(iterations):
-        prev, cur = f"r{t}", f"r{t + 1}"
-        sql += (
-            f", dang{t} AS MATERIALIZED (SELECT COALESCE(SUM(rank), 0) AS m FROM {prev} "
-            f"WHERE node NOT IN (SELECT node FROM srcs))"
-            f", c{t} AS MATERIALIZED (SELECT norm.dd AS node, SUM({prev}.rank * norm.pr) AS c "
-            f"FROM norm JOIN {prev} ON norm.s = {prev}.node GROUP BY 1)"
-            f", {cur} AS MATERIALIZED (SELECT nodes.node, round((1 - {d}) / cnt.n + {d} * "
-            f"(COALESCE(c{t}.c, 0) + dang{t}.m / cnt.n), 10) AS rank "
-            f"FROM nodes CROSS JOIN cnt CROSS JOIN dang{t} "
-            f"LEFT JOIN c{t} ON nodes.node = c{t}.node)"
-        )
-    return sql + f" SELECT node, rank FROM r{iterations}"
-
-
 def oracle_sql() -> dict[str, str]:
     return {
         "binned_quantiles": (
@@ -1650,37 +1506,6 @@ def oracle_sql() -> dict[str, str]:
             "round(MIN(CASE WHEN cum >= ceil(CAST(0.99 AS DOUBLE) * n_values) THEN bin END) "
             "* CAST(0.5 AS DOUBLE), 6) AS q99_lo "
             "FROM cw CROSS JOIN t GROUP BY n_values"
-        ),
-        "rec_coverage": (
-            "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL), "
-            "t AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n_transitions "
-            "FROM p WHERE dst IS NOT NULL GROUP BY 1, 2), "
-            "r AS (SELECT src, dst, row_number() OVER (PARTITION BY src "
-            "ORDER BY n_transitions DESC, dst ASC) AS rk FROM t), "
-            "s AS (SELECT CAST(SUM(n_transitions) AS BIGINT) AS n_transitions, "
-            "CAST(SUM(CASE WHEN EXISTS (SELECT 1 FROM r WHERE r.src = t.src "
-            "AND r.dst = t.dst AND r.rk <= 3) THEN n_transitions ELSE 0 END) AS BIGINT) AS n_covered "
-            "FROM t) "
-            "SELECT n_transitions, COALESCE(n_covered, 0) AS n_covered, "
-            "round(COALESCE(n_covered, 0) / CAST(n_transitions AS DOUBLE), 6) AS coverage "
-            "FROM s WHERE n_transitions IS NOT NULL"
-        ),
-        "item_communities": (
-            "WITH RECURSIVE ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL), "
-            "t AS (SELECT src, dst, COUNT(*) AS c FROM p WHERE dst IS NOT NULL GROUP BY 1, 2), "
-            "pr AS (SELECT src, dst FROM t WHERE c >= 2 AND src <> dst), "
-            "edges AS (SELECT src AS s, dst AS d FROM pr UNION SELECT dst, src FROM pr), "
-            "reach(id, r) AS (SELECT s, s FROM edges "
-            "UNION SELECT e.s, rr.r FROM edges e JOIN reach rr ON rr.id = e.d) "
-            "SELECT id AS itemid, MIN(r) AS community_id FROM reach GROUP BY id"
         ),
         "split_balance": (
             "WITH h AS (SELECT doc_id, source, "
@@ -1802,21 +1627,6 @@ def oracle_sql() -> dict[str, str]:
             "round(regr_slope(y, x), 6) + 0.0 AS slope, "
             "round(regr_intercept(y, x), 6) + 0.0 AS intercept, "
             "round(regr_r2(y, x), 6) + 0.0 AS r2 FROM r"
-        ),
-        "transition_entropy": (
-            "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL), "
-            "t AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS c FROM p "
-            "WHERE dst IS NOT NULL GROUP BY 1, 2), "
-            "g AS (SELECT src, CAST(SUM(c) AS BIGINT) AS n_out, "
-            "CAST(COUNT(*) AS BIGINT) AS n_dst, "
-            "SUM(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS snlogn FROM t GROUP BY src) "
-            "SELECT src, n_out, n_dst, "
-            "round(ln(CAST(n_out AS DOUBLE)) - snlogn / CAST(n_out AS DOUBLE), 6) + 0.0 AS entropy "
-            "FROM g ORDER BY n_out DESC, src ASC LIMIT 100"
         ),
         "sessions": (
             f"WITH {_SESSIONIZED} "
@@ -2200,19 +2010,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM pmd JOIN ds ON day = dday) "
             "SELECT minute, events_count, zscore, abs(zscore) > 2.0 AS is_anomaly FROM j"
         ),
-        "next_item_recs": (
-            "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL), "
-            "t AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n_transitions "
-            "FROM p WHERE dst IS NOT NULL GROUP BY 1, 2), "
-            "r AS (SELECT src AS itemid, dst AS recommended_itemid, n_transitions, "
-            "CAST(row_number() OVER (PARTITION BY src "
-            "ORDER BY n_transitions DESC, dst ASC) AS INT) AS rec_rank FROM t) "
-            "SELECT * FROM r WHERE rec_rank <= 3"
-        ),
         "session_entry_exit": (
             "WITH ev2 AS (SELECT user_id AS visitorid, event_type AS event, "
             "ts AS event_time, event_id, "
@@ -2322,38 +2119,7 @@ def oracle_sql() -> dict[str, str]:
             "FROM pairs GROUP BY 1, 2 "
             "ORDER BY n_sessions DESC, item_a ASC, item_b ASC LIMIT 100"
         ),
-        "item_transitions": (
-            "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL) "
-            "SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n_transitions "
-            "FROM p WHERE dst IS NOT NULL GROUP BY 1, 2"
-        ),
-        "item_pagerank": _pagerank_oracle_sql(),
         "similar_visitors": _visitor_minhash_sql(0.4),
-        "item_degree_profile": (
-            "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL), "
-            "e AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS n FROM p "
-            "WHERE dst IS NOT NULL GROUP BY 1, 2), "
-            "od AS (SELECT src AS item, CAST(COUNT(*) AS BIGINT) AS out_d, "
-            "CAST(SUM(n) AS BIGINT) AS out_s FROM e GROUP BY 1), "
-            "ind AS (SELECT dst AS item, CAST(COUNT(*) AS BIGINT) AS in_d, "
-            "CAST(SUM(n) AS BIGINT) AS in_s FROM e GROUP BY 1), "
-            "d AS (SELECT COALESCE(out_d, 0) + COALESCE(in_d, 0) AS deg, "
-            "COALESCE(out_s, 0) + COALESCE(in_s, 0) AS str "
-            "FROM od FULL OUTER JOIN ind ON od.item = ind.item) "
-            "SELECT CAST(FLOOR(ln(CAST(deg AS DOUBLE)) / ln(2.0) + 1e-9) AS INT) "
-            "AS degree_bucket, CAST(COUNT(*) AS BIGINT) AS n_items, "
-            "MIN(deg) AS min_degree, MAX(deg) AS max_degree, "
-            "CAST(SUM(str) AS BIGINT) AS incident_transitions "
-            "FROM d GROUP BY 1 ORDER BY 1"
-        ),
         "event_type_pivot": (
             f"WITH {_EV} "
             "SELECT date_trunc('minute', event_time) AS minute, "
@@ -2962,27 +2728,6 @@ def oracle_sql() -> dict[str, str]:
             "ORDER BY odds_ppm DESC, term ASC) AS INT) AS rank FROM sc) "
             "SELECT source, term, n_source, n_rest, odds_ppm, rank FROM r "
             "WHERE rank <= 5 ORDER BY source ASC, rank ASC"
-        ),
-        "graph_triangles": (
-            "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "
-            "CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
-            "p AS (SELECT visitorid, itemid AS src, LEAD(itemid) OVER "
-            "(PARTITION BY visitorid ORDER BY event_time, event_id) AS dst "
-            "FROM ev WHERE itemid IS NOT NULL), "
-            "t AS (SELECT src, dst, COUNT(*) AS c FROM p WHERE dst IS NOT NULL GROUP BY 1, 2), "
-            "pr AS (SELECT src, dst FROM t WHERE c >= 2 AND src <> dst), "
-            "e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM pr), "
-            "deg AS (SELECT n, COUNT(*) AS d FROM "
-            "(SELECT a AS n FROM e UNION ALL SELECT b FROM e) GROUP BY n), "
-            "tri AS (SELECT COUNT(*) AS n_triangles FROM e e1 "
-            "JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b "
-            "JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b), "
-            "st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes, "
-            "CAST(SUM(d * (d - 1)) / 2 AS BIGINT) AS n_wedges FROM deg), "
-            "ec AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM e) "
-            "SELECT n_nodes, n_edges, CAST(n_triangles AS BIGINT) AS n_triangles, "
-            "n_wedges, round(3.0 * n_triangles / CAST(n_wedges AS DOUBLE), 6) "
-            "AS transitivity FROM st CROSS JOIN ec CROSS JOIN tri"
         ),
         "neardup_histogram": (
             f"WITH {_minhash_cte()}, "

@@ -759,14 +759,13 @@ def similar_visitors_minhash(
 
 def duplicate_clusters(
     pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
     max_iterations: int = 20,
     checkpoint_interval: int = 3,
     max_edges_local: int = 100_000,
 ) -> DataFrame:
-    """Connected components over a near-duplicate pair graph → duplicate
-    clusters: (doc_id, cluster_id = minimum id reachable).
+    """Connected components over a near-duplicate ``(doc_a, doc_b)`` pair
+    graph → duplicate clusters: (doc_id, cluster_id = minimum id
+    reachable).
 
     Distributed iterative min-label propagation (the large-star/small-star
     idea in its simplest form): each round joins every node's current label
@@ -794,8 +793,8 @@ def duplicate_clusters(
     for genuinely large graphs; results are identical by construction.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

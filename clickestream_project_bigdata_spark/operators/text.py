@@ -701,8 +701,8 @@ def char_entropy(
     (id_col, n_chars, n_distinct_chars, char_entropy); empty/NULL docs
     have no characters and drop out (both engines agree).
 
-    Same single-pass identity as ``graph.transition_entropy``:
-    H = ln N − (Σ c·ln c)/N over per-(doc, char) counts — but the result
+    Entropy via the single-pass identity
+    H = ln N − (Σ c·ln c)/N over per-(doc, char) counts. The result
     is DOC-GRAIN, so no shuffle is needed at all: an Arrow ``mapInPandas``
     pass builds every doc's character histogram in one vectorized numpy
     sweep per batch (codepoints via ``utf-32-le``, per-(doc, codepoint)

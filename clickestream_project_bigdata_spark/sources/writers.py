@@ -62,29 +62,3 @@ def write_kafka_stream(
         .start()
     )
 
-
-def compact_parquet(
-    spark,
-    src_path: str,
-    dst_path: str,
-    target_rows_per_file: int = 1_000_000,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(rows / target_rows_per_file)`` files at ``dst_path`` and return
-    the new file count.
-
-    The operational pass every long-running ingest needs — streaming sinks
-    and fine-grained partitions accrete thousands of small files, and scan
-    throughput at 100 TB is gated on file count (driver listing, task
-    scheduling, row-group overhead). Writes to a NEW directory and leaves
-    the source untouched: swap atomically (rename / metastore repoint) and
-    delete the old directory only after readers drain. The repartition is a
-    round-robin exchange — no key, no skew; size target_rows_per_file so
-    files land near the 128-512 MB sweet spot for your row width.
-    """
-    import math
-
-    df = spark.read.parquet(src_path)
-    n_files = max(1, math.ceil(df.count() / target_rows_per_file))
-    df.repartition(n_files).write.mode("overwrite").parquet(dst_path)
-    return n_files

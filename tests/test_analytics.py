@@ -578,21 +578,6 @@ def test_top_paths_counts_and_order(spark, make_events):
     ]
 
 
-def test_next_item_recommendations_rank(spark):
-    from clickestream_project_bigdata_spark.operators.graph import (
-        next_item_recommendations,
-    )
-
-    t = spark.createDataFrame(
-        [(1, 2, 5), (1, 3, 5), (1, 4, 9), (2, 1, 1)],
-        "src long, dst long, n_transitions long",
-    )
-    got = [(r.itemid, r.recommended_itemid, r.rec_rank)
-           for r in next_item_recommendations(t, k=2).orderBy("itemid", "rec_rank").collect()]
-    # src 1: dst 4 (count 9) first, then tie 2 vs 3 -> lower dst wins
-    assert got == [(1, 4, 1), (1, 2, 2), (2, 1, 1)]
-
-
 def test_minute_anomalies_exact_stats(spark, make_events):
     """One day with a 100-event spike minute among 1-event minutes: only the
     spike is flagged, z matches the exact-integer formula; a single-minute

@@ -6,7 +6,6 @@ production pipeline needs when a partition, day, or filter comes up empty.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture()
@@ -154,14 +153,10 @@ def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs)
     aggregate row where the operator is a global aggregate) — never an
     error."""
     from clickestream_project_bigdata_spark.operators import analytics, text
-    from clickestream_project_bigdata_spark.operators.graph import (
-        transition_entropy,
-    )
 
     assert analytics.audience_overlap(empty_events).count() == 0
     assert analytics.burstiness(empty_events).count() == 0
     assert analytics.novelty_rate(empty_events).count() == 0
-    assert transition_entropy(empty_events).count() == 0
     assert text.source_vocab_overlap(empty_docs).count() == 0
 
     # global aggregates return their one row with NULL metrics

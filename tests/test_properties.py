@@ -578,32 +578,6 @@ def test_zipf_slope_equals_naive_per_item_fit(spark, counts):
         assert abs(got.r2 - round(cov * cov / (varx * vary), 6)) <= 1e-6
 
 
-_entropy_rows = st.lists(st.integers(1, 5), min_size=2, max_size=25)
-
-
-@settings(max_examples=10, deadline=None)
-@given(path=_entropy_rows)
-def test_transition_entropy_bounds(spark, path):
-    """0 ≤ entropy ≤ ln(n_dst) for every src; n_out sums the edge counts
-    of a single-visitor browsing path."""
-    import math
-
-    from clickestream_project_bigdata_spark.operators.graph import transition_entropy
-
-    rows = [
-        (1, "view", dt.datetime(2024, 1, 1, 0, i // 60, i % 60), item)
-        for i, item in enumerate(path)
-    ]
-    ev = spark.createDataFrame(
-        rows, "visitorid long, event string, event_time timestamp, itemid long"
-    ).withColumn("event_id", F.monotonically_increasing_id())
-    out = transition_entropy(ev.select("visitorid", "event_time", "event_id", "itemid")).collect()
-    total = sum(r.n_out for r in out)
-    assert total == len(path) - 1
-    for r in out:
-        assert 0.0 <= r.entropy <= round(math.log(r.n_dst), 6) + 1e-9
-
-
 @settings(max_examples=10, deadline=None)
 @given(counts=st.lists(st.integers(1, 30), min_size=1, max_size=15))
 def test_gini_concentration_matches_brute_force(spark, counts):

@@ -10,10 +10,6 @@ from clickestream_project_bigdata_spark.operators.sessionize import (
 )
 
 
-def rows_by(df, *cols):
-    return {tuple(r[c] for c in cols[:-1]): r[cols[-1]] for r in df.collect()}
-
-
 def test_gap_exactly_1800s_is_one_session(make_events):
     df = make_events(
         [

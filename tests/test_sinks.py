@@ -101,25 +101,6 @@ def test_run_all_analyses_into_idempotent_jdbc(spark, make_events, derby_url):
     assert second == first
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from clickestream_project_bigdata_spark.sources.readers import events_from_fixture
-    from clickestream_project_bigdata_spark.sources.writers import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    ev = events_from_fixture(spark, "/root/testdata/sf0.001")
-    ev.repartition(64).write.parquet(src)  # simulate small-file accretion
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-    n = compact_parquet(spark, src, dst, target_rows_per_file=5_000)
-    files = glob.glob(f"{dst}/part-*.parquet")
-    assert len(files) == n <= 3
-    before = sorted(map(tuple, ev.collect()))
-    after = sorted(map(tuple, spark.read.parquet(dst).collect()))
-    assert before == after
-
-
 def test_orc_roundtrip(spark, tmp_path):
     """ORC source/sink coverage: schema and values survive a roundtrip
     (Spark's built-in ORC datasource — second columnar format beside

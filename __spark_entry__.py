@@ -29,7 +29,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from clickestream_project_bigdata_spark.functions import portable  # noqa: E402
 from clickestream_project_bigdata_spark.operators import (  # noqa: E402
     analytics,
-    curation,
     dedup,
     text,
 )
@@ -414,7 +413,7 @@ def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
     return wrapped
 
 
-# --- scale extensions: dedup / text / curation ---------------------------
+# --- scale extensions: dedup / text ---------------------------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, "documents")
@@ -471,41 +470,12 @@ def _q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_method_agreement(_docs(spark, sf_dir), threshold=0.7, hash="portable")
 
 
-def _q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-pack fill/spill diagnostic over the 512-token packing plan
-    (operators/curation.py:pack_efficiency)."""
-    return curation.pack_efficiency(
-        curation.pack_sequences(_docs(spark, sf_dir), budget=512), budget=512
-    )
-
-
 def _q_rare_bigram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KenLM-lite fluency proxy: per-doc rare-corpus-bigram fraction
     (operators/text.py:rare_bigram_rate)."""
     from clickestream_project_bigdata_spark.operators.text import rare_bigram_rate
 
     return rare_bigram_rate(_docs(spark, sf_dir), rare_below=3)
-
-
-def _q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic corpus shuffle into 64 shards
-    (operators/curation.py:shuffle_shards)."""
-    from clickestream_project_bigdata_spark.operators.curation import shuffle_shards
-
-    return shuffle_shards(_docs(spark, sf_dir), n_shards=64)
-
-
-def _q_select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-ordered token-budget cut at 10k tokens: text_stats scoring
-    composed into the shared distributed prefix sum
-    (operators/curation.py:select_token_budget)."""
-    from clickestream_project_bigdata_spark.operators.curation import (
-        select_token_budget,
-    )
-    from clickestream_project_bigdata_spark.operators.text import text_stats
-
-    scored = text_stats(_docs(spark, sf_dir))
-    return select_token_budget(scored, token_budget=10_000)
 
 
 def _q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -598,22 +568,10 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicate_clusters(pairs)
 
 
-def _q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.corpus_stats(_docs(spark, sf_dir))
-
-
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window token chunking (operators/text.py:chunk_documents):
     64-token chunks, 16-token overlap — zero-shuffle posexplode+slice."""
     return text.chunk_documents(_docs(spark, sf_dir), max_tokens=64, overlap=16)
-
-
-def _q_split_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash split (operators/curation.py:split_corpus):
-    train/val/test = 0.9/0.05/0.05, disjoint+complete by construction."""
-    return curation.split_corpus(
-        _docs(spark, sf_dir), fractions={"train": 0.9, "val": 0.05, "test": 0.05}
-    ).select("doc_id", "lang", "source", "split")
 
 
 def _q_dup_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,85 +587,6 @@ def _q_item_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hottest items with row share (operators/analytics.py:key_skew_profile)."""
     return analytics.key_skew_profile(
         events_from_fixture(spark, sf_dir), key="itemid", k=10
-    )
-
-
-def _q_stratified_fixed_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-k per-stratum deterministic draw (operators/curation.py)."""
-    return curation.stratified_fixed_k(
-        _docs(spark, sf_dir), k=20, by=("lang",)
-    ).select("doc_id", "lang", "source", "sample_rank")
-
-
-def _q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature mixture sampling (operators/curation.py): α=0.5 rate
-    ∝ n_lang^-0.5 scaled to an expected half of the corpus — deterministic
-    hash membership, oracle-replayable."""
-    return curation.temperature_sample(
-        _docs(spark, sf_dir), alpha=0.5, fraction=0.5, by=("lang",)
-    ).select("doc_id", "lang", "source")
-
-
-def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark n-gram decontamination report (operators/curation.py):
-    the deterministic 20 % hash sample stands in as the eval set, so the
-    oracle can replay the membership; sampled docs match themselves and
-    their duplicates."""
-    docs = _docs(spark, sf_dir)
-    bench = curation.stratified_sample(docs, fraction=0.2)
-    return curation.decontaminate(docs, bench, n=5)
-
-
-def _q_decontaminate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontamination APPLY form: the corpus minus contaminated docs
-    (operators/curation.py:decontaminate_apply); same fixture eval set as
-    the report query."""
-    docs = _docs(spark, sf_dir)
-    bench = curation.stratified_sample(docs, fraction=0.2)
-    return curation.decontaminate_apply(docs, bench, n=5).select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-
-
-def _q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus EDA aggregation (operators/curation.py:corpus_profile)."""
-    return curation.corpus_profile(_docs(spark, sf_dir))
-
-
-def _q_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 20 % hash sample — same docs kept on every run and
-    every cluster layout (portable hash → oracle replays the membership)."""
-    return curation.stratified_sample(_docs(spark, sf_dir), fraction=0.2).select(
-        "doc_id", "lang", "source"
-    )
-
-
-def _q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.redact_pii(_docs(spark, sf_dir))
-
-
-def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return curation.pack_sequences(_docs(spark, sf_dir), budget=512)
-
-
-def _q_packed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized fixed-budget packs (operators/curation.py:
-    pack_corpus_text) — one row per pack, member text concatenated in id
-    order."""
-    return curation.pack_corpus_text(_docs(spark, sf_dir), budget=512)
-
-
-def _q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship composition: the END-TO-END curation pipeline (quality
-    filter → exact dedup → MinHash near-dup clustering → PII redaction →
-    sequence packing) in one operator call, oracle-replayed end-to-end via
-    the portable hash family."""
-    return curation.curate_corpus(
-        _docs(spark, sf_dir),
-        min_quality=0.3,
-        near_dup_threshold=0.9,
-        budget=512,
-        hash="portable",
     )
 
 
@@ -734,14 +613,6 @@ def _q_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.binned_quantiles(events_from_fixture(spark, sf_dir))
 
 
-def _q_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square contingency QA of the 0.9/0.05/0.05 hash split against
-    the source strata (operators/curation.py)."""
-    return curation.split_balance(
-        _docs(spark, sf_dir), fractions={"train": 0.9, "val": 0.05, "test": 0.05}
-    )
-
-
 def _q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cross-source content overlap (operators/dedup.py) at
     SPAN grain (8-token window digests — shared boilerplate shows up long
@@ -749,12 +620,6 @@ def _q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cross_source_duplication(
         _docs(spark, sf_dir), grain="span", span_tokens=8
     )
-
-
-def _q_quality_dup_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-bin vs exact-duplication calibration (operators/curation.py):
-    one window exchange on the fingerprint, ≤ bins output rows."""
-    return curation.quality_dup_calibration(_docs(spark, sf_dir))
 
 
 def _q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,12 +698,6 @@ def _q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.tokenizer_fertility(_docs(spark, sf_dir))
 
 
-def _q_domain_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-flattened per-source resampling weights over token
-    counts, alpha=0.5 (operators/curation.py)."""
-    return curation.domain_balance_weights(_docs(spark, sf_dir), alpha=0.5)
-
-
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-visitor first-touch ordered funnel view->click->purchase
     (operators/analytics.py)."""
@@ -857,21 +716,6 @@ def _q_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch credit attribution: whole credit to the earliest
     in-horizon touch, exact integer counts (operators/analytics.py)."""
     return analytics.first_touch_attribution(events_from_fixture(spark, sf_dir))
-
-
-def _q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-to-crawl diff QA on two deterministic synthetic snapshots of
-    the documents table: old drops doc_id%10==0, new drops doc_id%11==0
-    and rewrites text for doc_id%7==0 (operators/curation.py)."""
-    docs = _docs(spark, sf_dir)
-    old = docs.filter(F.col("doc_id") % 10 != 0)
-    new = docs.filter(F.col("doc_id") % 11 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" v2"))
-        ).otherwise(F.col("text")),
-    )
-    return curation.snapshot_diff(old, new)
 
 
 def _q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,12 +766,6 @@ def _q_token_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.token_coverage_topk(_docs(spark, sf_dir))
 
 
-def _q_pii_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source PII exposure rollup on the redact_pii chain
-    (operators/curation.py)."""
-    return curation.pii_rate_by_source(_docs(spark, sf_dir))
-
-
 def _q_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token volume before/after global keep-first exact dedup
     (operators/dedup.py)."""
@@ -953,15 +791,6 @@ def _q_path_conversion_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_returning_visitor_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Visitors active on 2+ distinct days (operators/analytics.py)."""
     return analytics.returning_visitor_rate(events_from_fixture(spark, sf_dir))
-
-
-def _q_contamination_by_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-split benchmark-contamination rate: decontaminate composed with
-    the pure-hash split assignment (operators/curation.py); same 20%
-    hash-sample eval set as the decontaminate query."""
-    docs = _docs(spark, sf_dir)
-    bench = curation.stratified_sample(docs, fraction=0.2)
-    return curation.contamination_by_split(docs, bench, n=5)
 
 
 def _q_heavy_hitter_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1029,9 +858,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # sampling order is imposed by _SAMPLING_PRIORITY below (rule:
         # ever-FAILED > never-sampled > changed-this-round > rest).
         "binned_quantiles": _q_binned_quantiles,
-        "split_balance": _q_split_balance,
         "cross_source_duplication": _q_cross_source_duplication,
-        "quality_dup_calibration": _q_quality_dup_calibration,
         "gini_concentration": _q_gini_concentration,
         "burstiness": _q_burstiness,
         "novelty_rate": _q_novelty_rate,
@@ -1041,10 +868,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "mask_duplicate_spans": _q_mask_duplicate_spans,
         "collocations": _q_collocations,
         "type_token_ratio": _q_type_token_ratio,
-        "select_token_budget": _q_select_token_budget,
-        "shuffle_shards": _q_shuffle_shards,
         "rare_bigram_rate": _q_rare_bigram_rate,
-        "pack_efficiency": _q_pack_efficiency,
         "dedup_agreement": _q_dedup_agreement,
         "incremental_dedup": _q_incremental_dedup,
         "item_trend": _q_item_trend,
@@ -1078,7 +902,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "similar_docs_topk": _q_similar_docs,
         "repetition_score": _q_repetition_score,
         "dedup_apply": _q_dedup_apply,
-        "packed_corpus": _q_packed_corpus,
         # changed this round (grouping_id added) - re-verify
         "events_cube": _q_events_cube,
         # last driver-sampled in rounds 1-4
@@ -1092,11 +915,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "dedup_minhash_lsh": _q_dedup_minhash,
         "dedup_simhash": _q_dedup_simhash,
         "dedup_clusters": _q_dedup_clusters,
-        "corpus_stats": _q_corpus_stats,
-        "corpus_sample": _q_corpus_sample,
-        "redact_pii": _q_redact_pii,
-        "pack_sequences": _q_pack_sequences,
-        "curate_corpus": _q_curate_corpus,
         # driver-verified green in round 5
         "sessions": _q_sessions,
         "session_length_quantiles": _q_session_length_quantiles,
@@ -1122,14 +940,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "windowed_top_items": _q_windowed_top_items,
         "windowed_bounce_rate": _q_windowed_bounce_rate,
         "windowed_funnel": _q_windowed_funnel,
-        "decontaminate": _q_decontaminate,
-        "decontaminate_apply": _q_decontaminate_apply,
-        "corpus_profile": _q_corpus_profile,
         "chunk_documents": _q_chunk_documents,
-        "temperature_sample": _q_temperature_sample,
-        "stratified_fixed_k": _q_stratified_fixed_k,
         "dup_histogram": _q_dup_histogram,
-        "split_corpus": _q_split_corpus,
         "item_skew_profile": _q_item_skew_profile,
         "active_users_approx": _q_active_users_approx,
         "cleanse_events": _q_cleanse,
@@ -1141,11 +953,9 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "gopher_quality_flags": _q_gopher_quality_flags,
         "vocab_growth": _q_vocab_growth,
         "tokenizer_fertility": _q_tokenizer_fertility,
-        "domain_balance_weights": _q_domain_balance_weights,
         "first_touch_funnel": _q_first_touch_funnel,
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
-        "snapshot_diff": _q_snapshot_diff,
         "distinctive_terms": _q_distinctive_terms,
         "neardup_histogram": _q_neardup_histogram,
         "langid_confusion": _q_langid_confusion,
@@ -1155,12 +965,10 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "repeat_purchase_rate": _q_repeat_purchase_rate,
         "skipgram_pmi": _q_skipgram_pmi,
         "token_coverage_topk": _q_token_coverage_topk,
-        "pii_rate_by_source": _q_pii_rate_by_source,
         "dedup_token_savings": _q_dedup_token_savings,
         "heavy_hitter_items": _q_heavy_hitter_items,
         "heavy_hitter_tokens": _q_heavy_hitter_tokens,
         "neardup_cluster_sizes": _q_neardup_cluster_sizes,
-        "contamination_by_split": _q_contamination_by_split,
         "path_conversion_rates": _q_path_conversion_rates,
         "returning_visitor_rate": _q_returning_visitor_rate,
         "lsh_band_census": _q_lsh_band_census,
@@ -1190,14 +998,11 @@ _SAMPLING_PRIORITY: list[str] = [
     "bpe_merge_step",
     "cart_abandonment",
     "collocations",
-    "contamination_by_split",
-    "corpus_stats",
     "cross_source_duplication",
     "customer_value_deciles",
     "decile_revenue_share",
     "dedup_token_savings",
     "distinctive_terms",
-    "domain_balance_weights",
     "dup_rate_by_source",
     "duplicate_spans",
     "event_type_pivot",
@@ -1209,8 +1014,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "item_dwell_time",
     "langid_confusion",
     "neardup_histogram",
-    "packed_corpus",
-    "quality_dup_calibration",
     "readability_scores",
     "repetition_score",
     "session_entry_exit",
@@ -1357,63 +1160,6 @@ def _clusters_sql(threshold: float = 0.9, wrap: str | None = None) -> str:
     return f"{base}, cl AS ({final}) {wrap}"
 
 
-def _redact_chain_sql(src: str) -> str:
-    """CTE chain s1→s3 over ``src``: progressive email/SSN/phone redaction
-    with per-kind counts (mirror of curation.redact_pii)."""
-    email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-    ssn = "\\d{3}-\\d{2}-\\d{4}"
-    phone = "\\+?\\d{3}[-. ]\\d{3}[-. ]\\d{4}"
-    return (
-        f"s1 AS (SELECT doc_id, "
-        f"CAST(len(regexp_extract_all(text, '{email}')) AS INT) AS n_email, "
-        f"regexp_replace(text, '{email}', '<email>', 'g') AS t1 FROM {src}), "
-        "s2 AS (SELECT doc_id, n_email, "
-        f"CAST(len(regexp_extract_all(t1, '{ssn}')) AS INT) AS n_ssn, "
-        f"regexp_replace(t1, '{ssn}', '<ssn>', 'g') AS t2 FROM s1), "
-        "s3 AS (SELECT doc_id, n_email, n_ssn, "
-        f"CAST(len(regexp_extract_all(t2, '{phone}')) AS INT) AS n_phone, "
-        f"regexp_replace(t2, '{phone}', '<phone>', 'g') AS t3 FROM s2)"
-    )
-
-
-def _curate_corpus_sql(
-    min_quality: float = 0.3, threshold: float = 0.9, budget: int = 512
-) -> str:
-    """The whole curation pipeline, composed from the same CTE builders the
-    per-stage oracles use — one declarative replay of the five stages."""
-    return (
-        "WITH RECURSIVE "
-        f"t0 AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents), "
-        "q0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS token_count, "
-        "CAST(length(text) AS BIGINT) AS char_count, "
-        f"CAST(len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, x))) AS BIGINT) AS stopword_count, "
-        "length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_count FROM t0), "
-        "qual AS (SELECT doc_id, round(0.5 * least(CAST(token_count AS DOUBLE) / 50, 1.0) "
-        "+ 0.3 * (1.0 - CAST(stopword_count AS DOUBLE) / token_count) "
-        "+ 0.2 * (1.0 - CAST(punct_count AS DOUBLE) / char_count), 6) AS quality_score FROM q0), "
-        "kept1 AS (SELECT d.* FROM documents d WHERE d.doc_id IN "
-        f"(SELECT doc_id FROM qual WHERE quality_score >= {min_quality})), "
-        "kept2 AS (SELECT * FROM kept1 WHERE doc_id IN "
-        f"(SELECT MIN(doc_id) FROM kept1 GROUP BY md5({_NORM_TEXT_SQL}))), "
-        f"{_minhash_cte(src='kept2')}, "
-        f"pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= {threshold}), "
-        "edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs "
-        "UNION SELECT doc_b, doc_a FROM pairs), "
-        "reach(id, r) AS (SELECT s, s FROM edges "
-        "UNION SELECT e.s, rr.r FROM edges e JOIN reach rr ON rr.id = e.d), "
-        "losers AS (SELECT id AS doc_id FROM reach GROUP BY id HAVING MIN(r) <> id), "
-        "kept3 AS (SELECT * FROM kept2 WHERE doc_id NOT IN (SELECT doc_id FROM losers)), "
-        f"{_redact_chain_sql('kept3')}, "
-        "red AS (SELECT doc_id, t3 AS text FROM s3), "
-        "tok AS (SELECT doc_id, "
-        f"CAST(len({_TOKS_SQL}) AS BIGINT) AS token_count, text FROM red), "
-        "runr AS (SELECT doc_id, token_count, text, "
-        "CAST(SUM(token_count) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM tok) "
-        "SELECT doc_id, token_count, cum - token_count AS start_offset, "
-        f"(cum - token_count) // {budget} AS pack_id, text FROM runr"
-    )
-
-
 def _simhash_sql(max_hamming: int = 8, bits: int = 60) -> str:
     cb = bits // 4
     mask = (1 << cb) - 1
@@ -1507,23 +1253,6 @@ def oracle_sql() -> dict[str, str]:
             "* CAST(0.5 AS DOUBLE), 6) AS q99_lo "
             "FROM cw CROSS JOIN t GROUP BY n_values"
         ),
-        "split_balance": (
-            "WITH h AS (SELECT doc_id, source, "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 AS hv FROM documents), "
-            "sp AS (SELECT source, CASE WHEN hv < 900000 THEN 'train' "
-            "WHEN hv < 950000 THEN 'val' ELSE 'test' END AS split FROM h), "
-            "cell AS (SELECT split, source, COUNT(*) AS n FROM sp GROUP BY 1, 2), "
-            "r AS (SELECT split, SUM(n) AS rt FROM cell GROUP BY split), "
-            "c AS (SELECT source, SUM(n) AS ct FROM cell GROUP BY source), "
-            "t AS (SELECT SUM(n) AS tt FROM cell) "
-            "SELECT cell.split, cell.source, CAST(cell.n AS BIGINT) AS n, "
-            "round(CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(tt AS DOUBLE), 6) AS expected, "
-            "round((CAST(cell.n AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(tt AS DOUBLE)) "
-            "* (CAST(cell.n AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(tt AS DOUBLE)) "
-            "/ (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(tt AS DOUBLE)), 6) AS chi2_contribution "
-            "FROM cell JOIN r USING (split) JOIN c USING (source) CROSS JOIN t"
-        ),
         "cross_source_duplication": (
             f"WITH tk AS (SELECT source, {_TOKS_SQL} AS toks FROM documents), "
             "fp AS (SELECT source, md5(array_to_string(list_slice(toks, i, i+7), ' ')) AS f "
@@ -1539,24 +1268,6 @@ def oracle_sql() -> dict[str, str]:
             "round(fingerprints_shared / CAST(pa.n + pb.n - fingerprints_shared AS DOUBLE), 6) AS jaccard "
             "FROM b JOIN per pa ON pa.source = b.source_a "
             "JOIN per pb ON pb.source = b.source_b"
-        ),
-        "quality_dup_calibration": (
-            f"WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents), "
-            "s AS (SELECT doc_id, text, CAST(len(toks) AS BIGINT) AS token_count, "
-            "CAST(length(text) AS BIGINT) AS char_count, "
-            f"CAST(len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, x))) AS BIGINT) AS stopword_count, "
-            "length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_count FROM t), "
-            "q AS (SELECT doc_id, round(0.5 * least(CAST(token_count AS DOUBLE) / 50, 1.0) "
-            "+ 0.3 * (1.0 - CAST(stopword_count AS DOUBLE) / token_count) "
-            "+ 0.2 * (1.0 - CAST(punct_count AS DOUBLE) / char_count), 6) AS quality_score, "
-            f"md5({_NORM_TEXT_SQL}) AS fp FROM s), "
-            "m AS (SELECT least(CAST(floor(quality_score * 10) AS BIGINT), 9) AS bin, "
-            "CASE WHEN COUNT(*) OVER (PARTITION BY fp) > 1 THEN 1 ELSE 0 END AS dup FROM q "
-            "WHERE quality_score IS NOT NULL) "
-            "SELECT bin, round(CAST(bin AS DOUBLE) / 10.0, 6) AS bin_start, "
-            "CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dup) AS BIGINT) AS n_dup_docs, "
-            "round(SUM(dup) / CAST(COUNT(*) AS DOUBLE), 6) AS dup_rate "
-            "FROM m GROUP BY bin"
         ),
         "gini_concentration": (
             "WITH ev AS (SELECT CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
@@ -2164,19 +1875,6 @@ def oracle_sql() -> dict[str, str]:
             "(SUM(e) + SUM(m) - SUM(e * m)), 0) AS BIGINT) AS agreement_ppm "
             "FROM tagged"
         ),
-        "pack_efficiency": (
-            f"WITH t AS (SELECT doc_id, CAST(len({_TOKS_SQL}) AS BIGINT) AS token_count FROM documents), "
-            "r AS (SELECT doc_id, token_count, "
-            "CAST(SUM(token_count) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM t), "
-            "p AS (SELECT token_count, cum - token_count AS start_offset, "
-            "(cum - token_count) // 512 AS pack_id FROM r) "
-            "SELECT pack_id, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(token_count) AS BIGINT) AS pack_tokens, "
-            "CAST(SUM(LEAST(start_offset + token_count, (pack_id + 1) * 512) - start_offset) AS BIGINT) AS tokens_in_window, "
-            "CAST(SUM(GREATEST(start_offset + token_count - (pack_id + 1) * 512, 0)) AS BIGINT) AS spill_tokens, "
-            "CAST((SUM(LEAST(start_offset + token_count, (pack_id + 1) * 512) - start_offset) * 1000000) // 512 AS BIGINT) AS fill_ppm "
-            "FROM p GROUP BY 1"
-        ),
         "rare_bigram_rate": (
             f"WITH tk AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
             "g AS (SELECT doc_id, toks[i] || ' ' || toks[i+1] AS gram "
@@ -2190,33 +1888,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(COALESCE(nr, 0) AS BIGINT) AS n_rare, "
             "CAST(COALESCE((nr * 1000000) // nb, 0) AS BIGINT) AS rare_ppm "
             "FROM documents d LEFT JOIN f ON d.doc_id = f.doc_id"
-        ),
-        "shuffle_shards": (
-            "WITH h AS (SELECT doc_id, "
-            + portable.phash60_sql("'7:' || CAST(doc_id AS VARCHAR)")
-            + " AS hh FROM documents) "
-            "SELECT doc_id, CAST(hh % 64 AS INTEGER) AS shard, "
-            "CAST(row_number() OVER (PARTITION BY hh % 64 "
-            "ORDER BY hh, doc_id) AS BIGINT) AS pos_in_shard FROM h"
-        ),
-        "select_token_budget": (
-            f"WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents), "
-            "s AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS token_count, "
-            "CAST(length(text) AS BIGINT) AS char_count, "
-            f"CAST(len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, x))) AS BIGINT) AS stopword_count, "
-            "length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_count "
-            "FROM t), "
-            "q AS (SELECT doc_id, token_count, "
-            "round(0.5 * least(CAST(token_count AS DOUBLE) / 50, 1.0) "
-            "+ 0.3 * (1.0 - CAST(stopword_count AS DOUBLE) / token_count) "
-            "+ 0.2 * (1.0 - CAST(punct_count AS DOUBLE) / char_count), 6) AS quality_score "
-            "FROM s), "
-            "r AS (SELECT doc_id, token_count, quality_score, "
-            "SUM(token_count) OVER (ORDER BY quality_score DESC, doc_id ASC "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens FROM q) "
-            "SELECT doc_id, token_count, quality_score, "
-            "CAST(cum_tokens AS BIGINT) AS cum_tokens "
-            "FROM r WHERE cum_tokens <= 10000"
         ),
         "collocations": (
             # HUGEINT (int128) mirrors Spark's DECIMAL(38,0) product; // is
@@ -2364,35 +2035,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM d a JOIN d b ON a.block = b.block AND a.doc_id < b.doc_id) "
             "SELECT * FROM p WHERE jaccard >= 0.9"
         ),
-        "corpus_stats": (
-            f"WITH t AS (SELECT doc_id, lang, source, text, {_TOKS_SQL} AS toks FROM documents), "
-            "s AS (SELECT doc_id, lang, source, CAST(len(toks) AS BIGINT) AS token_count, "
-            "CAST(length(text) AS BIGINT) AS char_count, "
-            f"CAST(len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, x))) AS BIGINT) AS stopword_count, "
-            "length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_count FROM t), "
-            "q AS (SELECT doc_id, lang, source, token_count, char_count, "
-            "round(0.5 * least(CAST(token_count AS DOUBLE) / 50, 1.0) "
-            "+ 0.3 * (1.0 - CAST(stopword_count AS DOUBLE) / token_count) "
-            "+ 0.2 * (1.0 - CAST(punct_count AS DOUBLE) / char_count), 6) AS quality_score FROM s) "
-            "SELECT lang, source, COUNT(*) AS n_docs, "
-            "CAST(SUM(token_count) AS BIGINT) AS total_tokens, "
-            "CAST(SUM(char_count) AS BIGINT) AS total_chars, "
-            "round(CAST(SUM(CAST(quality_score AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS avg_quality "
-            "FROM q GROUP BY lang, source"
-        ),
-        "corpus_sample": (
-            "SELECT doc_id, lang, source FROM documents WHERE "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 < 200000"
-        ),
-        "split_corpus": (
-            "WITH h AS (SELECT doc_id, lang, source, "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 AS hv FROM documents) "
-            "SELECT doc_id, lang, source, "
-            "CASE WHEN hv < 900000 THEN 'train' WHEN hv < 950000 THEN 'val' ELSE 'test' END AS split "
-            "FROM h"
-        ),
         "dup_histogram": (
             f"WITH fp AS (SELECT md5({_NORM_TEXT_SQL}) AS f FROM documents), "
             "g AS (SELECT f, CAST(COUNT(*) AS BIGINT) AS group_size FROM fp GROUP BY f) "
@@ -2404,25 +2046,6 @@ def oracle_sql() -> dict[str, str]:
             "t AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM ev) "
             "SELECT itemid, n_rows, round(n_rows / total, 6) AS share "
             "FROM c CROSS JOIN t ORDER BY n_rows DESC, itemid ASC LIMIT 10"
-        ),
-        "stratified_fixed_k": (
-            "WITH h AS (SELECT doc_id, lang, source, "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} AS hh "
-            "FROM documents), "
-            "r AS (SELECT doc_id, lang, source, CAST(row_number() OVER "
-            "(PARTITION BY lang ORDER BY hh ASC, doc_id ASC) AS INT) AS sample_rank FROM h) "
-            "SELECT doc_id, lang, source, sample_rank FROM r WHERE sample_rank <= 20"
-        ),
-        "temperature_sample": (
-            "WITH c AS (SELECT lang, COUNT(*) AS strat_n FROM documents GROUP BY 1), "
-            "t AS (SELECT CAST(SUM(strat_n) AS DOUBLE) AS total_n, "
-            "SUM(pow(CAST(strat_n AS DOUBLE), 0.5)) AS denom FROM c), "
-            "r AS (SELECT lang, round(least(1.0, 0.5 * total_n * pow(CAST(strat_n AS DOUBLE), -0.5) / denom), 6) AS rate "
-            "FROM c CROSS JOIN t) "
-            "SELECT d.doc_id, d.lang, d.source FROM documents d "
-            "JOIN r ON r.lang IS NOT DISTINCT FROM d.lang "
-            f"WHERE {portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 < rate * 1000000"
         ),
         "chunk_documents": (
             f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
@@ -2436,64 +2059,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(len(chunk) AS BIGINT) AS n_tokens, "
             "array_to_string(chunk, ' ') AS chunk_text FROM s"
         ),
-        "decontaminate_apply": (
-            f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "g AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS gram "
-            "FROM toks CROSS JOIN unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS t(i)), "
-            "bench AS (SELECT DISTINCT gram FROM g WHERE "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 < 200000), "
-            "hits AS (SELECT DISTINCT d.doc_id FROM g d JOIN bench b ON d.gram = b.gram) "
-            "SELECT doc_id, lang, source, n_chars FROM documents "
-            "WHERE doc_id NOT IN (SELECT doc_id FROM hits)"
-        ),
-        "corpus_profile": (
-            "SELECT COUNT(*) AS n_docs, "
-            "COUNT(DISTINCT lang) AS n_langs, "
-            "COUNT(DISTINCT source) AS n_sources, "
-            "CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_text, "
-            "CAST(SUM(CASE WHEN length(trim(text)) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS empty_text, "
-            "CAST(MIN(length(text)) AS BIGINT) AS min_chars, "
-            "CAST(MAX(length(text)) AS BIGINT) AS max_chars, "
-            "round(CAST(AVG(CAST(length(text) AS DECIMAL(18,4))) AS DOUBLE), 6) AS avg_chars "
-            "FROM documents"
-        ),
-        "decontaminate": (
-            f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "g AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS gram "
-            "FROM toks CROSS JOIN unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS t(i)), "
-            "bench AS (SELECT DISTINCT gram FROM g WHERE "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 < 200000), "
-            "m AS (SELECT DISTINCT d.doc_id, d.gram FROM g d JOIN bench b ON d.gram = b.gram), "
-            "c AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS matched_ngrams FROM m GROUP BY doc_id) "
-            "SELECT d.doc_id, COALESCE(c.matched_ngrams, 0) AS matched_ngrams, "
-            "COALESCE(c.matched_ngrams, 0) > 0 AS contaminated "
-            "FROM documents d LEFT JOIN c ON c.doc_id = d.doc_id"
-        ),
-        "redact_pii": (
-            f"WITH {_redact_chain_sql('documents')} "
-            "SELECT doc_id, n_email, n_ssn, n_phone, t3 AS redacted_text, "
-            "n_email + n_ssn + n_phone AS n_redactions FROM s3"
-        ),
-        "pack_sequences": (
-            f"WITH t AS (SELECT doc_id, CAST(len({_TOKS_SQL}) AS BIGINT) AS token_count FROM documents), "
-            "r AS (SELECT doc_id, token_count, "
-            "CAST(SUM(token_count) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM t) "
-            "SELECT doc_id, token_count, cum - token_count AS start_offset, "
-            "(cum - token_count) // 512 AS pack_id FROM r"
-        ),
-        "packed_corpus": (
-            f"WITH t AS (SELECT doc_id, CAST(len({_TOKS_SQL}) AS BIGINT) AS token_count FROM documents), "
-            "r AS (SELECT doc_id, token_count, "
-            "CAST(SUM(token_count) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM t), "
-            "p AS (SELECT doc_id, token_count, (cum - token_count) // 512 AS pack_id FROM r) "
-            "SELECT p.pack_id, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(p.token_count) AS BIGINT) AS n_tokens, "
-            "string_agg(d.text, ' ' ORDER BY p.doc_id) AS pack_text "
-            "FROM p JOIN documents d ON d.doc_id = p.doc_id GROUP BY p.pack_id"
-        ),
-        "curate_corpus": _curate_corpus_sql(min_quality=0.3, threshold=0.9, budget=512),
         "dedup_minhash_lsh": _minhash_sql(threshold=0.7),
         "dedup_apply": (
             "WITH RECURSIVE "
@@ -2605,19 +2170,6 @@ def oracle_sql() -> dict[str, str]:
             "round(CAST(SUM(p) AS DOUBLE) / CAST(SUM(w) AS DOUBLE), 6) AS fertility "
             "FROM d GROUP BY source ORDER BY source ASC"
         ),
-        "domain_balance_weights": (
-            f"WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            f"CAST(SUM(len(list_filter({_TOKS_SQL}, x -> x <> ''))) AS BIGINT) AS n_tokens "
-            "FROM documents GROUP BY source), "
-            "t AS (SELECT CAST(SUM(n_tokens) AS DOUBLE) AS tt, "
-            "SUM(power(CAST(n_tokens AS DOUBLE), 0.5)) AS dd FROM c) "
-            "SELECT source, n_docs, n_tokens, "
-            "round(CAST(n_tokens AS DOUBLE) / tt, 6) AS token_share, "
-            "round(power(CAST(n_tokens AS DOUBLE), 0.5) / dd, 6) AS target_share, "
-            "round((power(CAST(n_tokens AS DOUBLE), 0.5) / dd) "
-            "/ (CAST(n_tokens AS DOUBLE) / tt), 6) AS weight "
-            "FROM c CROSS JOIN t ORDER BY source ASC"
-        ),
         "first_touch_funnel": (
             "WITH g AS (SELECT user_id AS visitorid, "
             "MIN(ts) FILTER (WHERE event_type = 'view') AS m0, "
@@ -2688,28 +2240,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST((1000000 * COUNT(*)) // (SELECT N FROM n) AS BIGINT) AS share_ppm_floor "
             "FROM src GROUP BY token "
             "HAVING 1000000 * COUNT(*) >= 5000 * (SELECT N FROM n)"
-        ),
-        "snapshot_diff": (
-            f"WITH o AS (SELECT doc_id, md5({_NORM_TEXT_SQL}) AS od, source AS os "
-            "FROM documents WHERE doc_id % 10 <> 0), "
-            "n0 AS (SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END AS text, "
-            "source FROM documents WHERE doc_id % 11 <> 0), "
-            "n AS (SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS nd, "
-            "source AS ns FROM n0), "
-            "j AS (SELECT coalesce(ns, os) AS source, "
-            "CASE WHEN os IS NULL THEN 'added' WHEN ns IS NULL THEN 'removed' "
-            "WHEN NOT (od IS NOT DISTINCT FROM nd) THEN 'changed' ELSE 'unchanged' END AS st "
-            "FROM o FULL OUTER JOIN n USING (doc_id)), "
-            "g AS (SELECT source, "
-            "CAST(COUNT(*) FILTER (WHERE st = 'added') AS BIGINT) AS n_added, "
-            "CAST(COUNT(*) FILTER (WHERE st = 'removed') AS BIGINT) AS n_removed, "
-            "CAST(COUNT(*) FILTER (WHERE st = 'changed') AS BIGINT) AS n_changed, "
-            "CAST(COUNT(*) FILTER (WHERE st = 'unchanged') AS BIGINT) AS n_unchanged "
-            "FROM j GROUP BY source) "
-            "SELECT source, n_added, n_removed, n_changed, n_unchanged, "
-            "round((n_added + n_removed + n_changed) / "
-            "CAST(n_added + n_removed + n_changed + n_unchanged AS DOUBLE), 6) AS churn "
-            "FROM g ORDER BY source ASC"
         ),
         "distinctive_terms": (
             f"WITH tk AS (SELECT source, unnest({_TOKS_SQL}) AS term FROM documents), "
@@ -2820,26 +2350,6 @@ def oracle_sql() -> dict[str, str]:
             "round(covered_tokens / CAST(total_tokens AS DOUBLE), 6) AS coverage "
             "FROM ks CROSS JOIN tot"
         ),
-        "pii_rate_by_source": (
-            "WITH s1 AS (SELECT source, "
-            "CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INT) AS ne, "
-            "regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<email>', 'g') AS t1 "
-            "FROM documents), "
-            "s2 AS (SELECT source, ne, "
-            "CAST(len(regexp_extract_all(t1, '\\d{3}-\\d{2}-\\d{4}')) AS INT) AS ns, "
-            "regexp_replace(t1, '\\d{3}-\\d{2}-\\d{4}', '<ssn>', 'g') AS t2 FROM s1), "
-            "s3 AS (SELECT source, ne, ns, "
-            "CAST(len(regexp_extract_all(t2, '\\+?\\d{3}[-. ]\\d{3}[-. ]\\d{4}')) AS INT) AS np "
-            "FROM s2) "
-            "SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(ne) AS BIGINT) AS n_email, "
-            "CAST(SUM(ns) AS BIGINT) AS n_ssn, "
-            "CAST(SUM(np) AS BIGINT) AS n_phone, "
-            "CAST(SUM(CASE WHEN ne + ns + np > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_docs, "
-            "round(SUM(CASE WHEN ne + ns + np > 0 THEN 1 ELSE 0 END) / "
-            "CAST(COUNT(*) AS DOUBLE), 6) AS pii_doc_rate "
-            "FROM s3 GROUP BY source"
-        ),
         "dedup_token_savings": (
             f"WITH per AS (SELECT source, doc_id, md5({_NORM_TEXT_SQL}) AS fp, "
             f"CAST(len({_TOKS_SQL}) AS BIGINT) AS tok FROM documents), "
@@ -2880,26 +2390,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_returning, "
             "round(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) / "
             "CAST(COUNT(*) AS DOUBLE), 6) AS returning_rate FROM per"
-        ),
-        "contamination_by_split": (
-            f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "g AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS gram "
-            "FROM toks CROSS JOIN unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS t(i)), "
-            "bench AS (SELECT DISTINCT gram FROM g WHERE "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(doc_id AS VARCHAR)')} "
-            "% 1000000 < 200000), "
-            "m AS (SELECT DISTINCT d.doc_id, d.gram FROM g d JOIN bench b ON d.gram = b.gram), "
-            "c AS (SELECT doc_id, COUNT(*) AS matched FROM m GROUP BY doc_id), "
-            "rep AS (SELECT d.doc_id, COALESCE(c.matched, 0) > 0 AS contaminated, "
-            f"{portable.phash60_sql(chr(39) + '7:' + chr(39) + ' || CAST(d.doc_id AS VARCHAR)')} "
-            "% 1000000 AS h FROM documents d LEFT JOIN c ON c.doc_id = d.doc_id), "
-            "sp AS (SELECT CASE WHEN h < 980000 THEN 'train' "
-            "WHEN h < 990000 THEN 'val' ELSE 'test' END AS split, contaminated FROM rep) "
-            "SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(CASE WHEN contaminated THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated, "
-            "round(SUM(CASE WHEN contaminated THEN 1 ELSE 0 END) / "
-            "CAST(COUNT(*) AS DOUBLE), 6) AS contamination_rate "
-            "FROM sp GROUP BY split"
         ),
         "neardup_cluster_sizes": _clusters_sql(
             threshold=0.9,

@@ -170,7 +170,7 @@ def main() -> None:
     for _ in range(reps):
         for name in names:
             # plan construction INSIDE the timed region: iterative operators
-            # (connected components, the curation pipeline) run driver-side
+            # (connected components) run driver-side
             # actions while building their result frame, and timing only the
             # final write would under-report them.
             t0 = time.time()
@@ -223,7 +223,7 @@ def main() -> None:
 
         low_cpus = 8 if scaling_env == "1" else max(1, int(scaling_env))
         high_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-        probe_default = "dedup_minhash_lsh,curate_corpus,char_entropy"
+        probe_default = "dedup_minhash_lsh,char_entropy"
         probes = [
             p.strip()
             for p in os.environ.get(

@@ -17,6 +17,8 @@ Scale design (the point of each variant):
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -659,8 +661,7 @@ def dedup_apply(
 ) -> DataFrame:
     """The APPLY form of near-dup dedup: return the corpus with exact AND
     near duplicates removed (each cluster keeps its minimum id) — what a
-    pipeline materializes, where the pair/cluster operators only report.
-    Steps 2-3 of :func:`curate_corpus` as a standalone operator:
+    pipeline materializes, where the pair/cluster operators only report:
 
     1. exact dedup, keep lowest id per normalized text;
     2. MinHash+LSH candidate pairs at ``threshold`` (exact-verified);
@@ -757,11 +758,13 @@ def similar_visitors_minhash(
     )
 
 
+#: Propagation rounds between lineage-truncating checkpoints of the
+#: distributed :func:`duplicate_clusters` loop.
+_CHECKPOINT_INTERVAL = 3
+
+
 def duplicate_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    checkpoint_interval: int = 3,
-    max_edges_local: int = 100_000,
+    pairs: DataFrame, max_edges_local: int = 100_000
 ) -> DataFrame:
     """Connected components over a near-duplicate ``(doc_a, doc_b)`` pair
     graph → duplicate clusters: (doc_id, cluster_id = minimum id
@@ -773,15 +776,17 @@ def duplicate_clusters(
     converges in O(diameter) rounds — near-dup clusters are shallow (stars/
     cliques), so typically 2-3. Each iteration is one shuffle join + one
     aggregation; intermediate labels are persisted and the loop exits via a
-    cheap convergence count. No driver-side graph state — scales to
-    billions of edges.
+    cheap convergence count once no label changes. Labels only decrease
+    and are bounded below by the component minimum, so that takes at most
+    diameter + 1 rounds. No driver-side graph state — scales to billions
+    of edges.
 
-    Every ``checkpoint_interval`` rounds the label frame is
+    Every ``_CHECKPOINT_INTERVAL`` rounds the label frame is
     ``localCheckpoint(eager=True)``'d: persist alone caches *data* but the
-    logical plan still nests one join per round, so a 20-iteration worst
-    case would carry a 20-join lineage into every subsequent action
-    (analysis cost grows superlinearly, and a lost cached partition would
-    recompute the whole chain). Checkpointing truncates the lineage to the
+    logical plan still nests one join per round, so a long chain would
+    carry one join pair per round into every subsequent action (analysis
+    cost grows superlinearly, and a lost cached partition would recompute
+    the whole chain). Checkpointing truncates the lineage to the
     materialized result.
 
     **Small-graph fast path**: near-dup edge sets are usually tiny next to
@@ -841,7 +846,7 @@ def duplicate_clusters(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    for it in range(max_iterations):
+    for it in itertools.count(1):
         neighbor_min = (
             edges.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src")
@@ -855,7 +860,7 @@ def duplicate_clusters(
                 F.coalesce(F.col("neighbor_label"), F.col("cluster_id")),
             ).alias("cluster_id"),
         )
-        if (it + 1) % checkpoint_interval == 0:
+        if it % _CHECKPOINT_INTERVAL == 0:
             new_labels = new_labels.localCheckpoint(eager=True)
         else:
             new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1105,9 +1110,9 @@ def duplicate_spans(
     pass 2's string aggregation runs on a sliver; a pathological corpus
     where MOST windows repeat degrades to the one-pass cost plus a scan.
     At 100 TB run per-shard and union: window counts are mergeable
-    (sum), unlike suffix arrays. For REMOVING the spans, feed the result
-    to ``decontaminate``-style n-gram filtering; for whole-doc near-dup
-    use the MinHash path."""
+    (sum), unlike suffix arrays. For REMOVING the spans use
+    :func:`mask_duplicate_spans`; for whole-doc near-dup use the MinHash
+    path."""
     toks = docs.select(
         F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
     ).filter(F.size("__toks") >= span_tokens)
@@ -1274,7 +1279,7 @@ def dup_rate_by_stratum(
     the stratum alone — text hashed at the scan, never shuffled; both aggs
     partial/map-side combinable. A duplicate shared ACROSS strata counts as
     unique in each (the rate is per-stratum by design — cross-stratum
-    leakage is `decontaminate`'s job)."""
+    overlap is :func:`cross_source_duplication`'s job)."""
     per_fp = (
         docs.withColumn("__fp", F.md5(_norm_text(text_col)))
         .groupBy(*by, "__fp")

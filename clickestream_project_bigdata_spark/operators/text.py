@@ -226,7 +226,7 @@ def repetition_score(
     inlining ``tokens_col`` into every ``element_at`` of the gram transform
     re-tokenizes the document once PER GRAM TERM, and referencing the gram
     expression twice (size + array_distinct) doubles it again — measured
-    ~20x slower (the same CollapseProject trap decontaminate hit)."""
+    ~20x slower."""
     return docs.select(
         F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
     ).select(
@@ -959,6 +959,65 @@ def gopher_quality_flags(
     )
 
 
+def _running_sum(
+    df: DataFrame, value_cols: list[str], order_exprs: list
+) -> DataFrame:
+    """Global running sums of the non-negative ``value_cols`` under a
+    total order given by ``order_exprs`` (sort Columns; must be a TOTAL
+    order for determinism), returned as extra ``__cum_<name>`` columns,
+    all in the SAME range exchange / window / totals collect.
+
+    Two-pass prefix sum: range-partition on the order into
+    ``defaultParallelism`` partitions, running sum WITHIN each partition,
+    then add each partition's broadcast exclusive offset (per-partition
+    totals are a ≤ #partitions-row driver collect). No task sees more
+    than its range — a global ``Window.orderBy`` would funnel everything
+    through ONE task."""
+    from ..plans.scale import materialize_once
+
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+    w = Window.partitionBy("__pid").orderBy(*order_exprs).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    lnames = [f"__lcum_{i}" for i in range(len(value_cols))]
+    # materialized once (the totals collect below), reused by the final
+    # select. Pinning matters for CORRECTNESS here too:
+    # repartitionByRange samples range bounds, so a recompute could shift
+    # partition ids between pass 1 and pass 2
+    local = materialize_once(
+        df.repartitionByRange(n, *order_exprs)
+        .withColumn("__pid", F.spark_partition_id())
+        .select(
+            "*",
+            *[F.sum(c).over(w).alias(ln) for c, ln in zip(value_cols, lnames)],
+        )
+    )
+    # pass 2: per-partition totals (≤ n rows — bounded driver state) →
+    # exclusive offsets; range partition i holds strictly smaller order
+    # keys than i+1, so offset order == partition id order. The values
+    # are non-negative, so a partition's total is its largest running sum
+    totals = {
+        r["__pid"]: [r[f"t{i}"] for i in range(len(value_cols))]
+        for r in local.groupBy("__pid")
+        .agg(*[F.max(ln).alias(f"t{i}") for i, ln in enumerate(lnames)])
+        .collect()
+    }
+    acc = [0] * len(value_cols)
+    offsets = []
+    for pid in sorted(totals):
+        offsets.append((pid, *acc))
+        acc = [a + t for a, t in zip(acc, totals[pid])]
+    onames = [f"__off_{i}" for i in range(len(value_cols))]
+    off = spark.createDataFrame(
+        offsets, ", ".join(["__pid int"] + [f"{o} long" for o in onames])
+    )
+    out = local.join(F.broadcast(off), "__pid")
+    for c, ln, o in zip(value_cols, lnames, onames):
+        out = out.withColumn(f"__cum_{c}", F.col(o) + F.col(ln))
+    return out.drop("__pid", *lnames, *onames)
+
+
 def vocab_growth(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -973,15 +1032,12 @@ def vocab_growth(
     first-occurrence document, so one token-keyed ``min(id)`` aggregate
     (map-side combined) reduces the corpus to vocab grain; counting
     first occurrences per document gives a per-doc ``n_new_types``, and
-    the curve is BOTH running sums in one pass of the shared
-    two-pass distributed prefix sum (``curation._running_sum`` — range
-    partition + per-partition offsets, never a single global window
-    task).
+    the curve is BOTH running sums in one pass of the two-pass
+    distributed prefix sum :func:`_running_sum` (range partition +
+    per-partition offsets, never a single global window task).
 
     Output per document: (id_col, n_tokens, cum_tokens, n_new_types,
     vocab_size), ordered by ``id_col``."""
-    from .curation import _running_sum
-
     toks = F.filter(tokens_col(F.col(text_col)), lambda t: t != "")
     per_doc = docs.select(
         F.col(id_col), F.size(toks).cast("long").alias("n_tokens")

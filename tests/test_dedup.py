@@ -159,16 +159,16 @@ def test_ngram_jaccard_lazy_when_small_vocab_false(docs):
 
 
 def test_duplicate_clusters_checkpoint_bounds_lineage(spark):
-    """A 12-node path graph needs ~11 propagation rounds; localCheckpoint
-    every 3 rounds must keep the FINAL plan's join count bounded (≤ 2 joins
-    per round since the last checkpoint) instead of carrying one join pair
-    per iteration."""
+    """A 25-node path graph needs 24 propagation rounds to converge to
+    one cluster; localCheckpoint every few rounds must keep the FINAL
+    plan's join count bounded (≤ 2 joins per round since the last
+    checkpoint) instead of carrying one join pair per iteration."""
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(1, 25)], "doc_a long, doc_b long"
     )
-    out = dedup.duplicate_clusters(chain, checkpoint_interval=3, max_edges_local=0)
+    out = dedup.duplicate_clusters(chain, max_edges_local=0)
     labels = {r.doc_id: r.cluster_id for r in out.collect()}
-    assert set(labels.values()) == {1} and len(labels) == 12
+    assert set(labels.values()) == {1} and len(labels) == 25
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Join") <= 8, f"lineage not truncated:\n{plan}"
 

@@ -47,8 +47,8 @@ def test_analytics_on_empty_events(spark, empty_events):
     assert p.n_rows == 0
 
 
-def test_text_and_curation_on_empty_docs(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators import curation, text
+def test_text_on_empty_docs(spark, empty_docs):
+    from clickestream_project_bigdata_spark.operators import text
 
     assert text.text_stats(empty_docs).count() == 0
     assert text.lang_id(empty_docs).count() == 0
@@ -56,14 +56,6 @@ def test_text_and_curation_on_empty_docs(spark, empty_docs):
     assert text.repetition_score(empty_docs).count() == 0
     assert text.chunk_documents(empty_docs).count() == 0
     assert text.similar_docs_topk(empty_docs, query_id=0).count() == 0
-    assert curation.stratified_sample(empty_docs, 0.5).count() == 0
-    assert curation.stratified_fixed_k(empty_docs, 5).count() == 0
-    assert curation.split_corpus(empty_docs).count() == 0
-    assert curation.temperature_sample(empty_docs).count() == 0
-    assert curation.redact_pii(empty_docs).count() == 0
-    assert curation.pack_sequences(empty_docs).count() == 0
-    assert curation.pack_corpus_text(empty_docs).count() == 0
-    assert curation.corpus_stats(empty_docs).count() == 0
 
 
 def test_dedup_similarity_on_empty(spark, empty_docs):
@@ -80,7 +72,7 @@ def test_null_text_documents_flow_through(spark):
     NULL (so quality filters drop the doc — comparisons with NULL are
     false), gram/chunk ops emit nothing for the doc, dedup keeps it as its
     own group."""
-    from clickestream_project_bigdata_spark.operators import curation, dedup, text
+    from clickestream_project_bigdata_spark.operators import dedup, text
 
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, None)], "doc_id long, text string"
@@ -89,7 +81,6 @@ def test_null_text_documents_flow_through(spark):
     assert stats[1] is not None and stats[2] is None
     assert text.chunk_documents(docs).filter("doc_id = 2").count() == 0
     assert text.repetition_score(docs).filter("doc_id = 2").count() == 1
-    assert curation.redact_pii(docs).count() == 2
     # keep-first dedup: NULL text neither merges with nor displaces real docs
     assert dedup.dedup_keep_first(docs).count() == 2
 
@@ -119,17 +110,12 @@ def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs):
 
 
 def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators.curation import (
-        select_token_budget,
-        shuffle_shards,
-    )
     from clickestream_project_bigdata_spark.operators.dedup import (
         mask_duplicate_spans,
     )
     from clickestream_project_bigdata_spark.operators.text import (
         collocations,
         rare_bigram_rate,
-        text_stats,
         type_token_ratio,
     )
 
@@ -137,14 +123,9 @@ def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
     assert collocations(empty_docs).count() == 0
     assert type_token_ratio(empty_docs).count() == 0
     assert rare_bigram_rate(empty_docs).count() == 0
-    assert shuffle_shards(empty_docs).count() == 0
-    assert select_token_budget(text_stats(empty_docs), 1000).count() == 0
     # schemas survive emptiness
     assert set(mask_duplicate_spans(empty_docs).columns) == {
         "doc_id", "n_tokens", "n_masked_tokens", "cleaned_digest"
-    }
-    assert set(shuffle_shards(empty_docs).columns) == {
-        "doc_id", "shard", "pos_in_shard"
     }
 
 
@@ -167,7 +148,7 @@ def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs)
 
 
 def test_round7_operators_on_empty_inputs(spark, empty_events, empty_docs):
-    from clickestream_project_bigdata_spark.operators import analytics, curation, text
+    from clickestream_project_bigdata_spark.operators import analytics, text
 
     assert text.bpe_merge_step(empty_docs).count() == 0
     assert text.vocab_growth(empty_docs).count() == 0
@@ -176,6 +157,5 @@ def test_round7_operators_on_empty_inputs(spark, empty_events, empty_docs):
     assert text.token_length_distribution(empty_docs).count() == 0
     assert text.char_entropy(empty_docs).count() == 0
     assert text.readability_scores(empty_docs).count() == 0
-    assert curation.domain_balance_weights(empty_docs).count() == 0
     assert analytics.first_touch_funnel(empty_events).count() == 0
     assert analytics.decay_attribution(empty_events).count() == 0

@@ -101,23 +101,13 @@ def test_minute_metrics_single_exchange(spark, make_events):
     assert count_exchanges(analytics.top_items(events)) <= 1
 
 
-def test_stratified_sample_no_shuffle(spark):
-    """Hash sampling is a scan-local filter: zero exchanges in the plan."""
-    from clickestream_project_bigdata_spark.operators.curation import stratified_sample
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    assert count_exchanges(stratified_sample(docs, 0.2)) == 0
-
-
-def test_redact_and_text_ops_no_shuffle(spark):
-    """The per-document text passes (redaction, stats, fingerprint, bpe)
-    are narrow: no exchange anywhere."""
+def test_text_ops_no_shuffle(spark):
+    """The per-document text passes (stats, fingerprint, bpe) are narrow:
+    no exchange anywhere."""
     from clickestream_project_bigdata_spark.operators import text
-    from clickestream_project_bigdata_spark.operators.curation import redact_pii
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for df in (
-        redact_pii(docs),
         text.text_stats(docs),
         text.fingerprint(docs),
         text.token_count_bpe(docs),
@@ -125,29 +115,13 @@ def test_redact_and_text_ops_no_shuffle(spark):
         assert count_exchanges(df) == 0
 
 
-def test_corpus_stats_single_exchange(spark):
-    """Stats ride the scan; the only shuffle is the stratum-key aggregate."""
-    from clickestream_project_bigdata_spark.operators.curation import corpus_stats
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    assert count_exchanges(corpus_stats(docs)) <= 1
-
-
 def test_round4_operator_plan_shapes(spark):
-    """Plan pins for the round-4 operators: chunking shuffles nothing,
-    decontaminate broadcasts the benchmark gram set (no sort-merge), and
-    the exploded corpus side of decontaminate never feeds an exchange
-    before the probe."""
-    from clickestream_project_bigdata_spark.operators import curation, text
+    """Plan pin for the round-4 operators: chunking shuffles nothing."""
+    from clickestream_project_bigdata_spark.operators import text
 
     docs = read_parquet_table(spark, SF, "documents")
     chunks = text.chunk_documents(docs, max_tokens=64, overlap=16)
     assert count_exchanges(chunks) == 0
-
-    bench = curation.stratified_sample(docs, 0.2)
-    deco = curation.decontaminate(docs, bench, n=5)
-    assert count_sort_merge_joins(deco) == 0
-    assert count_broadcast_joins(deco) >= 2  # probe + final left join
 
 
 def test_pairwise_overlap_single_linear_pipeline(spark):
@@ -239,19 +213,6 @@ def test_dedup_token_savings_single_fact_exchange_no_text(spark):
     assert count_exchanges(df) <= 2  # fingerprint window + source agg
     for m in re.finditer(r"Exchange [^\n]*", plan):
         assert "text" not in m.group(0), m.group(0)
-
-
-def test_pii_rate_single_aggregation(spark):
-    from clickestream_project_bigdata_spark.operators.curation import (
-        pii_rate_by_source,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "mail me: a@b.co", "s")], "doc_id long, text string, source string"
-    )
-    df = pii_rate_by_source(docs)
-    assert count_exchanges(df) <= 1
-    assert count_sort_merge_joins(df) == 0
 
 
 def test_position_attribution_no_trailing_global_sort(spark):

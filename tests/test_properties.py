@@ -133,63 +133,6 @@ def test_kmv_estimator_bounds(spark, n_users):
         assert abs(est - n_users) / n_users < 3 / (32**0.5), (n_users, est)
 
 
-token_counts_strategy = st.lists(st.integers(min_value=0, max_value=7), min_size=1, max_size=20)
-
-
-@settings(max_examples=10, deadline=None)
-@given(counts=token_counts_strategy, budget=st.sampled_from([1, 3, 8]))
-def test_pack_sequences_prefix_sum_invariants(spark, counts, budget):
-    """Packing is a prefix sum in id order: offsets are the exclusive
-    cumulative token counts, pack_ids are nondecreasing in id order, and
-    pack_id == start_offset // budget for every doc."""
-    from clickestream_project_bigdata_spark.operators.curation import pack_sequences
-
-    docs = spark.createDataFrame(
-        [(i, "x " * c) for i, c in enumerate(counts)], "doc_id long, text string"
-    )
-    rows = sorted(
-        pack_sequences(docs, budget=budget, count_col=None).collect(),
-        key=lambda r: r.doc_id,
-    )
-    # token counts: "x " * c tokenizes to c tokens (c>=1) or [''] (1) for c=0
-    acc = 0
-    prev_pack = 0
-    for r in rows:
-        assert r.start_offset == acc
-        assert r.pack_id == r.start_offset // budget
-        assert r.pack_id >= prev_pack
-        acc += r.token_count
-        prev_pack = r.pack_id
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    sizes=st.lists(st.integers(min_value=0, max_value=9), min_size=1, max_size=4),
-    k=st.sampled_from([1, 3, 5]),
-)
-def test_stratified_fixed_k_cap_property(spark, sizes, k):
-    """Each stratum yields min(k, |stratum|) docs with ranks 1..that."""
-    from clickestream_project_bigdata_spark.operators.curation import stratified_fixed_k
-
-    rows, nid = [], 0
-    for s, n in enumerate(sizes):
-        for _ in range(n):
-            rows.append((nid, f"lang{s}"))
-            nid += 1
-    if not rows:
-        return
-    docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = stratified_fixed_k(docs, k=k, by=("lang",)).collect()
-    by_lang: dict[str, list[int]] = {}
-    for r in out:
-        by_lang.setdefault(r.lang, []).append(r.sample_rank)
-    for s, n in enumerate(sizes):
-        if n == 0:
-            assert f"lang{s}" not in by_lang
-        else:
-            assert sorted(by_lang[f"lang{s}"]) == list(range(1, min(k, n) + 1))
-
-
 @settings(max_examples=10, deadline=None)
 @given(
     n_events=st.integers(min_value=1, max_value=15),
@@ -277,33 +220,6 @@ def test_duplicate_clusters_cap_boundary_routes_to_distributed(spark):
     }
     want = {(i, i) for i in range(0, 40, 2)} | {(i + 1, i) for i in range(0, 40, 2)}
     assert got == want
-
-
-def test_pack_sequences_many_more_partitions_than_rows(spark):
-    """Scale-proof (VERDICT r5 #4): partitions ≫ rows leaves most range
-    partitions EMPTY — offsets must still be the exact exclusive prefix
-    sums (empty partitions contribute zero, partition-boundary offsets
-    don't shift), identical to the single-window form."""
-    from clickestream_project_bigdata_spark.operators.curation import pack_sequences
-
-    counts = [3, 0, 7, 1, 5, 2, 4, 6]
-    docs = spark.createDataFrame(
-        [(i, "x " * c) for i, c in enumerate(counts)], "doc_id long, text string"
-    )
-    dist = sorted(
-        pack_sequences(docs, budget=4, partitions=64).collect(),
-        key=lambda r: r.doc_id,
-    )
-    single = sorted(
-        pack_sequences(docs, budget=4, method="single").collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert [tuple(r) for r in dist] == [tuple(r) for r in single]
-    acc = 0
-    for r in dist:
-        assert r.start_offset == acc
-        assert r.pack_id == r.start_offset // 4
-        acc += r.token_count
 
 
 # ---------------------------------------------------------------------------
@@ -445,39 +361,6 @@ def test_mask_duplicate_spans_conservation_and_first_kept(spark, texts):
     n_dup_spans = spans.count()
     if n_dup_spans == 0:
         assert all(r.n_masked_tokens == 0 for r in out)
-
-
-@given(
-    counts=st.lists(st.integers(min_value=1, max_value=50), min_size=1, max_size=20),
-    budget=st.integers(min_value=0, max_value=400),
-)
-@settings(max_examples=15, deadline=None)
-def test_select_token_budget_monotone_and_exact(spark, counts, budget):
-    """Selection under a larger budget is a SUPERSET of a smaller one;
-    the selected total never exceeds the budget; and greedily adding the
-    next-best doc would always overshoot (maximality)."""
-    from clickestream_project_bigdata_spark.operators.curation import (
-        select_token_budget,
-    )
-
-    scored = spark.createDataFrame(
-        [(i, c, float((i * 37) % 10) / 10.0) for i, c in enumerate(counts)],
-        "doc_id long, token_count long, quality_score double",
-    )
-    small = {r.doc_id for r in select_token_budget(scored, budget).collect()}
-    big = {r.doc_id for r in select_token_budget(scored, budget + 60).collect()}
-    assert small <= big
-    by_id = {i: c for i, c in enumerate(counts)}
-    total = sum(by_id[d] for d in small)
-    assert total <= budget
-    # maximality: the best unselected doc (in quality, id order) overshoots
-    order = sorted(
-        range(len(counts)), key=lambda i: (-(float((i * 37) % 10) / 10.0), i)
-    )
-    for i in order:
-        if i not in small:
-            assert total + by_id[i] > budget
-            break
 
 
 # ---------------------------------------------------------------------------

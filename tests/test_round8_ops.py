@@ -173,27 +173,3 @@ def test_dedup_token_savings_keep_first(spark):
     assert out["a"].token_savings_rate == 0.0
     assert (out["b"].n_docs, out["b"].n_kept_docs) == (1, 0)
     assert out["b"].kept_tokens == 0 and out["b"].token_savings_rate == 1.0
-
-
-def test_pii_rate_by_source_chain(spark):
-    """Chained counting: an email containing digit runs is redacted before
-    the SSN/phone scans, so nothing double-counts."""
-    from clickestream_project_bigdata_spark.operators.curation import (
-        pii_rate_by_source,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "reach me at bob123@example.com today", "a"),
-            (2, "ssn 123-45-6789 and phone 555-123-4567", "a"),
-            (3, "nothing sensitive", "a"),
-            (4, "clean", "b"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = {r.source: r for r in pii_rate_by_source(docs).collect()}
-    a = out["a"]
-    assert (a.n_email, a.n_ssn, a.n_phone) == (1, 1, 1)
-    assert (a.n_docs, a.n_pii_docs) == (3, 2)
-    assert abs(a.pii_doc_rate - round(2 / 3, 6)) < 1e-12
-    assert out["b"].n_pii_docs == 0 and out["b"].pii_doc_rate == 0.0

@@ -309,7 +309,8 @@ def test_gopher_quality_flags_rules(spark):
 
 def test_vocab_growth_hand_computed(spark):
     """doc1 'a b a' (2 new), doc2 'b c' (1 new), doc3 'a' (0 new) —
-    cumulative tokens 3/5/6, vocab 2/3/3."""
+    cumulative tokens 3/5/6, vocab 2/3/3; a 40-doc corpus matches a plain
+    Python running sum."""
     from clickestream_project_bigdata_spark.operators.text import vocab_growth
 
     docs = spark.createDataFrame(
@@ -320,6 +321,29 @@ def test_vocab_growth_hand_computed(spark):
         (r.doc_id, r.n_tokens, r.cum_tokens, r.n_new_types, r.vocab_size)
         for r in rows
     ] == [(1, 3, 3, 2, 2), (2, 2, 5, 1, 3), (3, 1, 6, 0, 3)]
+
+    # 40 docs span every range partition, so each partition after the
+    # first adds a nonzero offset; some docs have no tokens and, once the
+    # 23-word vocabulary is used up, no new types
+    texts = [
+        " ".join(f"w{(i * 7 + j * 3) % 23}" for j in range(i % 6))
+        for i in range(40)
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = sorted(
+        (r.doc_id, r.n_tokens, r.cum_tokens, r.n_new_types, r.vocab_size)
+        for r in vocab_growth(docs).collect()
+    )
+    want, seen, cum = [], set(), 0
+    for i, t in enumerate(texts):
+        toks = t.split()
+        new = set(toks) - seen
+        seen |= new
+        cum += len(toks)
+        want.append((i, len(toks), cum, len(new), len(seen)))
+    assert got == want
 
 
 def test_tokenizer_fertility_hand_computed(spark):

@@ -47,7 +47,7 @@ def test_analytics_on_empty_events(spark, empty_events):
     assert p.n_rows == 0
 
 
-def test_text_on_empty_docs(spark, empty_docs):
+def test_text_and_curation_on_empty_docs(spark, empty_docs):
     from clickestream_project_bigdata_spark.operators import text
 
     assert text.text_stats(empty_docs).count() == 0

@@ -101,7 +101,7 @@ def test_minute_metrics_single_exchange(spark, make_events):
     assert count_exchanges(analytics.top_items(events)) <= 1
 
 
-def test_text_ops_no_shuffle(spark):
+def test_redact_and_text_ops_no_shuffle(spark):
     """The per-document text passes (stats, fingerprint, bpe) are narrow:
     no exchange anywhere."""
     from clickestream_project_bigdata_spark.operators import text
@@ -113,6 +113,19 @@ def test_text_ops_no_shuffle(spark):
         text.token_count_bpe(docs),
     ):
         assert count_exchanges(df) == 0
+
+
+def test_corpus_stats_single_exchange(spark):
+    """Per-source corpus statistics ride the scan: the only shuffle is the
+    source-keyed aggregate."""
+    from clickestream_project_bigdata_spark.operators import text
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for df in (
+        text.readability_scores(docs),
+        text.tokenizer_fertility(docs),
+    ):
+        assert count_exchanges(df) <= 1
 
 
 def test_round4_operator_plan_shapes(spark):

@@ -380,19 +380,6 @@ def _q_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.item_cooccurrence(ev, k=100)
 
 
-def _q_similar_visitors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate visitors by item-set MinHash (portable hash family
-    — the oracle replays shingling/banding/verification bit-for-bit at
-    shingle_n=1, where the shingle set IS the visitor's item set and the
-    verified jaccard is exact set Jaccard; 42-band/r=3 banding, ~94%
-    recall at the 0.4 threshold — r=3 is the measured scale constraint,
-    band count is the recall lever, see the operator docstring)
-    (operators/dedup.py:similar_visitors_minhash)."""
-    return dedup.similar_visitors_minhash(
-        events_from_fixture(spark, sf_dir), threshold=0.4, hash="portable"
-    )
-
-
 def _q_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT surface: minute × event-type counts in wide format with an
     explicit value list (operators/analytics.py:event_type_pivot)."""
@@ -464,12 +451,6 @@ def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_spans(_docs(spark, sf_dir), span_tokens=16, k=100)
 
 
-def _q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-vs-MinHash pair-set agreement QA
-    (operators/dedup.py:dedup_method_agreement), portable hash family."""
-    return dedup.dedup_method_agreement(_docs(spark, sf_dir), threshold=0.7, hash="portable")
-
-
 def _q_rare_bigram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KenLM-lite fluency proxy: per-doc rare-corpus-bigram fraction
     (operators/text.py:rare_bigram_rate)."""
@@ -521,51 +502,6 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_keep_first(_docs(spark, sf_dir)).select("doc_id", "lang", "source", "n_chars")
-
-
-def _q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # max_pairs raised DELIBERATELY: the 100x all-dups checkpoint fixture
-    # estimates 1.54e10 candidate pairs and this entry is the measurement
-    # that the exact tier survives it (489 s where the DuckDB control
-    # times out); the library default (1e10) refuses corpora at that
-    # density and redirects to minhash_lsh_pairs — see the tier contract
-    # in ngram_jaccard_pairs' docstring / SCALING.md.
-    return dedup.ngram_jaccard_pairs(
-        _docs(spark, sf_dir), threshold=0.9, max_pairs=20_000_000_000
-    )
-
-
-def _q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized deduped corpus (operators/dedup.py:dedup_apply):
-    exact + MinHash near-dup removal, keep each cluster's minimum id;
-    portable hash family so the oracle replays the sketch."""
-    return dedup.dedup_apply(
-        _docs(spark, sf_dir), threshold=0.7, hash="portable"
-    ).select("doc_id", "lang", "source", "n_chars")
-
-
-def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs with the portable (md5-derived) hash
-    family — the DuckDB oracle replays shingling, permutations, banding,
-    and verification bit-for-bit (functions/portable.py)."""
-    return dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.7, hash="portable")
-
-
-def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, portable 60-bit signatures (md5 base hashes
-    → oracle-reproducible; the xxhash64/64-bit variant stays the library
-    default for speed)."""
-    return dedup.simhash_pairs(_docs(spark, sf_dir), max_hamming=8, bits=60, hash="portable")
-
-
-def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters: distributed connected components (iterative
-    min-label propagation) over portable MinHash near-dup pairs. The oracle
-    replays the edge set in SQL and closes it with a recursive CTE — the
-    iterative Spark algorithm and the declarative closure must agree on
-    every (doc_id, cluster_id)."""
-    pairs = dedup.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.9, hash="portable")
-    return dedup.duplicate_clusters(pairs)
 
 
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,12 +660,6 @@ def _q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.distinctive_terms(_docs(spark, sf_dir), k=5, min_count=3)
 
 
-def _q_neardup_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-Jaccard histogram + sketch calibration over the LSH
-    candidate pairs, portable hash family (operators/dedup.py)."""
-    return dedup.neardup_similarity_histogram(_docs(spark, sf_dir), hash="portable")
-
-
 def _q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix vs declared lang labels
     (operators/text.py)."""
@@ -772,15 +702,6 @@ def _q_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_token_savings(_docs(spark, sf_dir))
 
 
-def _q_neardup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-size distribution of the near-duplicate graph — the shape
-    diagnostic on the duplicate_clusters assignment (operators/dedup.py)."""
-    pairs = dedup.minhash_lsh_pairs(
-        _docs(spark, sf_dir), threshold=0.9, hash="portable"
-    )
-    return dedup.neardup_cluster_sizes(dedup.duplicate_clusters(pairs))
-
-
 def _q_path_conversion_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion rate by session opening path (operators/analytics.py);
     user_paths' sorted-struct core with the convert flag in-aggregation."""
@@ -812,18 +733,6 @@ def _q_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("token") != "")
     )
     return analytics.heavy_hitters_2pass(toks, key="token", share_ppm=5000)
-
-
-def _q_lsh_band_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Band-bucket size distribution of the portable MinHash banding
-    (operators/dedup.py:minhash_band_census) - the skew diagnostic that
-    predicts LSH pair-join stragglers (a bucket of n rows is an n(n-1)/2
-    pair task; past max_bucket_rows the pair join salts it)."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        minhash_band_census,
-    )
-
-    return minhash_band_census(_docs(spark, sf_dir), hash="portable")
 
 
 def _q_decile_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,7 +778,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "collocations": _q_collocations,
         "type_token_ratio": _q_type_token_ratio,
         "rare_bigram_rate": _q_rare_bigram_rate,
-        "dedup_agreement": _q_dedup_agreement,
         "incremental_dedup": _q_incremental_dedup,
         "item_trend": _q_item_trend,
         "trending_items": _q_trending_items,
@@ -889,7 +797,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "event_type_pivot": _q_event_type_pivot,
         "customer_value_deciles": _q_customer_value_deciles,
         "duplicate_spans": _q_duplicate_spans,
-        "similar_visitors": _q_similar_visitors,
         "sequential_funnel": _q_sequential_funnel,
         "item_cooccurrence": _q_item_cooccurrence,
         "retention_cohorts": _q_retention_cohorts,
@@ -901,7 +808,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "tfidf_top_terms": _q_tfidf_top_terms,
         "similar_docs_topk": _q_similar_docs,
         "repetition_score": _q_repetition_score,
-        "dedup_apply": _q_dedup_apply,
         # changed this round (grouping_id added) - re-verify
         "events_cube": _q_events_cube,
         # last driver-sampled in rounds 1-4
@@ -911,10 +817,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "doc_fingerprint": _q_fingerprint,
         "dedup_exact": _q_dedup_exact,
         "dedup_keep_first": _q_dedup_keep_first,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "dedup_minhash_lsh": _q_dedup_minhash,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_clusters": _q_dedup_clusters,
         # driver-verified green in round 5
         "sessions": _q_sessions,
         "session_length_quantiles": _q_session_length_quantiles,
@@ -957,7 +859,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
         "distinctive_terms": _q_distinctive_terms,
-        "neardup_histogram": _q_neardup_histogram,
         "langid_confusion": _q_langid_confusion,
         # round 8
         "position_attribution": _q_position_attribution,
@@ -968,10 +869,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "dedup_token_savings": _q_dedup_token_savings,
         "heavy_hitter_items": _q_heavy_hitter_items,
         "heavy_hitter_tokens": _q_heavy_hitter_tokens,
-        "neardup_cluster_sizes": _q_neardup_cluster_sizes,
         "path_conversion_rates": _q_path_conversion_rates,
         "returning_visitor_rate": _q_returning_visitor_rate,
-        "lsh_band_census": _q_lsh_band_census,
         "decile_revenue_share": _q_decile_revenue_share,
         "item_revisit_time": _q_item_revisit_time,
         "session_gap_histogram": _q_session_gap_histogram,
@@ -1013,7 +912,6 @@ _SAMPLING_PRIORITY: list[str] = [
     "item_cooccurrence",
     "item_dwell_time",
     "langid_confusion",
-    "neardup_histogram",
     "readability_scores",
     "repetition_score",
     "session_entry_exit",
@@ -1049,135 +947,10 @@ _NORM_TEXT_SQL = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
 _TOKS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
 
 
-# --- portable-sketch oracle builders ---------------------------------------
-# These replay the md5-derived sketch primitives (functions/portable.py) in
-# DuckDB SQL, interpolating the SAME Python-generated constants the Spark
-# plans use — which is what makes the sketch queries hash-checkable.
-
-def _shingles_cte(src: str = "documents", shingle_n: int = 2) -> str:
-    """Shared shingle CTEs: tokens → distinct word n-grams; docs with
-    < shingle_n tokens excluded (zero shingles: Jaccard undefined; mirrors
-    the Spark eligibility filter in minhash_lsh_pairs). ``shingle_n=1``
-    makes the shingle set the distinct token set itself (the visitor
-    item-set similarity spelling)."""
-    tk = f"tk AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM {src}), "
-    if shingle_n == 1:
-        return tk + (
-            "sh AS (SELECT doc_id, list_distinct(toks) AS shingles "
-            "FROM tk WHERE len(toks) >= 1)"
-        )
-    assert shingle_n == 2, "oracle spelling exists for n in (1, 2)"
-    return tk + (
-        "sh AS (SELECT doc_id, list_distinct(list_transform(generate_series(1, len(toks)-1), "
-        "i -> toks[i] || ' ' || toks[i+1])) AS shingles FROM tk WHERE len(toks) >= 2)"
-    )
-
-
-def _minhash_cte(
-    num_hashes: int = 64,
-    bands: int = 16,
-    src: str = "documents",
-    shingle_n: int = 2,
-) -> str:
-    """CTE chain ending in ``verified(doc_a, doc_b, est_jaccard, jaccard)``."""
-    a_co, b_co = portable.minhash_seeds(num_hashes)
-    r = num_hashes // bands
-    seeds_rows = ", ".join(f"({j}, {a_co[j]}, {b_co[j]})" for j in range(num_hashes))
-    p = portable.P31
-    return (
-        f"{_shingles_cte(src, shingle_n)}, "
-        f"seeds(j, a, b) AS (VALUES {seeds_rows}), "
-        f"hs AS (SELECT doc_id, {portable.phash60_sql('s')} % {p} AS h "
-        "FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)), "
-        f"mh AS (SELECT doc_id, j, MIN((a * h + b) % {p}) AS m "
-        "FROM hs CROSS JOIN seeds GROUP BY doc_id, j), "
-        f"bnd AS (SELECT doc_id, j // {r} AS band_idx, "
-        "string_agg(CAST(m AS VARCHAR), '_' ORDER BY j) AS band_key "
-        f"FROM mh GROUP BY doc_id, j // {r}), "
-        "cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bnd a "
-        "JOIN bnd b ON a.band_idx = b.band_idx AND a.band_key = b.band_key "
-        "AND a.doc_id < b.doc_id), "
-        "est AS (SELECT c.doc_a, c.doc_b, "
-        f"round(SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / {num_hashes}.0, 6) AS est_jaccard "
-        "FROM cand c JOIN mh ma ON ma.doc_id = c.doc_a "
-        "JOIN mh mb ON mb.doc_id = c.doc_b AND mb.j = ma.j GROUP BY c.doc_a, c.doc_b), "
-        "verified AS (SELECT e.doc_a, e.doc_b, e.est_jaccard, "
-        "round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) / "
-        "(len(sa.shingles) + len(sb.shingles) - len(list_intersect(sa.shingles, sb.shingles))), 6) AS jaccard "
-        "FROM est e JOIN sh sa ON sa.doc_id = e.doc_a JOIN sh sb ON sb.doc_id = e.doc_b)"
-    )
-
-
-def _minhash_sql(threshold: float) -> str:
-    return (
-        f"WITH {_minhash_cte()} SELECT doc_a, doc_b, est_jaccard, jaccard "
-        f"FROM verified WHERE jaccard >= {threshold}"
-    )
-
-
-def _visitor_minhash_sql(
-    threshold: float, num_hashes: int = 126, bands: int = 42
-) -> str:
-    """Visitor item-set MinHash replay: visitor-as-document (ascending
-    distinct itemids space-joined), unigram shingles — the shingle set IS
-    the item set, so ``jaccard`` is exact set Jaccard. 126 hashes × 42
-    bands (r=3) mirrors the operator's low-threshold banding default
-    (~94% recall at j=0.4 vs ~34% under the document preset's 16×4; r=2
-    would be ~99.6% but explodes on the nonzero background Jaccard at
-    visitor grain — r=3 is the measured constraint, band count the
-    recall lever, see the operator docstring)."""
-    vd = (
-        "vd AS (SELECT user_id AS doc_id, "
-        "array_to_string(list_transform(list_sort(list_distinct(list(itemid))), "
-        "x -> CAST(x AS VARCHAR)), ' ') AS text "
-        "FROM (SELECT user_id, CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid "
-        "FROM events) WHERE itemid IS NOT NULL GROUP BY user_id)"
-    )
-    return (
-        f"WITH {vd}, "
-        f"{_minhash_cte(num_hashes=num_hashes, bands=bands, src='vd', shingle_n=1)} "
-        "SELECT doc_a AS visitor_a, doc_b AS visitor_b, est_jaccard, jaccard "
-        f"FROM verified WHERE jaccard >= {threshold}"
-    )
-
-
-def _clusters_sql(threshold: float = 0.9, wrap: str | None = None) -> str:
-    """Portable MinHash pairs → undirected transitive closure (recursive
-    CTE) → cluster_id = min reachable id. Declarative mirror of the Spark
-    min-label-propagation loop. ``wrap`` replaces the final SELECT with a
-    query over the assignment exposed as CTE ``cl(doc_id, cluster_id)``."""
-    base = (
-        f"WITH RECURSIVE {_minhash_cte()}, "
-        f"pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= {threshold}), "
-        "edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs "
-        "UNION SELECT doc_b, doc_a FROM pairs), "
-        "reach(id, r) AS (SELECT s, s FROM edges "
-        "UNION SELECT e.s, rr.r FROM edges e JOIN reach rr ON rr.id = e.d)"
-    )
-    final = "SELECT id AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY id"
-    if wrap is None:
-        return f"{base} {final}"
-    return f"{base}, cl AS ({final}) {wrap}"
-
-
-def _simhash_sql(max_hamming: int = 8, bits: int = 60) -> str:
-    cb = bits // 4
-    mask = (1 << cb) - 1
-    return (
-        "WITH tk AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok FROM documents), "
-        f"hs AS (SELECT doc_id, {portable.phash60_sql('tok')} AS h FROM tk), "
-        "bitsum AS (SELECT doc_id, b, SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s "
-        f"FROM hs CROSS JOIN range({bits}) AS t(b) GROUP BY doc_id, b), "
-        "sig AS (SELECT doc_id, CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash "
-        "FROM bitsum GROUP BY doc_id), "
-        f"chunk AS (SELECT doc_id, simhash, c, (simhash >> ({cb} * c)) & {mask} AS ck "
-        "FROM sig CROSS JOIN range(4) AS t(c)), "
-        "pr AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-        "bit_count(xor(a.simhash, b.simhash)) AS hamming "
-        "FROM chunk a JOIN chunk b ON a.c = b.c AND a.ck = b.ck AND a.doc_id < b.doc_id) "
-        f"SELECT * FROM pr WHERE hamming <= {max_hamming}"
-    )
-
+# --- portable-sketch oracle builder ----------------------------------------
+# Replays the md5-derived hash (functions/portable.py) in DuckDB SQL,
+# interpolating the SAME Python constant the Spark plan uses — which is what
+# makes the KMV sketch query hash-checkable.
 
 def _kmv_sql(k: int = 32, grain: str = "hour") -> str:
     return (
@@ -1830,7 +1603,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM pairs GROUP BY 1, 2 "
             "ORDER BY n_sessions DESC, item_a ASC, item_b ASC LIMIT 100"
         ),
-        "similar_visitors": _visitor_minhash_sql(0.4),
         "event_type_pivot": (
             f"WITH {_EV} "
             "SELECT date_trunc('minute', event_time) AS minute, "
@@ -1855,25 +1627,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs "
             "FROM tk WHERE token <> '' GROUP BY token "
             "ORDER BY n_occurrences DESC, token ASC LIMIT 100"
-        ),
-        "dedup_agreement": (
-            f"WITH {_minhash_cte()}, "
-            "mh_pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.7), "
-            f"fp AS (SELECT doc_id, md5({_NORM_TEXT_SQL}) AS f FROM documents), "
-            "ex AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b "
-            "FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id), "
-            "tagged AS (SELECT COALESCE(e.one, 0) AS e, COALESCE(m.one, 0) AS m "
-            "FROM (SELECT doc_a, doc_b, 1 AS one FROM ex) e "
-            "FULL OUTER JOIN (SELECT doc_a, doc_b, 1 AS one FROM mh_pairs) m "
-            "USING (doc_a, doc_b)) "
-            "SELECT CAST(SUM(e) AS BIGINT) AS n_exact_pairs, "
-            "CAST(SUM(m) AS BIGINT) AS n_minhash_pairs, "
-            "CAST(SUM(e * m) AS BIGINT) AS n_both, "
-            "CAST(SUM(e * (1 - m)) AS BIGINT) AS n_exact_only, "
-            "CAST(SUM((1 - e) * m) AS BIGINT) AS n_minhash_only, "
-            "CAST(COALESCE((SUM(e * m) * 1000000) // "
-            "(SUM(e) + SUM(m) - SUM(e * m)), 0) AS BIGINT) AS agreement_ppm "
-            "FROM tagged"
         ),
         "rare_bigram_rate": (
             f"WITH tk AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
@@ -2026,15 +1779,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, lang, source, n_chars FROM documents WHERE doc_id IN "
             f"(SELECT MIN(doc_id) FROM documents GROUP BY md5({_NORM_TEXT_SQL}))"
         ),
-        "dedup_ngram_jaccard": (
-            f"WITH d AS (SELECT doc_id, list_distinct({_TOKS_SQL}) AS toks, "
-            "CAST(n_chars // 64 AS BIGINT) AS block FROM documents), "
-            "p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, "
-            "round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) / "
-            "len(list_distinct(list_concat(a.toks, b.toks))), 6) AS jaccard "
-            "FROM d a JOIN d b ON a.block = b.block AND a.doc_id < b.doc_id) "
-            "SELECT * FROM p WHERE jaccard >= 0.9"
-        ),
         "dup_histogram": (
             f"WITH fp AS (SELECT md5({_NORM_TEXT_SQL}) AS f FROM documents), "
             "g AS (SELECT f, CAST(COUNT(*) AS BIGINT) AS group_size FROM fp GROUP BY f) "
@@ -2059,23 +1803,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(len(chunk) AS BIGINT) AS n_tokens, "
             "array_to_string(chunk, ' ') AS chunk_text FROM s"
         ),
-        "dedup_minhash_lsh": _minhash_sql(threshold=0.7),
-        "dedup_apply": (
-            "WITH RECURSIVE "
-            "kept2 AS (SELECT * FROM documents WHERE doc_id IN "
-            f"(SELECT MIN(doc_id) FROM documents GROUP BY md5({_NORM_TEXT_SQL}))), "
-            f"{_minhash_cte(src='kept2')}, "
-            "pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.7), "
-            "edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs "
-            "UNION SELECT doc_b, doc_a FROM pairs), "
-            "reach(id, r) AS (SELECT s, s FROM edges "
-            "UNION SELECT e.s, rr.r FROM edges e JOIN reach rr ON rr.id = e.d), "
-            "losers AS (SELECT id AS doc_id FROM reach GROUP BY id HAVING MIN(r) <> id) "
-            "SELECT doc_id, lang, source, n_chars FROM kept2 "
-            "WHERE doc_id NOT IN (SELECT doc_id FROM losers)"
-        ),
-        "dedup_simhash": _simhash_sql(max_hamming=8, bits=60),
-        "dedup_clusters": _clusters_sql(threshold=0.9),
         "token_length_distribution": (
             f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS t FROM documents) "
             "SELECT CAST(length(t) AS BIGINT) AS token_len, "
@@ -2259,16 +1986,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT source, term, n_source, n_rest, odds_ppm, rank FROM r "
             "WHERE rank <= 5 ORDER BY source ASC, rank ASC"
         ),
-        "neardup_histogram": (
-            f"WITH {_minhash_cte()}, "
-            "bkt AS (SELECT least(CAST(floor(jaccard * 20) AS INT), 19) AS bucket, "
-            "est_jaccard, jaccard FROM verified), "
-            "g AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pairs, "
-            "round(CAST(SUM(CAST(est_jaccard - jaccard AS DECIMAL(9,6))) AS DOUBLE) "
-            "/ COUNT(*), 6) AS mean_est_error FROM bkt GROUP BY bucket) "
-            "SELECT bucket, round(bucket / 20.0, 6) AS bucket_start, n_pairs, "
-            "mean_est_error FROM g ORDER BY bucket ASC"
-        ),
         "langid_confusion": _langid_confusion_sql(),
         # --- round 8 ---
         "position_attribution": (
@@ -2390,24 +2107,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_returning, "
             "round(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) / "
             "CAST(COUNT(*) AS DOUBLE), 6) AS returning_rate FROM per"
-        ),
-        "neardup_cluster_sizes": _clusters_sql(
-            threshold=0.9,
-            wrap=(
-                "SELECT CAST(s AS BIGINT) AS cluster_size, "
-                "CAST(COUNT(*) AS BIGINT) AS n_clusters, "
-                "CAST(SUM(s) AS BIGINT) AS n_docs FROM "
-                "(SELECT cluster_id, COUNT(*) AS s FROM cl GROUP BY 1) "
-                "GROUP BY s"
-            ),
-        ),
-        "lsh_band_census": (
-            f"WITH {_minhash_cte()} "
-            "SELECT CAST(n AS BIGINT) AS bucket_size, "
-            "CAST(COUNT(*) AS BIGINT) AS n_buckets, "
-            "CAST(SUM(n) AS BIGINT) AS n_rows FROM "
-            "(SELECT band_idx, band_key, COUNT(*) AS n FROM bnd GROUP BY 1, 2) "
-            "GROUP BY 1"
         ),
         "decile_revenue_share": (
             "WITH spend AS (SELECT o_custkey, "

@@ -223,7 +223,7 @@ def main() -> None:
 
         low_cpus = 8 if scaling_env == "1" else max(1, int(scaling_env))
         high_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-        probe_default = "dedup_minhash_lsh,char_entropy"
+        probe_default = "rfm_segments,char_entropy"
         probes = [
             p.strip()
             for p in os.environ.get(
@@ -236,11 +236,12 @@ def main() -> None:
             """One probe query at one core count in its OWN subprocess —
             fresh JVM, query-isolated. Rep-major co-tenancy in a shared
             JVM distorts light queries next to allocation-heavy ones
-            (measured: char_entropy 10.5 s sharing a 32-thread JVM with
-            dedup_minhash_lsh vs 2.0 s isolated), so the scaling ratio is
-            taken from symmetric isolated runs; the co-tenant bench
-            timing stays in `queries` as `bench_sec`."""
-            child_detail = tempfile.mktemp(prefix="bench_scaling_", suffix=".json")
+            (measured: char_entropy 10.5 s sharing a 32-thread JVM with an
+            allocation-heavy sketch query vs 2.0 s isolated), so the
+            scaling ratio is taken from symmetric isolated runs; the
+            co-tenant bench timing stays in `queries` as `bench_sec`."""
+            fd, child_detail = tempfile.mkstemp(prefix="bench_scaling_", suffix=".json")
+            os.close(fd)
             env = dict(os.environ)
             env.update(
                 {
@@ -252,16 +253,19 @@ def main() -> None:
                 }
             )
             env.pop("SPARK_GRAFT_BENCH_SCALING", None)  # no recursion
-            for attempt in range(2):  # one retry on a crashed child
-                p = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__)],
-                    capture_output=True,
-                    text=True,
-                    env=env,
-                )
-                if p.returncode == 0 and os.path.exists(child_detail):
-                    with open(child_detail) as fh:
-                        return json.load(fh).get("queries", {}).get(name)
+            try:
+                for attempt in range(2):  # one retry on a crashed child
+                    p = subprocess.run(
+                        [sys.executable, os.path.abspath(__file__)],
+                        capture_output=True,
+                        text=True,
+                        env=env,
+                    )
+                    if p.returncode == 0 and os.path.getsize(child_detail):
+                        with open(child_detail) as fh:
+                            return json.load(fh).get("queries", {}).get(name)
+            finally:
+                os.unlink(child_detail)
             return {"error": (p.stderr or p.stdout)[-200:], "rc": p.returncode}
 
         sq = {}
@@ -336,7 +340,7 @@ def main() -> None:
         # effective parallelism on the record (VERDICT r15 #2: the driver
         # could not verify $SPARK_GRAFT_CPUS was honored from the artifact
         # alone) — read back from the LIVE session, not the env var
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)),
+        "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
         "duckdb_total": detail["duckdb_total"],
         "protocol": "warmrep-median",

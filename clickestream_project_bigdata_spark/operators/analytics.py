@@ -2554,8 +2554,7 @@ def heavy_hitters_2pass(
     At 100 TB the classic plan ("count every key, filter") shuffles
     billions of distinct keys to find the dozens that matter; this plan's
     exchange carries O(partitions * k) candidate rows plus the partial
-    counts of candidates only. Same candidate-superset-then-exact-verify
-    idiom as the MinHash/LSH dedup family (``operators/dedup.py``).
+    counts of candidates only: a candidate superset, then an exact verify.
     Tradeoff to know: pass 1 funnels every input row through the
     Python/Arrow boundary once — vectorized ``value_counts`` per batch,
     but still a serialization cost the pure-JVM full-shuffle count does

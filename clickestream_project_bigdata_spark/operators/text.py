@@ -121,10 +121,10 @@ def lang_id(
 
 
 def word_ngrams_col(toks: Column, n: int) -> Column:
-    """Array of space-joined word n-grams of a token array. Short-doc guard
-    (same as dedup.shingles_from_tokens): size<n would make the sequence
-    descend and element_at go out of range; such docs yield an empty array
-    (so an explode simply drops them)."""
+    """Array of space-joined word n-grams of a token array. Short-doc
+    guard: size<n would make the sequence descend and element_at go out
+    of range; such docs yield an empty array (so an explode simply drops
+    them)."""
     return F.when(
         F.size(toks) >= n,
         F.transform(
@@ -322,8 +322,8 @@ def similar_docs_topk(
     top-k set is deterministic. Scale shape: the query's token set is a
     1-row broadcast; the corpus side is one scan computing a per-row set
     intersection, then TakeOrderedAndProject — no shuffle of the corpus,
-    same plan at any corpus size. For *all-pairs* similarity use the
-    MinHash/SimHash sketches; this is the single-query form.
+    same plan at any corpus size. This is the single-query form; the
+    package has no all-pairs similarity join.
 
     If ``query_id`` is absent from ``docs``, the broadcast query side is
     empty and the result is an EMPTY frame — indistinguishable from "no
@@ -491,10 +491,12 @@ def type_token_ratio(
 
     Output (stratum, n_docs, n_tokens, n_types, ttr_ppm) with
     ``ttr_ppm = n_types·10⁶ DIV n_tokens`` — integer-exact, no float
-    division. One explode + ONE (stratum, token)-free aggregation:
-    count + count_distinct share a single stratum-keyed exchange
-    (count_distinct's Expand collapses map-side, same trade as
-    token_frequencies)."""
+    division. One explode, then two exchanges: the two count_distincts and
+    the count share one ``Expand`` (a row per token for the stratum, for
+    (stratum, token) and for (stratum, doc_id)), whose partial aggregate
+    shuffles on (stratum, token, doc_id, group id) and so carries each
+    distinct token and doc once per map partition; a second exchange on
+    the stratum alone merges the partial counts."""
     exploded = docs.select(
         F.col(by), F.col("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("__t")
     ).filter(F.col("__t") != "")

@@ -7,7 +7,7 @@ with ``spark.ui.enabled`` either way) for every stage of a job group and
 compare each stage's slowest task against its median.
 ``tests/test_skew.py`` uses them to ASSERT no straggler on deliberately
 hostile fixtures (one visitor owning 20% of events, one token in 90% of
-docs, template-duplicate docs sharing every LSH band).
+docs).
 """
 
 from __future__ import annotations

@@ -58,13 +58,11 @@ def test_text_and_curation_on_empty_docs(spark, empty_docs):
     assert text.similar_docs_topk(empty_docs, query_id=0).count() == 0
 
 
-def test_dedup_similarity_on_empty(spark, empty_docs):
+def test_exact_dedup_on_empty(spark, empty_docs):
     from clickestream_project_bigdata_spark.operators import dedup
 
     assert dedup.exact_dedup(empty_docs).count() == 0
     assert dedup.dedup_keep_first(empty_docs).count() == 0
-    assert dedup.minhash_lsh_pairs(empty_docs).count() == 0
-    assert dedup.simhash_pairs(empty_docs).count() == 0
 
 
 def test_null_text_documents_flow_through(spark):

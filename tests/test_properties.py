@@ -224,58 +224,6 @@ def test_latest_event_state_is_argmax(spark, n_events, n_keys):
     assert got == {k: eid for k, (ts, eid) in want.items()}
 
 
-def test_duplicate_clusters_distributed_path_matches_union_find(spark):
-    """Scale-proof (VERDICT r5 #4): force the distributed min-label
-    propagation loop (the >max_edges_local path) and assert it produces
-    exactly the clusters the bounded driver-side union-find produces on the
-    same graph — chains (multi-hop propagation), a clique, crossing edges,
-    and isolated pairs."""
-    from clickestream_project_bigdata_spark.operators.dedup import duplicate_clusters
-
-    edges = []
-    # 10 chains of length 6: 0-1-2-3-4-5, 10-11-..., tests O(diameter) rounds
-    for base in range(0, 100, 10):
-        edges += [(base + i, base + i + 1) for i in range(5)]
-    # a clique on {200..204}
-    edges += [(200 + i, 200 + j) for i in range(5) for j in range(i + 1, 5)]
-    # crossing edges merging two chains through their tails
-    edges += [(5, 15), (25, 35)]
-    # isolated pairs
-    edges += [(300, 301), (302, 303)]
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-
-    local = {
-        (r.doc_id, r.cluster_id)
-        for r in duplicate_clusters(pairs).collect()  # union-find fast path
-    }
-    dist = {
-        (r.doc_id, r.cluster_id)
-        for r in duplicate_clusters(pairs, max_edges_local=0).collect()
-    }
-    assert dist == local
-    # spot-pin semantics: cluster label is the component MINIMUM
-    as_map = dict(dist)
-    assert as_map[5] == 0 and as_map[15] == 0      # merged chains 0- and 10-
-    assert as_map[204] == 200                       # clique
-    assert as_map[303] == 302                       # isolated pair
-
-
-def test_duplicate_clusters_cap_boundary_routes_to_distributed(spark):
-    """The cap check is on the deduplicated symmetric edge list: a graph
-    whose edge count exceeds a small max_edges_local takes the distributed
-    loop and still matches the fast path's answer."""
-    from clickestream_project_bigdata_spark.operators.dedup import duplicate_clusters
-
-    edges = [(i, i + 1) for i in range(0, 40, 2)]  # 20 isolated pairs
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        (r.doc_id, r.cluster_id)
-        for r in duplicate_clusters(pairs, max_edges_local=10).collect()
-    }
-    want = {(i, i) for i in range(0, 40, 2)} | {(i + 1, i) for i in range(0, 40, 2)}
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # round 6: funnel / attribution / incremental-dedup invariants
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Adversarial-skew fixture (VERDICT r7 #8): the organic fixtures spread
-keys evenly, so every skew guard (window partitioning, `max_bucket_rows`,
-blocked candidate generation) had only been exercised on friendly data.
+keys evenly, so every skew guard (window partitioning, blocked candidate
+generation) had only been exercised on friendly data.
 This module builds deliberately hostile inputs — ONE visitor owning 20% of
 all events, ONE token in 90% of all documents — and asserts the guarded
 operators finish without a straggler: no task in any stage of the
@@ -16,8 +16,6 @@ import datetime as dt
 import random
 
 import pytest
-
-from pyspark.sql import functions as F
 
 # the detection machinery lives in the package (plans.diagnostics); this
 # module keeps the adversarial fixtures + asserts
@@ -140,75 +138,3 @@ def test_straggler_harness_sees_tasks(spark, skewed_events):
             tl = store.taskList(int(sid), 0, 100_000)
             total_tasks += tl.size()
     assert total_tasks >= 8
-
-
-@pytest.fixture(scope="module")
-def alldup_docs(spark):
-    """The adversarial 100x-checkpoint shape in miniature: every doc is a
-    copy from a handful of templates, so each template's docs share EVERY
-    minhash band — one band bucket per template holds the whole group and
-    the pair join concentrates n(n-1)/2 work on one key."""
-    rows = []
-    for i in range(900):
-        body = f"template {i % 3} body with shared repeated boilerplate text tokens"
-        rows.append((i, body, len(body)))
-    return spark.createDataFrame(rows, "doc_id long, text string, n_chars int")
-
-
-def test_lsh_band_salt_guard_no_straggler(spark, alldup_docs):
-    """300 docs per template share every band; with max_bucket_rows below
-    the group size the salted path must split each bucket's pair work
-    across salt values instead of one task owning the n^2 blowup."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    out = minhash_lsh_pairs(
-        alldup_docs, threshold=0.9, max_bucket_rows=64, salt_buckets=8
-    )
-    n = _run_grouped(spark, "skew-lshsalt", out)
-    # 3 templates x C(300, 2) exact-verified identical pairs
-    assert n == 3 * (300 * 299) // 2
-    _assert_no_straggler(spark, "skew-lshsalt")
-
-
-def test_lsh_band_salt_candidates_identical(spark, alldup_docs):
-    """Salting must only re-distribute the join — the candidate/pair SET is
-    bit-identical to the unsalted spelling (superset property: a replica of
-    b exists at every salt, so each pair still meets exactly once per band)."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    small = alldup_docs.filter(F.col("doc_id") < 120)
-    salted = minhash_lsh_pairs(
-        small, threshold=0.9, max_bucket_rows=16, salt_buckets=4
-    )
-    plain = minhash_lsh_pairs(small, threshold=0.9, salt_buckets=1)
-    assert salted.exceptAll(plain).count() == 0
-    assert plain.exceptAll(salted).count() == 0
-
-
-def test_lsh_salt_none_is_lazy_and_equal(spark, alldup_docs):
-    """ADVICE r10: salt_buckets=None is the documented FULLY-LAZY mode —
-    building the plan must run ZERO jobs (the default's skew census pays a
-    full sketch at call time), and the pair set must equal the default's."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    from unittest.mock import patch
-
-    from pyspark.sql import DataFrame
-
-    small = alldup_docs.filter(F.col("doc_id") < 120)
-    # plan build must trigger NO action — take/collect raising proves it
-    with patch.object(
-        DataFrame, "take", side_effect=AssertionError("eager take() in lazy mode")
-    ), patch.object(
-        DataFrame, "collect", side_effect=AssertionError("eager collect() in lazy mode")
-    ):
-        lazy = minhash_lsh_pairs(small, threshold=0.9, salt_buckets=None)
-    default = minhash_lsh_pairs(small, threshold=0.9)
-    assert lazy.exceptAll(default).count() == 0
-    assert default.exceptAll(lazy).count() == 0

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from clickestream_project_bigdata_spark.functions import portable  # noqa: E402
 from clickestream_project_bigdata_spark.operators import (  # noqa: E402
     analytics,
-    dedup,
     text,
 )
 from clickestream_project_bigdata_spark.operators.sessionize import (  # noqa: E402
@@ -301,26 +300,10 @@ def _q_bot_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.bot_flags(events_from_fixture(spark, sf_dir))
 
 
-def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-snapshot ingest dedup: docs with doc_id % 3 == 0 are the
-    incoming batch, the rest the already-ingested corpus
-    (operators/dedup.py)."""
-    docs = _docs(spark, sf_dir)
-    new_batch = docs.filter(F.col("doc_id") % 3 == 0)
-    seen = docs.filter(F.col("doc_id") % 3 != 0)
-    return dedup.incremental_dedup(new_batch, seen).select("doc_id", "source")
-
-
 def _q_item_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-item OLS trend of daily interactions from exact integer sums
     (operators/analytics.py)."""
     return analytics.item_trend(events_from_fixture(spark, sf_dir))
-
-
-def _q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc OOV rate vs the corpus's own top-50 token vocabulary
-    (operators/text.py)."""
-    return text.vocab_coverage(_docs(spark, sf_dir), vocab_size=50)
 
 
 def _q_minute_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,7 +383,7 @@ def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
     return wrapped
 
 
-# --- scale extensions: dedup / text ---------------------------------------
+# --- scale extensions: text ----------------------------------------------
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, "documents")
@@ -408,10 +391,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.text_stats(_docs(spark, sf_dir))
-
-
-def _q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.token_count_bpe(_docs(spark, sf_dir))
 
 
 def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,56 +413,12 @@ def _q_token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.token_frequencies(_docs(spark, sf_dir), k=100)
 
 
-def _q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate rate per source feed
-    (operators/dedup.py:dup_rate_by_stratum)."""
-    from clickestream_project_bigdata_spark.operators.dedup import dup_rate_by_stratum
-
-    return dup_rate_by_stratum(_docs(spark, sf_dir), by=("source",))
-
-
-def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring (token-span) duplication detector
-    (operators/dedup.py:duplicate_spans): 16-token windows occurring 2+
-    times, top-100."""
-    from clickestream_project_bigdata_spark.operators.dedup import duplicate_spans
-
-    return duplicate_spans(_docs(spark, sf_dir), span_tokens=16, k=100)
-
-
-def _q_rare_bigram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KenLM-lite fluency proxy: per-doc rare-corpus-bigram fraction
-    (operators/text.py:rare_bigram_rate)."""
-    from clickestream_project_bigdata_spark.operators.text import rare_bigram_rate
-
-    return rare_bigram_rate(_docs(spark, sf_dir), rare_below=3)
-
-
 def _q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 adjacent-token collocations by PMI, scored as an exact
     integer-scaled ratio (operators/text.py:collocations)."""
     from clickestream_project_bigdata_spark.operators.text import collocations
 
     return collocations(_docs(spark, sf_dir), k=100, min_count=5)
-
-
-def _q_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source lexical diversity (type-token ratio, integer ppm)
-    (operators/text.py:type_token_ratio)."""
-    from clickestream_project_bigdata_spark.operators.text import type_token_ratio
-
-    return type_token_ratio(_docs(spark, sf_dir), by="source")
-
-
-def _q_mask_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply form of exact-substring dedup — mask every non-first
-    occurrence of a duplicated 16-token window and rebuild the text
-    (operators/dedup.py:mask_duplicate_spans); slim digest output."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        mask_duplicate_spans,
-    )
-
-    return mask_duplicate_spans(_docs(spark, sf_dir), span_tokens=16)
 
 
 def _q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,27 +431,10 @@ def _q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.repetition_score(_docs(spark, sf_dir), n=3)
 
 
-def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.exact_dedup(_docs(spark, sf_dir))
-
-
-def _q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.dedup_keep_first(_docs(spark, sf_dir)).select("doc_id", "lang", "source", "n_chars")
-
-
 def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window token chunking (operators/text.py:chunk_documents):
     64-token chunks, 16-token overlap — zero-shuffle posexplode+slice."""
     return text.chunk_documents(_docs(spark, sf_dir), max_tokens=64, overlap=16)
-
-
-def _q_dup_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate group-size distribution (operators/dedup.py)."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        duplication_histogram,
-    )
-
-    return duplication_histogram(_docs(spark, sf_dir))
 
 
 def _q_item_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,15 +467,6 @@ def _q_binned_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.binned_quantiles(events_from_fixture(spark, sf_dir))
 
 
-def _q_cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise cross-source content overlap (operators/dedup.py) at
-    SPAN grain (8-token window digests — shared boilerplate shows up long
-    before whole docs collide) on the shared pairwise_set_overlap core."""
-    return dedup.cross_source_duplication(
-        _docs(spark, sf_dir), grain="span", span_tokens=8
-    )
-
-
 def _q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of item popularity (operators/analytics.py) at
     count-value grain with DECIMAL(38,0) exact integer sums; oracle =
@@ -581,57 +490,6 @@ def _q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise token-vocabulary Jaccard between sources
     (operators/text.py), sharing analytics.pairwise_set_overlap."""
     return text.source_vocab_overlap(_docs(spark, sf_dir))
-
-
-def _q_token_length_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-length histogram (occurrences + distinct types per length) —
-    tokenizer QA (operators/text.py)."""
-    return text.token_length_distribution(_docs(spark, sf_dir))
-
-
-def _q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document character-level Shannon entropy — the gibberish /
-    compressibility quality proxy (operators/text.py)."""
-    return text.char_entropy(_docs(spark, sf_dir))
-
-
-def _q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source Flesch-style readability from exact integer sums
-    (operators/text.py)."""
-    return text.readability_scores(_docs(spark, sf_dir))
-
-
-def _q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One BPE training iteration: corpus-weighted adjacent-char-pair
-    counts over the VOCAB grain, top-100 (operators/text.py)."""
-    return text.bpe_merge_step(_docs(spark, sf_dir), top_n=100, min_pair_count=2)
-
-
-def _q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document Gopher-style quality rule flags (Rae et al. 2021
-    doc-level subset), booleans cast to INT for the cross-engine hash
-    (operators/text.py)."""
-    df = text.gopher_quality_flags(_docs(spark, sf_dir))
-    return df.select(
-        *[
-            F.col(c).cast("int").alias(c)
-            if c.startswith("ok_") or c == "passes_all"
-            else F.col(c)
-            for c in df.columns
-        ]
-    )
-
-
-def _q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth curve via first-occurrence counting +
-    the shared distributed prefix sum (operators/text.py)."""
-    return text.vocab_growth(_docs(spark, sf_dir))
-
-
-def _q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source BPE-pieces-per-word fertility — the per-domain token
-    budget cost model (operators/text.py)."""
-    return text.tokenizer_fertility(_docs(spark, sf_dir))
 
 
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -688,18 +546,6 @@ def _q_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """±3-window unordered skip-gram pairs, integer-exact PMI scores
     (operators/text.py)."""
     return text.skipgram_pmi(_docs(spark, sf_dir), window=3, k=100, min_count=5)
-
-
-def _q_token_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Head-coverage curve: corpus share of the top-{10,100,1000} tokens
-    (operators/text.py)."""
-    return text.token_coverage_topk(_docs(spark, sf_dir))
-
-
-def _q_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token volume before/after global keep-first exact dedup
-    (operators/dedup.py)."""
-    return dedup.dedup_token_savings(_docs(spark, sf_dir))
 
 
 def _q_path_conversion_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,18 +613,13 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # sampling order is imposed by _SAMPLING_PRIORITY below (rule:
         # ever-FAILED > never-sampled > changed-this-round > rest).
         "binned_quantiles": _q_binned_quantiles,
-        "cross_source_duplication": _q_cross_source_duplication,
         "gini_concentration": _q_gini_concentration,
         "burstiness": _q_burstiness,
         "novelty_rate": _q_novelty_rate,
         "source_vocab_overlap": _q_source_vocab_overlap,
         "audience_overlap": _q_audience_overlap,
         "zipf_slope": _q_zipf_slope,
-        "mask_duplicate_spans": _q_mask_duplicate_spans,
         "collocations": _q_collocations,
-        "type_token_ratio": _q_type_token_ratio,
-        "rare_bigram_rate": _q_rare_bigram_rate,
-        "incremental_dedup": _q_incremental_dedup,
         "item_trend": _q_item_trend,
         "trending_items": _q_trending_items,
         "conversion_latency": _q_conversion_latency,
@@ -790,13 +631,10 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "timed_funnel": _q_timed_funnel,
         "concurrent_sessions": _q_concurrent_sessions,
         "bot_flags": _q_bot_flags,
-        "vocab_coverage": _q_vocab_coverage,
         "minute_anomalies": _q_minute_anomalies,
         "token_frequencies": _q_token_frequencies,
-        "dup_rate_by_source": _q_dup_rate_by_source,
         "event_type_pivot": _q_event_type_pivot,
         "customer_value_deciles": _q_customer_value_deciles,
-        "duplicate_spans": _q_duplicate_spans,
         "sequential_funnel": _q_sequential_funnel,
         "item_cooccurrence": _q_item_cooccurrence,
         "retention_cohorts": _q_retention_cohorts,
@@ -812,11 +650,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "events_cube": _q_events_cube,
         # last driver-sampled in rounds 1-4
         "text_stats": _q_text_stats,
-        "token_count_bpe": _q_token_count_bpe,
         "lang_id": _q_lang_id,
         "doc_fingerprint": _q_fingerprint,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_keep_first": _q_dedup_keep_first,
         # driver-verified green in round 5
         "sessions": _q_sessions,
         "session_length_quantiles": _q_session_length_quantiles,
@@ -843,18 +678,10 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "windowed_bounce_rate": _q_windowed_bounce_rate,
         "windowed_funnel": _q_windowed_funnel,
         "chunk_documents": _q_chunk_documents,
-        "dup_histogram": _q_dup_histogram,
         "item_skew_profile": _q_item_skew_profile,
         "active_users_approx": _q_active_users_approx,
         "cleanse_events": _q_cleanse,
         # --- round-7 additions (never sampled yet; prioritized below)
-        "token_length_distribution": _q_token_length_distribution,
-        "char_entropy": _q_char_entropy,
-        "readability_scores": _q_readability_scores,
-        "bpe_merge_step": _q_bpe_merge_step,
-        "gopher_quality_flags": _q_gopher_quality_flags,
-        "vocab_growth": _q_vocab_growth,
-        "tokenizer_fertility": _q_tokenizer_fertility,
         "first_touch_funnel": _q_first_touch_funnel,
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
@@ -865,8 +692,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "cart_abandonment": _q_cart_abandonment,
         "repeat_purchase_rate": _q_repeat_purchase_rate,
         "skipgram_pmi": _q_skipgram_pmi,
-        "token_coverage_topk": _q_token_coverage_topk,
-        "dedup_token_savings": _q_dedup_token_savings,
         "heavy_hitter_items": _q_heavy_hitter_items,
         "heavy_hitter_tokens": _q_heavy_hitter_tokens,
         "path_conversion_rates": _q_path_conversion_rates,
@@ -894,32 +719,24 @@ _SAMPLING_PRIORITY: list[str] = [
     # 2) r12-vintage (alphabetical) — the
     #    next-oldest cohort fills the ~50-row sample; the tail rolls to
     #    the next round
-    "bpe_merge_step",
     "cart_abandonment",
     "collocations",
-    "cross_source_duplication",
     "customer_value_deciles",
     "decile_revenue_share",
-    "dedup_token_savings",
     "distinctive_terms",
-    "dup_rate_by_source",
-    "duplicate_spans",
     "event_type_pivot",
     "events_column_profile",
     "first_touch_funnel",
     "gini_concentration",
-    "gopher_quality_flags",
     "item_cooccurrence",
     "item_dwell_time",
     "langid_confusion",
-    "readability_scores",
     "repetition_score",
     "session_entry_exit",
     "similar_docs_topk",
     "source_vocab_overlap",
     "tfidf_top_terms",
     "timed_funnel",
-    "token_length_distribution",
 ]
 
 
@@ -1025,22 +842,6 @@ def oracle_sql() -> dict[str, str]:
             "round(MIN(CASE WHEN cum >= ceil(CAST(0.99 AS DOUBLE) * n_values) THEN bin END) "
             "* CAST(0.5 AS DOUBLE), 6) AS q99_lo "
             "FROM cw CROSS JOIN t GROUP BY n_values"
-        ),
-        "cross_source_duplication": (
-            f"WITH tk AS (SELECT source, {_TOKS_SQL} AS toks FROM documents), "
-            "fp AS (SELECT source, md5(array_to_string(list_slice(toks, i, i+7), ' ')) AS f "
-            "FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-7)) AS t(i) "
-            "WHERE len(toks) >= 8), "
-            "ut AS (SELECT DISTINCT f, source FROM fp), "
-            "per AS (SELECT source, COUNT(*) AS n FROM ut GROUP BY source), "
-            "b AS (SELECT a.source AS source_a, c.source AS source_b, "
-            "CAST(COUNT(*) AS BIGINT) AS fingerprints_shared FROM ut a "
-            "JOIN ut c ON a.f = c.f AND a.source < c.source GROUP BY 1, 2) "
-            "SELECT source_a, source_b, CAST(pa.n AS BIGINT) AS fingerprints_a, "
-            "CAST(pb.n AS BIGINT) AS fingerprints_b, fingerprints_shared, "
-            "round(fingerprints_shared / CAST(pa.n + pb.n - fingerprints_shared AS DOUBLE), 6) AS jaccard "
-            "FROM b JOIN per pa ON pa.source = b.source_a "
-            "JOIN per pb ON pb.source = b.source_b"
         ),
         "gini_concentration": (
             "WITH ev AS (SELECT CAST(regexp_extract(props, '(\\d+)', 1) AS BIGINT) AS itemid FROM events), "
@@ -1434,19 +1235,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(peak_per_minute AS BIGINT) AS peak_per_minute, "
             "peak_per_minute > 10 AND total_events >= 20 AS is_bot FROM pu"
         ),
-        "incremental_dedup": (
-            "WITH seen AS (SELECT DISTINCT "
-            "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS sfp "
-            "FROM documents WHERE doc_id % 3 <> 0), "
-            "batch AS (SELECT doc_id, source, "
-            "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp "
-            "FROM documents WHERE doc_id % 3 = 0), "
-            "fresh AS (SELECT * FROM batch WHERE NOT EXISTS "
-            "(SELECT 1 FROM seen WHERE sfp = fp)), "
-            "keep AS (SELECT MIN(doc_id) AS kid FROM fresh GROUP BY fp) "
-            "SELECT doc_id, source FROM fresh WHERE EXISTS "
-            "(SELECT 1 FROM keep WHERE kid = doc_id)"
-        ),
         "item_trend": (
             f"WITH {_EV}, "
             "daily AS (SELECT itemid, "
@@ -1462,22 +1250,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(sx AS DOUBLE) * CAST(total_events AS DOUBLE)) / "
             "(CAST(n_days AS DOUBLE) * CAST(sxx AS DOUBLE) - "
             "CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) END AS slope FROM st"
-        ),
-        "vocab_coverage": (
-            "WITH tk AS (SELECT doc_id, "
-            "unnest(string_split_regex(lower(trim(text)), '\\s+')) AS token "
-            "FROM documents), "
-            "tk2 AS (SELECT * FROM tk WHERE token <> ''), "
-            "vocab AS (SELECT token AS vtok FROM "
-            "(SELECT token, COUNT(*) AS cnt FROM tk2 GROUP BY 1) "
-            "ORDER BY cnt DESC, token ASC LIMIT 50), "
-            "per AS (SELECT doc_id, COUNT(*) AS n_tokens, "
-            "CAST(SUM(CASE WHEN vtok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS oov_tokens "
-            "FROM tk2 LEFT JOIN vocab ON token = vtok GROUP BY 1) "
-            "SELECT d.doc_id, COALESCE(n_tokens, 0) AS n_tokens, "
-            "CAST(COALESCE(oov_tokens, 0) AS BIGINT) AS oov_tokens, "
-            "round(COALESCE(CAST(oov_tokens AS DOUBLE) / NULLIF(n_tokens, 0), 0.0), 6) "
-            "AS oov_rate FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id"
         ),
         "minute_anomalies": (
             f"WITH {_EV}, "
@@ -1628,20 +1400,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM tk WHERE token <> '' GROUP BY token "
             "ORDER BY n_occurrences DESC, token ASC LIMIT 100"
         ),
-        "rare_bigram_rate": (
-            f"WITH tk AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "g AS (SELECT doc_id, toks[i] || ' ' || toks[i+1] AS gram "
-            "FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-1)) AS t(i) "
-            "WHERE len(toks) >= 2), "
-            "c AS (SELECT gram, COUNT(*) AS cnt FROM g GROUP BY 1), "
-            "f AS (SELECT g.doc_id, COUNT(*) AS nb, "
-            "SUM(CASE WHEN c.cnt < 3 THEN 1 ELSE 0 END) AS nr "
-            "FROM g JOIN c USING (gram) GROUP BY 1) "
-            "SELECT d.doc_id, CAST(COALESCE(nb, 0) AS BIGINT) AS n_bigrams, "
-            "CAST(COALESCE(nr, 0) AS BIGINT) AS n_rare, "
-            "CAST(COALESCE((nr * 1000000) // nb, 0) AS BIGINT) AS rare_ppm "
-            "FROM documents d LEFT JOIN f ON d.doc_id = f.doc_id"
-        ),
         "collocations": (
             # HUGEINT (int128) mirrors Spark's DECIMAL(38,0) product; // is
             # floor division = Spark DIV on positives
@@ -1660,57 +1418,6 @@ def oracle_sql() -> dict[str, str]:
             "CROSS JOIN tot "
             "ORDER BY score_ppm DESC, token_a ASC, token_b ASC LIMIT 100"
         ),
-        "type_token_ratio": (
-            f"WITH tk AS (SELECT source, doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "ex AS (SELECT source, doc_id, t FROM tk, "
-            "LATERAL UNNEST(toks) AS u(t) WHERE t <> '') "
-            "SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs, "
-            "CAST(COUNT(*) AS BIGINT) AS n_tokens, "
-            "CAST(COUNT(DISTINCT t) AS BIGINT) AS n_types, "
-            "CAST((COUNT(DISTINCT t) * 1000000) // COUNT(*) AS BIGINT) AS ttr_ppm "
-            "FROM ex GROUP BY 1"
-        ),
-        "mask_duplicate_spans": (
-            f"WITH tk AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "sl AS (SELECT doc_id, i AS pos, "
-            "array_to_string(list_slice(toks, i, i+15), ' ') AS span "
-            "FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-15)) AS t(i) "
-            "WHERE len(toks) >= 16), "
-            "dup AS (SELECT span FROM sl GROUP BY span HAVING COUNT(*) >= 2), "
-            "d2 AS (SELECT sl.doc_id, sl.pos, sl.span FROM sl JOIN dup USING (span)), "
-            "fst AS (SELECT span, doc_id AS fd, pos AS fp FROM d2 "
-            "QUALIFY row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) = 1), "
-            "nonfirst AS (SELECT d2.doc_id, d2.pos FROM d2 JOIN fst USING (span) "
-            "WHERE NOT (d2.doc_id = fst.fd AND d2.pos = fst.fp)), "
-            "cov AS (SELECT DISTINCT doc_id, pos + j AS ti FROM nonfirst, "
-            "LATERAL UNNEST(generate_series(0, 15)) AS g(j)), "
-            "pc AS (SELECT doc_id, list(ti) AS cov_l, COUNT(*) AS n_m FROM cov GROUP BY doc_id) "
-            "SELECT tk.doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, "
-            "CAST(COALESCE(n_m, 0) AS BIGINT) AS n_masked_tokens, "
-            # array_to_string([]) is NULL in DuckDB, '' in Spark's concat_ws
-            "md5(COALESCE(array_to_string(list_transform("
-            "list_filter(range(1, len(toks) + 1), "
-            "i -> NOT list_contains(COALESCE(cov_l, []), i)), "
-            "i -> toks[i]), ' '), '')) AS cleaned_digest "
-            "FROM tk LEFT JOIN pc ON tk.doc_id = pc.doc_id"
-        ),
-        "duplicate_spans": (
-            f"WITH tk AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "el AS (SELECT doc_id, array_to_string(list_slice(toks, i, i+15), ' ') AS span_text "
-            "FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-15)) AS t(i) "
-            "WHERE len(toks) >= 16) "
-            "SELECT span_text, CAST(COUNT(*) AS BIGINT) AS n_occurrences, "
-            "CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs "
-            "FROM el GROUP BY 1 HAVING COUNT(*) >= 2 "
-            "ORDER BY n_occurrences DESC, span_text ASC LIMIT 100"
-        ),
-        "dup_rate_by_source": (
-            f"WITH fp AS (SELECT source, md5({_NORM_TEXT_SQL}) AS f FROM documents), "
-            "g AS (SELECT source, f, CAST(COUNT(*) AS BIGINT) AS n FROM fp GROUP BY 1, 2) "
-            "SELECT source, CAST(SUM(n) AS BIGINT) AS n_docs, CAST(COUNT(*) AS BIGINT) AS n_unique, "
-            "round(CAST(SUM(n) - COUNT(*) AS DOUBLE) / SUM(n), 6) AS dup_rate "
-            "FROM g GROUP BY source"
-        ),
         "text_stats": (
             f"WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents), "
             "s AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS token_count, "
@@ -1725,10 +1432,6 @@ def oracle_sql() -> dict[str, str]:
             "+ 0.3 * (1.0 - CAST(stopword_count AS DOUBLE) / token_count) "
             "+ 0.2 * (1.0 - CAST(punct_count AS DOUBLE) / char_count), 6) AS quality_score "
             "FROM s"
-        ),
-        "token_count_bpe": (
-            "SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '\\w+|[^\\w\\s]')) AS BIGINT) "
-            "AS bpe_token_count FROM documents"
         ),
         "lang_id": _lang_id_sql(),
         "doc_fingerprint": (
@@ -1770,21 +1473,6 @@ def oracle_sql() -> dict[str, str]:
             "round(1.0 - len(list_distinct(grams)) / CAST(len(grams) AS DOUBLE), 6) "
             "ELSE 0.0 END AS repetition_ratio FROM g"
         ),
-        "dedup_exact": (
-            f"SELECT md5({_NORM_TEXT_SQL}) AS fingerprint, "
-            "MIN(doc_id) AS canonical_doc_id, COUNT(*) AS n_copies "
-            "FROM documents GROUP BY 1"
-        ),
-        "dedup_keep_first": (
-            "SELECT doc_id, lang, source, n_chars FROM documents WHERE doc_id IN "
-            f"(SELECT MIN(doc_id) FROM documents GROUP BY md5({_NORM_TEXT_SQL}))"
-        ),
-        "dup_histogram": (
-            f"WITH fp AS (SELECT md5({_NORM_TEXT_SQL}) AS f FROM documents), "
-            "g AS (SELECT f, CAST(COUNT(*) AS BIGINT) AS group_size FROM fp GROUP BY f) "
-            "SELECT group_size, CAST(COUNT(*) AS BIGINT) AS n_groups, "
-            "CAST(group_size * COUNT(*) AS BIGINT) AS n_docs FROM g GROUP BY group_size"
-        ),
         "item_skew_profile": (
             f"WITH {_EV}, c AS (SELECT itemid, CAST(COUNT(*) AS BIGINT) AS n_rows FROM ev GROUP BY 1), "
             "t AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM ev) "
@@ -1802,100 +1490,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, "
             "CAST(len(chunk) AS BIGINT) AS n_tokens, "
             "array_to_string(chunk, ' ') AS chunk_text FROM s"
-        ),
-        "token_length_distribution": (
-            f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS t FROM documents) "
-            "SELECT CAST(length(t) AS BIGINT) AS token_len, "
-            "CAST(COUNT(*) AS BIGINT) AS n_occurrences, "
-            "CAST(COUNT(DISTINCT t) AS BIGINT) AS n_types "
-            "FROM tk WHERE t <> '' GROUP BY 1 ORDER BY token_len ASC"
-        ),
-        "char_entropy": (
-            "WITH ch AS (SELECT doc_id, substr(text, i, 1) AS c "
-            "FROM documents, LATERAL UNNEST(generate_series(1, length(text))) AS g(i)), "
-            "cc AS (SELECT doc_id, c, COUNT(*) AS n FROM ch GROUP BY 1, 2), "
-            "g2 AS (SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_chars, "
-            "CAST(COUNT(*) AS BIGINT) AS n_distinct_chars, "
-            "SUM(CAST(n AS DOUBLE) * ln(CAST(n AS DOUBLE))) AS snlogn FROM cc GROUP BY 1) "
-            "SELECT doc_id, n_chars, n_distinct_chars, "
-            "round(ln(CAST(n_chars AS DOUBLE)) - snlogn / CAST(n_chars AS DOUBLE), 6) + 0.0 "
-            "AS char_entropy FROM g2"
-        ),
-        "readability_scores": (
-            f"WITH d AS (SELECT source, "
-            f"CAST(len(list_filter({_TOKS_SQL}, x -> x <> '')) AS BIGINT) AS w, "
-            "greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS s, "
-            "CAST(len(regexp_extract_all(lower(text), '[aeiou]+')) AS BIGINT) AS y "
-            "FROM documents), "
-            "g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(w) AS BIGINT) AS n_words, CAST(SUM(s) AS BIGINT) AS n_sentences, "
-            "CAST(SUM(y) AS BIGINT) AS n_syllables FROM d GROUP BY 1) "
-            "SELECT source, n_docs, n_words, n_sentences, n_syllables, "
-            "round(CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE), 6) AS words_per_sentence, "
-            "round(CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS syllables_per_word, "
-            "round(206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) "
-            "- 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)), 6) AS flesch "
-            "FROM g"
-        ),
-        "bpe_merge_step": (
-            f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS w FROM documents), "
-            "v AS (SELECT w, COUNT(*) AS wc FROM tk WHERE length(w) >= 2 GROUP BY w), "
-            "p AS (SELECT substr(w, g.i, 1) AS left_sym, substr(w, g.i + 1, 1) AS right_sym, wc "
-            "FROM v, LATERAL UNNEST(generate_series(1, length(w) - 1)) AS g(i)) "
-            "SELECT left_sym, right_sym, CAST(SUM(wc) AS BIGINT) AS pair_count "
-            "FROM p GROUP BY 1, 2 HAVING SUM(wc) >= 2 "
-            "ORDER BY pair_count DESC, left_sym ASC, right_sym ASC LIMIT 100"
-        ),
-        "gopher_quality_flags": (
-            f"WITH t AS (SELECT doc_id, text, list_filter({_TOKS_SQL}, x -> x <> '') AS toks "
-            "FROM documents), "
-            "s AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words, "
-            "CAST(coalesce(list_sum(list_transform(toks, x -> length(x))), 0) AS BIGINT) AS charsum, "
-            "CAST(len(regexp_extract_all(text, '#')) "
-            "+ len(regexp_extract_all(text, '…|\\.\\.\\.')) AS BIGINT) AS symbols, "
-            "CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS alpha, "
-            f"CAST(len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, x))) AS BIGINT) "
-            "AS n_stopword_hits FROM t), "
-            "m AS (SELECT doc_id, n_words, "
-            "CASE WHEN n_words > 0 THEN round(charsum / CAST(n_words AS DOUBLE), 6) END AS mean_word_len, "
-            "CASE WHEN n_words > 0 THEN round(symbols / CAST(n_words AS DOUBLE), 6) END AS symbol_ratio, "
-            "CASE WHEN n_words > 0 THEN round(alpha / CAST(n_words AS DOUBLE), 6) END AS alpha_word_frac, "
-            "n_stopword_hits FROM s), "
-            "f AS (SELECT *, CAST(n_words BETWEEN 50 AND 100000 AS INT) AS ok_word_count, "
-            "CAST(coalesce(mean_word_len BETWEEN 3.0 AND 10.0, FALSE) AS INT) AS ok_mean_word_len, "
-            "CAST(coalesce(symbol_ratio <= 0.1, FALSE) AS INT) AS ok_symbol_ratio, "
-            "CAST(coalesce(alpha_word_frac >= 0.8, FALSE) AS INT) AS ok_alpha_words, "
-            "CAST(n_stopword_hits >= 2 AS INT) AS ok_stopwords FROM m) "
-            "SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_word_frac, "
-            "n_stopword_hits, ok_word_count, ok_mean_word_len, ok_symbol_ratio, "
-            "ok_alpha_words, ok_stopwords, "
-            "CAST(ok_word_count * ok_mean_word_len * ok_symbol_ratio * ok_alpha_words "
-            "* ok_stopwords AS INT) AS passes_all FROM f"
-        ),
-        "vocab_growth": (
-            f"WITH d AS (SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks "
-            "FROM documents), "
-            "pd AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM d), "
-            "tk AS (SELECT doc_id, unnest(toks) AS t FROM d), "
-            "fo AS (SELECT t, MIN(doc_id) AS fd FROM tk GROUP BY t), "
-            "nn AS (SELECT fd AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_new_types FROM fo GROUP BY 1), "
-            "b AS (SELECT pd.doc_id, pd.n_tokens, coalesce(nn.n_new_types, 0) AS n_new_types "
-            "FROM pd LEFT JOIN nn ON pd.doc_id = nn.doc_id) "
-            "SELECT doc_id, n_tokens, "
-            "CAST(SUM(n_tokens) OVER (ORDER BY doc_id) AS BIGINT) AS cum_tokens, "
-            "n_new_types, "
-            "CAST(SUM(n_new_types) OVER (ORDER BY doc_id) AS BIGINT) AS vocab_size "
-            "FROM b ORDER BY doc_id ASC"
-        ),
-        "tokenizer_fertility": (
-            f"WITH d AS (SELECT source, "
-            f"CAST(len(list_filter({_TOKS_SQL}, x -> x <> '')) AS BIGINT) AS w, "
-            "CAST(len(regexp_extract_all(lower(text), '\\w+|[^\\w\\s]')) AS BIGINT) AS p "
-            "FROM documents) "
-            "SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(w) AS BIGINT) AS n_words, CAST(SUM(p) AS BIGINT) AS n_pieces, "
-            "round(CAST(SUM(p) AS DOUBLE) / CAST(SUM(w) AS DOUBLE), 6) AS fertility "
-            "FROM d GROUP BY source ORDER BY source ASC"
         ),
         "first_touch_funnel": (
             "WITH g AS (SELECT user_id AS visitorid, "
@@ -2051,33 +1645,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM pr JOIN uni ua ON pr.ta = ua.tok JOIN uni ub ON pr.tb = ub.tok "
             "CROSS JOIN tot "
             "ORDER BY score_ppm DESC, token_a ASC, token_b ASC LIMIT 100"
-        ),
-        "token_coverage_topk": (
-            f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS t FROM documents), "
-            "cnt AS (SELECT t, COUNT(*) AS c FROM tk WHERE t <> '' GROUP BY 1), "
-            "tot AS (SELECT CAST(SUM(c) AS BIGINT) AS total_tokens FROM cnt), "
-            "ks AS ("
-            "SELECT CAST(10 AS BIGINT) AS k, CAST(COALESCE((SELECT SUM(c) FROM "
-            "(SELECT c FROM cnt ORDER BY c DESC, t ASC LIMIT 10)), 0) AS BIGINT) AS covered_tokens "
-            "UNION ALL SELECT 100, CAST(COALESCE((SELECT SUM(c) FROM "
-            "(SELECT c FROM cnt ORDER BY c DESC, t ASC LIMIT 100)), 0) AS BIGINT) "
-            "UNION ALL SELECT 1000, CAST(COALESCE((SELECT SUM(c) FROM "
-            "(SELECT c FROM cnt ORDER BY c DESC, t ASC LIMIT 1000)), 0) AS BIGINT)) "
-            "SELECT k, covered_tokens, total_tokens, "
-            "round(covered_tokens / CAST(total_tokens AS DOUBLE), 6) AS coverage "
-            "FROM ks CROSS JOIN tot"
-        ),
-        "dedup_token_savings": (
-            f"WITH per AS (SELECT source, doc_id, md5({_NORM_TEXT_SQL}) AS fp, "
-            f"CAST(len({_TOKS_SQL}) AS BIGINT) AS tok FROM documents), "
-            "fl AS (SELECT source, tok, CASE WHEN doc_id = "
-            "MIN(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END AS keep FROM per) "
-            "SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
-            "CAST(SUM(tok) AS BIGINT) AS n_tokens, "
-            "CAST(SUM(keep) AS BIGINT) AS n_kept_docs, "
-            "CAST(SUM(tok * keep) AS BIGINT) AS kept_tokens, "
-            "round((SUM(tok) - SUM(tok * keep)) / CAST(SUM(tok) AS DOUBLE), 6) "
-            "AS token_savings_rate FROM fl GROUP BY source"
         ),
         "path_conversion_rates": (
             "WITH ev AS (SELECT user_id AS visitorid, event_type AS event, "

@@ -223,7 +223,7 @@ def main() -> None:
 
         low_cpus = 8 if scaling_env == "1" else max(1, int(scaling_env))
         high_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-        probe_default = "rfm_segments,char_entropy"
+        probe_default = "rfm_segments"
         probes = [
             p.strip()
             for p in os.environ.get(
@@ -236,8 +236,9 @@ def main() -> None:
             """One probe query at one core count in its OWN subprocess —
             fresh JVM, query-isolated. Rep-major co-tenancy in a shared
             JVM distorts light queries next to allocation-heavy ones
-            (measured: char_entropy 10.5 s sharing a 32-thread JVM with an
-            allocation-heavy sketch query vs 2.0 s isolated), so the
+            (measured: char_entropy, since deleted, 10.5 s sharing a
+            32-thread JVM with an allocation-heavy sketch query vs 2.0 s
+            isolated), so the
             scaling ratio is taken from symmetric isolated runs; the
             co-tenant bench timing stays in `queries` as `bench_sec`."""
             fd, child_detail = tempfile.mkstemp(prefix="bench_scaling_", suffix=".json")

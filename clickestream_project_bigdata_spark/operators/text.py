@@ -1,12 +1,14 @@
-"""Text analysis for training-data pipelines: token counting, quality
-scoring, language-ID heuristic, fingerprinting.
+"""Document-corpus operators over the ``documents`` input: per-document
+stats and quality score, language-ID heuristic, fingerprint, n-gram and
+term statistics (n-gram counts, TF-IDF, token frequencies, collocations,
+skip-gram PMI, distinctive terms, per-source vocabulary overlap),
+repetition, chunking and single-query similarity.
 
 Not present in the reference (its only text handling is event-string
-routing); these are the north-star extensions (BASELINE.json). Everything is
-built-in Catalyst expressions — higher-order array functions over a split
-column — so the whole stage is one narrow codegen'd pass over the scan: no
-shuffle, no UDF, linear in bytes. That is exactly the shape you want for a
-100 TB corpus sweep.
+routing). No pipeline, streaming or perfbench module imports this module;
+only the ``__spark_entry__`` registry and the tests reach it. Every
+operator is built from Catalyst expressions over a whitespace-split token
+column, with no Python UDF.
 """
 
 from __future__ import annotations
@@ -78,17 +80,6 @@ def text_stats(
         F.round(stop_ratio, 6).alias("stopword_ratio"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(quality, 6).alias("quality_score"),
-    )
-
-
-def token_count_bpe(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """BPE-ish token estimate: word pieces + standalone punctuation via
-    ``\\w+|[^\\w\\s]`` (the classic pre-tokenizer regex). ASCII-equivalent
-    between Java regex and RE2, which the oracle relies on."""
-    pieces = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(r"\w+|[^\w\s]"), 0)
-    return docs.select(
-        F.col(id_col),
-        F.size(pieces).cast("long").alias("bpe_token_count"),
     )
 
 
@@ -481,158 +472,12 @@ def collocations(
     )
 
 
-def type_token_ratio(
-    docs: DataFrame, by: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Per-stratum lexical diversity: type-token ratio (distinct tokens /
-    total tokens) — the quick Heaps-law diagnostic that separates
-    boilerplate-heavy feeds (low TTR: templates, logs) from diverse prose
-    before any model-based quality scoring.
-
-    Output (stratum, n_docs, n_tokens, n_types, ttr_ppm) with
-    ``ttr_ppm = n_types·10⁶ DIV n_tokens`` — integer-exact, no float
-    division. One explode, then two exchanges: the two count_distincts and
-    the count share one ``Expand`` (a row per token for the stratum, for
-    (stratum, token) and for (stratum, doc_id)), whose partial aggregate
-    shuffles on (stratum, token, doc_id, group id) and so carries each
-    distinct token and doc once per map partition; a second exchange on
-    the stratum alone merges the partial counts."""
-    exploded = docs.select(
-        F.col(by), F.col("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("__t")
-    ).filter(F.col("__t") != "")
-    return (
-        exploded.groupBy(by)
-        .agg(
-            F.count_distinct("doc_id").alias("n_docs"),
-            F.count("*").alias("n_tokens"),
-            F.count_distinct("__t").alias("n_types"),
-        )
-        .select(
-            F.col(by),
-            "n_docs",
-            "n_tokens",
-            "n_types",
-            F.expr("CAST((n_types * CAST(1000000 AS BIGINT)) DIV n_tokens AS BIGINT)").alias(
-                "ttr_ppm"
-            ),
-        )
-    )
-
-
-def vocab_coverage(
-    docs: DataFrame,
-    vocab_size: int = 50,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document out-of-vocabulary rate against the corpus's own
-    top-``vocab_size`` tokens — the coverage check run before committing
-    to a tokenizer vocabulary, and a quality signal (high OOV ⇒ noisy or
-    off-domain text). Output: (id, n_tokens, oov_tokens, oov_rate), rate
-    rounded to 6 decimals; empty docs emit 0 tokens and rate 0.0.
-
-    Scale shape: the vocabulary is a corpus-wide top-k (one token-keyed
-    aggregation + TakeOrdered — deterministic via the (count DESC, token
-    ASC) total order) that collapses to ``vocab_size`` rows and BROADCASTS
-    into the membership probe, so the per-doc pass is one exploded scan,
-    a broadcast LEFT JOIN, and a doc-keyed count pair — the corpus text
-    never shuffles, only (doc_id, token) pairs do, and a 100 TB corpus
-    probes the same tiny in-memory vocab on every executor."""
-    exploded = docs.select(
-        F.col(id_col), F.explode(tokens_col(F.col(text_col))).alias("token")
-    ).filter(F.col("token") != "")
-    vocab = (
-        exploded.groupBy("token")
-        .agg(F.count("*").alias("__cnt"))
-        .orderBy(F.desc("__cnt"), F.asc("token"))
-        .limit(vocab_size)
-        .select(F.col("token").alias("__vtok"))
-    )
-    flagged = exploded.join(
-        F.broadcast(vocab), F.col("token") == F.col("__vtok"), "left"
-    )
-    per_doc = flagged.groupBy(id_col).agg(
-        F.count("*").alias("n_tokens"),
-        F.sum(F.when(F.col("__vtok").isNull(), 1).otherwise(0)).alias("oov_tokens"),
-    )
-    # right join keeps token-less docs (empty/whitespace text) at 0/0
-    return docs.select(F.col(id_col)).join(per_doc, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-        F.coalesce("oov_tokens", F.lit(0)).alias("oov_tokens"),
-        F.round(
-            F.coalesce(
-                F.col("oov_tokens") / F.nullif(F.col("n_tokens"), F.lit(0)), F.lit(0.0)
-            ),
-            6,
-        ).alias("oov_rate"),
-    )
-
-
 def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Document fingerprint: md5 of the whitespace-normalized lowercase text.
     Stable across engines (vs engine-specific hash functions), usable as an
     exact-dedup key."""
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     return docs.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
-
-
-def rare_bigram_rate(
-    docs: DataFrame,
-    rare_below: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """KenLM-lite fluency signal without a language model: the fraction of
-    a document's adjacent-token bigrams that are RARE in the corpus
-    (corpus count < ``rare_below``). Gibberish, OCR noise, and shuffled
-    text score high; natural prose reuses the corpus's common transitions
-    and scores low — the cheap stand-in for perplexity filtering when no
-    model is available, and exact integers end to end (a real LM score
-    averages float log-probs, which no two engines agree on).
-
-    Output: (id_col, n_bigrams, n_rare, rare_ppm) with
-    ``rare_ppm = n_rare·10⁶ DIV n_bigrams`` (docs with < 2 tokens: 0/0/0).
-
-    Scale shape: the corpus bigram count table aggregates on the bigram
-    key ONCE (map-side partials) and joins back to the exploded doc
-    bigrams as a shuffle join on the same key — two passes over the
-    bigram stream, nothing wider than (gram, count) shuffles; the
-    doc-grain rollup shuffles (doc, flags). At 100 TB the count table is
-    vocab²-bounded but long-tail-light (rare grams ARE the tail; the
-    common grams that dominate row count hash-join against a heavy-hitter
-    fraction of the table)."""
-    toks = docs.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
-    )
-    grams = toks.select(
-        F.col(id_col),
-        F.explode(word_ngrams_col(F.col("__toks"), 2)).alias("__g"),
-    )
-    counts = grams.groupBy("__g").agg(F.count("*").alias("__c"))
-    flagged = (
-        grams.join(counts, "__g")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.sum(F.when(F.col("__c") < rare_below, 1).otherwise(0))
-            .cast("long")
-            .alias("n_rare"),
-        )
-    )
-    return (
-        docs.select(id_col)
-        .join(flagged, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("long").alias("n_bigrams"),
-            F.coalesce(F.col("n_rare"), F.lit(0)).cast("long").alias("n_rare"),
-            F.coalesce(
-                F.expr("CAST((n_rare * CAST(1000000 AS BIGINT)) DIV n_bigrams AS BIGINT)"),
-                F.lit(0),
-            ).cast("long").alias("rare_ppm"),
-        )
-    )
 
 
 def source_vocab_overlap(
@@ -666,449 +511,6 @@ def source_vocab_overlap(
         F.col("n_both").alias("vocab_shared"),
         "jaccard",
     )
-
-
-def token_length_distribution(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Token-length histogram over the corpus: per length, total token
-    occurrences and distinct token types — the tokenizer-QA scan run
-    before fitting a BPE vocabulary (a heavy tail of 50-char "tokens"
-    means the pre-tokenizer is broken; a spike at 1 means the corpus is
-    CJK or the splitter is over-eager).
-
-    One explode + ONE aggregation at token-length grain (map-side
-    combined; ≤ max-token-length groups — the distinct-type count plans
-    as one Expand, same trade as ``token_frequencies``). Output
-    (token_len, n_occurrences, n_types), length ASC."""
-    return (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("__t"))
-        .filter(F.col("__t") != "")
-        .groupBy(F.length("__t").cast("long").alias("token_len"))
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.count_distinct("__t").alias("n_types"),
-        )
-        .orderBy(F.asc("token_len"))
-    )
-
-
-def char_entropy(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document character-level Shannon entropy (nats) — the
-    gibberish/compressibility proxy quality pipelines threshold on:
-    natural prose sits in a narrow entropy band, while base64 blobs,
-    minified JS, and key-mash spam land far outside it. Output
-    (id_col, n_chars, n_distinct_chars, char_entropy); empty/NULL docs
-    have no characters and drop out (both engines agree).
-
-    Entropy via the single-pass identity
-    H = ln N − (Σ c·ln c)/N over per-(doc, char) counts. The result
-    is DOC-GRAIN, so no shuffle is needed at all: an Arrow ``mapInPandas``
-    pass builds every doc's character histogram in one vectorized numpy
-    sweep per batch (codepoints via ``utf-32-le``, per-(doc, codepoint)
-    counts via one ``np.unique`` on a fused int64 key, segment sums via
-    ``np.add.reduceat``) and emits the finished row. This replaced the r8
-    explode → (doc, codepoint)-keyed hash-agg → doc rollup, whose explode
-    volume (one row per character occurrence) held it at 2.1–2.4× the
-    DuckDB control at the 10× checkpoint; the histogram pass touches each
-    byte once and never exchanges. Rounding is ``floor(x·1e6 + 0.5)/1e6``
-    — positive-value HALF_UP, matching both engines' ``round(x, 6)``; the
-    ``+ 0.0`` canonicalizes IEEE −0.0 for single-character docs."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    id_type = docs.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("n_distinct_chars", T.LongType()),
-            T.StructField("char_entropy", T.DoubleType()),
-        ]
-    )
-
-    def hist_batches(batches):
-        for pdf in batches:
-            texts = pdf[text_col]
-            keep = texts.notna() & (texts.str.len() > 0)
-            ids = pdf[id_col][keep]
-            kept = texts[keep]
-            if len(kept) == 0:
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "n_chars": pd.array([], dtype="int64"),
-                        "n_distinct_chars": pd.array([], dtype="int64"),
-                        "char_entropy": pd.array([], dtype="float64"),
-                    }
-                )
-                continue
-            lens = kept.str.len().to_numpy(dtype=np.int64)
-            # one codepoint int per character; utf-32-le is a straight
-            # codepoint dump, so len(str) == #codepoints == #chars
-            codes = np.frombuffer(
-                "".join(kept.tolist()).encode("utf-32-le"), dtype="<u4"
-            ).astype(np.int64)
-            doc_idx = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
-            # fused (doc, codepoint) key: codepoints < 0x110000 by definition
-            uk, counts = np.unique(doc_idx * 0x110000 + codes, return_counts=True)
-            udoc = uk // 0x110000  # sorted; every kept doc has >=1 run
-            starts = np.flatnonzero(np.r_[True, udoc[1:] != udoc[:-1]])
-            ends = np.r_[starts[1:], len(udoc)]
-            c = counts.astype(np.float64)
-            snlogn = np.add.reduceat(c * np.log(c), starts)
-            n = lens.astype(np.float64)
-            ent = np.floor((np.log(n) - snlogn / n) * 1e6 + 0.5) / 1e6 + 0.0
-            yield pd.DataFrame(
-                {
-                    id_col: ids.to_numpy(),
-                    "n_chars": lens,
-                    "n_distinct_chars": (ends - starts).astype(np.int64),
-                    "char_entropy": ent,
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(hist_batches, out_schema)
-
-
-def readability_scores(
-    docs: DataFrame, text_col: str = "text", source_col: str = "source"
-) -> DataFrame:
-    """Per-source Flesch-style readability rollup — the fluency screen a
-    pretraining mix applies per data source (legalese and ELI5 forums sit
-    ~60 Flesch points apart). Syllables are approximated by VOWEL RUNS
-    (`[aeiou]+` — the standard dictionary-free proxy) and sentences by
-    terminal-punctuation runs (min 1 per doc, so punctuation-free text is
-    one long sentence rather than a division by zero).
-
-    Flesch = 206.835 − 1.015·(words/sentence) − 84.6·(syllables/word),
-    computed from per-source EXACT INTEGER sums (three regexp/array
-    counts per row, one map-side-combined aggregation — the double math
-    happens once per source on top of exact sums, so both engines agree
-    bit-for-bit). Output (source, n_docs, n_words, n_sentences,
-    n_syllables, words_per_sentence, syllables_per_word, flesch)."""
-    per_doc = docs.select(
-        F.col(source_col).alias("source"),
-        F.size(F.filter(tokens_col(F.col(text_col)), lambda t: t != "")).alias("__w"),
-        F.greatest(
-            F.regexp_count(F.col(text_col), F.lit(r"[.!?]+")), F.lit(1)
-        ).alias("__s"),
-        F.regexp_count(F.lower(F.col(text_col)), F.lit("[aeiou]+")).alias("__y"),
-    )
-    g = per_doc.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("__w").cast("long").alias("n_words"),
-        F.sum("__s").cast("long").alias("n_sentences"),
-        F.sum("__y").cast("long").alias("n_syllables"),
-    )
-    wps = F.col("n_words").cast("double") / F.col("n_sentences").cast("double")
-    spw = F.col("n_syllables").cast("double") / F.col("n_words").cast("double")
-    return g.select(
-        "source",
-        "n_docs",
-        "n_words",
-        "n_sentences",
-        "n_syllables",
-        F.round(wps, 6).alias("words_per_sentence"),
-        F.round(spw, 6).alias("syllables_per_word"),
-        F.round(
-            F.lit(206.835) - F.lit(1.015) * wps - F.lit(84.6) * spw, 6
-        ).alias("flesch"),
-    )
-
-
-def bpe_merge_step(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_n: int = 100,
-    min_pair_count: int = 2,
-) -> DataFrame:
-    """One training iteration of byte-pair encoding: the corpus-weighted
-    count of every ADJACENT CHARACTER PAIR inside words, descending — the
-    top row is exactly the merge a BPE tokenizer trainer (Sennrich et al.
-    2016) would perform next. Running it on a candidate corpus before
-    fitting a real vocabulary is the standard tokenizer-QA probe: a top
-    table full of whitespace-adjacent punctuation or mojibake digraphs
-    means the pre-tokenizer (not the model) needs fixing.
-
-    Scale shape — the reason this is cheap at 100 TB: pair counting is
-    weighted by WORD FREQUENCY, so the corpus collapses to vocabulary
-    grain first (one explode + token-keyed count, map-side combined);
-    the quadratic-ish pair explode then runs over |vocab| rows only —
-    million-scale, not corpus-scale — and the final (left, right) count
-    is over an alphabet² grain. Characters inside a word pair up via one
-    Catalyst ``transform(sequence)``, no UDF.
-
-    Output (left_sym, right_sym, pair_count), ordered pair_count DESC
-    with (left, right) ASC tiebreak, top ``top_n`` rows with at least
-    ``min_pair_count`` weighted occurrences. Extends the ``token_count_bpe``
-    family (SURVEY §2 north-star text ops; reference has no text stage).
-    """
-    vocab = (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("__w"))
-        .filter(F.length("__w") >= 2)
-        .groupBy("__w")
-        .agg(F.count("*").alias("__wc"))
-    )
-    ch = F.split(F.col("__w"), "")
-    pairs = vocab.select(
-        F.col("__wc"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("__w") - 1),
-                lambda i: F.struct(
-                    F.element_at(ch, i).alias("l"),
-                    F.element_at(ch, i + 1).alias("r"),
-                ),
-            )
-        ).alias("__p"),
-    )
-    return (
-        pairs.groupBy(
-            F.col("__p.l").alias("left_sym"), F.col("__p.r").alias("right_sym")
-        )
-        .agg(F.sum("__wc").cast("long").alias("pair_count"))
-        .filter(F.col("pair_count") >= min_pair_count)
-        .orderBy(F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym"))
-        .limit(top_n)
-    )
-
-
-def gopher_quality_flags(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
-    min_stopword_hits: int = 2,
-) -> DataFrame:
-    """Per-document Gopher-style quality rule flags (Rae et al. 2021,
-    "Scaling Language Models" appendix A): word-count bounds, mean word
-    length band, symbol-to-word ratio (# / …), alphabetic-word fraction,
-    and minimum stopword hits. The published rules are line- and
-    document-level; this is the document-level subset, parameterized with
-    the paper's defaults.
-
-    All five rules are per-row Catalyst expressions over ONE split of the
-    text — a single narrow codegen pass with no shuffle and no UDF, the
-    shape a 100 TB quality sweep needs (flags then drive a filter or a
-    stratified report downstream). Documents with zero words are emitted
-    with NULL mean_word_len and fail the word-count rule, rather than
-    being silently dropped.
-
-    Output: (id_col, n_words, mean_word_len, symbol_ratio,
-    alpha_word_frac, n_stopword_hits, six BOOLEAN flags) — ``passes_all``
-    is the AND of the five rules."""
-    toks = F.filter(tokens_col(F.col(text_col)), lambda t: t != "")
-    per = docs.select(
-        F.col(id_col),
-        F.size(toks).cast("long").alias("n_words"),
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-        ).alias("__charsum"),
-        (
-            F.regexp_count(F.col(text_col), F.lit("#"))
-            + F.regexp_count(F.col(text_col), F.lit("…|\\.\\.\\."))
-        ).cast("long").alias("__symbols"),
-        F.size(F.filter(toks, lambda t: t.rlike("[a-z]"))).cast("long").alias(
-            "__alpha"
-        ),
-        _count_in(toks, STOPWORDS).cast("long").alias("n_stopword_hits"),
-    )
-    nw = F.col("n_words").cast("double")
-    mean_len = F.when(
-        F.col("n_words") > 0, F.round(F.col("__charsum") / nw, 6)
-    )
-    sym_ratio = F.when(
-        F.col("n_words") > 0, F.round(F.col("__symbols") / nw, 6)
-    )
-    alpha_frac = F.when(
-        F.col("n_words") > 0, F.round(F.col("__alpha") / nw, 6)
-    )
-    flagged = per.select(
-        id_col,
-        "n_words",
-        mean_len.alias("mean_word_len"),
-        sym_ratio.alias("symbol_ratio"),
-        alpha_frac.alias("alpha_word_frac"),
-        "n_stopword_hits",
-        F.col("n_words").between(min_words, max_words).alias("ok_word_count"),
-        F.coalesce(
-            mean_len.between(min_mean_word_len, max_mean_word_len), F.lit(False)
-        ).alias("ok_mean_word_len"),
-        F.coalesce(sym_ratio <= max_symbol_ratio, F.lit(False)).alias(
-            "ok_symbol_ratio"
-        ),
-        F.coalesce(alpha_frac >= min_alpha_word_frac, F.lit(False)).alias(
-            "ok_alpha_words"
-        ),
-        (F.col("n_stopword_hits") >= min_stopword_hits).alias("ok_stopwords"),
-    )
-    return flagged.withColumn(
-        "passes_all",
-        F.col("ok_word_count")
-        & F.col("ok_mean_word_len")
-        & F.col("ok_symbol_ratio")
-        & F.col("ok_alpha_words")
-        & F.col("ok_stopwords"),
-    )
-
-
-def _running_sum(
-    df: DataFrame, value_cols: list[str], order_exprs: list
-) -> DataFrame:
-    """Global running sums of the non-negative ``value_cols`` under a
-    total order given by ``order_exprs`` (sort Columns; must be a TOTAL
-    order for determinism), returned as extra ``__cum_<name>`` columns,
-    all in the SAME range exchange / window / totals collect.
-
-    Two-pass prefix sum: range-partition on the order into
-    ``defaultParallelism`` partitions, running sum WITHIN each partition,
-    then add each partition's broadcast exclusive offset (per-partition
-    totals are a ≤ #partitions-row driver collect). No task sees more
-    than its range — a global ``Window.orderBy`` would funnel everything
-    through ONE task."""
-    from ..plans.scale import materialize_once
-
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    w = Window.partitionBy("__pid").orderBy(*order_exprs).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    lnames = [f"__lcum_{i}" for i in range(len(value_cols))]
-    # materialized once (the totals collect below), reused by the final
-    # select. Pinning matters for CORRECTNESS here too:
-    # repartitionByRange samples range bounds, so a recompute could shift
-    # partition ids between pass 1 and pass 2
-    local = materialize_once(
-        df.repartitionByRange(n, *order_exprs)
-        .withColumn("__pid", F.spark_partition_id())
-        .select(
-            "*",
-            *[F.sum(c).over(w).alias(ln) for c, ln in zip(value_cols, lnames)],
-        )
-    )
-    # pass 2: per-partition totals (≤ n rows — bounded driver state) →
-    # exclusive offsets; range partition i holds strictly smaller order
-    # keys than i+1, so offset order == partition id order. The values
-    # are non-negative, so a partition's total is its largest running sum
-    totals = {
-        r["__pid"]: [r[f"t{i}"] for i in range(len(value_cols))]
-        for r in local.groupBy("__pid")
-        .agg(*[F.max(ln).alias(f"t{i}") for i, ln in enumerate(lnames)])
-        .collect()
-    }
-    acc = [0] * len(value_cols)
-    offsets = []
-    for pid in sorted(totals):
-        offsets.append((pid, *acc))
-        acc = [a + t for a, t in zip(acc, totals[pid])]
-    onames = [f"__off_{i}" for i in range(len(value_cols))]
-    off = spark.createDataFrame(
-        offsets, ", ".join(["__pid int"] + [f"{o} long" for o in onames])
-    )
-    out = local.join(F.broadcast(off), "__pid")
-    for c, ln, o in zip(value_cols, lnames, onames):
-        out = out.withColumn(f"__cum_{c}", F.col(o) + F.col(ln))
-    return out.drop("__pid", *lnames, *onames)
-
-
-def vocab_growth(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Heaps'-law curve of the corpus: for documents processed in
-    ``id_col`` order, the cumulative token count and cumulative distinct
-    vocabulary size after each document — the saturation diagnostic run
-    before sizing a tokenizer vocabulary or judging whether one more
-    crawl snapshot still adds new language.
-
-    Scale shape: "cumulative distinct" is NOT computed as a running set.
-    Each token contributes to the vocabulary exactly once, at its
-    first-occurrence document, so one token-keyed ``min(id)`` aggregate
-    (map-side combined) reduces the corpus to vocab grain; counting
-    first occurrences per document gives a per-doc ``n_new_types``, and
-    the curve is BOTH running sums in one pass of the two-pass
-    distributed prefix sum :func:`_running_sum` (range partition +
-    per-partition offsets, never a single global window task).
-
-    Output per document: (id_col, n_tokens, cum_tokens, n_new_types,
-    vocab_size), ordered by ``id_col``."""
-    toks = F.filter(tokens_col(F.col(text_col)), lambda t: t != "")
-    per_doc = docs.select(
-        F.col(id_col), F.size(toks).cast("long").alias("n_tokens")
-    )
-    firsts = (
-        docs.select(
-            F.col(id_col).alias("__d"),
-            F.explode(tokens_col(F.col(text_col))).alias("__t"),
-        )
-        .filter(F.col("__t") != "")
-        .groupBy("__t")
-        .agg(F.min("__d").alias("__first"))
-        .groupBy(F.col("__first").alias(id_col))
-        .agg(F.count("*").cast("long").alias("n_new_types"))
-    )
-    base = per_doc.join(firsts, id_col, "left").select(
-        id_col,
-        "n_tokens",
-        F.coalesce("n_new_types", F.lit(0).cast("long")).alias("n_new_types"),
-    )
-    order = [F.col(id_col).asc()]
-    c = _running_sum(base, ["n_tokens", "n_new_types"], order)
-    return c.select(
-        id_col,
-        "n_tokens",
-        F.col("__cum_n_tokens").cast("long").alias("cum_tokens"),
-        "n_new_types",
-        F.col("__cum_n_new_types").cast("long").alias("vocab_size"),
-    )  # no trailing sort: per-doc grain is unbounded; the cumulative
-    # semantics live in _running_sum's order, not the output order
-
-
-def tokenizer_fertility(
-    docs: DataFrame, text_col: str = "text", source_col: str = "source"
-) -> DataFrame:
-    """Per-source tokenizer fertility: BPE-ish pieces per whitespace word
-    (the ``\\w+|[^\\w\\s]`` pre-tokenizer of :func:`token_count_bpe` over
-    the whitespace words of :func:`text_stats`). Fertility ≈ 1 on clean
-    English prose and climbs with punctuation-dense / code / non-Latin
-    text — the per-domain cost model for a token budget (a source at
-    fertility 1.6 eats 60% more of the budget than its word count
-    suggests).
-
-    Two counts per row in one codegen pass, one source-keyed aggregation
-    of exact integer sums; fertility divides once per source. Output
-    (source, n_docs, n_words, n_pieces, fertility), source ASC."""
-    toks = tokens_col(F.col(text_col))
-    pieces = F.regexp_extract_all(
-        F.lower(F.col(text_col)), F.lit(r"\w+|[^\w\s]"), 0
-    )
-    per = docs.select(
-        F.col(source_col).alias("source"),
-        F.size(F.filter(toks, lambda t: t != "")).alias("__w"),
-        F.size(pieces).alias("__p"),
-    )
-    g = per.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("__w").cast("long").alias("n_words"),
-        F.sum("__p").cast("long").alias("n_pieces"),
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        "n_words",
-        "n_pieces",
-        F.round(
-            F.col("n_pieces").cast("double") / F.col("n_words").cast("double"), 6
-        ).alias("fertility"),
-    )  # no trailing sort (per-source grain scales with the corpus)
 
 
 def distinctive_terms(
@@ -1315,60 +717,4 @@ def skipgram_pmi(
         )
         .orderBy(F.desc("score_ppm"), F.asc("token_a"), F.asc("token_b"))
         .limit(k)
-    )
-
-
-def token_coverage_topk(
-    docs: DataFrame,
-    ks: tuple[int, ...] = (10, 100, 1000),
-    text_col: str = "text",
-) -> DataFrame:
-    """Head-coverage curve: what share of ALL token occurrences the top-k
-    most frequent tokens cover, for each k — the number that sizes a
-    tokenizer's vocabulary and predicts OOV rates (English head coverage:
-    top-100 words ≈ half the corpus). Output one row per k:
-    (k, covered_tokens, total_tokens, coverage), coverage a single
-    exact-integer division rounded to 6.
-
-    Scale shape: ONE token-keyed count (map-side combined, vocab grain,
-    materialized once), ONE TakeOrderedAndProject of the top-``max(ks)``
-    rows (count DESC, token ASC — a total order, so ties are
-    engine-stable) whose single-partition rank window is bounded by
-    ``max(ks)`` BY CONSTRUCTION, then every k's sum as a conditional
-    aggregate over that one tiny frame (stack-unpivoted) — two jobs
-    total regardless of how many k's, vs one TakeOrdered job per k in
-    the naive spelling; no global sort, no vocab broadcast."""
-    from ..plans.scale import materialize_once
-
-    counts = materialize_once(
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("__t"))
-        .filter(F.col("__t") != "")
-        .groupBy("__t")
-        .agg(F.count("*").alias("__c"))
-    )
-    total = counts.agg(F.sum("__c").cast("long").alias("total_tokens"))
-    top = counts.orderBy(F.desc("__c"), F.asc("__t")).limit(max(ks))
-    w = Window.orderBy(F.desc("__c"), F.asc("__t"))  # ≤ max(ks) rows: bounded
-    ranked = top.withColumn("__r", F.row_number().over(w))
-    agg = ranked.agg(
-        *[
-            F.coalesce(F.sum(F.when(F.col("__r") <= k, F.col("__c"))), F.lit(0))
-            .cast("long")
-            .alias(f"__cov_{k}")
-            for k in ks
-        ]
-    )
-    stack = F.expr(
-        "stack({n}, {args}) as (k, covered_tokens)".format(
-            n=len(ks),
-            args=", ".join(f"CAST({k} AS BIGINT), __cov_{k}" for k in ks),
-        )
-    )
-    return agg.select(stack).crossJoin(F.broadcast(total)).select(
-        "k",
-        "covered_tokens",
-        "total_tokens",
-        F.round(
-            F.col("covered_tokens") / F.col("total_tokens").cast("double"), 6
-        ).alias("coverage"),
     )

@@ -906,11 +906,11 @@ def test_pairwise_overlap_bitmask_matches_collect_set_fallback(spark):
     from clickestream_project_bigdata_spark.operators.analytics import (
         pairwise_set_overlap,
     )
-    from clickestream_project_bigdata_spark.operators.text import tokens_col
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    tokens = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     frame = docs.select(
-        F.explode(tokens_col(F.col("text"))).alias("element"),
+        F.explode(tokens).alias("element"),
         F.col("source").alias("set_id"),
     ).filter(F.col("element") != "")
     key = lambda r: (r.set_a, r.set_b)  # noqa: E731

@@ -58,19 +58,11 @@ def test_text_and_curation_on_empty_docs(spark, empty_docs):
     assert text.similar_docs_topk(empty_docs, query_id=0).count() == 0
 
 
-def test_exact_dedup_on_empty(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators import dedup
-
-    assert dedup.exact_dedup(empty_docs).count() == 0
-    assert dedup.dedup_keep_first(empty_docs).count() == 0
-
-
 def test_null_text_documents_flow_through(spark):
     """NULL text must not crash any text-path operator: stats come back
     NULL (so quality filters drop the doc — comparisons with NULL are
-    false), gram/chunk ops emit nothing for the doc, dedup keeps it as its
-    own group."""
-    from clickestream_project_bigdata_spark.operators import dedup, text
+    false) and chunking emits nothing for the doc."""
+    from clickestream_project_bigdata_spark.operators import text
 
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, None)], "doc_id long, text string"
@@ -79,8 +71,6 @@ def test_null_text_documents_flow_through(spark):
     assert stats[1] is not None and stats[2] is None
     assert text.chunk_documents(docs).filter("doc_id = 2").count() == 0
     assert text.repetition_score(docs).filter("doc_id = 2").count() == 1
-    # keep-first dedup: NULL text neither merges with nor displaces real docs
-    assert dedup.dedup_keep_first(docs).count() == 2
 
 
 def test_driver_contract_keys_aligned():
@@ -93,8 +83,8 @@ def test_driver_contract_keys_aligned():
     assert q == o, (sorted(q - o), sorted(o - q))
 
 
-def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs):
-    from clickestream_project_bigdata_spark.operators import analytics, dedup, text
+def test_round6_operators_on_empty_inputs(spark, empty_events):
+    from clickestream_project_bigdata_spark.operators import analytics
 
     assert analytics.minute_anomalies(empty_events).count() == 0
     assert analytics.item_trend(empty_events).count() == 0
@@ -103,28 +93,12 @@ def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs):
     # timed_funnel aggregates to a single zero row even on empty input
     row = analytics.timed_funnel(empty_events).collect()[0]
     assert (row.users_step1, row.users_step2, row.users_step3) == (0, 0, 0)
-    assert text.vocab_coverage(empty_docs).count() == 0
-    assert dedup.incremental_dedup(empty_docs, empty_docs).count() == 0
 
 
 def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        mask_duplicate_spans,
-    )
-    from clickestream_project_bigdata_spark.operators.text import (
-        collocations,
-        rare_bigram_rate,
-        type_token_ratio,
-    )
+    from clickestream_project_bigdata_spark.operators.text import collocations
 
-    assert mask_duplicate_spans(empty_docs).count() == 0
     assert collocations(empty_docs).count() == 0
-    assert type_token_ratio(empty_docs).count() == 0
-    assert rare_bigram_rate(empty_docs).count() == 0
-    # schemas survive emptiness
-    assert set(mask_duplicate_spans(empty_docs).columns) == {
-        "doc_id", "n_tokens", "n_masked_tokens", "cleaned_digest"
-    }
 
 
 def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs):
@@ -145,15 +119,8 @@ def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs)
     assert len(g) == 1 and g[0].gini is None
 
 
-def test_round7_operators_on_empty_inputs(spark, empty_events, empty_docs):
-    from clickestream_project_bigdata_spark.operators import analytics, text
+def test_round7_operators_on_empty_inputs(spark, empty_events):
+    from clickestream_project_bigdata_spark.operators import analytics
 
-    assert text.bpe_merge_step(empty_docs).count() == 0
-    assert text.vocab_growth(empty_docs).count() == 0
-    assert text.gopher_quality_flags(empty_docs).count() == 0
-    assert text.tokenizer_fertility(empty_docs).count() == 0
-    assert text.token_length_distribution(empty_docs).count() == 0
-    assert text.char_entropy(empty_docs).count() == 0
-    assert text.readability_scores(empty_docs).count() == 0
     assert analytics.first_touch_funnel(empty_events).count() == 0
     assert analytics.decay_attribution(empty_events).count() == 0

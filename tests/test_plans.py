@@ -102,30 +102,16 @@ def test_minute_metrics_single_exchange(spark, make_events):
 
 
 def test_redact_and_text_ops_no_shuffle(spark):
-    """The per-document text passes (stats, fingerprint, bpe) are narrow:
-    no exchange anywhere."""
+    """The per-document text passes (stats, fingerprint) are narrow: no
+    exchange anywhere."""
     from clickestream_project_bigdata_spark.operators import text
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for df in (
         text.text_stats(docs),
         text.fingerprint(docs),
-        text.token_count_bpe(docs),
     ):
         assert count_exchanges(df) == 0
-
-
-def test_corpus_stats_single_exchange(spark):
-    """Per-source corpus statistics ride the scan: the only shuffle is the
-    source-keyed aggregate."""
-    from clickestream_project_bigdata_spark.operators import text
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for df in (
-        text.readability_scores(docs),
-        text.tokenizer_fertility(docs),
-    ):
-        assert count_exchanges(df) <= 1
 
 
 def test_round4_operator_plan_shapes(spark):
@@ -207,25 +193,6 @@ def test_skipgram_pmi_no_interpreted_hof(spark):
     assert "TakeOrderedAndProject" in plan
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "transform(sequence(" not in optimized
-
-
-def test_dedup_token_savings_single_fact_exchange_no_text(spark):
-    """One digest-keyed window exchange; the text column must not appear in
-    any exchange (only digest/id/tokens/source cross the wire)."""
-    import re
-
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        dedup_token_savings,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x y", "a"), (2, "x y", "b")], "doc_id long, text string, source string"
-    )
-    df = dedup_token_savings(docs)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert count_exchanges(df) <= 2  # fingerprint window + source agg
-    for m in re.finditer(r"Exchange [^\n]*", plan):
-        assert "text" not in m.group(0), m.group(0)
 
 
 def test_position_attribution_no_trailing_global_sort(spark):

@@ -138,38 +138,3 @@ def test_skipgram_pmi_window_semantics(spark):
     assert {r.score_ppm for r in out} == {5_000_000}
 
 
-def test_token_coverage_topk_small_vocab(spark):
-    """k larger than the vocab covers everything; coverage exact."""
-    from clickestream_project_bigdata_spark.operators.text import (
-        token_coverage_topk,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x x x y"), (2, "x z")], "doc_id long, text string"
-    )
-    out = {r.k: r for r in token_coverage_topk(docs, ks=(1, 10)).collect()}
-    assert out[1].covered_tokens == 4 and out[1].total_tokens == 6
-    assert abs(out[1].coverage - round(4 / 6, 6)) < 1e-12
-    assert out[10].covered_tokens == 6 and out[10].coverage == 1.0
-
-
-def test_dedup_token_savings_keep_first(spark):
-    """Keeper = global min doc_id per normalized fingerprint; savings
-    attributed to the dropped copies' sources."""
-    from clickestream_project_bigdata_spark.operators.dedup import (
-        dedup_token_savings,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "Hello   world", "a"),   # normalizes same as doc 3
-            (2, "unique text here", "a"),
-            (3, "hello world", "b"),     # dup, dropped (higher id)
-        ],
-        "doc_id long, text string, source string",
-    )
-    out = {r.source: r for r in dedup_token_savings(docs).collect()}
-    assert (out["a"].n_docs, out["a"].n_kept_docs) == (2, 2)
-    assert out["a"].token_savings_rate == 0.0
-    assert (out["b"].n_docs, out["b"].n_kept_docs) == (1, 0)
-    assert out["b"].kept_tokens == 0 and out["b"].token_savings_rate == 1.0

@@ -30,13 +30,6 @@ def test_text_stats(docs):
         assert 0.0 <= r.quality_score <= 1.0
 
 
-def test_token_count_bpe(docs):
-    got = {r.doc_id: r.bpe_token_count for r in text.token_count_bpe(docs).collect()}
-    # "Hello, world! This is a test." -> hello , world ! this is a test . = 9
-    assert got[3] == 9
-    assert got[2] == 3
-
-
 def test_lang_id_markers(spark):
     df = spark.createDataFrame(
         [
@@ -115,24 +108,6 @@ def test_similar_docs_topk_ordering(spark):
     assert [(r.doc_id, r.jaccard) for r in rows] == [(1, 1.0), (2, 0.5), (3, 0.0)]
 
 
-def test_vocab_coverage_rates_and_empty_doc(spark):
-    from clickestream_project_bigdata_spark.operators.text import vocab_coverage
-
-    docs = spark.createDataFrame(
-        [
-            (0, "a a a b"),      # 'a' dominates the vocab
-            (1, "a b zz"),       # zz is OOV at vocab_size=2
-            (2, "   "),          # whitespace-only: 0 tokens, rate 0.0
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r for r in vocab_coverage(docs, vocab_size=2).collect()}
-    assert (got[0].n_tokens, got[0].oov_tokens, got[0].oov_rate) == (4, 0, 0.0)
-    assert (got[1].n_tokens, got[1].oov_tokens) == (3, 1)
-    assert abs(got[1].oov_rate - round(1 / 3, 6)) < 1e-9
-    assert (got[2].n_tokens, got[2].oov_tokens, got[2].oov_rate) == (0, 0, 0.0)
-
-
 def test_collocations_pmi_ranking_and_exact_score(spark):
     """PMI ratio ranks the exclusive pair above the promiscuous one, and
     score_ppm is the exact integer (c_ab*n*1e6) DIV (c_a*c_b)."""
@@ -155,45 +130,6 @@ def test_collocations_pmi_ranking_and_exact_score(spark):
     assert ("dog", "new") not in got
 
 
-def test_type_token_ratio_integer_exact(spark):
-    from clickestream_project_bigdata_spark.operators.text import type_token_ratio
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a a a b", "s1"),     # 4 tokens, 2 types
-            (2, "a b c", "s1"),       # s1 total: 7 tokens, 3 types
-            (3, "x y z", "s2"),       # 3 tokens, 3 types -> ppm 1_000_000
-        ],
-        "doc_id long, text string, source string",
-    )
-    got = {r.source: r for r in type_token_ratio(docs, by="source").collect()}
-    assert (got["s1"].n_docs, got["s1"].n_tokens, got["s1"].n_types) == (2, 7, 3)
-    assert got["s1"].ttr_ppm == 3 * 1_000_000 // 7
-    assert got["s2"].ttr_ppm == 1_000_000
-
-
-def test_rare_bigram_rate_counts_and_short_docs(spark):
-    """Corpus bigram counts drive the rare flag; short docs emit 0/0/0;
-    ppm is exact integer division."""
-    from clickestream_project_bigdata_spark.operators.text import rare_bigram_rate
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c"),   # bigrams: 'a b', 'b c'
-            (2, "a b c"),   # same -> 'a b' and 'b c' occur 3x total
-            (3, "a b x"),   # 'a b' (3rd), 'b x' (1x -> rare)
-            (4, "tiny"),    # < 2 tokens
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r for r in rare_bigram_rate(docs, rare_below=3).collect()}
-    # counts: 'a b' = 3 (not rare at rare_below=3), 'b c' = 2 (rare), 'b x' = 1 (rare)
-    assert (got[1].n_bigrams, got[1].n_rare, got[1].rare_ppm) == (2, 1, 500_000)
-    assert (got[2].n_bigrams, got[2].n_rare) == (2, 1)
-    assert (got[3].n_bigrams, got[3].n_rare, got[3].rare_ppm) == (2, 1, 500_000)
-    assert (got[4].n_bigrams, got[4].n_rare, got[4].rare_ppm) == (0, 0, 0)
-
-
 def test_source_vocab_overlap_hand_computed(spark):
     """src a: {x,y}; src b: {y,z}; src c: {q} — only (a,b) intersect, with
     Jaccard 1/3; token repetition inside a source doesn't inflate vocab."""
@@ -213,153 +149,6 @@ def test_source_vocab_overlap_hand_computed(spark):
     r = rows[("a", "b")]
     assert (r.vocab_a, r.vocab_b, r.vocab_shared) == (2, 2, 1)
     assert r.jaccard == round(1 / 3, 6)
-
-
-def test_token_length_distribution_hand_computed(spark):
-    from clickestream_project_bigdata_spark.operators.text import (
-        token_length_distribution,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "aa bbb aa c"), (2, "dd  e"), (3, ""), (4, None)],
-        "doc_id long, text string",
-    )
-    got = {
-        r.token_len: (r.n_occurrences, r.n_types)
-        for r in token_length_distribution(docs).collect()
-    }
-    # aa×2, dd -> len2: 3 occ, 2 types; bbb -> len3; c, e -> len1: 2 occ 2 types
-    assert got == {1: (2, 2), 2: (3, 2), 3: (1, 1)}
-
-
-def test_char_entropy_hand_computed(spark):
-    import math
-
-    from clickestream_project_bigdata_spark.operators.text import char_entropy
-
-    docs = spark.createDataFrame(
-        [(1, "aaaa"), (2, "ab"), (3, ""), (4, None)], "doc_id long, text string"
-    )
-    got = {r.doc_id: r for r in char_entropy(docs).collect()}
-    assert set(got) == {1, 2}  # empty/NULL docs drop out
-    assert got[1].n_chars == 4 and got[1].n_distinct_chars == 1
-    assert got[1].char_entropy == 0.0  # single symbol -> zero entropy
-    assert math.copysign(1.0, got[1].char_entropy) == 1.0  # not -0.0
-    assert got[2].char_entropy == round(math.log(2), 6)
-
-
-def test_readability_scores_hand_computed(spark):
-    from clickestream_project_bigdata_spark.operators.text import readability_scores
-
-    docs = spark.createDataFrame(
-        [
-            (1, "s1", "the cat sat. it sat!"),   # 5 words, 2 sentences, 5 vowel runs
-            (2, "s1", "no punctuation here"),     # 3 words, 1 sentence (min), 6 runs
-        ],
-        "doc_id long, source string, text string",
-    )
-    r = readability_scores(docs).collect()[0]
-    assert r.source == "s1" and r.n_docs == 2
-    assert r.n_words == 8 and r.n_sentences == 3 and r.n_syllables == 11
-    assert r.words_per_sentence == round(8 / 3, 6)
-    assert r.flesch == round(206.835 - 1.015 * (8 / 3) - 84.6 * (11 / 8), 6)
-
-
-def test_bpe_merge_step_hand_computed(spark):
-    """Words: 'abab' x2, 'ab' x1, 'z' (dropped, len<2). Pair counts:
-    (a,b) = 2*2 + 1 = 5, (b,a) = 2*1 = 2. min_pair_count=2 keeps both;
-    top row is the merge a BPE trainer would pick."""
-    from clickestream_project_bigdata_spark.operators.text import bpe_merge_step
-
-    docs = spark.createDataFrame(
-        [(1, "abab ab z"), (2, "abab")], "doc_id long, text string"
-    )
-    rows = bpe_merge_step(docs, top_n=10, min_pair_count=2).collect()
-    assert [(r.left_sym, r.right_sym, r.pair_count) for r in rows] == [
-        ("a", "b", 5),
-        ("b", "a", 2),
-    ]
-
-
-def test_gopher_quality_flags_rules(spark):
-    """One passing doc, one failing every bound; zero-word doc yields NULL
-    ratios and fails (not silently dropped)."""
-    from clickestream_project_bigdata_spark.operators.text import (
-        gopher_quality_flags,
-    )
-
-    good = "the quick brown fox jumps over the lazy dog again " * 5  # 50 words
-    bad = "### 123 456 789"  # symbols, no alpha, no stopwords, 4 words
-    docs = spark.createDataFrame(
-        [(1, good), (2, bad), (3, "")], "doc_id long, text string"
-    )
-    got = {r.doc_id: r for r in gopher_quality_flags(docs).collect()}
-    g = got[1]
-    assert g.n_words == 50 and g.ok_word_count and g.passes_all
-    assert g.mean_word_len == round(
-        sum(len(w) for w in good.split()) / 50, 6
-    )
-    b = got[2]
-    assert not b.ok_word_count and not b.ok_alpha_words and not b.ok_stopwords
-    assert not b.ok_symbol_ratio  # 1 '#' run regexp: 3 matches / 4 words
-    assert not b.passes_all
-    z = got[3]
-    assert z.n_words == 0 and z.mean_word_len is None and not z.passes_all
-
-
-def test_vocab_growth_hand_computed(spark):
-    """doc1 'a b a' (2 new), doc2 'b c' (1 new), doc3 'a' (0 new) —
-    cumulative tokens 3/5/6, vocab 2/3/3; a 40-doc corpus matches a plain
-    Python running sum."""
-    from clickestream_project_bigdata_spark.operators.text import vocab_growth
-
-    docs = spark.createDataFrame(
-        [(1, "a b a"), (2, "b c"), (3, "a")], "doc_id long, text string"
-    )
-    rows = vocab_growth(docs).collect()
-    assert [
-        (r.doc_id, r.n_tokens, r.cum_tokens, r.n_new_types, r.vocab_size)
-        for r in rows
-    ] == [(1, 3, 3, 2, 2), (2, 2, 5, 1, 3), (3, 1, 6, 0, 3)]
-
-    # 40 docs span every range partition, so each partition after the
-    # first adds a nonzero offset; some docs have no tokens and, once the
-    # 23-word vocabulary is used up, no new types
-    texts = [
-        " ".join(f"w{(i * 7 + j * 3) % 23}" for j in range(i % 6))
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    got = sorted(
-        (r.doc_id, r.n_tokens, r.cum_tokens, r.n_new_types, r.vocab_size)
-        for r in vocab_growth(docs).collect()
-    )
-    want, seen, cum = [], set(), 0
-    for i, t in enumerate(texts):
-        toks = t.split()
-        new = set(toks) - seen
-        seen |= new
-        cum += len(toks)
-        want.append((i, len(toks), cum, len(new), len(seen)))
-    assert got == want
-
-
-def test_tokenizer_fertility_hand_computed(spark):
-    """'hello, world!' = 2 words but 4 BPE pieces (hello , world !) ->
-    fertility 2.0; clean words stay at 1.0."""
-    from clickestream_project_bigdata_spark.operators.text import (
-        tokenizer_fertility,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "s1", "hello, world!"), (2, "s2", "plain words here")],
-        "doc_id long, source string, text string",
-    )
-    got = {r.source: r for r in tokenizer_fertility(docs).collect()}
-    assert (got["s1"].n_words, got["s1"].n_pieces, got["s1"].fertility) == (2, 4, 2.0)
-    assert (got["s2"].n_words, got["s2"].n_pieces, got["s2"].fertility) == (3, 3, 1.0)
 
 
 def test_distinctive_terms_odds_ratio(spark):

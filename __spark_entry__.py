@@ -421,6 +421,14 @@ def _q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return collocations(_docs(spark, sf_dir), k=100, min_count=5)
 
 
+def _q_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source lexical diversity (type-token ratio, integer ppm)
+    (operators/text.py:type_token_ratio)."""
+    from clickestream_project_bigdata_spark.operators.text import type_token_ratio
+
+    return type_token_ratio(_docs(spark, sf_dir), by="source")
+
+
 def _q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc top-3 TF-IDF keywords (operators/text.py)."""
     return text.tfidf_top_terms(_docs(spark, sf_dir), k=3)
@@ -490,6 +498,12 @@ def _q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise token-vocabulary Jaccard between sources
     (operators/text.py), sharing analytics.pairwise_set_overlap."""
     return text.source_vocab_overlap(_docs(spark, sf_dir))
+
+
+def _q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heaps'-law vocabulary-growth curve via first-occurrence counting +
+    the shared distributed prefix sum (operators/text.py)."""
+    return text.vocab_growth(_docs(spark, sf_dir))
 
 
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,6 +634,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "audience_overlap": _q_audience_overlap,
         "zipf_slope": _q_zipf_slope,
         "collocations": _q_collocations,
+        "type_token_ratio": _q_type_token_ratio,
         "item_trend": _q_item_trend,
         "trending_items": _q_trending_items,
         "conversion_latency": _q_conversion_latency,
@@ -682,6 +697,7 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "active_users_approx": _q_active_users_approx,
         "cleanse_events": _q_cleanse,
         # --- round-7 additions (never sampled yet; prioritized below)
+        "vocab_growth": _q_vocab_growth,
         "first_touch_funnel": _q_first_touch_funnel,
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
@@ -1418,6 +1434,16 @@ def oracle_sql() -> dict[str, str]:
             "CROSS JOIN tot "
             "ORDER BY score_ppm DESC, token_a ASC, token_b ASC LIMIT 100"
         ),
+        "type_token_ratio": (
+            f"WITH tk AS (SELECT source, doc_id, {_TOKS_SQL} AS toks FROM documents), "
+            "ex AS (SELECT source, doc_id, t FROM tk, "
+            "LATERAL UNNEST(toks) AS u(t) WHERE t <> '') "
+            "SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs, "
+            "CAST(COUNT(*) AS BIGINT) AS n_tokens, "
+            "CAST(COUNT(DISTINCT t) AS BIGINT) AS n_types, "
+            "CAST((COUNT(DISTINCT t) * 1000000) // COUNT(*) AS BIGINT) AS ttr_ppm "
+            "FROM ex GROUP BY 1"
+        ),
         "text_stats": (
             f"WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents), "
             "s AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS token_count, "
@@ -1490,6 +1516,21 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, "
             "CAST(len(chunk) AS BIGINT) AS n_tokens, "
             "array_to_string(chunk, ' ') AS chunk_text FROM s"
+        ),
+        "vocab_growth": (
+            f"WITH d AS (SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks "
+            "FROM documents), "
+            "pd AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM d), "
+            "tk AS (SELECT doc_id, unnest(toks) AS t FROM d), "
+            "fo AS (SELECT t, MIN(doc_id) AS fd FROM tk GROUP BY t), "
+            "nn AS (SELECT fd AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_new_types FROM fo GROUP BY 1), "
+            "b AS (SELECT pd.doc_id, pd.n_tokens, coalesce(nn.n_new_types, 0) AS n_new_types "
+            "FROM pd LEFT JOIN nn ON pd.doc_id = nn.doc_id) "
+            "SELECT doc_id, n_tokens, "
+            "CAST(SUM(n_tokens) OVER (ORDER BY doc_id) AS BIGINT) AS cum_tokens, "
+            "n_new_types, "
+            "CAST(SUM(n_new_types) OVER (ORDER BY doc_id) AS BIGINT) AS vocab_size "
+            "FROM b ORDER BY doc_id ASC"
         ),
         "first_touch_funnel": (
             "WITH g AS (SELECT user_id AS visitorid, "

@@ -1,8 +1,9 @@
 """Document-corpus operators over the ``documents`` input: per-document
 stats and quality score, language-ID heuristic, fingerprint, n-gram and
 term statistics (n-gram counts, TF-IDF, token frequencies, collocations,
-skip-gram PMI, distinctive terms, per-source vocabulary overlap),
-repetition, chunking and single-query similarity.
+skip-gram PMI, distinctive terms, per-source vocabulary overlap), lexical
+diversity (type-token ratio, vocabulary growth over a distributed prefix
+sum), repetition, chunking and single-query similarity.
 
 Not present in the reference (its only text handling is event-string
 routing). No pipeline, streaming or perfbench module imports this module;
@@ -472,6 +473,44 @@ def collocations(
     )
 
 
+def type_token_ratio(
+    docs: DataFrame, by: str = "source", text_col: str = "text"
+) -> DataFrame:
+    """Per-stratum lexical diversity: type-token ratio (distinct tokens /
+    total tokens) — the quick Heaps-law diagnostic that separates
+    boilerplate-heavy feeds (low TTR: templates, logs) from diverse prose
+    before any model-based quality scoring.
+
+    Output (stratum, n_docs, n_tokens, n_types, ttr_ppm) with
+    ``ttr_ppm = n_types·10⁶ DIV n_tokens`` — integer-exact, no float
+    division. One explode, then two exchanges: the two count_distincts and
+    the count share one ``Expand`` (a row per token for the stratum, for
+    (stratum, token) and for (stratum, doc_id)), whose partial aggregate
+    shuffles on (stratum, token, doc_id, group id) and so carries each
+    distinct token and doc once per map partition; a second exchange on
+    the stratum alone merges the partial counts."""
+    exploded = docs.select(
+        F.col(by), F.col("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("__t")
+    ).filter(F.col("__t") != "")
+    return (
+        exploded.groupBy(by)
+        .agg(
+            F.count_distinct("doc_id").alias("n_docs"),
+            F.count("*").alias("n_tokens"),
+            F.count_distinct("__t").alias("n_types"),
+        )
+        .select(
+            F.col(by),
+            "n_docs",
+            "n_tokens",
+            "n_types",
+            F.expr("CAST((n_types * CAST(1000000 AS BIGINT)) DIV n_tokens AS BIGINT)").alias(
+                "ttr_ppm"
+            ),
+        )
+    )
+
+
 def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Document fingerprint: md5 of the whitespace-normalized lowercase text.
     Stable across engines (vs engine-specific hash functions), usable as an
@@ -511,6 +550,117 @@ def source_vocab_overlap(
         F.col("n_both").alias("vocab_shared"),
         "jaccard",
     )
+
+
+def _running_sum(
+    df: DataFrame, value_cols: list[str], order_exprs: list
+) -> DataFrame:
+    """Global running sums of the non-negative ``value_cols`` under a
+    total order given by ``order_exprs`` (sort Columns; must be a TOTAL
+    order for determinism), returned as extra ``__cum_<name>`` columns,
+    all in the SAME range exchange / window / totals collect.
+
+    Two-pass prefix sum: range-partition on the order into
+    ``defaultParallelism`` partitions, running sum WITHIN each partition,
+    then add each partition's broadcast exclusive offset (per-partition
+    totals are a ≤ #partitions-row driver collect). No task sees more
+    than its range — a global ``Window.orderBy`` would funnel everything
+    through ONE task."""
+    from ..plans.scale import materialize_once
+
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+    w = Window.partitionBy("__pid").orderBy(*order_exprs).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    lnames = [f"__lcum_{i}" for i in range(len(value_cols))]
+    # materialized once (the totals collect below), reused by the final
+    # select. Pinning matters for CORRECTNESS here too:
+    # repartitionByRange samples range bounds, so a recompute could shift
+    # partition ids between pass 1 and pass 2
+    local = materialize_once(
+        df.repartitionByRange(n, *order_exprs)
+        .withColumn("__pid", F.spark_partition_id())
+        .select(
+            "*",
+            *[F.sum(c).over(w).alias(ln) for c, ln in zip(value_cols, lnames)],
+        )
+    )
+    # pass 2: per-partition totals (≤ n rows — bounded driver state) →
+    # exclusive offsets; range partition i holds strictly smaller order
+    # keys than i+1, so offset order == partition id order. The values
+    # are non-negative, so a partition's total is its largest running sum
+    totals = {
+        r["__pid"]: [r[f"t{i}"] for i in range(len(value_cols))]
+        for r in local.groupBy("__pid")
+        .agg(*[F.max(ln).alias(f"t{i}") for i, ln in enumerate(lnames)])
+        .collect()
+    }
+    acc = [0] * len(value_cols)
+    offsets = []
+    for pid in sorted(totals):
+        offsets.append((pid, *acc))
+        acc = [a + t for a, t in zip(acc, totals[pid])]
+    onames = [f"__off_{i}" for i in range(len(value_cols))]
+    off = spark.createDataFrame(
+        offsets, ", ".join(["__pid int"] + [f"{o} long" for o in onames])
+    )
+    out = local.join(F.broadcast(off), "__pid")
+    for c, ln, o in zip(value_cols, lnames, onames):
+        out = out.withColumn(f"__cum_{c}", F.col(o) + F.col(ln))
+    return out.drop("__pid", *lnames, *onames)
+
+
+def vocab_growth(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Heaps'-law curve of the corpus: for documents processed in
+    ``id_col`` order, the cumulative token count and cumulative distinct
+    vocabulary size after each document — the saturation diagnostic run
+    before sizing a tokenizer vocabulary or judging whether one more
+    crawl snapshot still adds new language.
+
+    Scale shape: "cumulative distinct" is NOT computed as a running set.
+    Each token contributes to the vocabulary exactly once, at its
+    first-occurrence document, so one token-keyed ``min(id)`` aggregate
+    (map-side combined) reduces the corpus to vocab grain; counting
+    first occurrences per document gives a per-doc ``n_new_types``, and
+    the curve is BOTH running sums in one pass of the two-pass
+    distributed prefix sum :func:`_running_sum` (range partition +
+    per-partition offsets, never a single global window task).
+
+    Output per document: (id_col, n_tokens, cum_tokens, n_new_types,
+    vocab_size), ordered by ``id_col``."""
+    toks = F.filter(tokens_col(F.col(text_col)), lambda t: t != "")
+    per_doc = docs.select(
+        F.col(id_col), F.size(toks).cast("long").alias("n_tokens")
+    )
+    firsts = (
+        docs.select(
+            F.col(id_col).alias("__d"),
+            F.explode(tokens_col(F.col(text_col))).alias("__t"),
+        )
+        .filter(F.col("__t") != "")
+        .groupBy("__t")
+        .agg(F.min("__d").alias("__first"))
+        .groupBy(F.col("__first").alias(id_col))
+        .agg(F.count("*").cast("long").alias("n_new_types"))
+    )
+    base = per_doc.join(firsts, id_col, "left").select(
+        id_col,
+        "n_tokens",
+        F.coalesce("n_new_types", F.lit(0).cast("long")).alias("n_new_types"),
+    )
+    order = [F.col(id_col).asc()]
+    c = _running_sum(base, ["n_tokens", "n_new_types"], order)
+    return c.select(
+        id_col,
+        "n_tokens",
+        F.col("__cum_n_tokens").cast("long").alias("cum_tokens"),
+        "n_new_types",
+        F.col("__cum_n_new_types").cast("long").alias("vocab_size"),
+    )  # no trailing sort: per-doc grain is unbounded; the cumulative
+    # semantics live in _running_sum's order, not the output order
 
 
 def distinctive_terms(

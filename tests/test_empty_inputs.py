@@ -96,9 +96,13 @@ def test_round6_operators_on_empty_inputs(spark, empty_events):
 
 
 def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators.text import collocations
+    from clickestream_project_bigdata_spark.operators.text import (
+        collocations,
+        type_token_ratio,
+    )
 
     assert collocations(empty_docs).count() == 0
+    assert type_token_ratio(empty_docs).count() == 0
 
 
 def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs):
@@ -119,8 +123,9 @@ def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs)
     assert len(g) == 1 and g[0].gini is None
 
 
-def test_round7_operators_on_empty_inputs(spark, empty_events):
-    from clickestream_project_bigdata_spark.operators import analytics
+def test_round7_operators_on_empty_inputs(spark, empty_events, empty_docs):
+    from clickestream_project_bigdata_spark.operators import analytics, text
 
+    assert text.vocab_growth(empty_docs).count() == 0
     assert analytics.first_touch_funnel(empty_events).count() == 0
     assert analytics.decay_attribution(empty_events).count() == 0

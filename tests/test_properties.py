@@ -133,6 +133,60 @@ def test_kmv_estimator_bounds(spark, n_users):
         assert abs(est - n_users) / n_users < 3 / (32**0.5), (n_users, est)
 
 
+# --- text._running_sum: the distributed prefix sum ------------------------
+
+token_counts_strategy = st.lists(st.integers(min_value=0, max_value=7), min_size=1, max_size=20)
+
+
+def _prefix_rows(df, value_cols, order_exprs):
+    from clickestream_project_bigdata_spark.operators.text import _running_sum
+
+    return _running_sum(df, value_cols, order_exprs).collect()
+
+
+@settings(max_examples=10, deadline=None)
+@given(counts=token_counts_strategy, budget=st.sampled_from([1, 3, 8]))
+def test_pack_sequences_prefix_sum_invariants(spark, counts, budget):
+    """Packing documents into budget-sized sequences is a prefix sum in id
+    order: every doc comes back once, cumulative count minus own count is
+    the exclusive start offset, and the pack ids start_offset // budget
+    are nondecreasing in id order."""
+    docs = spark.createDataFrame(list(enumerate(counts)), "doc_id long, n long")
+    rows = sorted(
+        _prefix_rows(docs, ["n"], [F.col("doc_id").asc()]), key=lambda r: r.doc_id
+    )
+    assert [r.doc_id for r in rows] == list(range(len(counts)))
+    acc = 0
+    prev_pack = 0
+    for r in rows:
+        start = r["__cum_n"] - r.n
+        assert start == acc
+        assert start // budget >= prev_pack
+        acc += r.n
+        prev_pack = start // budget
+
+
+def test_pack_sequences_many_more_partitions_than_rows(spark):
+    """Fewer rows than range partitions (``defaultParallelism``) leaves
+    partitions EMPTY: they must add zero, and the offsets at partition
+    boundaries must not shift — both running sums stay exact."""
+    counts = [3, 0, 7, 1, 5, 2, 4, 6]
+    n = spark.sparkContext.defaultParallelism
+    for k in sorted({1, n // 2, n - 1} - {0}):
+        data = [(i, counts[i % 8], counts[-1 - i % 8]) for i in range(k)]
+        docs = spark.createDataFrame(data, "doc_id long, a long, b long")
+        rows = sorted(
+            _prefix_rows(docs, ["a", "b"], [F.col("doc_id").asc()]),
+            key=lambda r: r.doc_id,
+        )
+        got = [(r.doc_id, r["__cum_a"], r["__cum_b"]) for r in rows]
+        want, ca, cb = [], 0, 0
+        for i, a, b in data:
+            ca, cb = ca + a, cb + b
+            want.append((i, ca, cb))
+        assert got == want, k
+
+
 @settings(max_examples=10, deadline=None)
 @given(
     n_events=st.integers(min_value=1, max_value=15),
@@ -239,6 +293,53 @@ def test_linear_attribution_credit_conserved(spark, evs):
                for (tv, t) in views)
     )
     assert abs(total_credit - credited) < 1e-4
+
+
+# round 6 latest: budget selection invariants
+
+@given(
+    counts=st.lists(st.integers(min_value=1, max_value=50), min_size=1, max_size=20),
+    budget=st.integers(min_value=0, max_value=400),
+)
+@settings(max_examples=15, deadline=None)
+def test_select_token_budget_monotone_and_exact(spark, counts, budget):
+    """A token budget selects the longest prefix of the quality order
+    (score DESC, id ASC) whose running token sum fits. A larger budget
+    selects a SUPERSET; the selected total never exceeds the budget; and
+    the best unselected doc would always overshoot (maximality)."""
+
+    def quality(i):
+        return float((i * 37) % 10) / 10.0
+
+    scored = spark.createDataFrame(
+        [(i, c, quality(i)) for i, c in enumerate(counts)],
+        "doc_id long, token_count long, quality_score double",
+    )
+    cum = {
+        r.doc_id: r["__cum_token_count"]
+        for r in _prefix_rows(
+            scored,
+            ["token_count"],
+            [F.col("quality_score").desc(), F.col("doc_id").asc()],
+        )
+    }
+    small = {d for d, c in cum.items() if c <= budget}
+    big = {d for d, c in cum.items() if c <= budget + 60}
+    assert small <= big
+    total = sum(counts[d] for d in small)
+    assert total <= budget
+    order = sorted(range(len(counts)), key=lambda i: (-quality(i), i))
+    acc, want = 0, set()
+    for i in order:
+        if acc + counts[i] > budget:
+            break
+        acc += counts[i]
+        want.add(i)
+    assert small == want
+    for i in order:
+        if i not in small:
+            assert total + counts[i] > budget
+            break
 
 
 # ---------------------------------------------------------------------------

@@ -130,6 +130,23 @@ def test_collocations_pmi_ranking_and_exact_score(spark):
     assert ("dog", "new") not in got
 
 
+def test_type_token_ratio_integer_exact(spark):
+    from clickestream_project_bigdata_spark.operators.text import type_token_ratio
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a a a b", "s1"),     # 4 tokens, 2 types
+            (2, "a b c", "s1"),       # s1 total: 7 tokens, 3 types
+            (3, "x y z", "s2"),       # 3 tokens, 3 types -> ppm 1_000_000
+        ],
+        "doc_id long, text string, source string",
+    )
+    got = {r.source: r for r in type_token_ratio(docs, by="source").collect()}
+    assert (got["s1"].n_docs, got["s1"].n_tokens, got["s1"].n_types) == (2, 7, 3)
+    assert got["s1"].ttr_ppm == 3 * 1_000_000 // 7
+    assert got["s2"].ttr_ppm == 1_000_000
+
+
 def test_source_vocab_overlap_hand_computed(spark):
     """src a: {x,y}; src b: {y,z}; src c: {q} — only (a,b) intersect, with
     Jaccard 1/3; token repetition inside a source doesn't inflate vocab."""
@@ -149,6 +166,45 @@ def test_source_vocab_overlap_hand_computed(spark):
     r = rows[("a", "b")]
     assert (r.vocab_a, r.vocab_b, r.vocab_shared) == (2, 2, 1)
     assert r.jaccard == round(1 / 3, 6)
+
+
+def test_vocab_growth_hand_computed(spark):
+    """doc1 'a b a' (2 new), doc2 'b c' (1 new), doc3 'a' (0 new) —
+    cumulative tokens 3/5/6, vocab 2/3/3; a 40-doc corpus matches a plain
+    Python running sum."""
+    from clickestream_project_bigdata_spark.operators.text import vocab_growth
+
+    docs = spark.createDataFrame(
+        [(1, "a b a"), (2, "b c"), (3, "a")], "doc_id long, text string"
+    )
+    rows = vocab_growth(docs).collect()
+    assert [
+        (r.doc_id, r.n_tokens, r.cum_tokens, r.n_new_types, r.vocab_size)
+        for r in rows
+    ] == [(1, 3, 3, 2, 2), (2, 2, 5, 1, 3), (3, 1, 6, 0, 3)]
+
+    # 40 docs span every range partition, so each partition after the
+    # first adds a nonzero offset; some docs have no tokens and, once the
+    # 23-word vocabulary is used up, no new types
+    texts = [
+        " ".join(f"w{(i * 7 + j * 3) % 23}" for j in range(i % 6))
+        for i in range(40)
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = sorted(
+        (r.doc_id, r.n_tokens, r.cum_tokens, r.n_new_types, r.vocab_size)
+        for r in vocab_growth(docs).collect()
+    )
+    want, seen, cum = [], set(), 0
+    for i, t in enumerate(texts):
+        toks = t.split()
+        new = set(toks) - seen
+        seen |= new
+        cum += len(toks)
+        want.append((i, len(toks), cum, len(new), len(seen)))
+    assert got == want
 
 
 def test_distinctive_terms_odds_ratio(spark):

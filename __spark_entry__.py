@@ -27,10 +27,7 @@ if _REPO_ROOT not in sys.path:
 from pyspark.sql import functions as F  # noqa: E402
 
 from clickestream_project_bigdata_spark.functions import portable  # noqa: E402
-from clickestream_project_bigdata_spark.operators import (  # noqa: E402
-    analytics,
-    text,
-)
+from clickestream_project_bigdata_spark.operators import analytics  # noqa: E402
 from clickestream_project_bigdata_spark.operators.sessionize import (  # noqa: E402
     session_metrics,
     sessionize,
@@ -151,10 +148,6 @@ def _q_events_per_minute_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_value_per_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.value_per_minute(events_from_fixture(spark, sf_dir))
-
-
-def _q_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.ngram_counts(_docs(spark, sf_dir), n=2, k=100)
 
 
 def _q_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,68 +376,6 @@ def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSe
     return wrapped
 
 
-# --- scale extensions: text ----------------------------------------------
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_parquet_table(spark, sf_dir, "documents")
-
-
-def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.text_stats(_docs(spark, sf_dir))
-
-
-def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.lang_id(_docs(spark, sf_dir))
-
-
-def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.fingerprint(_docs(spark, sf_dir))
-
-
-def _q_similar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-query lexical find-similar (operators/text.py): exact token
-    Jaccard vs doc 0, broadcast query + TakeOrderedAndProject."""
-    return text.similar_docs_topk(_docs(spark, sf_dir), query_id=0, k=10)
-
-
-def _q_token_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus Zipf profile: top-100 tokens by occurrence with doc counts
-    (operators/text.py:token_frequencies)."""
-    return text.token_frequencies(_docs(spark, sf_dir), k=100)
-
-
-def _q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 adjacent-token collocations by PMI, scored as an exact
-    integer-scaled ratio (operators/text.py:collocations)."""
-    from clickestream_project_bigdata_spark.operators.text import collocations
-
-    return collocations(_docs(spark, sf_dir), k=100, min_count=5)
-
-
-def _q_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source lexical diversity (type-token ratio, integer ppm)
-    (operators/text.py:type_token_ratio)."""
-    from clickestream_project_bigdata_spark.operators.text import type_token_ratio
-
-    return type_token_ratio(_docs(spark, sf_dir), by="source")
-
-
-def _q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc top-3 TF-IDF keywords (operators/text.py)."""
-    return text.tfidf_top_terms(_docs(spark, sf_dir), k=3)
-
-
-def _q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intra-doc n-gram repetition ratio (operators/text.py)."""
-    return text.repetition_score(_docs(spark, sf_dir), n=3)
-
-
-def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window token chunking (operators/text.py:chunk_documents):
-    64-token chunks, 16-token overlap — zero-shuffle posexplode+slice."""
-    return text.chunk_documents(_docs(spark, sf_dir), max_tokens=64, overlap=16)
-
-
 def _q_item_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hottest items with row share (operators/analytics.py:key_skew_profile)."""
     return analytics.key_skew_profile(
@@ -494,18 +425,6 @@ def _q_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.novelty_rate(events_from_fixture(spark, sf_dir))
 
 
-def _q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise token-vocabulary Jaccard between sources
-    (operators/text.py), sharing analytics.pairwise_set_overlap."""
-    return text.source_vocab_overlap(_docs(spark, sf_dir))
-
-
-def _q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth curve via first-occurrence counting +
-    the shared distributed prefix sum (operators/text.py)."""
-    return text.vocab_growth(_docs(spark, sf_dir))
-
-
 def _q_first_touch_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-visitor first-touch ordered funnel view->click->purchase
     (operators/analytics.py)."""
@@ -526,18 +445,6 @@ def _q_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.first_touch_attribution(events_from_fixture(spark, sf_dir))
 
 
-def _q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source distinctive vocabulary by ppm-scaled smoothed odds
-    ratio, top-5 per source (operators/text.py)."""
-    return text.distinctive_terms(_docs(spark, sf_dir), k=5, min_count=3)
-
-
-def _q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID confusion matrix vs declared lang labels
-    (operators/text.py)."""
-    return text.langid_confusion(_docs(spark, sf_dir))
-
-
 # --- round 8 additions ------------------------------------------------------
 
 def _q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,12 +461,6 @@ def _q_cart_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_repeat_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-item repeat-buyer structure (operators/analytics.py)."""
     return analytics.repeat_purchase_rate(events_from_fixture(spark, sf_dir))
-
-
-def _q_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """±3-window unordered skip-gram pairs, integer-exact PMI scores
-    (operators/text.py)."""
-    return text.skipgram_pmi(_docs(spark, sf_dir), window=3, k=100, min_count=5)
 
 
 def _q_path_conversion_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,18 +482,6 @@ def _q_heavy_hitter_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.heavy_hitters_2pass(
         events_from_fixture(spark, sf_dir), key="itemid", share_ppm=2000
     )
-
-
-def _q_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact heavy-hitter TOKENS (>= 0.5% of occurrences) on the exploded
-    document token stream - the Zipf-head reading of the same two-pass
-    sketch-then-verify plan (operators/analytics.py)."""
-    toks = (
-        _docs(spark, sf_dir)
-        .select(F.explode(text.tokens_col(F.col("text"))).alias("token"))
-        .filter(F.col("token") != "")
-    )
-    return analytics.heavy_hitters_2pass(toks, key="token", share_ppm=5000)
 
 
 def _q_decile_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,11 +519,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "gini_concentration": _q_gini_concentration,
         "burstiness": _q_burstiness,
         "novelty_rate": _q_novelty_rate,
-        "source_vocab_overlap": _q_source_vocab_overlap,
         "audience_overlap": _q_audience_overlap,
         "zipf_slope": _q_zipf_slope,
-        "collocations": _q_collocations,
-        "type_token_ratio": _q_type_token_ratio,
         "item_trend": _q_item_trend,
         "trending_items": _q_trending_items,
         "conversion_latency": _q_conversion_latency,
@@ -647,7 +533,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "concurrent_sessions": _q_concurrent_sessions,
         "bot_flags": _q_bot_flags,
         "minute_anomalies": _q_minute_anomalies,
-        "token_frequencies": _q_token_frequencies,
         "event_type_pivot": _q_event_type_pivot,
         "customer_value_deciles": _q_customer_value_deciles,
         "sequential_funnel": _q_sequential_funnel,
@@ -657,16 +542,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "rfm_segments": _q_rfm_segments,
         "session_entry_exit": _q_session_entry_exit,
         "top_paths": _q_top_paths,
-        # --- never driver-sampled before round 6
-        "tfidf_top_terms": _q_tfidf_top_terms,
-        "similar_docs_topk": _q_similar_docs,
-        "repetition_score": _q_repetition_score,
         # changed this round (grouping_id added) - re-verify
         "events_cube": _q_events_cube,
-        # last driver-sampled in rounds 1-4
-        "text_stats": _q_text_stats,
-        "lang_id": _q_lang_id,
-        "doc_fingerprint": _q_fingerprint,
         # driver-verified green in round 5
         "sessions": _q_sessions,
         "session_length_quantiles": _q_session_length_quantiles,
@@ -680,7 +557,6 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "events_per_minute": _q_events_per_minute,
         "events_per_minute_ma": _q_events_per_minute_ma,
         "value_per_minute": _q_value_per_minute,
-        "ngram_counts": _q_ngram_counts,
         "active_users": _q_active_users,
         "event_type_distribution": _q_event_type_distribution,
         "bounce_rate": _q_bounce_rate,
@@ -692,24 +568,18 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "windowed_top_items": _q_windowed_top_items,
         "windowed_bounce_rate": _q_windowed_bounce_rate,
         "windowed_funnel": _q_windowed_funnel,
-        "chunk_documents": _q_chunk_documents,
         "item_skew_profile": _q_item_skew_profile,
         "active_users_approx": _q_active_users_approx,
         "cleanse_events": _q_cleanse,
         # --- round-7 additions (never sampled yet; prioritized below)
-        "vocab_growth": _q_vocab_growth,
         "first_touch_funnel": _q_first_touch_funnel,
         "decay_attribution": _q_decay_attribution,
         "first_touch_attribution": _q_first_touch_attribution,
-        "distinctive_terms": _q_distinctive_terms,
-        "langid_confusion": _q_langid_confusion,
         # round 8
         "position_attribution": _q_position_attribution,
         "cart_abandonment": _q_cart_abandonment,
         "repeat_purchase_rate": _q_repeat_purchase_rate,
-        "skipgram_pmi": _q_skipgram_pmi,
         "heavy_hitter_items": _q_heavy_hitter_items,
-        "heavy_hitter_tokens": _q_heavy_hitter_tokens,
         "path_conversion_rates": _q_path_conversion_rates,
         "returning_visitor_rate": _q_returning_visitor_rate,
         "decile_revenue_share": _q_decile_revenue_share,
@@ -736,22 +606,15 @@ _SAMPLING_PRIORITY: list[str] = [
     #    next-oldest cohort fills the ~50-row sample; the tail rolls to
     #    the next round
     "cart_abandonment",
-    "collocations",
     "customer_value_deciles",
     "decile_revenue_share",
-    "distinctive_terms",
     "event_type_pivot",
     "events_column_profile",
     "first_touch_funnel",
     "gini_concentration",
     "item_cooccurrence",
     "item_dwell_time",
-    "langid_confusion",
-    "repetition_score",
     "session_entry_exit",
-    "similar_docs_topk",
-    "source_vocab_overlap",
-    "tfidf_top_terms",
     "timed_funnel",
 ]
 
@@ -775,11 +638,6 @@ _QUERIES = _apply_sampling_priority(_QUERIES)
 # ---------------------------------------------------------------------------
 
 
-_STOPWORDS_SQL = "[" + ", ".join(f"'{w}'" for w in text.STOPWORDS) + "]"
-_NORM_TEXT_SQL = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-_TOKS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
-
-
 # --- portable-sketch oracle builder ----------------------------------------
 # Replays the md5-derived hash (functions/portable.py) in DuckDB SQL,
 # interpolating the SAME Python constant the Spark plan uses — which is what
@@ -796,49 +654,6 @@ def _kmv_sql(k: int = 32, grain: str = "hour") -> str:
         f"SELECT bucket, round(CASE WHEN n < {k} THEN CAST(n AS DOUBLE) "
         f"ELSE {float(k - 1)!r} * {float(portable.PHASH60_MAX)!r} / CAST(hk AS DOUBLE) END, 6) AS active_users_est "
         "FROM a"
-    )
-
-
-def _langid_confusion_sql() -> str:
-    langs = sorted(text.LANG_MARKERS)
-    score_exprs = ", ".join(
-        "CAST(len(list_filter(toks, x -> list_contains(["
-        + ", ".join(f"'{w}'" for w in text.LANG_MARKERS[lang])
-        + f"], x))) AS BIGINT) AS s_{lang}"
-        for lang in langs
-    )
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
-    cases = " ".join(f"WHEN s_{lang} = best THEN '{lang}'" for lang in langs)
-    return (
-        f"WITH t AS (SELECT lang, {_TOKS_SQL} AS toks FROM documents), "
-        f"s AS (SELECT lang, {score_exprs} FROM t), "
-        f"b AS (SELECT *, {best} AS best FROM s), "
-        f"p AS (SELECT lang, CASE WHEN best = 0 THEN 'unknown' {cases} "
-        "ELSE 'unknown' END AS predicted_lang FROM b), "
-        "g AS (SELECT lang, predicted_lang, CAST(COUNT(*) AS BIGINT) AS n_docs "
-        "FROM p GROUP BY 1, 2) "
-        "SELECT lang, predicted_lang, n_docs, "
-        "round(n_docs / CAST(SUM(n_docs) OVER (PARTITION BY lang) AS DOUBLE), 6) "
-        "AS recall FROM g ORDER BY lang ASC, predicted_lang ASC"
-    )
-
-
-def _lang_id_sql() -> str:
-    langs = sorted(text.LANG_MARKERS)
-    score_exprs = ", ".join(
-        "CAST(len(list_filter(toks, x -> list_contains(["
-        + ", ".join(f"'{w}'" for w in text.LANG_MARKERS[lang])
-        + f"], x))) AS BIGINT) AS s_{lang}"
-        for lang in langs
-    )
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
-    cases = " ".join(f"WHEN s_{lang} = best THEN '{lang}'" for lang in langs)
-    return (
-        f"WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-        f"s AS (SELECT doc_id, {score_exprs} FROM t), "
-        f"b AS (SELECT *, {best} AS best FROM s) "
-        f"SELECT doc_id, CASE WHEN best = 0 THEN 'unknown' {cases} "
-        "ELSE 'unknown' END AS predicted_lang FROM b"
     )
 
 
@@ -893,19 +708,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CASE WHEN d = fd THEN 1 ELSE 0 END) AS BIGINT) AS n_new_items, "
             "round(SUM(CASE WHEN d = fd THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6) AS novelty "
             "FROM daily JOIN f USING (itemid) GROUP BY d"
-        ),
-        "source_vocab_overlap": (
-            f"WITH tk AS (SELECT source, {_TOKS_SQL} AS toks FROM documents), "
-            "ut AS (SELECT DISTINCT source, t FROM tk, LATERAL UNNEST(toks) AS u(t) WHERE t <> ''), "
-            "per AS (SELECT source, COUNT(*) AS n FROM ut GROUP BY source), "
-            "b AS (SELECT a.source AS source_a, c.source AS source_b, "
-            "CAST(COUNT(*) AS BIGINT) AS vocab_shared FROM ut a "
-            "JOIN ut c ON a.t = c.t AND a.source < c.source GROUP BY 1, 2) "
-            "SELECT source_a, source_b, CAST(pa.n AS BIGINT) AS vocab_a, "
-            "CAST(pb.n AS BIGINT) AS vocab_b, vocab_shared, "
-            "round(vocab_shared / CAST(pa.n + pb.n - vocab_shared AS DOUBLE), 6) AS jaccard "
-            "FROM b JOIN per pa ON pa.source = b.source_a "
-            "JOIN per pb ON pb.source = b.source_b"
         ),
         "audience_overlap": (
             "WITH ue AS (SELECT DISTINCT user_id AS visitorid, event_type AS event FROM events), "
@@ -1036,13 +838,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value, "
             "round(AVG(value), 6) AS avg_value, COUNT(*) AS events_count "
             "FROM events GROUP BY 1"
-        ),
-        "ngram_counts": (
-            f"WITH t AS (SELECT {_TOKS_SQL} AS toks FROM documents), "
-            "g AS (SELECT unnest(list_transform(generate_series(1, len(toks)-1), "
-            "i -> toks[i] || ' ' || toks[i+1])) AS ngram FROM t) "
-            "SELECT ngram, COUNT(*) AS occurrences FROM g GROUP BY ngram "
-            "ORDER BY occurrences DESC, ngram ASC LIMIT 100"
         ),
         "bounce_rate": (
             f"WITH {_EV}, per_user AS ("
@@ -1409,128 +1204,11 @@ def oracle_sql() -> dict[str, str]:
             "CAST(ntile(10) OVER (ORDER BY s DESC, custkey ASC) AS INT) AS decile "
             "FROM spend"
         ),
-        "token_frequencies": (
-            f"WITH tk AS (SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents) "
-            "SELECT token, CAST(COUNT(*) AS BIGINT) AS n_occurrences, "
-            "CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs "
-            "FROM tk WHERE token <> '' GROUP BY token "
-            "ORDER BY n_occurrences DESC, token ASC LIMIT 100"
-        ),
-        "collocations": (
-            # HUGEINT (int128) mirrors Spark's DECIMAL(38,0) product; // is
-            # floor division = Spark DIV on positives
-            f"WITH tk AS (SELECT {_TOKS_SQL} AS toks FROM documents), "
-            "uni AS (SELECT t AS tok, COUNT(*) AS c FROM tk, "
-            "LATERAL UNNEST(toks) AS u(t) WHERE t <> '' GROUP BY 1), "
-            "tot AS (SELECT CAST(SUM(c) AS HUGEINT) AS n FROM uni), "
-            "pr AS (SELECT toks[i] AS a, toks[i+1] AS b, COUNT(*) AS np "
-            "FROM tk, LATERAL UNNEST(generate_series(1, len(toks)-1)) AS g(i) "
-            "WHERE len(toks) >= 2 AND toks[i] <> '' AND toks[i+1] <> '' "
-            "GROUP BY 1, 2 HAVING COUNT(*) >= 5) "
-            "SELECT pr.a AS token_a, pr.b AS token_b, CAST(np AS BIGINT) AS n_pair, "
-            "CAST((CAST(np AS HUGEINT) * n * 1000000) // "
-            "(CAST(ua.c AS HUGEINT) * CAST(ub.c AS HUGEINT)) AS BIGINT) AS score_ppm "
-            "FROM pr JOIN uni ua ON pr.a = ua.tok JOIN uni ub ON pr.b = ub.tok "
-            "CROSS JOIN tot "
-            "ORDER BY score_ppm DESC, token_a ASC, token_b ASC LIMIT 100"
-        ),
-        "type_token_ratio": (
-            f"WITH tk AS (SELECT source, doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "ex AS (SELECT source, doc_id, t FROM tk, "
-            "LATERAL UNNEST(toks) AS u(t) WHERE t <> '') "
-            "SELECT source, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs, "
-            "CAST(COUNT(*) AS BIGINT) AS n_tokens, "
-            "CAST(COUNT(DISTINCT t) AS BIGINT) AS n_types, "
-            "CAST((COUNT(DISTINCT t) * 1000000) // COUNT(*) AS BIGINT) AS ttr_ppm "
-            "FROM ex GROUP BY 1"
-        ),
-        "text_stats": (
-            f"WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents), "
-            "s AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS token_count, "
-            "CAST(length(text) AS BIGINT) AS char_count, "
-            f"CAST(len(list_filter(toks, x -> list_contains({_STOPWORDS_SQL}, x))) AS BIGINT) AS stopword_count, "
-            "length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_count "
-            "FROM t) "
-            "SELECT doc_id, token_count, char_count, stopword_count, "
-            "round(CAST(stopword_count AS DOUBLE) / token_count, 6) AS stopword_ratio, "
-            "round(CAST(punct_count AS DOUBLE) / char_count, 6) AS punct_ratio, "
-            "round(0.5 * least(CAST(token_count AS DOUBLE) / 50, 1.0) "
-            "+ 0.3 * (1.0 - CAST(stopword_count AS DOUBLE) / token_count) "
-            "+ 0.2 * (1.0 - CAST(punct_count AS DOUBLE) / char_count), 6) AS quality_score "
-            "FROM s"
-        ),
-        "lang_id": _lang_id_sql(),
-        "doc_fingerprint": (
-            f"SELECT doc_id, md5({_NORM_TEXT_SQL}) AS fingerprint FROM documents"
-        ),
-        "similar_docs_topk": (
-            f"WITH d AS (SELECT doc_id, list_distinct({_TOKS_SQL}) AS toks FROM documents), "
-            "q AS (SELECT toks AS qtoks FROM d WHERE doc_id = 0), "
-            "s AS (SELECT d.doc_id, "
-            "CASE WHEN len(list_distinct(list_concat(d.toks, q.qtoks))) > 0 THEN "
-            "round(CAST(len(list_intersect(d.toks, q.qtoks)) AS DOUBLE) / "
-            "len(list_distinct(list_concat(d.toks, q.qtoks))), 6) ELSE 0.0 END AS jaccard "
-            "FROM d CROSS JOIN q WHERE d.doc_id <> 0) "
-            "SELECT doc_id, jaccard FROM s ORDER BY jaccard DESC, doc_id ASC LIMIT 10"
-        ),
-        "tfidf_top_terms": (
-            f"WITH tk AS (SELECT doc_id, unnest({_TOKS_SQL}) AS term FROM documents), "
-            "tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf "
-            "FROM tk GROUP BY doc_id, term), "
-            "df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term), "
-            "n AS (SELECT COUNT(*) AS n_docs FROM documents), "
-            "scored AS (SELECT tf.doc_id, tf.term, tf.tf, "
-            "round(tf.tf * (ln((n_docs + 1.0) / (df.df + 1.0)) + 1.0), 6) AS tfidf "
-            "FROM tf JOIN df USING (term) CROSS JOIN n), "
-            "ranked AS (SELECT *, CAST(row_number() OVER "
-            "(PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS INT) AS rank "
-            "FROM scored) "
-            "SELECT doc_id, term, tf, tfidf, rank FROM ranked WHERE rank <= 3"
-        ),
-        "repetition_score": (
-            f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "g AS (SELECT doc_id, CASE WHEN len(toks) >= 3 THEN "
-            "list_transform(generate_series(1, len(toks) - 2), "
-            "i -> array_to_string(toks[i:i+2], ' ')) "
-            "ELSE [] END AS grams FROM toks) "
-            "SELECT doc_id, CAST(len(grams) AS BIGINT) AS n_grams, "
-            "CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct, "
-            "CASE WHEN len(grams) > 0 THEN "
-            "round(1.0 - len(list_distinct(grams)) / CAST(len(grams) AS DOUBLE), 6) "
-            "ELSE 0.0 END AS repetition_ratio FROM g"
-        ),
         "item_skew_profile": (
             f"WITH {_EV}, c AS (SELECT itemid, CAST(COUNT(*) AS BIGINT) AS n_rows FROM ev GROUP BY 1), "
             "t AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM ev) "
             "SELECT itemid, n_rows, round(n_rows / total, 6) AS share "
             "FROM c CROSS JOIN t ORDER BY n_rows DESC, itemid ASC LIMIT 10"
-        ),
-        "chunk_documents": (
-            f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "n AS (SELECT doc_id, toks, len(toks) AS ntok FROM toks WHERE ntok >= 1), "
-            "c AS (SELECT doc_id, toks, "
-            "CAST(1 + ceil(greatest(ntok - 64, 0) / 48.0) AS INT) AS nchunks FROM n), "
-            "x AS (SELECT doc_id, toks, i AS chunk_id FROM c "
-            "CROSS JOIN unnest(generate_series(0, nchunks - 1)) AS t(i)), "
-            "s AS (SELECT doc_id, chunk_id, toks[chunk_id*48+1 : chunk_id*48+64] AS chunk FROM x) "
-            "SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, "
-            "CAST(len(chunk) AS BIGINT) AS n_tokens, "
-            "array_to_string(chunk, ' ') AS chunk_text FROM s"
-        ),
-        "vocab_growth": (
-            f"WITH d AS (SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks "
-            "FROM documents), "
-            "pd AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM d), "
-            "tk AS (SELECT doc_id, unnest(toks) AS t FROM d), "
-            "fo AS (SELECT t, MIN(doc_id) AS fd FROM tk GROUP BY t), "
-            "nn AS (SELECT fd AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_new_types FROM fo GROUP BY 1), "
-            "b AS (SELECT pd.doc_id, pd.n_tokens, coalesce(nn.n_new_types, 0) AS n_new_types "
-            "FROM pd LEFT JOIN nn ON pd.doc_id = nn.doc_id) "
-            "SELECT doc_id, n_tokens, "
-            "CAST(SUM(n_tokens) OVER (ORDER BY doc_id) AS BIGINT) AS cum_tokens, "
-            "n_new_types, "
-            "CAST(SUM(n_new_types) OVER (ORDER BY doc_id) AS BIGINT) AS vocab_size "
-            "FROM b ORDER BY doc_id ASC"
         ),
         "first_touch_funnel": (
             "WITH g AS (SELECT user_id AS visitorid, "
@@ -1594,34 +1272,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM src GROUP BY itemid "
             "HAVING 1000000 * COUNT(*) >= 2000 * (SELECT N FROM n)"
         ),
-        "heavy_hitter_tokens": (
-            f"WITH tk AS (SELECT unnest({_TOKS_SQL}) AS token FROM documents), "
-            "src AS (SELECT token FROM tk WHERE token <> ''), "
-            "n AS (SELECT COUNT(*) AS N FROM src) "
-            "SELECT token, CAST(COUNT(*) AS BIGINT) AS exact_count, "
-            "CAST((1000000 * COUNT(*)) // (SELECT N FROM n) AS BIGINT) AS share_ppm_floor "
-            "FROM src GROUP BY token "
-            "HAVING 1000000 * COUNT(*) >= 5000 * (SELECT N FROM n)"
-        ),
-        "distinctive_terms": (
-            f"WITH tk AS (SELECT source, unnest({_TOKS_SQL}) AS term FROM documents), "
-            "st AS (SELECT source, term, COUNT(*) AS c FROM tk WHERE term <> '' "
-            "GROUP BY source, term), "
-            "w AS (SELECT source, term, c, "
-            "SUM(c) OVER (PARTITION BY term) AS ct, "
-            "SUM(c) OVER (PARTITION BY source) AS ns, "
-            "SUM(c) OVER () AS n FROM st), "
-            "sc AS (SELECT source, term, CAST(c AS BIGINT) AS n_source, "
-            "CAST(ct - c AS BIGINT) AS n_rest, "
-            "CAST(CAST(c + 1 AS HUGEINT) * CAST((n - ns) - (ct - c) + 1 AS HUGEINT) "
-            "* 1000000 // (CAST(ns - c + 1 AS HUGEINT) * CAST(ct - c + 1 AS HUGEINT)) "
-            "AS BIGINT) AS odds_ppm FROM w WHERE c >= 3), "
-            "r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source "
-            "ORDER BY odds_ppm DESC, term ASC) AS INT) AS rank FROM sc) "
-            "SELECT source, term, n_source, n_rest, odds_ppm, rank FROM r "
-            "WHERE rank <= 5 ORDER BY source ASC, rank ASC"
-        ),
-        "langid_confusion": _langid_confusion_sql(),
         # --- round 8 ---
         "position_attribution": (
             "WITH ev2 AS (SELECT user_id AS visitorid, event_type AS event, "
@@ -1666,26 +1316,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(n) AS BIGINT) AS n_purchases, "
             "round(SUM(CASE WHEN n >= 2 THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6) "
             "AS repeat_rate FROM per GROUP BY itemid"
-        ),
-        "skipgram_pmi": (
-            # position distance uses ORIGINAL indices (empty tokens filtered
-            # as endpoints only), mirroring the zip_with shifted slices
-            f"WITH tk AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents), "
-            "p1 AS (SELECT doc_id, i, toks[i] AS t FROM tk, "
-            "LATERAL UNNEST(generate_series(1, len(toks))) AS g(i) "
-            "WHERE toks[i] <> ''), "
-            "pr AS (SELECT least(a.t, b.t) AS ta, greatest(a.t, b.t) AS tb, "
-            "COUNT(*) AS np FROM p1 a JOIN p1 b ON a.doc_id = b.doc_id "
-            "AND b.i > a.i AND b.i <= a.i + 3 "
-            "GROUP BY 1, 2 HAVING COUNT(*) >= 5), "
-            "uni AS (SELECT t AS tok, COUNT(*) AS c FROM p1 GROUP BY 1), "
-            "tot AS (SELECT CAST(SUM(c) AS HUGEINT) AS n FROM uni) "
-            "SELECT pr.ta AS token_a, pr.tb AS token_b, CAST(np AS BIGINT) AS n_pair, "
-            "CAST((CAST(np AS HUGEINT) * n * 1000000) // "
-            "(CAST(ua.c AS HUGEINT) * CAST(ub.c AS HUGEINT)) AS BIGINT) AS score_ppm "
-            "FROM pr JOIN uni ua ON pr.ta = ua.tok JOIN uni ub ON pr.tb = ub.tok "
-            "CROSS JOIN tot "
-            "ORDER BY score_ppm DESC, token_a ASC, token_b ASC LIMIT 100"
         ),
         "path_conversion_rates": (
             "WITH ev AS (SELECT user_id AS visitorid, event_type AS event, "

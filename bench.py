@@ -51,7 +51,7 @@ HEADLINE = [
     "most_viewed_items",
 ]
 
-TABLES = ["orders", "events", "documents"]
+TABLES = ["orders", "events"]
 
 
 def _recode_fixture(sf_dir: str, target_splits: int = 32) -> str:
@@ -63,12 +63,12 @@ def _recode_fixture(sf_dir: str, target_splits: int = 32) -> str:
     format-level property that caps BOTH engines' scan parallelism at one
     thread per table regardless of configuration (parquet can only be
     split on row-group boundaries). Real 100 TB inputs are thousands of
-    files × many row groups; a 600 KB one-row-group documents.parquet is
-    a fixture artifact, not a workload property, and timing against it
-    measures the artifact (one core does every explode-heavy map stage
-    while 31 idle). Both the Spark queries AND the DuckDB control read
-    the identical recoded files, so the comparison stays symmetric —
-    DuckDB also parallelizes per row group and also benefits. Data is
+    files × many row groups; a one-row-group fixture file is a fixture
+    artifact, not a workload property, and timing against it measures
+    the artifact (one core does every map stage while 31 idle). Both the
+    Spark queries AND the DuckDB control read the identical recoded
+    files, so the comparison stays symmetric — DuckDB also parallelizes
+    per row group and also benefits. Data is
     byte-identical row-for-row in the original order; only the row-group
     framing changes. OPT-IN via SPARK_GRAFT_BENCH_RECODE=1 — the headline
     artifact stays on the raw layout for comparability with BASELINE.md

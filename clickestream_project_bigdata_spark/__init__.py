@@ -6,8 +6,8 @@ Layout:
 * ``session``   — tuned SparkSession factory (AQE, UTC, Arrow).
 * ``schema``    — canonical typed event schema (casts once at ingest).
 * ``sources``   — parquet/CSV/JSON batch readers, Kafka + file streaming.
-* ``operators`` — cleanse, sessionize, the 10 reference analyses, text
-  analysis.
+* ``operators`` — cleanse, sessionize, the 10 reference analyses and the
+  further event analyses behind the query registry.
 * ``streaming`` — foreachBatch driver (reference-compatible) and the
   watermarked/session_window-based improved mode; pluggable sinks.
 * ``plans``     — plan-audit helpers (exchange/join-count assertions),

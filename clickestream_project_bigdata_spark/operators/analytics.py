@@ -1116,7 +1116,7 @@ def latest_event_state(
 ) -> DataFrame:
     """CDC/SCD-1 compaction: the LATEST event per key — the
     merge-into-current-state pass every incremental pipeline runs (dedup
-    keep-latest, as opposed to dedup.keep_first's keep-lowest-id).
+    keep-latest, as opposed to a keep-first dedup's keep-lowest-id).
 
     Deterministic under timestamp ties via the ``tiebreak`` column
     (highest wins). One shuffle on the key with a partial ``max(struct)``
@@ -1841,11 +1841,10 @@ def audience_overlap(events: DataFrame) -> DataFrame:
     broadcasts. The oracle keeps the DISTINCT + self-join spelling to pin
     the equivalence.
 
-    Shares :func:`pairwise_set_overlap` with ``text.source_vocab_overlap``
-    (same shape with elements = tokens, sets = sources)."""
+    The pairwise core is :func:`pairwise_set_overlap` with elements =
+    visitors and sets = event types."""
     return pairwise_set_overlap(
         events.select(F.col("visitorid").alias("element"), F.col("event").alias("set_id")),
-        sets=events.select(F.col("event")),
     ).select(
         F.col("set_a").alias("event_a"),
         F.col("set_b").alias("event_b"),
@@ -1856,11 +1855,7 @@ def audience_overlap(events: DataFrame) -> DataFrame:
     )
 
 
-def pairwise_set_overlap(
-    df: DataFrame,
-    sets: DataFrame | list | None = None,
-    max_bitmask_sets: int = 63,
-) -> DataFrame:
+def pairwise_set_overlap(df: DataFrame, max_bitmask_sets: int = 63) -> DataFrame:
     """Unordered pairwise overlap of sets from an (element, set_id) frame:
     for each pair (set_a < set_b) with a non-empty intersection, both
     sides' distinct-element counts, the intersection size, and Jaccard.
@@ -1886,15 +1881,11 @@ def pairwise_set_overlap(
     whole-stage codegen, and the name array is reconstructed from the
     mask AFTER the exchange. ``collect_set`` — an ObjectHashAggregate
     that builds per-key string arrays and falls back to sort-based
-    aggregation — measured 4× slower on the same exchange (10× fixture:
-    cross_source_duplication 10.1 → 3.4 s end-to-end together with the
-    arrays_zip window rewrite); it remains the fallback for >
-    ``max_bitmask_sets`` set universes, equality test-pinned. The set
-    universe comes from ``sets`` (a 1-column DataFrame — pass the cheap
-    pruned-scan source, e.g. ``docs.select("source")``, so discovery
-    does not re-run the fingerprint pipeline — or a plain list; it must
-    COVER every set_id in ``df``, unknown ids are silently dropped), or
-    is derived from ``df`` itself when None.
+    aggregation — measured 4× slower on the same exchange at 10× fixture
+    scale; it remains the fallback for > ``max_bitmask_sets`` set
+    universes, equality test-pinned. The set universe is the distinct
+    non-NULL set_ids of ``df``'s non-NULL-element rows, found by a
+    bounded driver collect before the plan is built.
 
     NULL elements are dropped up front to match SQL join semantics: the
     oracle spellings (and any DISTINCT + self-join equivalent) lose NULLs
@@ -1904,22 +1895,15 @@ def pairwise_set_overlap(
     (``bit_or`` and ``collect_set`` both skip NULLs)."""
     base = df.filter(F.col("element").isNotNull())
     max_bitmask_sets = min(max_bitmask_sets, 63)  # signed-long bit budget
-    if isinstance(sets, DataFrame):
-        src = sets.select(F.col(sets.columns[0]).alias("set_id"))
-    elif sets is not None:
-        src = None
-        names = sorted({s for s in sets if s is not None})
-    else:
-        src = base.select("set_id")
-    if sets is None or isinstance(sets, DataFrame):
-        # bounded driver collect: ≤ max_bitmask_sets + 1 rows
-        names = sorted(
-            r[0]
-            for r in src.filter(F.col("set_id").isNotNull())
-            .distinct()
-            .limit(max_bitmask_sets + 1)
-            .collect()
-        )
+    # bounded driver collect: ≤ max_bitmask_sets + 1 rows
+    names = sorted(
+        r[0]
+        for r in base.select("set_id")
+        .filter(F.col("set_id").isNotNull())
+        .distinct()
+        .limit(max_bitmask_sets + 1)
+        .collect()
+    )
     if 0 < len(names) <= max_bitmask_sets:
         bit_of = F.create_map(
             *[c for j, n in enumerate(names) for c in (F.lit(n), F.lit(1 << j))]
@@ -2270,10 +2254,9 @@ def decay_attribution(
 
     Weights are EXACT DYADIC RATIONALS built from integer shifts — no
     ``exp``/``pow`` libm call whose last-ulp behavior differs across
-    engines (same discipline as ``collocations``' log-free scores): both
-    operands of the one division are exactly representable integers, so
-    the quotient is identically rounded everywhere, then quantized to 12
-    decimals and summed as exact DECIMAL. The touch cap also bounds the
+    engines: both operands of the one division are exactly representable
+    integers, so the quotient is identically rounded everywhere, then
+    quantized to 12 decimals and summed as exact DECIMAL. The touch cap also bounds the
     shift at ``window_touches`` bits — BIGINT-safe by construction.
 
     Same join shape as linear_attribution (one (visitorid, horizon-bucket)

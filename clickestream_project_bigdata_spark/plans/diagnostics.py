@@ -5,9 +5,8 @@ one hot key through one task. These helpers read the driver's
 AppStatusStore (via py4j — the same store the UI/REST API serve, populated
 with ``spark.ui.enabled`` either way) for every stage of a job group and
 compare each stage's slowest task against its median.
-``tests/test_skew.py`` uses them to ASSERT no straggler on deliberately
-hostile fixtures (one visitor owning 20% of events, one token in 90% of
-docs).
+``tests/test_skew.py`` uses them to ASSERT no straggler on a
+deliberately hostile fixture (one visitor owning 20% of events).
 """
 
 from __future__ import annotations

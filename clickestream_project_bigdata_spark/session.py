@@ -60,8 +60,8 @@ def get_spark(
         # 100 TB scans: bound per-task input so partitions fit executor memory.
         "spark.sql.files.maxPartitionBytes": "256m",
         # ... and the inverse guard for SMALL-bytes / heavy-compute scans
-        # (explode-amplified text work such as shingling): aim for >= one
-        # split per core even when the input is a few MB, instead of the
+        # (explode-amplified work): aim for >= one split per core even
+        # when the input is a few MB, instead of the
         # default 4 MB open-cost floor that funnels a small file into ONE
         # task while every core idles. Splits land on parquet row-group
         # boundaries, so this composes with multi-row-group files (real

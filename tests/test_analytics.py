@@ -899,20 +899,22 @@ def test_audience_overlap_single_type_empty(spark, make_events):
 def test_pairwise_overlap_bitmask_matches_collect_set_fallback(spark):
     """The bit_or bitmask membership path (≤ 63 sets) and the collect_set
     fallback (forced via max_bitmask_sets=0) must agree row-for-row on the
-    REAL sf0.01 token/source frame — the cap-equality discipline that
-    protects the 100 TB story from a fast-path misconfiguration."""
+    REAL sf0.01 visitor/hour-of-day frame (24 sets, 276 pairs) — the
+    cap-equality discipline that protects the 100 TB story from a fast-path
+    misconfiguration."""
     from pyspark.sql import functions as F
 
     from clickestream_project_bigdata_spark.operators.analytics import (
         pairwise_set_overlap,
     )
+    from clickestream_project_bigdata_spark.sources.readers import (
+        events_from_fixture,
+    )
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    tokens = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    frame = docs.select(
-        F.explode(tokens).alias("element"),
-        F.col("source").alias("set_id"),
-    ).filter(F.col("element") != "")
+    frame = events_from_fixture(spark, "/root/testdata/sf0.01").select(
+        F.col("visitorid").alias("element"),
+        F.hour("event_time").cast("string").alias("set_id"),
+    )
     key = lambda r: (r.set_a, r.set_b)  # noqa: E731
     fast = sorted(pairwise_set_overlap(frame).collect(), key=key)
     slow = sorted(

@@ -5,8 +5,6 @@ empty-string quarantine routing (xml:1113-1114)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from clickestream_project_bigdata_spark.operators.cleanse import (
     canonicalize,
     cleanse_raw_events,

@@ -9,13 +9,6 @@ import pytest
 
 
 @pytest.fixture()
-def empty_docs(spark):
-    return spark.createDataFrame(
-        [], "doc_id long, text string, lang string, source string, n_chars long"
-    )
-
-
-@pytest.fixture()
 def empty_events(spark):
     return spark.createDataFrame(
         [],
@@ -47,32 +40,6 @@ def test_analytics_on_empty_events(spark, empty_events):
     assert p.n_rows == 0
 
 
-def test_text_and_curation_on_empty_docs(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators import text
-
-    assert text.text_stats(empty_docs).count() == 0
-    assert text.lang_id(empty_docs).count() == 0
-    assert text.tfidf_top_terms(empty_docs).count() == 0
-    assert text.repetition_score(empty_docs).count() == 0
-    assert text.chunk_documents(empty_docs).count() == 0
-    assert text.similar_docs_topk(empty_docs, query_id=0).count() == 0
-
-
-def test_null_text_documents_flow_through(spark):
-    """NULL text must not crash any text-path operator: stats come back
-    NULL (so quality filters drop the doc — comparisons with NULL are
-    false) and chunking emits nothing for the doc."""
-    from clickestream_project_bigdata_spark.operators import text
-
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, None)], "doc_id long, text string"
-    )
-    stats = {r.doc_id: r.quality_score for r in text.text_stats(docs).collect()}
-    assert stats[1] is not None and stats[2] is None
-    assert text.chunk_documents(docs).filter("doc_id = 2").count() == 0
-    assert text.repetition_score(docs).filter("doc_id = 2").count() == 1
-
-
 def test_driver_contract_keys_aligned():
     """Every queries() entry has an oracle_sql() twin and vice versa — the
     correctness gate covers the WHOLE query surface (a query added without
@@ -95,26 +62,15 @@ def test_round6_operators_on_empty_inputs(spark, empty_events):
     assert (row.users_step1, row.users_step2, row.users_step3) == (0, 0, 0)
 
 
-def test_round6_latest_ops_on_empty_docs(spark, empty_docs):
-    from clickestream_project_bigdata_spark.operators.text import (
-        collocations,
-        type_token_ratio,
-    )
-
-    assert collocations(empty_docs).count() == 0
-    assert type_token_ratio(empty_docs).count() == 0
-
-
-def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs):
+def test_round6_final_operators_on_empty_inputs(spark, empty_events):
     """The round-6-final operators: empty in → empty (or single all-NULL
     aggregate row where the operator is a global aggregate) — never an
     error."""
-    from clickestream_project_bigdata_spark.operators import analytics, text
+    from clickestream_project_bigdata_spark.operators import analytics
 
     assert analytics.audience_overlap(empty_events).count() == 0
     assert analytics.burstiness(empty_events).count() == 0
     assert analytics.novelty_rate(empty_events).count() == 0
-    assert text.source_vocab_overlap(empty_docs).count() == 0
 
     # global aggregates return their one row with NULL metrics
     z = analytics.zipf_slope(empty_events).collect()
@@ -123,9 +79,8 @@ def test_round6_final_operators_on_empty_inputs(spark, empty_events, empty_docs)
     assert len(g) == 1 and g[0].gini is None
 
 
-def test_round7_operators_on_empty_inputs(spark, empty_events, empty_docs):
-    from clickestream_project_bigdata_spark.operators import analytics, text
+def test_round7_operators_on_empty_inputs(spark, empty_events):
+    from clickestream_project_bigdata_spark.operators import analytics
 
-    assert text.vocab_growth(empty_docs).count() == 0
     assert analytics.first_touch_funnel(empty_events).count() == 0
     assert analytics.decay_attribution(empty_events).count() == 0

@@ -18,7 +18,6 @@ inputs at the front door. These tests pin what the engine does with each:
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from clickestream_project_bigdata_spark.operators.cleanse import (

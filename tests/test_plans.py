@@ -19,39 +19,6 @@ from clickestream_project_bigdata_spark.sources.readers import read_parquet_tabl
 SF = "/root/testdata/sf0.01"
 
 
-def test_tfidf_and_repetition_semantics(spark):
-    """Hand-checkable TF-IDF ranking and repetition ratios."""
-    from clickestream_project_bigdata_spark.operators.text import (
-        repetition_score,
-        tfidf_top_terms,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "apple banana apple"), (2, "banana cherry"), (3, "banana banana banana banana")],
-        "doc_id long, text string",
-    )
-    top = {
-        (r.doc_id, r.rank): (r.term, r.tf)
-        for r in tfidf_top_terms(docs, k=2).collect()
-    }
-    # doc 1: apple tf=2 df=1 (rare, heavy) ranks above banana tf=1 df=3
-    assert top[(1, 1)] == ("apple", 2)
-    assert top[(1, 2)] == ("banana", 1)
-    # doc 3: only one distinct term
-    assert top[(3, 1)] == ("banana", 4)
-    assert (3, 2) not in top
-
-    rep = {r.doc_id: (r.n_grams, r.n_distinct, r.repetition_ratio)
-           for r in repetition_score(docs, n=2).collect()}
-    # doc 1 bigrams: "apple banana", "banana apple" -> no repeats
-    assert rep[1] == (2, 2, 0.0)
-    # doc 2: one bigram
-    assert rep[2] == (1, 1, 0.0)
-    # doc 3: "banana banana" x3 -> 1 distinct of 3
-    assert rep[3][0] == 3 and rep[3][1] == 1
-    assert abs(rep[3][2] - (1 - 1 / 3)) < 1e-6
-
-
 def test_latest_event_state_single_exchange_partial_max(spark, make_events):
     """CDC keep-latest must plan as partial max(struct) BEFORE one hash
     exchange — never a window over fully-shuffled rows."""
@@ -99,28 +66,6 @@ def test_minute_metrics_single_exchange(spark, make_events):
     events = make_events([(1, "2024-01-01T00:00:00", "view", 1)])
     assert count_exchanges(analytics.events_per_minute(events)) <= 1
     assert count_exchanges(analytics.top_items(events)) <= 1
-
-
-def test_redact_and_text_ops_no_shuffle(spark):
-    """The per-document text passes (stats, fingerprint) are narrow: no
-    exchange anywhere."""
-    from clickestream_project_bigdata_spark.operators import text
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for df in (
-        text.text_stats(docs),
-        text.fingerprint(docs),
-    ):
-        assert count_exchanges(df) == 0
-
-
-def test_round4_operator_plan_shapes(spark):
-    """Plan pin for the round-4 operators: chunking shuffles nothing."""
-    from clickestream_project_bigdata_spark.operators import text
-
-    docs = read_parquet_table(spark, SF, "documents")
-    chunks = text.chunk_documents(docs, max_tokens=64, overlap=16)
-    assert count_exchanges(chunks) == 0
 
 
 def test_pairwise_overlap_single_linear_pipeline(spark):
@@ -179,20 +124,6 @@ def test_repeat_purchase_rate_no_join(spark):
     df = analytics.repeat_purchase_rate(ev)
     assert count_exchanges(df) <= 2
     assert count_sort_merge_joins(df) == 0
-
-
-def test_skipgram_pmi_no_interpreted_hof(spark):
-    """The pair stream must be zip_with shifted slices (codegen), never an
-    interpreted `transform(sequence, ...)` lambda (the r7 lesson), and the
-    top-k must plan as TakeOrderedAndProject, not a global sort."""
-    from clickestream_project_bigdata_spark.operators.text import skipgram_pmi
-
-    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
-    df = skipgram_pmi(docs, window=3, k=10, min_count=1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "transform(sequence(" not in optimized
 
 
 def test_position_attribution_no_trailing_global_sort(spark):

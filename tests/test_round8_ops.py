@@ -114,27 +114,3 @@ def test_repeat_purchase_rate(spark):
     [r] = repeat_purchase_rate(_ev(spark, rows)).collect()
     assert (r.n_buyers, r.n_repeat_buyers, r.n_purchases) == (2, 1, 3)
     assert r.repeat_rate == 0.5
-
-
-def test_skipgram_pmi_window_semantics(spark):
-    """Distance <= window pairs counted (unordered, canonical); distance
-    window+1 not; zip_with tail padding must NOT create self-pairs."""
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.operators.text import skipgram_pmi
-
-    docs = spark.createDataFrame(
-        [(i, "a b c d e") for i in range(5)], "doc_id long, text string"
-    )
-    out = skipgram_pmi(docs, window=3, k=100, min_count=5).collect()
-    pairs = {(r.token_a, r.token_b): r.n_pair for r in out}
-    # distance 1..3 pairs present with count 5 (one per doc)
-    assert pairs[("a", "b")] == 5 and pairs[("a", "d")] == 5
-    assert ("a", "e") not in pairs  # distance 4 > window
-    # tail padding produced no (e, e) / (d, d) self-pairs
-    assert all(a != b for (a, b) in pairs)
-    # every unigram count is 5 -> all scores identical:
-    # c_ab * N * 1e6 / (c_a*c_b) = 5*25e6/25 = 5_000_000
-    assert {r.score_ppm for r in out} == {5_000_000}
-
-

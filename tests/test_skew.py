@@ -1,13 +1,11 @@
 """Adversarial-skew fixture (VERDICT r7 #8): the organic fixtures spread
-keys evenly, so every skew guard (window partitioning, blocked candidate
-generation) had only been exercised on friendly data.
-This module builds deliberately hostile inputs — ONE visitor owning 20% of
-all events, ONE token in 90% of all documents — and asserts the guarded
-operators finish without a straggler: no task in any stage of the
-operator's job group may run longer than 10× the stage median
-(AppStatusStore task durations via py4j; stages whose slowest task is under
-the scheduling-noise floor are skipped — a 40 ms vs 4 ms "straggler" is
-noise, not skew).
+keys evenly, so the per-visitor window partitioning had only been exercised
+on friendly data. This module builds a deliberately hostile input — ONE
+visitor owning 20% of all events — and asserts the guarded operators finish
+without a straggler: no task in any stage of the operator's job group may
+run longer than 10× the stage median (AppStatusStore task durations via
+py4j; stages whose slowest task is under the scheduling-noise floor are
+skipped — a 40 ms vs 4 ms "straggler" is noise, not skew).
 """
 
 from __future__ import annotations
@@ -69,22 +67,6 @@ def skewed_events(spark):
     ).repartition(8)
 
 
-@pytest.fixture(scope="module")
-def skewed_docs(spark):
-    """4k docs of ~40 tokens; the token 'zipfhead' appears (several times)
-    in 90% of docs — the collocation/token-count hot key."""
-    rng = random.Random(7)
-    vocab = [f"tok{i}" for i in range(2_000)]
-    rows = []
-    for i in range(4_000):
-        toks = [rng.choice(vocab) for _ in range(40)]
-        if i % 10 != 0:  # 90% of docs carry the hot token, 4 times each
-            for pos in rng.sample(range(40), 4):
-                toks[pos] = "zipfhead"
-        rows.append((i, " ".join(toks), f"src{i % 5}"))
-    return spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-
 def test_sessionize_hub_visitor_no_straggler(spark, skewed_events):
     """The 20%-of-events visitor is ONE window partition; the assertion
     documents that the per-visitor exchange tolerates a 600x-average key
@@ -109,15 +91,6 @@ def test_top_paths_hub_visitor_no_straggler(spark, skewed_events):
     n = _run_grouped(spark, "skew-toppaths", out)
     assert n == 20
     _assert_no_straggler(spark, "skew-toppaths")
-
-
-def test_collocations_hot_token_no_straggler(spark, skewed_docs):
-    from clickestream_project_bigdata_spark.operators.text import collocations
-
-    out = collocations(skewed_docs, k=50, min_count=3)
-    n = _run_grouped(spark, "skew-colloc", out)
-    assert n == 50
-    _assert_no_straggler(spark, "skew-colloc")
 
 
 def test_straggler_harness_sees_tasks(spark, skewed_events):

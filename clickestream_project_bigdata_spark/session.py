@@ -13,6 +13,14 @@ bakes in the scale-relevant defaults:
 * **Arrow** for any pandas-interchange path (Pandas UDFs, `toPandas`).
 * shuffle partition count from `SPARK_GRAFT_CPUS` (local testing) — on a real
   cluster you'd leave AQE to coalesce from a high initial count.
+* a **generated-code cache** of 1000 classes. One ``run_pipeline`` pass
+  needs about 89 generated classes, and Spark's default cache holds 100
+  split into 4 LRU segments of 25, so every pass re-compiled 14–23 classes
+  that were byte-identical to the previous pass's, and the JIT re-warmed
+  them from the interpreter. With 1000 entries a pass after the first
+  compiles only what its literals change (the funnel's
+  ``current_timestamp()``). The cache is sized once per JVM from a static
+  SQL conf, so it can only be set when the session is built.
 """
 
 from __future__ import annotations
@@ -77,6 +85,9 @@ def get_spark(
         # when their RDD is GC'd instead of accumulating for the life of
         # the cluster (Spark's default leaves them on disk)
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        # static: the per-batch working set (~89 classes) must fit the
+        # code cache, or each pass recompiles what LRU evicted
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",

@@ -96,3 +96,34 @@ def test_canonicalize_types(spark):
     assert r.event_time.isoformat() == "2015-06-01T16:10:00.123000"
     assert r.unix_timestamp == 1433175000123
 
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Class names of every node of a Catalyst plan, root first."""
+    names = [plan.getClass().getSimpleName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _plan_nodes(children.apply(i))
+    return names
+
+
+def test_typed_ids_quarantine_plans_no_scan(spark, tmp_path):
+    """N6 on the typed CSV path: a long id can never be "", so the
+    quarantine optimizes to an empty LocalRelation that scans nothing, and
+    the valid side carries no filter."""
+    from clickestream_project_bigdata_spark.sources.readers import read_raw_events_csv
+
+    p = tmp_path / "events.csv"
+    p.write_text(
+        "timestamp,visitorid,event,itemid,transactionid\n"
+        "1700000000000,7,view,10,\n"
+        "1700000060000,7,transaction,,555\n"
+    )
+    res = cleanse_raw_events(read_raw_events_csv(spark, str(p)))
+    quarantine = res.quarantine._jdf.queryExecution()
+    assert _plan_nodes(quarantine.optimizedPlan()) == ["LocalRelation"]
+    assert quarantine.optimizedPlan().data().isEmpty()
+    assert "FileScan" not in quarantine.executedPlan().toString()
+    assert "Filter" not in _plan_nodes(res.valid._jdf.queryExecution().optimizedPlan())
+    assert res.quarantine.count() == 0
+    assert res.valid.count() == 2

@@ -35,7 +35,6 @@ from clickestream_project_bigdata_spark.operators.sessionize import (  # noqa: E
 from clickestream_project_bigdata_spark.sources.readers import (  # noqa: E402
     events_from_fixture,
     read_events_table,
-    read_parquet_table,
 )
 
 FUNNEL_STEPS = ["view", "click", "purchase"]
@@ -332,11 +331,6 @@ def _q_item_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.item_dwell_time(events_from_fixture(_utc(spark), sf_dir))
 
 
-def _q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation (operators/analytics.py:rfm_segments)."""
-    return analytics.rfm_segments(read_parquet_table(spark, sf_dir, "orders"))
-
-
 def _q_sequential_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict-order funnel view→click→purchase
     (operators/analytics.py:sequential_funnel): chained conditional mins,
@@ -360,12 +354,6 @@ def _q_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT surface: minute × event-type counts in wide format with an
     explicit value list (operators/analytics.py:event_type_pivot)."""
     return analytics.event_type_pivot(events_from_fixture(spark, sf_dir))
-
-
-def _q_customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile() surface: customers cut into spend deciles
-    (operators/analytics.py:customer_value_deciles)."""
-    return analytics.customer_value_deciles(read_parquet_table(spark, sf_dir, "orders"))
 
 
 def _with_utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
@@ -475,24 +463,6 @@ def _q_returning_visitor_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.returning_visitor_rate(events_from_fixture(spark, sf_dir))
 
 
-def _q_heavy_hitter_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact heavy hitters over itemid via the Misra-Gries two-pass plan
-    (operators/analytics.py): shuffle-free per-partition sketch candidates,
-    broadcast semi-join, exact verify - integer-exact thresholds."""
-    return analytics.heavy_hitters_2pass(
-        events_from_fixture(spark, sf_dir), key="itemid", share_ppm=2000
-    )
-
-
-def _q_decile_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue concentration by spend decile (operators/analytics.py:
-    decile_revenue_share) - the Lorenz readout over the distributed
-    ntile."""
-    return analytics.decile_revenue_share(
-        read_parquet_table(spark, sf_dir, "orders")
-    )
-
-
 def _q_item_revisit_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-item re-engagement cadence (operators/analytics.py:
     item_revisit_time): consecutive (visitor, item) gaps rolled up per
@@ -534,12 +504,10 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "bot_flags": _q_bot_flags,
         "minute_anomalies": _q_minute_anomalies,
         "event_type_pivot": _q_event_type_pivot,
-        "customer_value_deciles": _q_customer_value_deciles,
         "sequential_funnel": _q_sequential_funnel,
         "item_cooccurrence": _q_item_cooccurrence,
         "retention_cohorts": _q_retention_cohorts,
         "item_dwell_time": _q_item_dwell_time,
-        "rfm_segments": _q_rfm_segments,
         "session_entry_exit": _q_session_entry_exit,
         "top_paths": _q_top_paths,
         # changed this round (grouping_id added) - re-verify
@@ -579,10 +547,8 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "position_attribution": _q_position_attribution,
         "cart_abandonment": _q_cart_abandonment,
         "repeat_purchase_rate": _q_repeat_purchase_rate,
-        "heavy_hitter_items": _q_heavy_hitter_items,
         "path_conversion_rates": _q_path_conversion_rates,
         "returning_visitor_rate": _q_returning_visitor_rate,
-        "decile_revenue_share": _q_decile_revenue_share,
         "item_revisit_time": _q_item_revisit_time,
         "session_gap_histogram": _q_session_gap_histogram,
     }
@@ -606,8 +572,6 @@ _SAMPLING_PRIORITY: list[str] = [
     #    next-oldest cohort fills the ~50-row sample; the tail rolls to
     #    the next round
     "cart_abandonment",
-    "customer_value_deciles",
-    "decile_revenue_share",
     "event_type_pivot",
     "events_column_profile",
     "first_touch_funnel",
@@ -1142,20 +1106,6 @@ def oracle_sql() -> dict[str, str]:
             "AS DOUBLE), 6) AS avg_dwell_seconds "
             "FROM l WHERE nxt IS NOT NULL AND itemid IS NOT NULL GROUP BY 1"
         ),
-        "rfm_segments": (
-            "WITH ref AS (SELECT MAX(o_orderdate) AS r FROM orders), "
-            "pc AS (SELECT o_custkey AS custkey, "
-            "CAST(date_diff('day', MAX(o_orderdate), (SELECT r FROM ref)) AS INT) "
-            "AS recency_days, "
-            "CAST(COUNT(*) AS BIGINT) AS frequency, "
-            "SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS spend "
-            "FROM orders GROUP BY 1) "
-            "SELECT custkey, recency_days, frequency, CAST(spend AS DOUBLE) AS monetary, "
-            "CAST(ntile(5) OVER (ORDER BY recency_days ASC, custkey ASC) AS INT) AS r_score, "
-            "CAST(ntile(5) OVER (ORDER BY frequency DESC, custkey ASC) AS INT) AS f_score, "
-            "CAST(ntile(5) OVER (ORDER BY spend DESC, custkey ASC) AS INT) AS m_score "
-            "FROM pc"
-        ),
         "sequential_funnel": (
             f"WITH {_SESSIONIZED}, "
             "s1 AS (SELECT session_id, visitorid, "
@@ -1195,14 +1145,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CASE WHEN event = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup, "
             "CAST(SUM(CASE WHEN event = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view "
             "FROM ev GROUP BY 1"
-        ),
-        "customer_value_deciles": (
-            "WITH spend AS (SELECT o_custkey AS custkey, "
-            "SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS s "
-            "FROM orders GROUP BY 1) "
-            "SELECT custkey, CAST(s AS DOUBLE) AS total_spend, "
-            "CAST(ntile(10) OVER (ORDER BY s DESC, custkey ASC) AS INT) AS decile "
-            "FROM spend"
         ),
         "item_skew_profile": (
             f"WITH {_EV}, c AS (SELECT itemid, CAST(COUNT(*) AS BIGINT) AS n_rows FROM ev GROUP BY 1), "
@@ -1262,15 +1204,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST((CAST(1 AS BIGINT) << m) - 1 AS DOUBLE), 12) AS DECIMAL(18,12))) "
             "AS DOUBLE), 6) AS credit "
             "FROM kept JOIN fan ON cid = fcid GROUP BY itemid"
-        ),
-        "heavy_hitter_items": (
-            f"WITH {_EV}, "
-            "src AS (SELECT itemid FROM ev WHERE itemid IS NOT NULL), "
-            "n AS (SELECT COUNT(*) AS N FROM src) "
-            "SELECT itemid, CAST(COUNT(*) AS BIGINT) AS exact_count, "
-            "CAST((1000000 * COUNT(*)) // (SELECT N FROM n) AS BIGINT) AS share_ppm_floor "
-            "FROM src GROUP BY itemid "
-            "HAVING 1000000 * COUNT(*) >= 2000 * (SELECT N FROM n)"
         ),
         # --- round 8 ---
         "position_attribution": (
@@ -1345,18 +1278,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_returning, "
             "round(SUM(CASE WHEN d >= 2 THEN 1 ELSE 0 END) / "
             "CAST(COUNT(*) AS DOUBLE), 6) AS returning_rate FROM per"
-        ),
-        "decile_revenue_share": (
-            "WITH spend AS (SELECT o_custkey, "
-            "SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 10000 AS BIGINT)) AS cents "
-            "FROM orders GROUP BY 1), "
-            "d AS (SELECT o_custkey, cents, "
-            "ntile(10) OVER (ORDER BY cents DESC, o_custkey) AS decile FROM spend), "
-            "per AS (SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers, "
-            "CAST(SUM(cents) AS BIGINT) AS cents FROM d GROUP BY 1) "
-            "SELECT decile, n_customers, cents / 10000.0 AS revenue, "
-            "round(CAST(cents AS DOUBLE) / CAST((SELECT SUM(cents) FROM per) AS DOUBLE), 6) "
-            "AS revenue_share FROM per"
         ),
         "item_revisit_time": (
             "WITH ev AS (SELECT user_id AS visitorid, ts AS event_time, event_id, "

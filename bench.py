@@ -51,7 +51,7 @@ HEADLINE = [
     "most_viewed_items",
 ]
 
-TABLES = ["orders", "events"]
+TABLES = ["events"]
 
 
 def _recode_fixture(sf_dir: str, target_splits: int = 32) -> str:
@@ -223,7 +223,7 @@ def main() -> None:
 
         low_cpus = 8 if scaling_env == "1" else max(1, int(scaling_env))
         high_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-        probe_default = "rfm_segments"
+        probe_default = "item_lift"
         probes = [
             p.strip()
             for p in os.environ.get(

@@ -10,8 +10,8 @@ Layout:
   further event analyses behind the query registry.
 * ``streaming`` — foreachBatch driver (reference-compatible) and the
   watermarked/session_window-based improved mode; pluggable sinks.
-* ``plans``     — plan-audit helpers (exchange/join-count assertions),
-  skew diagnostics and ``materialize_once``.
+* ``plans``     — plan-audit helpers (exchange/join-count assertions) and
+  skew diagnostics.
 """
 
 from .session import get_spark

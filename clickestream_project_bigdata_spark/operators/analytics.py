@@ -150,390 +150,6 @@ def event_type_pivot(
     )
 
 
-def _cmp_order_tuples(order: list, a: tuple, b: tuple) -> int:
-    """Lexicographic compare of two order tuples under the per-column
-    asc/desc directions (columns are non-null by the total-order
-    contract): <0 iff ``a`` sorts before ``b``."""
-    for (_, asc), x, y in zip(order, a, b):
-        if x == y:
-            continue
-        before = (x < y) if asc else (x > y)
-        return -1 if before else 1
-    return 0
-
-
-def _distributed_ntile(
-    df: DataFrame,
-    n_buckets: int,
-    order: list,
-    out_name: str,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Exact SQL ``ntile(n)`` semantics WITHOUT an unpartitioned window —
-    no single task ever sorts the whole frame.
-
-    ``order`` is a list of ``(column_name, ascending)`` pairs and must be
-    a TOTAL order over non-null columns (deterministic tiebreak) — same
-    contract the window spelling had.
-
-    This range-exchange + checkpoint + ordinal-stamp spelling is the
-    MEASURED winner of four implementations at the 100x checkpoint
-    (SCALING.md "ntile spellings" — r11): three cutpoint-family
-    alternatives (literal quantile bounds with driver offsets; the same
-    with the offsets folded into the final action as tiny windowed
-    subtrees; a width_bucket histogram with exact refinement of
-    boundary-straddling bins only) were each built and measured SLOWER
-    (2.5-2.7 s, 2.5 s, 3.5-4.8 s vs 1.8-2.6 s warm for this spelling on
-    the deciles query) — on a 32-thread local box the per-action floor
-    dominates, and this spelling amortizes the one shuffle+sort across
-    both passes through the checkpoint. Pre-materializing the input to
-    kill the RangePartitioner sampling recompute was also measured: the
-    second checkpoint write costs what the sampling saves. The two Spark
-    behaviors the stamp leans on are VERIFIED per call (boundary
-    monotonicity + pid-range checks below) and pinned by an 8-partition
-    randomized parity test, answering the r10 ADVICE contract concern.
-
-    (A driver-local tier — Arrow-collect the slim rank frame, numpy
-    lexsort, closed-form buckets, Arrow back — was built and MEASURED
-    SLOWER at the 100x checkpoint: the round-trip of a 1.5M-row frame
-    through toPandas/createDataFrame alone cost 2-3x the whole
-    distributed pipeline. The bounded-local-twin discipline that pays
-    off for iterative algorithms does not pay for one-pass ranking.)
-
-    Shape (one range exchange, one local sort, one
-    ≤#partitions-row collect, one broadcast join — the r9 form
-    additionally paid a separate full ``count(*)`` job, a window-sum, and
-    a crossJoin of the count; measured 3.2–3.7× of the DuckDB control at
-    the 100× checkpoint, this spelling exists to cut that constant
-    factor):
-
-    * range-repartition on the total order, SORT WITHIN partitions, then
-      stamp ``monotonically_increasing_id()`` — its documented layout is
-      (partition id << 33) | row-ordinal-in-iteration-order, and a
-      Project over a local Sort iterates in sorted order, so the stamp
-      IS (pid, local rank) with ZERO window nodes and zero extra
-      exchanges (a ``row_number() over (partition by pid)`` window would
-      re-shuffle on hash(pid): Catalyst can't prove the range exchange
-      already clusters by pid). Caps rows-per-partition at 2^33 —
-      ~8.6 B, far above any sane partition size;
-    * MATERIALIZE (pinning the sampled range bounds AND the stamp — a
-      recompute could shift both between passes; see
-      plans.scale.materialize_once);
-    * per-partition row counts via a plain groupBy on the stamped pid
-      (map-side combined, ≤#partitions rows to the driver) give BOTH the
-      exclusive offsets AND the global N — no second scan, no separate
-      count job;
-    * ntile's bucket layout in closed form from (rank, N): with
-      ``q, r = divmod(N, n)`` the first ``r`` buckets hold ``q+1`` rows,
-      the rest ``q`` — and since N is a DRIVER constant here, q/r/big
-      fold to literals (``rn`` stays well under 2^53, so the
-      floor-of-double division is exact).
-
-    Output: ``df`` plus ``out_name`` int, minus nothing. Each pass's
-    driver state is one bounded collect; callers with several independent
-    ntiles (RFM) can run them from threads — the jobs share nothing."""
-    from ..plans.scale import materialize_once
-
-    spark = df.sparkSession
-    order_exprs = [
-        F.asc(name) if asc else F.desc(name) for name, asc in order
-    ]
-    n_part = partitions or spark.sparkContext.defaultParallelism
-    part = materialize_once(
-        df.repartitionByRange(n_part, *order_exprs)
-        .sortWithinPartitions(*order_exprs)
-        .withColumn("__mid", F.monotonically_increasing_id())
-    )
-    pid = F.shiftright("__mid", 33).cast("int")
-    local_rank = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + 1
-    # the same ≤#partitions-row collect that yields the offsets also
-    # carries each partition's FIRST and LAST order tuples (min_by/max_by
-    # on the stamp, i.e. the rows the stamp itself says are the partition's
-    # boundary rows in local sort order), so the two Spark behaviors this
-    # spelling leans on (range-partition ids ordered by range bounds;
-    # stamp ordinals assigned in local sort order) are VERIFIED per call
-    # over the FULL order tuple — a pid reordering confined to ties in the
-    # first column (tiebreak columns out of order) is caught too, not just
-    # first-column violations (r11 ADVICE). If a Spark upgrade ever
-    # re-stages the projection or reorders partition ids, the boundary
-    # check below fails loudly instead of mis-ranking silently.
-    ord_struct = F.struct(*[F.col(name) for name, _ in order])
-    stats = {
-        r["__pid"]: (r["__c"], tuple(r["__first"]), tuple(r["__last"]))
-        for r in part.groupBy(pid.alias("__pid"))
-        .agg(
-            F.count("*").alias("__c"),
-            F.min_by(ord_struct, "__mid").alias("__first"),
-            F.max_by(ord_struct, "__mid").alias("__last"),
-        )
-        .collect()
-    }
-
-    def _cmp_order(a: tuple, b: tuple) -> int:
-        return _cmp_order_tuples(order, a, b)
-
-    acc = 0
-    offsets = []
-    prev_last = None
-    for p in sorted(stats):
-        c, first, last = stats[p]
-        if not (isinstance(p, int) and 0 <= p < n_part):
-            raise RuntimeError(
-                f"_distributed_ntile: stamped partition id {p!r} outside "
-                f"[0, {n_part}) — monotonically_increasing_id layout changed"
-            )
-        # ties may legally span a partition edge, so the invariant is
-        # non-STRICT: each partition's first tuple must not sort before
-        # the previous partition's last tuple
-        # None-valued boundary cells (a caller violating the non-null
-        # contract) are unorderable — skip the check rather than raise a
-        # confusing TypeError; the ntile itself still works, just unverified
-        orderable = (
-            prev_last is not None
-            and None not in first
-            and None not in prev_last
-        )
-        if orderable and _cmp_order(first, prev_last) < 0:
-            raise RuntimeError(
-                "_distributed_ntile: range-partition ids are not ordered "
-                f"by range bounds (pid {p} starts at {first!r}, previous "
-                f"partition ended at {prev_last!r}) — offsets would "
-                "mis-rank; Spark RangePartitioning contract violated"
-            )
-        prev_last = last
-        offsets.append((p, acc))
-        acc += c
-    N = acc
-    if N == 0:
-        return df.withColumn(out_name, F.lit(None).cast("int"))
-    off = spark.createDataFrame(offsets, "__pid int, __off long")
-    rn = F.col("__off") + local_rank
-    q, r = divmod(N, n_buckets)
-    big = r * (q + 1)  # rows living in the size-(q+1) leading buckets
-    # q == 0 (fewer rows than buckets): big == N, so the otherwise branch
-    # is unreachable — max(q, 1) only keeps the folded literal finite
-    bucket = F.when(rn <= big, F.floor((rn - 1) / F.lit(q + 1))).otherwise(
-        F.lit(r) + F.floor((rn - big - 1) / F.lit(max(q, 1)))
-    )
-    return (
-        part.withColumn("__pid", pid)
-        .join(F.broadcast(off), "__pid")
-        .withColumn(out_name, (bucket + 1).cast("int"))
-        .drop("__pid", "__off", "__mid")
-    )
-
-
-def _ntile_union_stamped(
-    df: DataFrame, specs: list, n_part: int
-) -> DataFrame:
-    """The un-checkpointed data path of :func:`_distributed_ntile_multi`:
-    one branch per spec (range-repartition on the spec's order + local
-    sort + ``__metric`` tag), unioned, with ONE nondeterministic
-    ``__mid`` stamp above the union."""
-    from functools import reduce
-
-    branches = []
-    for i, (_, order) in enumerate(specs):
-        order_exprs = [
-            F.asc(name) if asc else F.desc(name) for name, asc in order
-        ]
-        branches.append(
-            df.repartitionByRange(n_part, *order_exprs)
-            .sortWithinPartitions(*order_exprs)
-            .withColumn("__metric", F.lit(i))
-        )
-    return reduce(DataFrame.unionByName, branches).withColumn(
-        "__mid", F.monotonically_increasing_id()
-    )
-
-
-def _distributed_ntile_multi(
-    df: DataFrame,
-    n_buckets: int,
-    specs: list,
-    partitions: int | None = None,
-) -> DataFrame:
-    """SEVERAL exact ntiles over the SAME frame in ONE action chain —
-    the multi-metric sibling of :func:`_distributed_ntile` (RFM's three
-    scores are the motivating caller).
-
-    ``specs`` is a list of ``(out_name, order)`` pairs, each ``order`` the
-    single-version's ``[(column, ascending), ...]`` total-order contract.
-    Output is LONG format: ``df``'s columns plus ``__metric`` (the spec
-    index, int) and ``__ntile`` (that metric's bucket, 1-based int) — one
-    row per (input row, spec). Callers assemble wide with one
-    ``groupBy(key)``.
-
-    Why one call instead of N: the single version costs TWO actions per
-    metric (the checkpoint pinning the range stamp + the ≤#partitions-row
-    stats collect) downstream of the shared input's own checkpoint — a
-    dependency chain FOUR actions deep for RFM even with the three ntiles
-    running from threads, and the 100× checkpoint measured ~1.9 s of
-    rfm_segments' 4.96 s wall as pure scheduling floor (VERDICT r14).
-    Here the N range exchanges live as branches of ONE union:
-
-    * each branch range-repartitions + locally sorts the SAME ``df`` plan
-      on its own order — Catalyst's ReuseExchange computes any shuffle in
-      ``df``'s lineage (e.g. RFM's customer rollup) ONCE and feeds all
-      branches from the same map output, so the shared input needs no
-      separate checkpoint action;
-    * ONE ``monotonically_increasing_id`` stamp ABOVE the union (union
-      partition ids are the concatenation of branch partitions in branch
-      order, and the nondeterministic projection is not pushed through
-      the union, so the stamp is (union pid, local rank) exactly as in
-      the single version — per-branch, pids ascend in range-bound order,
-      VERIFIED below);
-    * ONE checkpoint pins all N stamps, ONE ≤(N·#partitions)-row collect
-      yields every metric's offsets, and the boundary verification runs
-      per metric over the full order tuple (all order columns ride along
-      in every branch, so min_by/max_by of one shared struct serves all
-      metrics).
-
-    Depth: checkpoint → collect → consumer = THREE actions total for any
-    number of metrics. Output per metric is bit-identical to the single
-    version (same closed-form bucket arithmetic, same N)."""
-    from ..plans.scale import materialize_once
-
-    spark = df.sparkSession
-    n_part = partitions or spark.sparkContext.defaultParallelism
-    part = materialize_once(_ntile_union_stamped(df, specs, n_part))
-    pid = F.shiftright("__mid", 33).cast("int")
-    local_rank = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + 1
-    # one struct carrying the union of every spec's order columns: the
-    # driver restricts it to each metric's own columns when verifying
-    all_order_cols = list(
-        dict.fromkeys(c for _, order in specs for c, _ in order)
-    )
-    ord_struct = F.struct(*[F.col(c) for c in all_order_cols])
-    by_metric: dict[int, dict[int, tuple]] = {i: {} for i in range(len(specs))}
-    for r in (
-        part.groupBy(F.col("__metric").alias("__m"), pid.alias("__pid"))
-        .agg(
-            F.count("*").alias("__c"),
-            F.min_by(ord_struct, "__mid").alias("__first"),
-            F.max_by(ord_struct, "__mid").alias("__last"),
-        )
-        .collect()
-    ):
-        by_metric[r["__m"]][r["__pid"]] = (
-            r["__c"],
-            tuple(r["__first"]),
-            tuple(r["__last"]),
-        )
-    max_pid = len(specs) * n_part
-    col_ix = {c: j for j, c in enumerate(all_order_cols)}
-    offsets = []
-    n_by_metric: dict[int, int] = {}
-    for m, (_, order) in enumerate(specs):
-        pick = [col_ix[c] for c, _ in order]
-        acc = 0
-        prev_last = None
-        for p in sorted(by_metric[m]):
-            c, first_all, last_all = by_metric[m][p]
-            first = tuple(first_all[j] for j in pick)
-            last = tuple(last_all[j] for j in pick)
-            if not (isinstance(p, int) and 0 <= p < max_pid):
-                raise RuntimeError(
-                    f"_distributed_ntile_multi: stamped partition id {p!r} "
-                    f"outside [0, {max_pid}) — monotonically_increasing_id "
-                    "layout changed"
-                )
-            # same non-strict invariant as the single version: ties may
-            # legally span a partition edge; None boundary cells (caller
-            # violating the non-null contract) are unorderable — skip
-            orderable = (
-                prev_last is not None
-                and None not in first
-                and None not in prev_last
-            )
-            if orderable and _cmp_order_tuples(order, first, prev_last) < 0:
-                raise RuntimeError(
-                    "_distributed_ntile_multi: range-partition ids are not "
-                    f"ordered by range bounds for metric {m} (pid {p} "
-                    f"starts at {first!r}, previous partition ended at "
-                    f"{prev_last!r}) — offsets would mis-rank; Spark "
-                    "RangePartitioning/Union contract violated"
-                )
-            prev_last = last
-            offsets.append((m, p, acc))
-            acc += c
-        n_by_metric[m] = acc
-    ns = set(n_by_metric.values())
-    if len(ns) > 1:
-        raise RuntimeError(
-            "_distributed_ntile_multi: branches disagree on row count "
-            f"{n_by_metric!r} — the union dropped or duplicated rows"
-        )
-    N = ns.pop() if ns else 0
-    if N == 0:
-        return part.drop("__mid").withColumn(
-            "__ntile", F.lit(None).cast("int")
-        )
-    off = spark.createDataFrame(offsets, "__m int, __pid int, __off long")
-    rn = F.col("__off") + local_rank
-    q, r = divmod(N, n_buckets)
-    big = r * (q + 1)
-    bucket = F.when(rn <= big, F.floor((rn - 1) / F.lit(q + 1))).otherwise(
-        F.lit(r) + F.floor((rn - big - 1) / F.lit(max(q, 1)))
-    )
-    return (
-        part.withColumn("__pid", pid)
-        .withColumn("__m", F.col("__metric"))
-        .join(F.broadcast(off), ["__m", "__pid"])
-        .withColumn("__ntile", (bucket + 1).cast("int"))
-        .drop("__m", "__pid", "__off", "__mid")
-    )
-
-
-def customer_value_deciles(orders: DataFrame, n_buckets: int = 10) -> DataFrame:
-    """Customers ranked into spend deciles: total order value per customer,
-    then exact ``ntile(n_buckets)`` over the spend order — the
-    segmentation/cohort cut (decile 1 = top spenders).
-
-    Sums are EXACT (deterministic tie values → deterministic ntile
-    boundaries with the custkey tiebreak), but accumulate as LONG
-    ten-thousandths ("cents"): ``decimal(18,4) * 10000 → long`` is exact
-    per row, the long sum stays in whole-stage codegen, and the sum of
-    decimal(18,4) would widen to decimal(28,4) — past Spark's compact
-    (long-backed) decimal, so every row would box a BigDecimal in the
-    hot aggregate (measured ~40% slower at the 100× checkpoint). The
-    double readout ``cents / 1e4`` is the correctly-rounded quotient —
-    bit-identical to casting the decimal sum to double.
-
-    The ntile is the DISTRIBUTED spelling (:func:`_distributed_ntile`):
-    the r8 form was a global ``Window.orderBy`` — an Exchange
-    SinglePartition whose one task sorts every customer, the plan shape
-    a 100× scale-up funnels through a single straggler. Same output
-    bit-for-bit."""
-    return _customer_decile_cents(orders, n_buckets).select(
-        F.col("o_custkey").alias("custkey"),
-        (F.col("__cents") / F.lit(10000.0)).alias("total_spend"),
-        "decile",
-    )
-
-
-def _customer_decile_cents(orders: DataFrame, n_buckets: int) -> DataFrame:
-    """Shared core of :func:`customer_value_deciles` and
-    :func:`decile_revenue_share`: (o_custkey, __cents long, decile int)
-    at EXACT long ten-thousandths grain, before the double readout — so
-    consumers that aggregate money (the Lorenz rollup) sum the longs
-    directly instead of inverting ``cents / 1e4`` back through
-    ``round(x * 1e4)`` (exact only below ~2^51, and avoidable).
-
-    The rollup is NOT pre-materialized: the ntile checkpoints the
-    range-sorted frame itself, and a second (input-grain) checkpoint was
-    measured to cost exactly what it saves in RangePartitioner sampling
-    recompute (SCALING.md r11)."""
-    spend = orders.groupBy("o_custkey").agg(
-        F.sum(
-            (F.col("o_totalprice").cast("decimal(18,4)") * 10000).cast("long")
-        ).alias("__cents")
-    )
-    return _distributed_ntile(
-        spend, n_buckets, [("__cents", False), ("o_custkey", True)], "decile"
-    )
-
-
 def bounce_rate(events: DataFrame) -> DataFrame:
     """Analysis 7 (`stream_processor.py:289-312`): two-level aggregate —
     events per (minute, visitor), then per-minute share of single-event
@@ -1019,95 +635,6 @@ def item_dwell_time(events: DataFrame) -> DataFrame:
     )
 
 
-#: RFM's three (out_name, total-order) ntile specs used by
-#: :func:`rfm_segments`.
-RFM_NTILE_SPECS: list = [
-    ("r_score", [("recency_days", True), ("custkey", True)]),
-    ("f_score", [("frequency", False), ("custkey", True)]),
-    ("m_score", [("__spend_dec", False), ("custkey", True)]),
-]
-
-
-def _rfm_per_cust(orders: DataFrame) -> DataFrame:
-    """RFM's per-customer rollup — (custkey, recency_days, frequency,
-    monetary, __spend_dec) — used by :func:`rfm_segments`. LONG
-    ten-thousandths, not a decimal(28,4) sum — see :func:`customer_value_deciles` for the
-    exactness + codegen argument."""
-    ref = orders.agg(F.max("o_orderdate").alias("__ref"))
-    return (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.max("o_orderdate").alias("__last"),
-            F.count("*").alias("frequency"),
-            F.sum(
-                (F.col("o_totalprice").cast("decimal(18,4)") * 10000).cast(
-                    "long"
-                )
-            ).alias("__cents"),
-        )
-        .crossJoin(F.broadcast(ref))
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            F.datediff(F.col("__ref"), F.col("__last")).alias("recency_days"),
-            "frequency",
-            (F.col("__cents") / F.lit(10000.0)).alias("monetary"),
-            F.col("__cents").alias("__spend_dec"),
-        )
-    )
-
-
-def rfm_segments(orders: DataFrame, n_buckets: int = 5) -> DataFrame:
-    """RFM segmentation: per customer, Recency (days since last order,
-    relative to the corpus max date), Frequency (order count), Monetary
-    (DECIMAL total) — each cut into ``n_buckets`` ntiles (1 = best:
-    most recent / most frequent / highest spend).
-
-    The corpus max date is a 1-row broadcast. The three ntiles are ONE
-    call to the multi-metric distributed spelling
-    (:func:`_distributed_ntile_multi` — three range-partitioned branches
-    of a single union, one stamp, one checkpoint, one offsets collect):
-    the r8 form ran three global ``Window.orderBy`` sorts, each an
-    Exchange SinglePartition funneling every customer through one task;
-    the r9–r14 form ran three INDEPENDENT :func:`_distributed_ntile`
-    passes from driver threads over a checkpointed rollup — correct and
-    concurrent, but FOUR actions deep (rollup checkpoint → per-metric
-    checkpoint → per-metric collect → final), and the 100× checkpoint
-    measured ~1.9 s of its 4.96 s wall as pure per-action scheduling
-    floor with data work at 1.31× of the DuckDB control (VERDICT r14:
-    the one remaining >2× scale row).
-
-    This spelling cuts the chain to THREE actions and the job count from
-    seven to three: the customer rollup's hash exchange is computed once
-    and fed to all three range exchanges via Catalyst's ReuseExchange
-    (no rollup checkpoint needed — the union is one query), and the
-    three (custkey, score) frames come back as one long frame assembled
-    with a single ``groupBy(custkey)`` instead of three hash joins.
-
-    Deterministic tiebreaks on custkey everywhere; output bit-for-bit
-    identical to the window spelling (same closed-form bucket
-    arithmetic, property-tested against SQL ``ntile``)."""
-    per_cust = _rfm_per_cust(orders)
-    # no rollup checkpoint: the three union branches share the rollup's
-    # hash exchange via ReuseExchange inside the ONE stamped query, and
-    # the long frame itself carries every output column, so there is no
-    # fourth consumer to feed
-    specs = RFM_NTILE_SPECS
-    long = _distributed_ntile_multi(per_cust, n_buckets, specs)
-    # the three copies of a custkey's row carry identical values, so max()
-    # is both deterministic and the value itself
-    return long.groupBy("custkey").agg(
-        F.max("recency_days").alias("recency_days"),
-        F.max("frequency").alias("frequency"),
-        F.max("monetary").alias("monetary"),
-        *[
-            F.max(
-                F.when(F.col("__metric") == i, F.col("__ntile"))
-            ).alias(name)
-            for i, (name, _) in enumerate(specs)
-        ],
-    )
-
-
 def latest_event_state(
     events: DataFrame,
     keys: tuple[str, ...] = ("visitorid", "itemid"),
@@ -1517,7 +1044,7 @@ def linear_attribution(
     # fan-out as a count(*)-over-conversion window: ONE exchange on __cid
     # replaces the old {checkpoint barrier + groupBy + self-join} spelling
     # (r13 shave, see position_attribution) — and with a single consumer
-    # chain the range join runs once, so no materialize_once either
+    # chain the range join runs once, so nothing is materialized either
     credited = pairs.withColumn(
         "__n", F.count("*").over(Window.partitionBy("__cid"))
     )
@@ -2346,7 +1873,7 @@ def position_attribution(
     paid (its sort order satisfies the count's partitioning), so the
     whole operator is join → one windowed exchange → item rollup — no
     checkpoint, no second aggregation, no self-join (the r13 shave: the
-    old groupBy(m)+join spelling cost a materialize_once barrier plus
+    old groupBy(m)+join spelling cost a checkpoint barrier plus
     two extra exchanges; FLOOR_CHECK_R13.json showed that was real data
     work, not job floor). Output:
     (itemid, conversions_touched, credit_ppm)."""
@@ -2495,156 +2022,6 @@ def returning_visitor_rate(events: DataFrame) -> DataFrame:
             F.sum((F.col("__d") >= 2).cast("int")) / F.count("*").cast("double"),
             6,
         ).alias("returning_rate"),
-    )
-
-
-def heavy_hitters_2pass(
-    df: DataFrame,
-    key: str = "itemid",
-    share_ppm: int = 1000,
-    capacity_factor: int = 2,
-) -> DataFrame:
-    """Exact heavy hitters via a sketch-guided two-pass plan: every value
-    of ``key`` whose exact count is at least ``share_ppm`` parts-per-million
-    of the non-null total — WITHOUT ever shuffling the full key universe.
-
-    Pass 1 (candidate generation, shuffle-free): each partition folds its
-    rows through a Misra–Gries summary of capacity
-    ``k = capacity_factor * ceil(1e6 / share_ppm)`` inside one Arrow
-    ``mapInPandas`` (the summary dict persists across the partition's
-    batches; per-batch counting is a vectorized ``value_counts``, the MG
-    compaction subtracts the (k+1)-th largest weight and drops the
-    non-positive — the mergeable-summaries merge of Agarwal et al. 2013).
-    MG guarantees any value with local count > n_p/(k+1) survives, and a
-    value with global count >= eps*N must have local count >= eps*n_p in
-    at least one partition (averaging), so the UNION of per-partition
-    candidates is a PROVABLE superset of the global heavy hitters
-    (Misra & Gries 1982). Each partition emits <= k candidate rows.
-
-    The SAME pass also emits one (null, n_p) row per partition carrying
-    the partition's row count, so the global total N = Σ n_p comes from
-    the (materialized, ≤(k+1)·partitions-row) sketch output — the input
-    is scanned exactly TWICE (sketch + verify), never a third time for a
-    separate ``count(*)``.
-
-    Pass 2 (exact verify): broadcast the distinct candidate set (bounded
-    by partitions * k), semi-join the input, ONE map-side-combined count
-    over the surviving rows, keep ``1e6 * count >= share_ppm * N`` —
-    exact integer arithmetic on both sides, no float thresholds, so the
-    output is EXACT and independent of partitioning / sketch internals
-    (the sketch only prunes, it never decides).
-
-    At 100 TB the classic plan ("count every key, filter") shuffles
-    billions of distinct keys to find the dozens that matter; this plan's
-    exchange carries O(partitions * k) candidate rows plus the partial
-    counts of candidates only: a candidate superset, then an exact verify.
-    Tradeoff to know: pass 1 funnels every input row through the
-    Python/Arrow boundary once — vectorized ``value_counts`` per batch,
-    but still a serialization cost the pure-JVM full-shuffle count does
-    not pay; it buys back the O(distinct-keys) exchange, which is the
-    right trade exactly when the key universe is huge relative to the
-    heavy-hitter set (the operator's stated use case).
-
-    Output: (``key``, exact_count, share_ppm_floor) — exact integers.
-    No reference counterpart (engine extension; the reference's top-N
-    analyses are exact full-shuffle counts, `stream_processor.py:273-287`).
-    """
-    import pandas as pd
-
-    from ..plans.scale import materialize_once
-
-    eps_inv = (1_000_000 + share_ppm - 1) // share_ppm
-    k = max(1, int(capacity_factor) * eps_inv)
-
-    src = df.select(F.col(key).alias("__v")).filter(F.col("__v").isNotNull())
-    v_type = src.schema["__v"].dataType.simpleString()
-
-    def mg_partition(batches):
-        counts: dict = {}
-        dtype = None
-        n_rows = 0
-        for pdf in batches:
-            dtype = pdf["__v"].dtype
-            n_rows += len(pdf)
-            for v, c in pdf["__v"].value_counts().items():
-                counts[v] = counts.get(v, 0) + int(c)
-            if len(counts) > k:
-                vals = sorted(counts.values(), reverse=True)
-                cut = vals[k]  # (k+1)-th largest
-                counts = {v: c - cut for v, c in counts.items() if c > cut}
-        if counts:
-            yield pd.DataFrame(
-                {
-                    "__v": pd.Series(list(counts), dtype=dtype),
-                    "__pn": pd.Series([None] * len(counts), dtype="object"),
-                }
-            )
-        if n_rows:
-            # one row per partition carrying its row count (null __v, which
-            # cannot collide with a candidate — src is null-filtered)
-            yield pd.DataFrame(
-                {
-                    "__v": pd.Series([None], dtype="object"),
-                    "__pn": pd.Series([n_rows], dtype="int64"),
-                }
-            )
-
-    # tiny (≤(k+1) rows per partition) and read twice (candidates + N):
-    # one materialization instead of a second full scan of src
-    sketch = materialize_once(
-        src.mapInPandas(mg_partition, schema=f"__v {v_type}, __pn long")
-    )
-    cand = sketch.filter(F.col("__pn").isNull()).select("__v").distinct()
-    total = sketch.agg(
-        F.coalesce(F.sum("__pn"), F.lit(0)).cast("long").alias("__N")
-    )
-    return (
-        src.join(F.broadcast(cand), "__v")
-        .groupBy("__v")
-        .agg(F.count("*").cast("long").alias("exact_count"))
-        .crossJoin(F.broadcast(total))
-        .filter(
-            F.lit(1_000_000) * F.col("exact_count")
-            >= F.col("__N") * F.lit(int(share_ppm))
-        )
-        .select(
-            F.col("__v").alias(key),
-            "exact_count",
-            F.expr("CAST((1000000 * exact_count) DIV __N AS BIGINT)").alias(
-                "share_ppm_floor"
-            ),
-        )
-    )
-
-
-def decile_revenue_share(orders: DataFrame, n_buckets: int = 10) -> DataFrame:
-    """Revenue concentration by spend decile — the Lorenz readout over
-    :func:`customer_value_deciles`: each decile's customer count, total
-    revenue (exact long ten-thousandths, double readout), and share of
-    corpus revenue. Decile 1 = top spenders; a healthy long tail shows a
-    monotone share column, a whale-dominated corpus puts ~all revenue in
-    decile 1 (the same concentration story :func:`gini_concentration`
-    tells for events). One decile-grain rollup (ten rows) on top of the
-    distributed ntile — the broadcast-able grain never re-shuffles the
-    customer frame. Sums consume :func:`_customer_decile_cents`'s exact
-    long ten-thousandths directly — no double round-trip anywhere in the
-    money path."""
-    d = _customer_decile_cents(orders, n_buckets)
-    per = d.groupBy("decile").agg(
-        F.count("*").cast("long").alias("n_customers"),
-        F.sum("__cents").alias("__cents"),
-    )
-    tot = per.agg(F.sum("__cents").alias("__tot"))
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "decile",
-            "n_customers",
-            (F.col("__cents") / F.lit(10000.0)).alias("revenue"),
-            F.round(F.col("__cents") / F.col("__tot"), 6).alias(
-                "revenue_share"
-            ),
-        )
     )
 
 

@@ -10,7 +10,8 @@ bakes in the scale-relevant defaults:
 * **UTC session timezone** — the reference's NiFi stage formats timestamps in
   UTC (`clickstream_project.xml:1022`); pinning the session TZ makes
   `unix_timestamp` / `date_trunc` deterministic across drivers.
-* **Arrow** for any pandas-interchange path (Pandas UDFs, `toPandas`).
+* **Arrow** for a caller's ``toPandas``; the package itself runs no pandas
+  code and makes no ``DataFrame`` checkpoint.
 * shuffle partition count from `SPARK_GRAFT_CPUS` (local testing) — on a real
   cluster you'd leave AQE to coalesce from a high initial count.
 * a **generated-code cache** of 1000 classes. One ``run_pipeline`` pass
@@ -81,10 +82,6 @@ def get_spark(
         # broadcast at runtime as well.
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.sql.parquet.aggregatePushdown": "true",
-        # reliable checkpoints (plans.scale.materialize_once) are deleted
-        # when their RDD is GC'd instead of accumulating for the life of
-        # the cluster (Spark's default leaves them on disk)
-        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         # static: the per-batch working set (~89 classes) must fit the
         # code cache, or each pass recompiles what LRU evicted
         "spark.sql.codegen.cache.maxEntries": "1000",

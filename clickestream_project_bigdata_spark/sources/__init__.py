@@ -5,7 +5,6 @@ from .readers import (  # noqa: F401
     read_json_stream,
     read_kafka_stream,
     read_events_table,
-    read_parquet_table,
     read_raw_events_csv,
     read_raw_events_json,
 )

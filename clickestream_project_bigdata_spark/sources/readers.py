@@ -17,12 +17,6 @@ from pyspark.sql import types as T
 
 from ..schema import RAW_EVENT_SCHEMA, WIRE_EVENT_SCHEMA
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one fixture table. Column pruning + filter pushdown reach the
-    parquet reader because this is a plain declarative scan."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def read_raw_events_csv(spark: SparkSession, path: str) -> DataFrame:
     """RetailRocket-style events.csv (reference S1, `producer.py:28-34`).
 

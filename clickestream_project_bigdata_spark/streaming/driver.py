@@ -52,7 +52,6 @@ def run_all_analyses(
     batch_id: int,
     sink: Sink,
     *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
     funnel_steps: list[str] | None = None,
 ) -> None:
     """One micro-batch through all 10 analyses (reference
@@ -76,7 +75,7 @@ def run_all_analyses(
     """
     batch_df = batch_df.select(*BATCH_COLUMNS).persist()
     try:
-        sessionized = sessionize(batch_df, gap_seconds).select(*SESSION_COLUMNS).persist()
+        sessionized = sessionize(batch_df, DEFAULT_GAP_SECONDS).select(*SESSION_COLUMNS).persist()
         try:
             steps = funnel_steps or analytics.DEFAULT_FUNNEL_STEPS
             funnel = (
@@ -128,7 +127,6 @@ def run_pipeline(
     batch_id: int,
     sink: Sink,
     *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
     funnel_steps: list[str] | None = None,
 ) -> None:
     """The WHOLE reference pipeline for one batch of *raw* records
@@ -143,11 +141,7 @@ def run_pipeline(
     result = cleanse_raw_events(raw_df)
     sink.write(result.quarantine, "quarantine", batch_id)
     run_all_analyses(
-        canonicalize(result.valid),
-        batch_id,
-        sink,
-        gap_seconds=gap_seconds,
-        funnel_steps=funnel_steps,
+        canonicalize(result.valid), batch_id, sink, funnel_steps=funnel_steps
     )
 
 
@@ -156,7 +150,6 @@ def start_stateful_sessions(
     sink: Sink,
     checkpoint_location: str,
     *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
     watermark: str = DEFAULT_WATERMARK,
     available_now: bool = False,
 ) -> StreamingQuery:
@@ -167,7 +160,7 @@ def start_stateful_sessions(
     hands those closed sessions to the injected sink — contrast with the
     per-batch mode in :func:`run_all_analyses`, which reproduces the
     reference's split-session semantics (T6)."""
-    closed = stateful_session_metrics(events, gap_seconds, watermark)
+    closed = stateful_session_metrics(events, DEFAULT_GAP_SECONDS, watermark)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         sink.write(batch_df, "sessions", batch_id)
@@ -180,7 +173,6 @@ def start_stream(
     sink: Sink,
     checkpoint_location: str,
     *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
     funnel_steps: list[str] | None = None,
     available_now: bool = False,
 ) -> StreamingQuery:
@@ -196,9 +188,7 @@ def start_stream(
     """
 
     def _batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        run_all_analyses(
-            batch_df, batch_id, sink, gap_seconds=gap_seconds, funnel_steps=funnel_steps
-        )
+        run_all_analyses(batch_df, batch_id, sink, funnel_steps=funnel_steps)
 
     return _start_foreach_batch(events, _batch_fn, checkpoint_location, available_now)
 

@@ -390,24 +390,6 @@ def test_event_type_pivot_wide_counts(spark, make_events):
     assert rows["2024-01-01 00:01:00"] == (0, 0, 1)
 
 
-def test_customer_value_deciles_boundaries(spark):
-    """ntile splits uneven counts with larger buckets first; ordering is
-    spend DESC with custkey tiebreak."""
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        customer_value_deciles,
-    )
-
-    orders = spark.createDataFrame(
-        [(c, float(100 - c)) for c in range(1, 6)],  # spend: c1=99 .. c5=95
-        "o_custkey long, o_totalprice double",
-    )
-    out = {r.custkey: (r.total_spend, r.decile) for r in
-           customer_value_deciles(orders, n_buckets=2).collect()}
-    # 5 rows into 2 tiles -> sizes 3,2; top spenders (c1..c3) in tile 1
-    assert [out[c][1] for c in (1, 2, 3, 4, 5)] == [1, 1, 1, 2, 2]
-    assert out[1][0] == 99.0
-
-
 def test_sequential_funnel_strict_ordering(spark, make_events):
     """Exact sequential semantics: a step counts only AFTER the completed
     previous step — an early out-of-order event neither completes nor
@@ -513,26 +495,6 @@ def test_item_dwell_time_gaps(spark, make_events):
     assert got[5] == (2, 20.0)  # (30 + 10) / 2
     assert got[7] == (1, 60.0)
     assert 9 not in got
-
-
-def test_rfm_segments_scores(spark):
-    import datetime as dt
-
-    from clickestream_project_bigdata_spark.operators.analytics import rfm_segments
-
-    d = lambda day: dt.datetime(2024, 1, day)
-    orders = spark.createDataFrame(
-        [
-            (1, 11, d(10), 500.0), (1, 12, d(20), 500.0),  # recent, frequent, rich
-            (2, 21, d(1), 10.0),                            # old, single, poor
-        ],
-        "o_custkey long, o_orderkey long, o_orderdate timestamp, o_totalprice double",
-    )
-    got = {r.custkey: r for r in rfm_segments(orders, n_buckets=2).collect()}
-    assert got[1].recency_days == 0 and got[2].recency_days == 19
-    assert got[1].frequency == 2 and got[1].monetary == 1000.0
-    assert (got[1].r_score, got[1].f_score, got[1].m_score) == (1, 1, 1)
-    assert (got[2].r_score, got[2].f_score, got[2].m_score) == (2, 2, 2)
 
 
 def test_session_entry_exit_items(spark, make_events):
@@ -1081,150 +1043,3 @@ def test_decay_attribution_dyadic_weights(spark):
     assert got[200].credit == round(2 / 7, 6)
     assert got[100].credit == round(round(1 / 7, 12) + 1.0, 6)
     assert got[100].conversions_touched == 2
-
-
-def test_distributed_ntile_matches_window_ntile(spark):
-    """The closed-form bucket arithmetic must reproduce SQL ntile()'s exact
-    layout (first N%n buckets get the extra row) for every bucket count,
-    including n > N (bucket == row number)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        _distributed_ntile,
-    )
-
-    rows = [(i, (i * 7) % 13) for i in range(1, 14)]  # 13 rows, distinct vals
-    df = spark.createDataFrame(rows, "k long, v long")
-    order = [("v", False), ("k", True)]
-    order_cols = [F.desc("v"), F.asc("k")]
-    for n in (1, 2, 3, 5, 13, 20):
-        want = {
-            r.k: r.b
-            for r in df.select(
-                "k", F.ntile(n).over(Window.orderBy(*order_cols)).alias("b")
-            ).collect()
-        }
-        got = {
-            r.k: r.b for r in _distributed_ntile(df, n, order, "b").collect()
-        }
-        assert got == want, (n, got, want)
-
-
-def test_distributed_ntile_multi_partition_randomized(spark):
-    """ADVICE r10: _distributed_ntile leans on two Spark behaviors that are
-    implementation, not contract (monotonically_increasing_id stamping in
-    local sort order; range-partition ids ordered by range bounds). The
-    13-row parity test runs in one partition and would not notice an
-    upgrade-induced ordering break — this one FORCES partitions=8 over a
-    5000-row frame with heavy ties (values drawn from 0..49) and ascending
-    + descending order specs, so a re-staged nondeterministic projection
-    or pid reordering shows up as a hard parity failure (or trips the
-    in-code boundary-monotonicity invariant first)."""
-    import random
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        _distributed_ntile,
-    )
-
-    rng = random.Random(0xA11CE)
-    rows = [(k, rng.randrange(50)) for k in range(5000)]
-    df = spark.createDataFrame(rows, "k long, v long")
-    for asc in (True, False):
-        order = [("v", asc), ("k", True)]
-        order_cols = [
-            F.asc("v") if asc else F.desc("v"),
-            F.asc("k"),
-        ]
-        for n in (7, 10):
-            want = {
-                r.k: r.b
-                for r in df.select(
-                    "k",
-                    F.ntile(n).over(Window.orderBy(*order_cols)).alias("b"),
-                ).collect()
-            }
-            got = {
-                r.k: r.b
-                for r in _distributed_ntile(
-                    df, n, order, "b", partitions=8
-                ).collect()
-            }
-            assert got == want, (asc, n)
-
-
-def test_distributed_ntile_multi_matches_window_ntile(spark):
-    """The one-union multi-metric spelling must reproduce SQL ntile()'s
-    exact layout PER METRIC over a multi-partition frame with heavy ties —
-    the same contract the single version pins, plus the union-specific
-    behaviors it leans on (per-branch partition ids concatenated in branch
-    order; the nondeterministic stamp NOT pushed through the union). Three
-    specs with mixed directions and overlapping order columns, forced to 8
-    partitions per branch (24 union partitions)."""
-    import random
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        _distributed_ntile_multi,
-    )
-
-    rng = random.Random(0xBEEF)
-    rows = [(k, rng.randrange(50), rng.randrange(7)) for k in range(4000)]
-    df = spark.createDataFrame(rows, "k long, v long, w long")
-    specs = [
-        ("a", [("v", True), ("k", True)]),
-        ("b", [("v", False), ("k", True)]),
-        ("c", [("w", False), ("v", True), ("k", True)]),
-    ]
-    spec_cols = {
-        "a": [F.asc("v"), F.asc("k")],
-        "b": [F.desc("v"), F.asc("k")],
-        "c": [F.desc("w"), F.asc("v"), F.asc("k")],
-    }
-    for n in (7, 10, 4001):  # incl. n > N (bucket == row number)
-        long = _distributed_ntile_multi(df, n, specs, partitions=8)
-        for i, (name, _) in enumerate(specs):
-            want = {
-                r.k: r.b
-                for r in df.select(
-                    "k",
-                    F.ntile(n)
-                    .over(Window.orderBy(*spec_cols[name]))
-                    .alias("b"),
-                ).collect()
-            }
-            got = {
-                r["k"]: r["__ntile"]
-                for r in long.filter(F.col("__metric") == i)
-                .select("k", "__ntile")
-                .collect()
-            }
-            assert got == want, (name, n)
-
-
-def test_distributed_ntile_multi_empty_input_and_long_grain(spark):
-    """Empty input yields NULL buckets (same contract as the single
-    version); the long frame carries one row per (input row, spec).
-    (The branch-row-count-mismatch RuntimeError guard is defense-in-depth
-    against a Union implementation change and is not triggerable from the
-    public API — it is intentionally not pinned here.)"""
-    from pyspark.sql import functions as F
-
-    from clickestream_project_bigdata_spark.operators.analytics import (
-        _distributed_ntile_multi,
-    )
-
-    empty = spark.createDataFrame([], "k long, v long")
-    specs = [("a", [("v", True), ("k", True)])]
-    out = _distributed_ntile_multi(empty, 5, specs).collect()
-    assert out == []
-    df = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
-    long = _distributed_ntile_multi(
-        df, 2, specs + [("b", [("v", False), ("k", True)])]
-    )
-    assert long.count() == 4

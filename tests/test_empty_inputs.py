@@ -43,11 +43,29 @@ def test_analytics_on_empty_events(spark, empty_events):
 def test_driver_contract_keys_aligned():
     """Every queries() entry has an oracle_sql() twin and vice versa — the
     correctness gate covers the WHOLE query surface (a query added without
-    its oracle would silently skip the value-hash check)."""
+    its oracle would silently skip the value-hash check). Every oracle also
+    binds against a DuckDB catalog holding the `events` table alone: the
+    registry reads no other input."""
+    import duckdb
+
     import __spark_entry__ as e
 
-    q, o = set(e.queries()), set(e.oracle_sql())
+    oracles = e.oracle_sql()
+    q, o = set(e.queries()), set(oracles)
     assert q == o, (sorted(q - o), sorted(o - q))
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        "read_parquet('/root/testdata/sf0.01/events.parquet')"
+    )
+    unbound = {}
+    for name, sql in oracles.items():
+        try:
+            con.execute(f"EXPLAIN {sql}")
+        except duckdb.Error as exc:
+            unbound[name] = f"{type(exc).__name__}: {exc}"
+    assert not unbound, unbound
 
 
 def test_round6_operators_on_empty_inputs(spark, empty_events):

@@ -10,11 +10,9 @@ from pyspark.sql import functions as F
 
 from clickestream_project_bigdata_spark.operators import analytics
 from clickestream_project_bigdata_spark.plans import (
-    count_broadcast_joins,
     count_exchanges,
     count_sort_merge_joins,
 )
-from clickestream_project_bigdata_spark.sources.readers import read_parquet_table
 
 SF = "/root/testdata/sf0.01"
 
@@ -135,23 +133,6 @@ def test_position_attribution_no_trailing_global_sort(spark):
     assert "rangepartitioning" not in plan.lower().replace(" ", "")
 
 
-def test_decile_rfm_no_unpartitioned_ntile_window(spark):
-    """VERDICT r8 #5: customer_value_deciles and rfm_segments must not plan
-    the global-``Window.orderBy`` ntile — an Exchange SinglePartition whose
-    ONE task sorts every customer. The distributed spelling (range-partition
-    prefix sum + closed-form bucket arithmetic) leaves ZERO Window nodes in
-    the final plan; the remaining SinglePartition exchanges are the 1-row
-    global count aggregates (<= #partitions partial rows each — bounded)."""
-    orders = read_parquet_table(spark, SF, "orders")
-    for df in (
-        analytics.customer_value_deciles(orders),
-        analytics.rfm_segments(orders),
-    ):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ntile(" not in plan, plan
-        assert "Window" not in plan, plan
-
-
 def test_first_touch_attribution_no_window_no_global_sort(spark):
     """Round 9: the fourth credit model is ONE min_by aggregation over the
     bounded range join — no rank window (the per-conversion argmin must not
@@ -161,22 +142,6 @@ def test_first_touch_attribution_no_window_no_global_sort(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan
     assert "rangepartitioning" not in plan.lower().replace(" ", "")
-
-
-def test_heavy_hitters_broadcast_verify_no_smj(spark):
-    """Pass 2's verify join must be a BROADCAST of the bounded candidate
-    set (never sort-merge: the input side is the 100 TB fact), and the
-    count must be map-side combined (partial agg before the exchange)."""
-    df = spark.createDataFrame(
-        [(i % 7,) for i in range(200)], "itemid long"
-    ).repartition(4)
-    out = analytics.heavy_hitters_2pass(df, "itemid", share_ppm=50_000)
-    assert count_sort_merge_joins(out) == 0
-    assert count_broadcast_joins(out) >= 1
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # a PARTIAL count must exist before the exchange (map-side combine);
-    # a bare HashAggregate match would pass for any hash-agg plan
-    assert "partial_count" in plan
 
 
 def test_user_paths_no_interpreted_transform(spark):

@@ -1,5 +1,4 @@
-"""Streaming late-data semantics of the minute analyses (T7) and
-``materialize_once``'s single computation."""
+"""Streaming late-data semantics of the minute analyses (T7)."""
 
 from __future__ import annotations
 
@@ -165,39 +164,3 @@ def test_minute_analyses_streaming_and_late_data(spark, tmp_path, op, value_col,
     first = [r for r in rows if r["minute"] == dt.datetime(2023, 11, 14, 22, 13)]
     assert len(first) == 1
     assert first[0][value_col] == want
-
-
-def test_materialize_once_reliable_checkpoint_computes_once(spark, tmp_path):
-    """ADVICE r5 (medium): with a checkpoint dir configured, materialize_once
-    must take the RELIABLE-checkpoint path and compute the upstream exactly
-    ONCE (persist → eager checkpoint → unpersist), not re-run the lineage in
-    the checkpoint-write job. An accumulator inside a mapInPandas stage
-    counts computation passes per partition-batch."""
-    from clickestream_project_bigdata_spark.plans.scale import materialize_once
-
-    sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None  # engine default: local fallback
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        acc = sc.accumulator(0)
-
-        def bump(batches):
-            for pdf in batches:
-                acc.add(1)
-                yield pdf
-
-        df = spark.range(0, 8, 1, 2)  # tiny: exactly 1 arrow batch/partition
-        out = materialize_once(df.mapInPandas(bump, df.schema))
-        assert acc.value == 2  # eager: computed at call, once per partition
-        assert out.count() == 8
-        assert out.count() == 8  # re-action reads checkpoint files
-        assert acc.value == 2    # ... without recomputing the lineage
-        ids1 = [r.pid for r in out.selectExpr("spark_partition_id() AS pid").collect()]
-        ids2 = [r.pid for r in out.selectExpr("spark_partition_id() AS pid").collect()]
-        assert ids1 == ids2  # stable partition ids across actions
-    finally:
-        # restore "no checkpoint dir" so other tests keep the local path
-        # (no public unset API; reach the Scala var through py4j)
-        scala_none = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
-        assert sc.getCheckpointDir() is None
